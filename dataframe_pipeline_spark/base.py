@@ -18,6 +18,8 @@ picks at runtime) is the scale-safe representation.
 
 from __future__ import annotations
 
+import itertools
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -25,12 +27,27 @@ from pyspark.sql import types as T
 #: Sentinel meaning "all columns" (reference: DFPBase.py:25 ``_PARM_ALL``).
 PARM_ALL = "__ALL"
 
-#: Attribute the serving tier (serving.py) caches compiled literal maps
-#: under.  Declared here so (a) ``fit`` can invalidate it without a
-#: circular import and (b) persistence can strip it (the cached values
-#: are pyspark Columns — py4j handles, not picklable and stale across
-#: sessions anyway).
+#: Attribute the serving tier (serving.py) keeps a step's compiled
+#: lookup state under: driver-side dicts built from one collect of the
+#: fitted lookup, or ``False`` when the step left the compiled path.
+#: Declared here so (a) ``fit`` can drop it without a circular import
+#: and (b) persistence can strip it (it is a pure derivation of the
+#: fitted state and is rebuilt after load).
 SERVING_CACHE_ATTR = "_dfp_serving_literals"
+
+#: Per-step fit generation; a compiled serving program records the
+#: generation of every step it was built from and recompiles when one
+#: differs (see :func:`invalidate_serving`).
+GENERATION_ATTR = "_dfp_generation"
+
+_generations = itertools.count(1)
+
+
+def invalidate_serving(step) -> None:
+    """Mark ``step`` as refit: drop its compiled serving state and bump
+    its generation, so every compiled program that uses it recompiles."""
+    step.__dict__.pop(SERVING_CACHE_ATTR, None)
+    setattr(step, GENERATION_ATTR, next(_generations))
 
 
 class SparkDFPBase:
@@ -55,9 +72,9 @@ class SparkDFPBase:
 
     def __init_subclass__(cls, **kwargs):
         """Wrap each subclass's ``fit`` so refitting invalidates any
-        compiled serving-literal cache: without this, ``fit`` rebuilds
-        the lookup state but ``serving_transform`` keeps scoring with
-        the OLD literal maps — silent batch/serving divergence."""
+        compiled serving state: without this, ``fit`` rebuilds the
+        lookup state but ``serving_transform`` keeps scoring with the
+        OLD lookups — silent batch/serving divergence."""
         super().__init_subclass__(**kwargs)
         fit = cls.__dict__.get("fit")
         if fit is not None and not getattr(fit, "_dfp_invalidates", False):
@@ -65,7 +82,7 @@ class SparkDFPBase:
 
             @functools.wraps(fit)
             def fit_and_invalidate(self, *args, **kw):
-                self.__dict__.pop(SERVING_CACHE_ATTR, None)
+                invalidate_serving(self)
                 return fit(self, *args, **kw)
 
             fit_and_invalidate._dfp_invalidates = True
@@ -120,10 +137,41 @@ def nan_to_null(df: DataFrame, name: str) -> Column:
     Non-floating columns pass through untouched (``isnan`` is only defined
     for float/double).
     """
-    col = F.col(name)
-    if is_floating(field_type(df, name)):
-        return F.when(F.isnan(col), F.lit(None)).otherwise(col)
-    return col
+    return ColumnView(df).nan_to_null(name)
+
+
+class ColumnView:
+    """The columns a step's column hook reads: the expression and type
+    of each column of the frame it applies to.
+
+    An operator whose transform is pure per-row Column arithmetic
+    exposes ``column_exprs(view) -> {output: Column}`` (``None`` as a
+    value drops the column; ``None`` instead of a dict means this
+    configuration cannot be written as columns).  Over a DataFrame,
+    ``view.col(name)`` is ``F.col(name)``, so batch transform is
+    ``df.withColumns(step.column_exprs(ColumnView(df)))``; the serving
+    compiler passes a view whose columns are the expressions earlier
+    steps wrote, which composes a whole pipeline into one ``select``.
+    """
+
+    def __init__(self, df: DataFrame):
+        self._df = df
+
+    @property
+    def columns(self) -> list:
+        return self._df.columns
+
+    def col(self, name: str) -> Column:
+        return F.col(name)
+
+    def dtype(self, name: str) -> T.DataType:
+        return self._df.schema[name].dataType
+
+    def nan_to_null(self, name: str) -> Column:
+        col = self.col(name)
+        if is_floating(self.dtype(name)):
+            return F.when(F.isnan(col), F.lit(None)).otherwise(col)
+        return col
 
 
 def stringify(df: DataFrame, name: str) -> Column:

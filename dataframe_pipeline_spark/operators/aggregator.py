@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..base import SparkDFPBase, nan_to_null
+from ..base import ColumnView, SparkDFPBase, nan_to_null
 
 
 def _resolve_func(func):
@@ -140,11 +140,15 @@ class Aggregator(SparkDFPBase):
                 self._lookups[g] = (lookup, {o: f"__dfp_{o}" for _, o in pairs})
         return self
 
+    def column_exprs(self, view):
+        """Global mode only; grouped mode is a lookup (serving.py)."""
+        if self.groupby:
+            return None
+        return {output: F.lit(v) for output, v in zip(self.outputs, self.vals)}
+
     def transform(self, df: DataFrame) -> DataFrame:
         if not self.groupby:
-            return df.withColumns(
-                {output: F.lit(v) for output, v in zip(self.outputs, self.vals)}
-            )
+            return df.withColumns(self.column_exprs(ColumnView(df)))
         # Fused fit_transform fast path: transform() over the SAME frame
         # fit() just saw (the fit_transform contract — pipeline threading
         # passes the identical object).  The lookup join would re-scan the

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from ..base import SparkDFPBase
+from ..base import ColumnView, SparkDFPBase
 
 
 class ColumnSelector(SparkDFPBase):
@@ -31,7 +31,15 @@ class ColumnSelector(SparkDFPBase):
             self.drop_columns = [c for c in df.columns if c not in set(self.columns)]
         return self
 
+    def column_exprs(self, view) -> dict:
+        columns = view.columns
+        drop = self.drop_columns
+        if drop is None:  # un-fitted: resolve against this frame
+            listed = set(self.columns)
+            drop = [c for c in columns if (c in listed) == self.drop]
+        return {c: None for c in drop if c in columns}
+
     def transform(self, df: DataFrame) -> DataFrame:
         if self.drop_columns is None:  # allow un-fitted stateless use
             self.fit(df)
-        return df.drop(*[c for c in self.drop_columns if c in df.columns])
+        return df.drop(*self.column_exprs(ColumnView(df)))

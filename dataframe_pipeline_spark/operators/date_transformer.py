@@ -34,22 +34,29 @@ class DateTransformer(SparkDFPBase):
         self.column = column
         self.origin = origin
 
-    def transform(self, df: DataFrame) -> DataFrame:
-        col = F.col(self.column)
-        if self.origin is not None:
-            ts = F.timestamp_seconds(
-                F.unix_timestamp(F.to_timestamp(F.lit(self.origin))) + col.cast("long")
-            )
-        else:
-            ts = F.to_timestamp(col)
-        df = df.withColumn(self.column, ts)
-        t = F.col(self.column)
+    def _timestamp(self, col):
+        if self.origin is None:
+            return F.to_timestamp(col)
+        return F.timestamp_seconds(
+            F.unix_timestamp(F.to_timestamp(F.lit(self.origin))) + col.cast("long")
+        )
+
+    @staticmethod
+    def _fields(column: str, t) -> dict:
         fields = {
-            f"{self.column}_MY": F.month(t),
-            f"{self.column}_WY": F.weekofyear(t),
-            f"{self.column}_DY": F.dayofyear(t),
-            f"{self.column}_DM": F.dayofmonth(t),
-            f"{self.column}_DW": (F.dayofweek(t) + F.lit(5)) % 7,
-            f"{self.column}_HD": F.hour(t),
+            f"{column}_MY": F.month(t),
+            f"{column}_WY": F.weekofyear(t),
+            f"{column}_DY": F.dayofyear(t),
+            f"{column}_DM": F.dayofmonth(t),
+            f"{column}_DW": (F.dayofweek(t) + F.lit(5)) % 7,
+            f"{column}_HD": F.hour(t),
         }
-        return df.withColumns({k: v.cast("long") for k, v in fields.items()})
+        return {k: v.cast("long") for k, v in fields.items()}
+
+    def column_exprs(self, view) -> dict:
+        ts = self._timestamp(view.col(self.column))
+        return {self.column: ts, **self._fields(self.column, ts)}
+
+    def transform(self, df: DataFrame) -> DataFrame:
+        df = df.withColumn(self.column, self._timestamp(F.col(self.column)))
+        return df.withColumns(self._fields(self.column, F.col(self.column)))

@@ -95,9 +95,25 @@ class FunctionTransformer(SparkDFPBase):
 
         return _u(*[F.col(c) for c in input_cols])
 
+    @staticmethod
+    def _input_cols(input) -> list:
+        return list(input) if isinstance(input, (tuple, list)) else [input]
+
+    def column_exprs(self, view):
+        """Native tier only: an output that needs the Arrow UDF tier
+        returns None (the UDF's return type is sampled from the frame)."""
+        updates = {}
+        for input, output in zip(self.inputs, self.outputs):
+            native = self._try_native(
+                [updates.get(c, view.col(c)) for c in self._input_cols(input)])
+            if native is None:
+                return None
+            updates[output] = native
+        return updates
+
     def transform(self, df: DataFrame) -> DataFrame:
         for input, output in zip(self.inputs, self.outputs):
-            input_cols = list(input) if isinstance(input, (tuple, list)) else [input]
+            input_cols = self._input_cols(input)
             native = self._try_native([F.col(c) for c in input_cols])
             if native is not None:
                 df = df.withColumn(output, native)

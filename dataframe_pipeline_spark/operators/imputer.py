@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..base import SparkDFPBase, nan_to_null
+from ..base import ColumnView, SparkDFPBase, nan_to_null
 
 
 class Imputer(SparkDFPBase):
@@ -35,6 +35,17 @@ class Imputer(SparkDFPBase):
         self.strategy = strategy
         self.val = val
         self.values = None  # last-computed fill values (reference keeps them too)
+
+    def _fill_exprs(self, view, fills) -> dict:
+        return {output: F.coalesce(view.nan_to_null(input), F.lit(v))
+                for input, output, v in zip(self.inputs, self.outputs, fills)}
+
+    def column_exprs(self, view):
+        """Constant fills only: mean/median are statistics of the frame
+        being transformed."""
+        if self.strategy is not None:
+            return None
+        return self._fill_exprs(view, [self.val] * len(self.inputs))
 
     def transform(self, df: DataFrame) -> DataFrame:
         self.values = []
@@ -57,9 +68,4 @@ class Imputer(SparkDFPBase):
         else:
             fills = [self.val] * len(self.inputs)
         self.values = fills
-        return df.withColumns(
-            {
-                output: F.coalesce(nan_to_null(df, input), F.lit(v))
-                for input, output, v in zip(self.inputs, self.outputs, fills)
-            }
-        )
+        return df.withColumns(self._fill_exprs(ColumnView(df), fills))

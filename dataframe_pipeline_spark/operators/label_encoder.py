@@ -31,7 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..base import PARM_ALL, SparkDFPBase, field_type, is_floating, literal_df
+from ..base import (PARM_ALL, ColumnView, SparkDFPBase, is_floating,
+                    literal_df)
 
 EXTRA = "extra_category_"
 
@@ -56,10 +57,13 @@ class ComplementLabelEncoder(SparkDFPBase):
         self._lookups = {}
 
     @staticmethod
-    def _normalized(df: DataFrame, input: str):
-        col = F.col(input)
+    def _normalized(df, input: str):
+        """The dictionary key of ``input``: its string cast, NULL/NaN as
+        the reserved class.  ``df``: a DataFrame or a ``ColumnView``."""
+        view = ColumnView(df) if isinstance(df, DataFrame) else df
+        col = view.col(input)
         s = col.cast("string")
-        if is_floating(field_type(df, input)):
+        if is_floating(view.dtype(input)):
             s = F.when(F.isnan(col), F.lit(None)).otherwise(s)
         return F.coalesce(s, F.lit(EXTRA))
 
@@ -81,9 +85,9 @@ class ComplementLabelEncoder(SparkDFPBase):
         The pipeline's fused-fit path crossJoins deferred scalar fit
         aggregates of LATER steps into that collect, so the whole fit
         phase runs as ONE Spark job (VERDICT r12 #2)."""
-        from ..base import SERVING_CACHE_ATTR
+        from ..base import invalidate_serving
 
-        self.__dict__.pop(SERVING_CACHE_ATTR, None)  # refit invalidates
+        invalidate_serving(self)
         self.inputs = self.replace_PARM_ALL(df, self.inputs)
         self.outputs = self.replace_PARM_ALL(df, self.outputs)
         self._lookups = {}

@@ -23,7 +23,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..base import SparkDFPBase, field_type, is_floating, to_spark_type
+from ..base import ColumnView, SparkDFPBase, is_floating, to_spark_type
 
 
 def _is_nan_key(k) -> bool:
@@ -40,15 +40,15 @@ class MapTransformer(SparkDFPBase):
         self.default_value = default_value
         self.dtype = dtype
 
-    def _mapped_col(self, df: DataFrame, input: str):
-        col = F.col(input)
+    def _mapped_col(self, view, input: str):
+        col = view.col(input)
         if self.regex:
             out = col.cast("string")
             for pat, val in self.dict.items():
                 out = F.regexp_replace(out, str(pat), str(val))
             return out
         out = None
-        floating = is_floating(field_type(df, input))
+        floating = is_floating(view.dtype(input))
         for key, val in self.dict.items():
             if _is_nan_key(key):
                 cond = col.isNull() | (F.isnan(col) if floating else F.lit(False))
@@ -57,14 +57,17 @@ class MapTransformer(SparkDFPBase):
             out = F.when(cond, F.lit(val)) if out is None else out.when(cond, F.lit(val))
         return out.otherwise(col) if out is not None else col
 
-    def transform(self, df: DataFrame) -> DataFrame:
+    def column_exprs(self, view) -> dict:
         updates = {}
         for input, output in zip(self.inputs, self.outputs):
-            mapped = self._mapped_col(df, input)
+            mapped = self._mapped_col(view, input)
             if self.default_value is not None:
                 values = [v for v in self.dict.values() if not _is_nan_key(v)]
                 mapped = F.when(mapped.isin(values), mapped).otherwise(F.lit(self.default_value))
             if self.dtype is not None:
                 mapped = mapped.cast(to_spark_type(self.dtype))
             updates[output] = mapped
-        return df.withColumns(updates)
+        return updates
+
+    def transform(self, df: DataFrame) -> DataFrame:
+        return df.withColumns(self.column_exprs(ColumnView(df)))

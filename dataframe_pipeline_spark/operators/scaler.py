@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..base import SparkDFPBase, nan_to_null
+from ..base import ColumnView, SparkDFPBase, nan_to_null
 
 
 class Scaler(SparkDFPBase):
@@ -140,9 +140,9 @@ class Scaler(SparkDFPBase):
     def _deferred_fit_consume(self, row, prefix: str):
         """Complete the fit from the fused job's row — same arithmetic
         as fit()'s minmax/min branches."""
-        from ..base import SERVING_CACHE_ATTR
+        from ..base import invalidate_serving
 
-        self.__dict__.pop(SERVING_CACHE_ATTR, None)
+        invalidate_serving(self)
         self.offsets, self.scales = [], []
         for i in range(len(self.inputs)):
             lo = row[f"{prefix}lo{i}"]
@@ -157,12 +157,15 @@ class Scaler(SparkDFPBase):
                 self.scales.append(None)
         return self
 
-    def transform(self, df: DataFrame) -> DataFrame:
+    def column_exprs(self, view) -> dict:
         updates = {}
         for input, output, off, scale in zip(self.inputs, self.outputs, self.offsets, self.scales):
-            col = nan_to_null(df, input)
+            col = view.nan_to_null(input)
             if self.strategy == "min":
                 updates[output] = col - F.lit(off)
             else:
                 updates[output] = (col - F.lit(off)) * F.lit(scale)
-        return df.withColumns(updates)
+        return updates
+
+    def transform(self, df: DataFrame) -> DataFrame:
+        return df.withColumns(self.column_exprs(ColumnView(df)))

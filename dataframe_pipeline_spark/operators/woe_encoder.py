@@ -15,10 +15,10 @@ groupBy per input column producing a (category → woe) lookup whose
 arithmetic runs inside the aggregate plan (no driver math beyond the
 two scalars); transform is a size-gated broadcast left join per
 column, unseen/NULL categories → 0.0 (no evidence).  Same lookup
-discipline as TargetEncoder / FrequencyEncoder; the serving tier's
-literal-map compiler handles it via ``_serve_woe_encoder`` (registered
-in ``serving._SERVING_COMPILERS``), so a WOE-containing pipeline keeps
-the job-free LocalRelation fold online.
+discipline as TargetEncoder / FrequencyEncoder; the serving tier
+compiles it to a driver-side lookup (``serving._SERVING_COMPILERS``),
+so a WOE-containing pipeline keeps the job-free LocalRelation fold
+online.
 
 Reference parity: the reference has no WOE surface; this extends the
 encoder family the same way TargetEncoder does (beyond-reference,

@@ -105,11 +105,10 @@ def save_pipeline(pipe, path: str) -> None:
     for i, step in enumerate(steps):
         frames: list = []
         hints = getattr(step, "_dfp_partition_hints", {})
-        # Drop the serving tier's compiled-literal cache: its values are
-        # pyspark Column objects (py4j handles) that cloudpickle cannot
-        # serialize — without this, fit -> serving_transform ->
-        # save_pipeline crashes.  The cache is a pure derivation of the
-        # fitted lookups; serving_transform rebuilds it after load.
+        # Drop the serving tier's compiled lookups: they are a pure
+        # derivation of the fitted lookup tables (and the compiled
+        # program on the pipeline object is never saved either); the
+        # first serving call after load rebuilds them.
         # Likewise drop the step's own ``_dfp_transient`` attrs (not just
         # nested sub-objects'): a top-level IVFIndex saved via
         # save_operator must not pickle its driver-resident serving

@@ -172,9 +172,10 @@ class DataframePipeline:
 
     def serving_transform(self, df: DataFrame) -> DataFrame:
         """Online-scoring transform: identical results to ``transform``
-        but with lookup-joining steps compiled to literal maps, so the
-        plan over a 1-row local input folds to a LocalRelation and
-        ``collect()`` never launches a Spark job (see serving.py)."""
+        through the pipeline's compiled serving program (driver-side
+        lookups and one select), so the plan over a small local input
+        folds to a LocalRelation and ``collect()`` launches no Spark job
+        (see serving.py)."""
         from .serving import serving_transform
 
         return serving_transform(self, df)

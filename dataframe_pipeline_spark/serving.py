@@ -1,237 +1,414 @@
-"""Low-latency online-scoring tier: compile fitted lookup state to
-literal expressions so a 1-row transform never launches a Spark job.
+"""Online-scoring tier: a fitted pipeline compiled once, then each
+request is one local relation, one ``select`` and one ``collect``,
+with no Spark job.
 
-Batch transform plans JOIN fitted lookup tables — the scale-correct
-shape (lookups can be arbitrarily large; size-gated broadcast / AQE pick
-the join strategy).  For ONLINE serving — one row or a tiny micro-batch
-per request — that plan costs a full Spark job per request: ~240 ms of
-scheduling and task dispatch for well under 1 ms of actual work
-(BENCH r4 ``online_p50_ms.exec_only``).
+Batch transform JOINs fitted lookup tables, the scale-correct shape;
+for one row per request that plan costs a Spark job.  Serving instead
+compiles the pipeline once per fit of its steps and per input schema:
 
-``serving_transform`` rewrites each lookup-joining step over a literal
-``MapType`` expression (``F.create_map`` + ``F.element_at``) whose
-entries are collected ONCE from the fitted lookup (size-gated by
-``SERVING_MAX_ROWS`` — a dictionary too big to inline falls back to the
-join plan for that step).  Every other operator in this package already
-compiles to pure Column arithmetic.  The resulting plan over a local
-(driver-side) input relation is join-free and deterministic, so
-Catalyst's ``ConvertToLocalRelation`` folds the ENTIRE transform into a
-``LocalRelation`` during optimization — ``collect()`` is a driver-side
-expression evaluation, zero jobs, zero task scheduling.
+* each lookup step (ComplementLabelEncoder, grouped Aggregator,
+  FrequencyEncoder, TargetEncoder, WOEEncoder, WrapTransformer
+  LabelEncoder) becomes a driver-side ``dict`` per output, built from
+  one collect of its fitted table.  Keys are looked up in Python while
+  the request row is rendered, with the batch join's NaN→NULL, unseen
+  and NULL-key rules, and the values ride as extra typed columns of
+  the inline ``VALUES`` table;
+* every other step adds its columns through its ``column_exprs`` hook
+  (:class:`~dataframe_pipeline_spark.base.ColumnView`), composed over
+  the expressions earlier steps wrote into one precomputed select.
 
-This is the second deploy shape of the reference
-(/root/reference/benchmarks/RunBench.py:69-77 — fitted pipeline scoring
-single rows); the compiled-literal trick is the Spark analog of its
-compiled-plan export.
+A request is render → ``select(*compiled)`` → ``collect``.  Catalyst
+folds the plan into a ``LocalRelation``, so ``collect`` runs on the
+driver, and the plan's size does not grow with the dictionaries.
 
-Scale note: the fallback keeps correctness at any cardinality, and the
-collected literals are exactly the state a size-gated broadcast would
-ship to every executor — the serving path moves it into the plan instead.
+Python lookups are used only where Python equality matches Spark's
+normalized key (strings, integral types, booleans, dates, and floats
+with NaN normalized); any other key type, or a key written by an
+earlier step, keeps a literal-map lookup inside the select.  A table
+above ``SERVING_MAX_ROWS`` entries (the driver-memory bound) keeps the
+batch join, which launches jobs.  A step without a column hook (an
+Arrow-UDF lambda, AnnAnnotator, statistics computed at transform time)
+is a barrier: the select so far is applied, the step runs as in batch,
+and composition resumes after it.  Each step that leaves the compiled
+path is logged once per compile on
+``logging.getLogger("dataframe_pipeline_spark")`` with its index, class
+and reason.  The compiled program lives on the pipeline object and is
+never saved; refitting a step bumps its generation
+(``base.invalidate_serving``) and the next request recompiles.  This is
+the analogue of the reference's compiled export, which scores single
+rows from a graph built once.
 """
 
 from __future__ import annotations
 
+import datetime
+import logging
+from dataclasses import dataclass
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from .base import SERVING_CACHE_ATTR
+from .base import (GENERATION_ATTR, SERVING_CACHE_ATTR, ColumnView,
+                   is_floating)
 
-#: lookup dictionaries with at most this many entries are inlined as
-#: literal maps; larger ones keep the join plan (a >100k-literal
-#: expression would bloat analysis time past the job cost it saves).
+log = logging.getLogger("dataframe_pipeline_spark")
+
+#: lookup dictionaries with at most this many entries are held on the
+#: driver (a dict per looked-up output); larger ones keep the batch join
+#: plan, which launches Spark jobs.
 SERVING_MAX_ROWS = 100_000
 
-# Cache lives in base.py so fit() can invalidate it on refit and
-# persistence can strip it (Column handles are not picklable).
-_CACHE_ATTR = SERVING_CACHE_ATTR
+_PROGRAM_ATTR = "_dfp_serving_program"
+_HIDDEN = "__dfp_lk"
+#: table key standing for float NaN (NaN != NaN in Python, but Spark's
+#: join and map lookups treat NaN as one value)
+_NAN = object()
 
 
-def _literal_map(pairs):
-    """map<k,v> literal from python pairs; None when empty (create_map()
-    with no args has an untyped map type)."""
-    args = []
-    for k, v in pairs:
-        args += [F.lit(k), F.lit(v)]
-    return F.create_map(*args) if args else None
+@dataclass
+class _Lookup:
+    """One looked-up output column: ``table.get(key, miss)``, or ``null``
+    for a NULL key, cast to ``dtype`` — the batch join's result."""
+
+    key: str
+    output: str
+    table: dict
+    dtype: T.DataType
+    miss: object
+    null: object
+    #: how the batch join normalizes the key: "string" (the
+    #: ComplementLabelEncoder string cast), "nan" (NaN → NULL) or "raw"
+    norm: str
 
 
-# -- per-operator compilers ------------------------------------------------
+def _table(rows) -> dict:
+    return {_NAN if k != k else k: v for k, v in rows}
 
-def _serve_label_encoder(op, df: DataFrame) -> DataFrame:
-    cache = getattr(op, _CACHE_ATTR, None)
-    if cache is None:
-        if any(n > SERVING_MAX_ROWS for _, _, n in op._lookups.values()):
-            cache = False  # dictionary too large to inline
-        else:
-            cache = {}
-            for input, (lookup, default_id, _n) in op._lookups.items():
-                pairs = [(r["__dfp_val"], r["__dfp_id"])
-                         for r in lookup.collect()]
-                cache[input] = (_literal_map(pairs), default_id)
-        setattr(op, _CACHE_ATTR, cache)
-    if cache is False:
-        return op.transform(df)
+
+# -- per-operator lookup compilers ---------------------------------------
+#
+# Each returns the step's lookups from one collect per fitted table, []
+# when the step has no lookup in its configuration, or False when a table
+# is over SERVING_MAX_ROWS.
+
+def _label_encoder(op):
+    if any(n > SERVING_MAX_ROWS for _, _, n in op._lookups.values()):
+        return False
+    out = []
     for input, output in zip(op.inputs, op.outputs):
-        m, default_id = cache[input]
-        key = op._normalized(df, input)
-        looked = F.element_at(m, key) if m is not None else F.lit(None)
-        df = df.withColumn(
-            output, F.coalesce(looked, F.lit(default_id)).cast("int"))
-    return df
+        lookup, default_id, _n = op._lookups[input]
+        out.append(_Lookup(input, output, _table(lookup.collect()),
+                           T.IntegerType(), default_id, default_id, "string"))
+    return out
 
 
-def _serve_aggregator(op, df: DataFrame) -> DataFrame:
-    from .base import nan_to_null
-
-    if not op.groupby:            # global mode is already literal
-        return op.transform(df)
-    cache = getattr(op, _CACHE_ATTR, None)
-    if cache is None:
-        cache = {}
-        for g, (lookup, outmap) in op._lookups.items():
-            rows = lookup.limit(SERVING_MAX_ROWS + 1).collect()
-            if len(rows) > SERVING_MAX_ROWS:
-                cache = False
-                break
-            # one literal map per output column; value dtype recorded so
-            # an empty fitted lookup still yields a correctly-typed NULL
-            maps = {}
-            for o, tmp in outmap.items():
-                maps[o] = (_literal_map([(r["__dfp_key"], r[tmp])
-                                         for r in rows]),
-                           lookup.schema[tmp].dataType)
-            cache[g] = maps
-        setattr(op, _CACHE_ATTR, cache)
-    if cache is False:
-        return op.transform(df)
-    for g, (_lookup, outmap) in op._lookups.items():
-        key = nan_to_null(df, g)
-        updates = {}
-        for o, (m, dtype) in cache[g].items():
-            looked = (F.element_at(m, key) if m is not None
-                      else F.lit(None))
-            # cast to the fitted lookup's dtype: python literals can
-            # narrow (int -> int32) vs the batch join's column type
-            updates[o] = looked.cast(dtype)
-        df = df.withColumns(updates)
-    return df
+def _aggregator(op):
+    out = []
+    for g, (lookup, outmap) in (op._lookups.items() if op.groupby else ()):
+        rows = lookup.limit(SERVING_MAX_ROWS + 1).collect()
+        if len(rows) > SERVING_MAX_ROWS:
+            return False
+        for o, tmp in outmap.items():
+            out.append(_Lookup(g, o, _table((r["__dfp_key"], r[tmp])
+                                            for r in rows),
+                               lookup.schema[tmp].dataType, None, None, "nan"))
+    return out
 
 
-def _serve_frequency_encoder(op, df: DataFrame) -> DataFrame:
-    from .base import nan_to_null
-
-    cache = getattr(op, _CACHE_ATTR, None)
-    if cache is None:
-        cache = {}
-        for input, lookup in op._lookups.items():
-            rows = lookup.limit(SERVING_MAX_ROWS + 1).collect()
-            if len(rows) > SERVING_MAX_ROWS:
-                cache = False
-                break
-            cache[input] = (
-                _literal_map([(r["__dfp_val"], r["__dfp_cnt"])
-                              for r in rows]),
-                lookup.schema["__dfp_cnt"].dataType)
-        setattr(op, _CACHE_ATTR, cache)
-    if cache is False:
-        return op.transform(df)
+def _frequency_encoder(op):
     default = 0.0 if op.normalize else 1
+    out = []
     for input, output in zip(op.inputs, op.outputs):
-        m, dtype = cache[input]
-        looked = (F.element_at(m, nan_to_null(df, input))
-                  if m is not None else F.lit(None))
-        # cast to the fitted count dtype (python int literals narrow)
-        df = df.withColumn(
-            output, F.coalesce(looked, F.lit(default)).cast(dtype))
-    return df
+        lookup = op._lookups[input]
+        rows = lookup.limit(SERVING_MAX_ROWS + 1).collect()
+        if len(rows) > SERVING_MAX_ROWS:
+            return False
+        out.append(_Lookup(input, output, _table(rows),
+                           lookup.schema["__dfp_cnt"].dataType,
+                           default, default, "nan"))
+    return out
 
 
-def _serve_target_encoder(op, df: DataFrame) -> DataFrame:
-    cache = getattr(op, _CACHE_ATTR, None)
-    if cache is None:
-        if any(n > SERVING_MAX_ROWS for n in op.cards_):
-            cache = False
-        else:
-            cache = [
-                _literal_map([(r["__cat"], r["__code"])
-                              for r in lk.collect()])
-                for lk in op.lookups_]
-        setattr(op, _CACHE_ATTR, cache)
-    if cache is False:
-        return op.transform(df)
-    for c, o, m in zip(op.inputs, op.outputs, cache):
-        looked = F.element_at(m, F.col(c)) if m is not None else F.lit(None)
-        df = df.withColumn(
-            o, F.coalesce(looked, F.lit(op.global_mean_)).cast("double"))
-    return df
+def _target_encoder(op):
+    if any(n > SERVING_MAX_ROWS for n in op.cards_):
+        return False
+    g = op.global_mean_
+    return [_Lookup(c, o, _table(lk.collect()), T.DoubleType(), g, g, "raw")
+            for c, o, lk in zip(op.inputs, op.outputs, op.lookups_)]
 
 
-def _serve_wrap_transformer(op, df: DataFrame) -> DataFrame:
-    """Only the LabelEncoder mapping joins a lookup; every other wrap
-    mode is already literal arithmetic or an Arrow UDF (an Arrow kernel
-    cannot fold into a local plan — it falls through to the batch
-    transform)."""
-    from .base import nan_to_null
+def _woe_encoder(op):
+    if any(n > SERVING_MAX_ROWS for n in op.cards_):
+        return False
+    return [_Lookup(c, o, _table(lk.collect()), T.DoubleType(), 0.0, 0.0,
+                    "nan")
+            for c, o, lk in zip(op.inputs, op.outputs, op.lookups_)]
 
+
+def _wrap_transformer(op):
+    """Only the LabelEncoder mapping joins a lookup.  Its classes may
+    include the NULL/NaN class (an eqNullSafe join), which answers a
+    NULL key; an unseen key gets NULL."""
     if op._kind != "LabelEncoder":
-        return op.transform(df)
-    cache = getattr(op, _CACHE_ATTR, None)
-    if cache is None:
-        if any(n > SERVING_MAX_ROWS for _, n in op._state.values()):
-            cache = False
-        else:
-            cache = {}
-            for input, (lookup, _n) in op._state.items():
-                rows = lookup.collect()
-                # sklearn LabelEncoder classes may include the NULL/NaN
-                # class (eqNullSafe join); map literals cannot hold a
-                # NULL key, so it rides separately
-                null_id = next((r["__dfp_id"] for r in rows
-                                if r["__dfp_val"] is None), None)
-                m = _literal_map([(r["__dfp_val"], r["__dfp_id"])
-                                  for r in rows
-                                  if r["__dfp_val"] is not None])
-                cache[input] = (m, null_id)
-        setattr(op, _CACHE_ATTR, cache)
-    if cache is False:
-        return op.transform(df)
+        return []
+    if any(n > SERVING_MAX_ROWS for _, n in op._state.values()):
+        return False
+    out = []
     for input, output in zip(op.inputs, op.outputs):
-        in_col = input if isinstance(input, str) else input[0]
-        out_col = output if isinstance(output, str) else output[0]
-        m, null_id = cache[input]
-        key = nan_to_null(df, in_col)
-        looked = F.element_at(m, key) if m is not None else F.lit(None)
-        df = df.withColumn(
-            out_col,
-            F.when(key.isNull(), F.lit(null_id)).otherwise(looked)
-            .cast("int"))
-    return df
+        rows = op._state[input][0].collect()
+        null_id = next((i for v, i in rows if v is None), None)
+        out.append(_Lookup(
+            input if isinstance(input, str) else input[0],
+            output if isinstance(output, str) else output[0],
+            _table((v, i) for v, i in rows if v is not None),
+            T.IntegerType(), None, null_id, "nan"))
+    return out
 
 
-def _serve_woe_encoder(op, df: DataFrame) -> DataFrame:
-    """Same (category -> code) lookup shape as TargetEncoder, default
-    0.0 (no evidence) for unseen/NULL — mirrors the batch join's
-    ``coalesce(woe, 0.0)``."""
-    from .base import nan_to_null
+_SERVING_COMPILERS = {
+    "ComplementLabelEncoder": _label_encoder,
+    "Aggregator": _aggregator,
+    "FrequencyEncoder": _frequency_encoder,
+    "TargetEncoder": _target_encoder,
+    "WrapTransformer": _wrap_transformer,
+    "WOEEncoder": _woe_encoder,
+}
 
-    cache = getattr(op, _CACHE_ATTR, None)
-    if cache is None:
-        if any(n > SERVING_MAX_ROWS for n in op.cards_):
-            cache = False
-        else:
-            cache = [
-                _literal_map([(r["__cat"], r["__woe"])
-                              for r in lk.collect()])
-                for lk in op.lookups_]
-        setattr(op, _CACHE_ATTR, cache)
-    if cache is False:
-        return op.transform(df)
-    for c, o, m in zip(op.inputs, op.outputs, cache):
-        key = nan_to_null(df, c)
-        looked = F.element_at(m, key) if m is not None else F.lit(None)
-        df = df.withColumn(
-            o, F.coalesce(looked, F.lit(0.0)).cast("double"))
-    return df
+
+# -- key normalization -----------------------------------------------------
+
+def _py_key(norm: str, dtype: T.DataType):
+    """Python function from a request value to its table key, normalized
+    as the batch join normalizes it; None where Python equality does
+    not reproduce Spark's for this key type."""
+    from .operators.label_encoder import EXTRA
+
+    def as_date(v):
+        return v.date() if isinstance(v, datetime.datetime) else v
+
+    if norm == "string":
+        if isinstance(dtype, T.StringType):
+            return lambda v: EXTRA if v is None else v
+        if isinstance(dtype, T.IntegralType):
+            return lambda v: EXTRA if v is None else str(v)
+        if isinstance(dtype, T.BooleanType):
+            return lambda v: EXTRA if v is None else ("true" if v else "false")
+        if isinstance(dtype, T.DateType):
+            return lambda v: EXTRA if v is None else as_date(v).isoformat()
+        return None
+    if is_floating(dtype):
+        if norm == "nan":
+            return lambda v: None if v is None or v != v else v
+        return lambda v: _NAN if v is not None and v != v else v
+    if isinstance(dtype, T.DateType):
+        return as_date
+    if isinstance(dtype, (T.StringType, T.IntegralType, T.BooleanType)):
+        return lambda v: v
+    return None
+
+
+def _key_expr(spec: _Lookup, view) -> "F.Column":
+    if spec.norm == "string":
+        from .operators.label_encoder import ComplementLabelEncoder
+
+        return ComplementLabelEncoder._normalized(view, spec.key)
+    if spec.norm == "nan":
+        return view.nan_to_null(spec.key)
+    return view.col(spec.key)
+
+
+def _map_expr(spec: _Lookup, key) -> "F.Column":
+    """The lookup as a literal map inside the select (inexact key types)."""
+    args = []
+    for k, v in spec.table.items():
+        args += [F.lit(float("nan") if k is _NAN else k), F.lit(v)]
+    looked = F.element_at(F.create_map(*args), key) if args else F.lit(None)
+    if spec.miss is not None:
+        looked = F.coalesce(looked, F.lit(spec.miss))
+    if spec.null != spec.miss:
+        looked = F.when(key.isNull(), F.lit(spec.null)).otherwise(looked)
+    return looked.cast(spec.dtype)
+
+
+# -- compile ---------------------------------------------------------------
+
+class _Env(ColumnView):
+    """The frame a compiled select is built over: each column's current
+    expression, in output order, and the looked-up columns rendered
+    into the request relation."""
+
+    def __init__(self, spark, schema: T.StructType):
+        self._spark = spark
+        self.exprs = {f.name: F.col(f.name) for f in schema.fields}
+        self.types = {f.name: f.dataType for f in schema.fields}
+        self.base = list(schema.fields)
+        self.hidden: list = []
+        self.written: set = set()
+
+    @property
+    def columns(self) -> list:
+        return list(self.exprs)
+
+    def col(self, name: str):
+        return self.exprs.get(name, F.col(name))
+
+    def dtype(self, name: str) -> T.DataType:
+        if name not in self.types:
+            # analysis of an empty JVM-side relation: no job
+            empty = self._spark.range(0).select(*[
+                F.lit(None).cast(f.dataType).alias(f.name)
+                for f in self.base + self.hidden])
+            self.types[name] = empty.select(self.col(name)).schema[0].dataType
+        return self.types[name]
+
+    def set(self, updates: dict, dtypes: dict | None = None) -> None:
+        for name, expr in updates.items():
+            self.written.add(name)
+            self.types.pop(name, None)
+            if expr is None:
+                self.exprs.pop(name, None)
+                continue
+            self.exprs[name] = expr
+            if dtypes and name in dtypes:
+                self.types[name] = dtypes[name]
+
+    def select(self):
+        if not self.written and not self.hidden:
+            return None
+        return [e.alias(n) for n, e in self.exprs.items()]
+
+
+class _Program:
+    """The steps of a fitted pipeline from ``start`` on, compiled for one
+    input schema: Python lookups to render, one select, and the barrier
+    step (if any) after which a tail program takes over."""
+
+    def __init__(self, steps, spark, schema: T.StructType, start: int = 0):
+        self.signature = [(s, getattr(s, GENERATION_ATTR, 0)) for s in steps]
+        self.schema = schema
+        self.types = _types(schema)
+        self.spark = spark
+        self.lookups: list = []     # (key index, key function, _Lookup)
+        self.barrier = None         # (index, step)
+        self.tail = None
+        env = _Env(spark, schema)
+        names = [f.name for f in schema.fields]
+        for i in range(start, len(steps)):
+            if not self._compose(i, steps[i], env, names, render=start == 0):
+                self.barrier = (i, steps[i])
+                break
+        self.rendered_schema = T.StructType(list(schema.fields) + env.hidden)
+        self.select = env.select()
+
+    def _compose(self, i, step, env, names, render) -> bool:
+        """Add step ``i`` to the select; False when it is a barrier."""
+        cls = type(step).__name__
+        specs = []
+        if cls in _SERVING_COMPILERS:
+            # kept on the step until it is refit; False (a step that left
+            # the compiled path) is worked out again at each compile
+            specs = getattr(step, SERVING_CACHE_ATTR, None)
+            if specs is None or specs is False:
+                specs = _SERVING_COMPILERS[cls](step)
+                setattr(step, SERVING_CACHE_ATTR, specs)
+        if specs is False:
+            _report(i, cls, f"a fitted table is over SERVING_MAX_ROWS="
+                    f"{SERVING_MAX_ROWS} entries; it runs the batch join, "
+                    "which launches Spark jobs")
+            return False
+        inexact = {}
+        for spec in specs:
+            key_fn = None
+            if not render or spec.key not in names or spec.key in env.written:
+                why = f"key {spec.key!r} is computed by an earlier step"
+            else:
+                dtype = env.dtype(spec.key)
+                key_fn = _py_key(spec.norm, dtype)
+                why = (f"key {spec.key!r} is {dtype.simpleString()}, whose "
+                       "Spark key normalization Python equality does not "
+                       "reproduce")
+            if key_fn is not None:
+                hidden = f"{_HIDDEN}{len(env.hidden)}"
+                env.hidden.append(T.StructField(hidden, spec.dtype))
+                self.lookups.append((names.index(spec.key), key_fn, spec))
+                expr = F.col(hidden)
+            else:
+                inexact[why] = None
+                expr = _map_expr(spec, _key_expr(spec, env))
+            env.set({spec.output: expr}, {spec.output: spec.dtype})
+        if inexact:
+            _report(i, cls, "; ".join(inexact) + "; the lookup stays a "
+                    "literal map inside the select")
+        hook = getattr(step, "column_exprs", None)
+        updates = hook(env) if hook is not None else None
+        if updates is None and not specs:
+            if cls in _SERVING_COMPILERS:
+                setattr(step, SERVING_CACHE_ATTR, False)
+            _report(i, cls, "a barrier step (no column hook for its "
+                    "configuration); the select built so far is applied "
+                    "before it and the step runs its batch transform")
+            return False
+        env.set(updates or {})
+        return True
+
+    def valid(self, steps, schema) -> bool:
+        return ((schema is self.schema or _types(schema) == self.types)
+                and len(steps) == len(self.signature)
+                and all(s is s0 and getattr(s, GENERATION_ATTR, 0) == g
+                        for s, (s0, g) in zip(steps, self.signature)))
+
+    def render(self, rows) -> list:
+        """Request rows as value lists in schema order, each followed by
+        its looked-up values."""
+        names = [f.name for f in self.schema.fields]
+        out = []
+        for row in rows:
+            if hasattr(row, "asDict"):
+                row = row.asDict()
+            vals = ([row[n] for n in names] if isinstance(row, dict)
+                    else list(row))
+            for idx, key_fn, spec in self.lookups:
+                k = key_fn(vals[idx])
+                vals.append(spec.null if k is None
+                            else spec.table.get(k, spec.miss))
+            out.append(vals)
+        return out
+
+    def apply(self, df: DataFrame) -> DataFrame:
+        X = df.select(*self.select) if self.select is not None else df
+        if self.barrier is None:
+            return X
+        i, step = self.barrier
+        fn = _SERVING_BARRIERS.get(type(step).__name__)
+        X = fn(step, X) if fn is not None else step.transform(X)
+        schema = X.schema
+        if self.tail is None or self.tail.types != _types(schema):
+            steps = [s for s, _ in self.signature]
+            self.tail = _Program(steps, self.spark, schema, start=i + 1)
+        return self.tail.apply(X)
+
+
+def _types(schema: T.StructType) -> list:
+    """What a compiled program depends on: column names and types (a
+    rendered VALUES relation differs from the batch schema in
+    nullability only)."""
+    return [(f.name, f.dataType) for f in schema.fields]
+
+
+def _report(i: int, cls: str, reason: str) -> None:
+    log.warning("serving: step %d (%s) leaves the compiled path: %s",
+                i, cls, reason)
+
+
+def _program(pipeline, spark, schema: T.StructType) -> _Program:
+    """The pipeline's compiled program for ``schema``, compiled on first
+    use and again after any step is refit or replaced."""
+    prog = pipeline.__dict__.get(_PROGRAM_ATTR)
+    if prog is None or not prog.valid(pipeline.steps, schema):
+        prog = _Program(pipeline.steps, spark, schema)
+        setattr(pipeline, _PROGRAM_ATTR, prog)
+    return prog
 
 
 def _serve_ann_annotator(op, df: DataFrame) -> DataFrame:
@@ -246,8 +423,6 @@ def _serve_ann_annotator(op, df: DataFrame) -> DataFrame:
     identical to the batch transform (parity-tested in
     test_serving.py); a row with no probed hits gets NULL arrays, as
     the batch plan's left join does."""
-    from pyspark.sql import types as T
-
     rows = df.collect()
     hits = op.serve_rows([(r[op.id_col], r[op.vec_col]) for r in rows])
     id_type = df.schema[op.id_col].dataType
@@ -261,15 +436,7 @@ def _serve_ann_annotator(op, df: DataFrame) -> DataFrame:
     return local_rows_df(df.sparkSession, new_rows, schema)
 
 
-_SERVING_COMPILERS = {
-    "ComplementLabelEncoder": _serve_label_encoder,
-    "Aggregator": _serve_aggregator,
-    "FrequencyEncoder": _serve_frequency_encoder,
-    "TargetEncoder": _serve_target_encoder,
-    "WrapTransformer": _serve_wrap_transformer,
-    "WOEEncoder": _serve_woe_encoder,
-    "AnnAnnotator": _serve_ann_annotator,
-}
+_SERVING_BARRIERS = {"AnnAnnotator": _serve_ann_annotator}
 
 
 # -- local input construction ---------------------------------------------
@@ -362,19 +529,29 @@ def local_rows_df(spark, rows, schema) -> DataFrame:
 
 
 def serve_rows(pipeline, spark, rows, schema) -> list:
-    """One-call scoring: rows -> inline LocalRelation -> compiled
-    serving transform -> collected Rows.  Job-free end to end."""
-    return pipeline.serving_transform(
-        local_rows_df(spark, rows, schema)).collect()
+    """Score ``rows`` (Rows, dicts or tuples of ``schema``) through a
+    fitted pipeline: Python lookups while the rows are rendered into an
+    inline VALUES relation, the compiled select, and one collect.
+    Job-free for every step on the compiled path."""
+    prog = _program(pipeline, spark, schema)
+    if prog.lookups:
+        rows, schema = prog.render(rows), prog.rendered_schema
+    return serving_transform(pipeline, local_rows_df(spark, rows, schema)) \
+        .collect()
 
 
 def serving_transform(pipeline, df: DataFrame) -> DataFrame:
-    """Transform ``df`` through a fitted pipeline with lookup-joining
-    steps compiled to literal maps.  Results are identical to
-    ``pipeline.transform`` (parity-tested); the plan over a local input
-    folds to a LocalRelation — ``collect()`` launches no job."""
-    X = df
-    for step in pipeline.steps:
-        fn = _SERVING_COMPILERS.get(type(step).__name__)
-        X = fn(step, X) if fn is not None else step.transform(X)
-    return X
+    """Transform ``df`` through the pipeline's compiled serving program.
+    Results equal ``pipeline.transform`` (parity-tested); over a local
+    input the plan folds to a LocalRelation and ``collect()`` launches
+    no job.  ``df`` is a small driver-side frame: when it does not carry
+    the looked-up columns ``serve_rows`` renders, it is collected and
+    rendered again with them."""
+    fields = df.schema.fields
+    base = T.StructType([f for f in fields if not f.name.startswith(_HIDDEN)])
+    spark = df.sparkSession
+    prog = _program(pipeline, spark, base)
+    if prog.lookups and len(base.fields) == len(fields):
+        df = local_rows_df(spark, prog.render(df.collect()),
+                           prog.rendered_schema)
+    return prog.apply(df)

@@ -1446,8 +1446,8 @@ class AnnAnnotator:
     :class:`IVFServingReplica` (the same replica ``search_batch_local``
     uses, bit-parity-tested against the distributed plan), so a
     pipeline with an ANN stage stays job-free below the serving
-    crossover — the vector twin of the literal-map fold for lookup
-    joins."""
+    crossover — the vector twin of the driver-side lookups that
+    replace lookup joins."""
 
     #: transform contains a per-query aggregation + join-back — valid
     #: per micro-batch (streaming.annotate_stream / foreachBatch), but

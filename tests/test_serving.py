@@ -1,6 +1,7 @@
-"""serving.py: literal-map compilation of fitted pipelines for online
-scoring — result parity with the batch transform, full LocalRelation
-fold (collect launches no job), and inline-VALUES row rendering."""
+"""serving.py: compiled online scoring of fitted pipelines — result
+parity with the batch transform, full LocalRelation fold (collect
+launches no job), recompilation on refit, logged fallbacks, and
+inline-VALUES row rendering."""
 
 import datetime as dt
 import math
@@ -321,3 +322,199 @@ def test_serving_ann_annotator_after_reload(spark, tmp_path):
            for r in p2.serving_transform(
                local_rows_df(spark, rows, emb.schema)).collect()}
     assert got == want
+
+
+# -- compiled serving: one program per fit, Python lookups, one select ----
+
+def _online_steps():
+    """The step list of perfbench's online_scoring workload."""
+    return [
+        dfp.ComplementLabelEncoder(inputs=["event_type"],
+                                   outputs=["type_id"]),
+        dfp.Aggregator(inputs=["value"], outputs=["user_mean"],
+                       groupby=["user_id"], func="mean"),
+        dfp.FrequencyEncoder(inputs=["user_id"], outputs=["user_freq"]),
+        dfp.Scaler(inputs=["value"], outputs=["value_mm"], strategy="minmax"),
+        dfp.WOEEncoder(inputs=["user_id"], outputs=["user_woe"],
+                       target="is_purchase"),
+        dfp.FunctionTransformer(inputs=["value"], outputs=["value_z"],
+                                func=lambda v: (v - 50.0) / 50.0),
+    ]
+
+
+def _online_split(spark):
+    from pyspark.sql import functions as F
+
+    from dataframe_pipeline_spark import sources
+    from dataframe_pipeline_spark.ext_queries import _events
+
+    ev = _events(spark, "/root/testdata/sf0.001").withColumn(
+        "is_purchase", (F.col("event_type") == "purchase").cast("int"))
+    return sources.split_mod(ev, "event_id")
+
+
+def _assert_rows_match(got, want):
+    assert list(got.asDict()) == list(want.asDict())   # column order
+    for k, w in want.asDict().items():
+        g = got[k]
+        if isinstance(w, float) and isinstance(g, float):
+            assert (math.isnan(g) and math.isnan(w)) \
+                or g == pytest.approx(w, rel=1e-9, abs=0.0), (k, g, w)
+        else:
+            assert g == w, (k, g, w)
+
+
+def _batch_by_id(pipe, spark, rows, schema):
+    out = pipe.transform(spark.createDataFrame(rows, schema))
+    return out.schema, {r["event_id"]: r for r in out.collect()}
+
+
+def test_serving_parity_every_row(spark):
+    """Every held-out row, served one per call and all in one N-row
+    call, equals batch transform: column order, dtypes, values (floats
+    within 1e-9 relative), including NULL/NaN/unseen inputs."""
+    train, test = _online_split(spark)
+    pipe = dfp.DataframePipeline(steps=_online_steps())
+    pipe.fit_transform(train)
+    schema = test.schema
+    rows = [r.asDict() for r in test.collect()]
+    base = dict(rows[0])
+    edge = [dict(base, event_type=None), dict(base, value=None),
+            dict(base, value=float("nan")), dict(base, user_id=10**12),
+            dict(base, event_type="never_seen_category")]
+    for k, r in enumerate(edge):
+        r["event_id"] = 10**9 + k
+    rows += edge
+    tuples = [tuple(r[f.name] for f in schema.fields) for r in rows]
+    batch_schema, batch = _batch_by_id(pipe, spark, tuples, schema)
+
+    one_by_one = [serve_rows(pipe, spark, [r], schema)[0] for r in rows]
+    all_at_once = serve_rows(pipe, spark, rows, schema)
+    assert len(all_at_once) == len(rows)
+    for got in one_by_one + all_at_once:
+        _assert_rows_match(got, batch[got["event_id"]])
+    served = pipe.serving_transform(local_rows_df(spark, rows, schema))
+    assert [(f.name, f.dataType) for f in served.schema.fields] == \
+        [(f.name, f.dataType) for f in batch_schema.fields]
+    # the edge rows really took the miss / NULL paths
+    assert batch[10**9 + 3]["user_mean"] is None
+    assert batch[10**9 + 3]["user_freq"] == 1
+
+
+def _synthetic_events(spark, users: int):
+    from pyspark.sql import functions as F
+
+    return spark.range(30_000).select(
+        F.col("id").alias("event_id"),
+        (F.col("id") % users).alias("user_id"),
+        F.element_at(F.array(F.lit("a"), F.lit("b"), F.lit("c")),
+                     (F.col("id") % 3 + 1).cast("int")).alias("event_type"),
+        (F.col("id") % 100).cast("double").alias("value"),
+        (F.col("id") % 7 == 0).cast("int").alias("is_purchase"))
+
+
+def test_serving_plan_size_independent_of_dictionary(spark):
+    """The analyzed plan of a compiled request is the same size for a
+    15-key and a 15k-key fitted state: lookups happen in Python."""
+    import re
+
+    lengths = []
+    for users in (15, 15_000):
+        ev = _synthetic_events(spark, users)
+        pipe = dfp.DataframePipeline(steps=_online_steps())
+        pipe.fit_transform(ev)
+        row = dict(event_id=1, user_id=10**12, event_type="b", value=3.0,
+                   is_purchase=0)
+        served = pipe.serving_transform(local_rows_df(spark, [row],
+                                                      ev.schema))
+        plan = served._jdf.queryExecution().analyzed().toString()
+        lengths.append(len(re.sub(r"#\d+L?", "#", plan)))
+        assert served.collect()[0]["user_freq"] == 1
+    assert lengths[0] == lengths[1], lengths
+
+
+@pytest.mark.parametrize("refit", ["scaler", "encoder"])
+def test_serving_recompiles_after_one_step_refit(spark, refit):
+    """Serve, refit one step on shifted data, serve again: the compiled
+    program notices the step's new generation and output equals batch."""
+    from pyspark.sql import functions as F
+
+    train, test = _online_split(spark)
+    pipe = dfp.DataframePipeline(steps=_online_steps())
+    pipe.fit_transform(train)
+    rows = test.limit(5).collect()
+    serve_rows(pipe, spark, rows, test.schema)
+    if refit == "scaler":
+        pipe.steps[3].fit(train.withColumn("value", F.col("value") * 3 + 7))
+    else:
+        pipe.steps[0].fit(train.withColumn(
+            "event_type", F.concat(F.lit("x_"), "event_type")))
+    _, batch = _batch_by_id(pipe, spark, rows, test.schema)
+    for got in serve_rows(pipe, spark, rows, test.schema):
+        _assert_rows_match(got, batch[got["event_id"]])
+
+
+def test_serving_save_load_new_session_job_free(spark, tmp_path):
+    """The compiled state is never saved; a pipeline loaded in a new
+    session compiles again and serves the same rows without a job."""
+    train, test = _online_split(spark)
+    pipe = dfp.DataframePipeline(steps=_online_steps())
+    pipe.fit_transform(train)
+    rows = test.limit(8).collect()
+    expected = serve_rows(pipe, spark, rows, test.schema)
+    path = str(tmp_path / "online_pipe")
+    pipe.save(path)
+    fresh = spark.newSession()
+    loaded = dfp.DataframePipeline.load(fresh, path)
+    serve_rows(loaded, fresh, rows[:1], test.schema)     # compile
+    sc = fresh.sparkContext
+    sc.setJobGroup("serve-after-load", "must be job-free")
+    try:
+        got = serve_rows(loaded, fresh, rows, test.schema)
+    finally:
+        sc.setJobGroup(None, None)
+    assert sc.statusTracker().getJobIdsForGroup("serve-after-load") == []
+    for g, e in zip(got, expected):
+        _assert_rows_match(g, e)
+
+
+def test_serving_fallbacks_logged_once(spark, caplog):
+    """Each step that leaves the compiled path is logged once, with its
+    index, class and reason: an oversized lookup (batch join), an
+    inexact key type (literal map kept in the select), and a barrier
+    step.  Results still equal batch."""
+    import logging
+
+    from pyspark.sql import functions as F
+
+    train, test = _online_split(spark)
+    train = train.withColumn("value_key", F.round("value", 0))
+    test = test.withColumn("value_key", F.round("value", 0))
+    big = dfp.ComplementLabelEncoder(inputs=["event_type"],
+                                     outputs=["type_id"])
+    pipe = dfp.DataframePipeline(steps=[
+        big,
+        dfp.ComplementLabelEncoder(inputs=["value_key"],
+                                   outputs=["value_code"]),
+        dfp.Imputer(inputs=["value"], outputs=["value_imp"],
+                    strategy="mean"),
+        dfp.Scaler(inputs=["value_imp"], outputs=["value_mm"],
+                   strategy="minmax"),
+    ])
+    pipe.fit_transform(train)
+    lookup, default_id, _n = big._lookups["event_type"]
+    big._lookups["event_type"] = (lookup, default_id, SERVING_MAX_ROWS + 1)
+    rows = test.limit(3).collect()
+    with caplog.at_level(logging.WARNING, logger="dataframe_pipeline_spark"):
+        for r in rows:
+            got = serve_rows(pipe, spark, [r], test.schema)[0]
+    msgs = [m.getMessage() for m in caplog.records
+            if m.name == "dataframe_pipeline_spark"]
+    assert len(msgs) == 3, msgs
+    assert "step 0 (ComplementLabelEncoder)" in msgs[0]
+    assert "SERVING_MAX_ROWS" in msgs[0]
+    assert "step 1 (ComplementLabelEncoder)" in msgs[1]
+    assert "value_key" in msgs[1] and "literal map" in msgs[1]
+    assert "step 2 (Imputer)" in msgs[2] and "barrier" in msgs[2]
+    want = pipe.transform(spark.createDataFrame([rows[-1]], test.schema))
+    _assert_rows_match(got, want.collect()[0])
