@@ -60,16 +60,6 @@ class SparkDFPBase:
 
     _PARM_ALL = PARM_ALL
 
-    #: Lineage declaration for the pipeline's fused-fit gate (r13): True
-    #: ONLY when ``transform`` provably preserves the input's row
-    #: multiset — it may add or overwrite columns but never filters,
-    #: explodes, re-aggregates or deduplicates rows.  The pipeline may
-    #: then compute a LATER step's order-independent fit aggregates on
-    #: the pipeline's BASE frame (fused into one job) instead of the
-    #: threaded frame.  Fail-closed: the False default disables fusion
-    #: across any step that has not been audited.
-    ROW_PRESERVING = False
-
     def __init_subclass__(cls, **kwargs):
         """Wrap each subclass's ``fit`` so refitting invalidates any
         compiled serving state: without this, ``fit`` rebuilds the

@@ -2522,7 +2522,7 @@ def q_events_latest(spark, sf_dir):
       (struct buffers aren't hash-mutable), costing a map-side
       chunk sort.
 
-    A/B sf1 (1M events, scripts/ab_events_band.py + this session):
+    A/B sf1 (1M events):
     window 1.86 s / struct-max 1.78 s / decimal pack 1.45 s / long
     pack 1.01 s, identical results on all four — the long tier sits on
     the profile twin's 1.10 s scalar-max floor."""
@@ -2604,9 +2604,9 @@ _REV = "CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL
 #       the end: the exact rational sum gets exactly one double
 #       rounding, same as DuckDB's CAST(sum(decimal) AS DOUBLE).
 #
-# A/B at sf1 (scripts/ab_cents.py, 6M-row scan+agg, min of 3
-# interleaved): decimal 1.156s / cents-long 0.368s / pure-double
-# (inexact) 0.332s / no-arithmetic floor 0.273s — the cents path
+# A/B at sf1 (6M-row scan+agg, min of 3 interleaved): decimal
+# 1.156s / cents-long 0.368s / pure-double (inexact) 0.332s /
+# no-arithmetic floor 0.273s — the cents path
 # removes ~97% of the arithmetic residual and value-parity holds at
 # 6 dp.  Summing the long product as decimal(28,0) instead was
 # measured a LOSS (1.146s ≈ the decimal status quo: the >18-precision

@@ -83,10 +83,6 @@ _WINDOWABLE = {"mean", "avg", "average", "std", "stddev", "var", "sum",
 
 
 class Aggregator(SparkDFPBase):
-    #: transform adds lit columns, a window aggregate, or a left join
-    #: against a key-unique grouped lookup — row multiset preserved
-    ROW_PRESERVING = True
-
     #: the remembered fit input (fused fit_transform fast path) must
     #: never be persisted: save_pipeline/_extract writes every DataFrame
     #: attribute to parquet, so without this a fitted Aggregator would

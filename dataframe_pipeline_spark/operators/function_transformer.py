@@ -41,9 +41,6 @@ from ..base import SparkDFPBase, to_spark_type
 
 
 class FunctionTransformer(SparkDFPBase):
-    #: withColumn of a per-row expression/UDF — row multiset preserved
-    ROW_PRESERVING = True
-
     def __init__(self, inputs=None, outputs=None, func=None, returns=None):
         self.inputs = list(inputs or [])
         self.outputs = list(outputs or [])

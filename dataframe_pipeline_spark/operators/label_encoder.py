@@ -38,10 +38,6 @@ EXTRA = "extra_category_"
 
 
 class ComplementLabelEncoder(SparkDFPBase):
-    #: left join against a key-unique (distinct-built) dictionary plus
-    #: coalesce — row multiset preserved exactly
-    ROW_PRESERVING = True
-
     #: dictionaries with at most this many entries get a broadcast hint;
     #: larger ones go through a plain (AQE-planned) shuffle join.
     BROADCAST_MAX_ROWS = 500_000
@@ -75,19 +71,6 @@ class ComplementLabelEncoder(SparkDFPBase):
         fits one sklearn encoder per column in a Python loop
         (ComplementLabelEncoder.py:49-66); at N columns that shape costs
         N full scans, this costs one."""
-        lookup_all, stats_frame = self._prepare_fit(df)
-        return self._finish_fit(lookup_all, stats_frame.collect())
-
-    def _prepare_fit(self, df: DataFrame):
-        """Phase 1 of fit: define the (persisted, still-lazy) dictionary
-        and return ``(lookup_all, stats_frame)`` — stats_frame is the
-        one-row-per-column aggregate whose collect completes the fit.
-        The pipeline's fused-fit path crossJoins deferred scalar fit
-        aggregates of LATER steps into that collect, so the whole fit
-        phase runs as ONE Spark job (VERDICT r12 #2)."""
-        from ..base import invalidate_serving
-
-        invalidate_serving(self)
         self.inputs = self.replace_PARM_ALL(df, self.inputs)
         self.outputs = self.replace_PARM_ALL(df, self.outputs)
         self._lookups = {}
@@ -123,16 +106,11 @@ class ComplementLabelEncoder(SparkDFPBase):
         # ONE collect returns both the reserved-class id and the dictionary
         # cardinality per column; the cardinality gates the transform-time
         # broadcast hint (see module docstring).
-        stats_frame = lookup_all.groupBy("__dfp_col").agg(
+        rows = lookup_all.groupBy("__dfp_col").agg(
             F.max(F.when(F.col("__dfp_val") == EXTRA,
                          F.col("__dfp_id"))).alias("__dfp_default"),
             F.count(F.lit(1)).alias("__dfp_n"),
-        )
-        return lookup_all, stats_frame
-
-    def _finish_fit(self, lookup_all, rows):
-        """Phase 2 of fit: consume the collected per-column stats rows
-        (extra fused columns from deferred steps are ignored here)."""
+        ).collect()
         stats = {
             r["__dfp_col"]: (r["__dfp_default"], r["__dfp_n"]) for r in rows
         }

@@ -31,17 +31,6 @@ from ..base import ColumnView, SparkDFPBase, nan_to_null
 
 
 class Scaler(SparkDFPBase):
-    #: transform adds/overwrites arithmetic columns; never changes rows
-    ROW_PRESERVING = True
-
-    #: strategies whose fit aggregates are exact MULTISET functions
-    #: (order- and partition-independent: min/max), safe to compute on
-    #: the pipeline's base frame under the fused-fit gate.  mean/stddev
-    #: (FP summation order follows the plan's partitioning) and the
-    #: percentile tiers (GK/exact refine are partition- or multi-job-
-    #: shaped) must keep fitting on the threaded frame.
-    _DEFER_SAFE_STRATEGIES = ("minmax", "min")
-
     def __init__(self, inputs=None, outputs=None, strategy=None,
                  approx: bool = False, accuracy: int = 10000):
         """``approx`` (robust strategy only): fit the quartiles with the
@@ -120,41 +109,6 @@ class Scaler(SparkDFPBase):
             else:
                 self.offsets.append(row[f"lo{i}"])
                 self.scales.append(None)  # plain subtraction keeps input dtype
-        return self
-
-    # -- fused-fit protocol (pipeline.py, VERDICT r12 #2) ------------------
-    def _deferred_fit_aggs(self, df: DataFrame, prefix: str):
-        """Aggregate Columns for a deferred (base-frame, fused-job) fit,
-        or None when this configuration must fit on the threaded frame
-        (see _DEFER_SAFE_STRATEGIES)."""
-        if self.strategy not in self._DEFER_SAFE_STRATEGIES:
-            return None
-        aggs = []
-        for i, c in enumerate(self.inputs):
-            v = nan_to_null(df, c)
-            aggs.append(F.min(v).alias(f"{prefix}lo{i}"))
-            if self.strategy == "minmax":
-                aggs.append(F.max(v).alias(f"{prefix}hi{i}"))
-        return aggs
-
-    def _deferred_fit_consume(self, row, prefix: str):
-        """Complete the fit from the fused job's row — same arithmetic
-        as fit()'s minmax/min branches."""
-        from ..base import invalidate_serving
-
-        invalidate_serving(self)
-        self.offsets, self.scales = [], []
-        for i in range(len(self.inputs)):
-            lo = row[f"{prefix}lo{i}"]
-            if self.strategy == "minmax":
-                hi = row[f"{prefix}hi{i}"]
-                rng = (hi - lo) if (hi is not None and lo is not None) else None
-                self.offsets.append(lo)
-                self.scales.append(1.0 / rng if rng not in (None, 0, 0.0)
-                                   else 1.0)
-            else:  # min
-                self.offsets.append(lo)
-                self.scales.append(None)
         return self
 
     def column_exprs(self, view) -> dict:

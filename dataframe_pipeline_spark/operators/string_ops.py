@@ -27,9 +27,6 @@ def _strip_trailing(col: Column) -> Column:
 
 
 class StringConcatenator(SparkDFPBase):
-    #: per-row withColumn string fold — row multiset preserved
-    ROW_PRESERVING = True
-
     def __init__(self, inputs=None, outputs=None, separator: str = ""):
         self.inputs = list(inputs or [])
         self.outputs = list(outputs or [])

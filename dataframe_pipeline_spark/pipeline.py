@@ -15,7 +15,9 @@ stays fully lazy.
 Reference quirk replicated exactly: ``fit`` (without transform) fits every
 step against the *original* input frame — it does NOT thread the transformed
 frame through (DataframePipeline.py:322-334).  ``fit_transform`` does thread
-it (DataframePipeline.py:359-381).
+it, as the reference does (DataframePipeline.py:359-381): each step fits on
+the frame the previous step produced, then transforms it.  No fit is hoisted
+onto an earlier frame or merged into another step's job.
 """
 
 from __future__ import annotations
@@ -93,75 +95,15 @@ class DataframePipeline:
         self.output_columns = list(X.columns)
         return X
 
-    def _plan_deferred_fits(self, df: DataFrame) -> dict:
-        """Fail-closed lineage gate for the fused-fit path (VERDICT r12
-        #2 — the r12-reverted hoist machinery, now fusing the JOBS, not
-        just moving them).  Step j's scalar fit aggregates may be
-        computed on the BASE frame only when every preceding step (a)
-        declares ROW_PRESERVING and (b) wrote no column the fit reads;
-        the operator itself additionally refuses strategies whose
-        aggregates are order- or partition-dependent
-        (Scaler._DEFER_SAFE_STRATEGIES).  Returns {step_index: (prefix,
-        [agg Columns over df])}."""
-        out: dict[int, tuple[str, list]] = {}
-        written: set[str] = set()
-        safe = True
-        for j, tr in enumerate(self.steps):
-            if safe and j > 0 and hasattr(tr, "_deferred_fit_aggs"):
-                ins = getattr(tr, "inputs", None) or []
-                reads = [c for c in ins if isinstance(c, str)]
-                if (reads and len(reads) == len(ins)
-                        and not (set(reads) & written)
-                        and all(c in df.columns for c in reads)):
-                    prefix = f"__dfp_h{j}_"
-                    aggs = tr._deferred_fit_aggs(df, prefix)
-                    if aggs:
-                        out[j] = (prefix, aggs)
-            if not getattr(type(tr), "ROW_PRESERVING", False):
-                safe = False
-            outs = getattr(tr, "outputs", None)
-            if isinstance(outs, (list, tuple)) and all(
-                    isinstance(o, str) for o in outs):
-                written |= set(outs)
-            else:
-                safe = False  # unknown write set -> fail closed
-        return out
-
     def fit_transform(self, df: DataFrame, **kwargs) -> DataFrame:
         X = df
         self.input_columns = list(X.columns)
         self.input_dtypes = {f.name: f.dataType for f in X.schema.fields}
         self.column_info, self.new_columns = {}, []
-        # Fused-fit planning (guide §1.2/§2.2): hoistable scalar fit
-        # aggregates of later steps run in ONE job — crossJoined as a
-        # 1-row subtree into the first fit-collecting step's stats job
-        # when one precedes them, else as a single combined df.agg.
-        deferred = self._plan_deferred_fits(df) if not kwargs else {}
-        agg_cols = [c for j in sorted(deferred)
-                    for c in deferred[j][1]]
-        carrier = None
-        if deferred:
-            first_j = min(deferred)
-            for i, tr in enumerate(self.steps[:first_j]):
-                if hasattr(tr, "_prepare_fit") and getattr(
-                        tr, "inputs", None):
-                    carrier = i
-        extras_row = None
         for i, tr in enumerate(self.steps):
-            if i in deferred:
-                if extras_row is None:  # no carrier job fused it earlier
-                    extras_row = df.agg(*agg_cols).collect()[0]
-                self.steps[i] = tr._deferred_fit_consume(
-                    extras_row, deferred[i][0])
-            elif i == carrier:
-                lookup_all, stats_frame = tr._prepare_fit(X)
-                rows = stats_frame.crossJoin(df.agg(*agg_cols)).collect()
-                extras_row = rows[0]
-                self.steps[i] = tr._finish_fit(lookup_all, rows)
-            else:
-                self.steps[i] = tr.fit(X, **kwargs)
+            self.steps[i] = tr = tr.fit(X, **kwargs)
             before = X.columns
-            X = self.steps[i].transform(X)
+            X = tr.transform(X)
             self._record_lineage(i, tr, before, X.columns)
         self.output_columns = list(X.columns)
         return X

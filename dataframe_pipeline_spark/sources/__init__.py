@@ -418,10 +418,10 @@ def merge_latest(base: DataFrame, updates: DataFrame, key: str | list[str],
     same WindowGroupLimit path as topk_per_group), so hot keys with
     many updates don't accumulate memory.  A/B'd r12 against the
     aggregate alternative (groupBy(key).agg(max(version) + first(...)
-    per column)): the window wins — 0.91 s vs 1.73 s at sf1 orders
-    (scripts/profile_band.py twin) — because the full-row hash-agg
-    buffer re-serializes every column per update while WindowGroupLimit
-    filters rows before carrying them.  Schemas must match by name
+    per column)): the window wins — 0.91 s vs 1.73 s at sf1 orders —
+    because the full-row hash-agg buffer re-serializes every column
+    per update while WindowGroupLimit filters rows before carrying
+    them.  Schemas must match by name
     (``unionByName``); missing columns on either side raise rather
     than silently nulling — schema drift in a merge is a bug upstream.
     """

@@ -98,61 +98,10 @@ def test_column_lineage_table(spark):
     assert pipe2.new_columns == []
 
 
-def test_fused_fit_single_collect_and_state_parity(spark):
-    """Fused-fit path (r13, VERDICT r12 #2): a deferrable Scaler after a
-    label encoder runs ZERO collects of its own — the whole fit phase is
-    ONE driver collect (the encoder's stats job carrying the hoisted
-    min/max as a crossJoined 1-row subtree) — and the fitted state and
-    transformed rows are identical to the unfused path."""
-    from unittest import mock
-
-    # Spark 4: patch the CONCRETE class — pyspark.sql.DataFrame is a
-    # facade; instances are pyspark.sql.classic.dataframe.DataFrame.
-    from pyspark.sql.classic.dataframe import DataFrame
-
-    df = spark.createDataFrame(pd.DataFrame({
-        "cat": ["a", "b", "a", "c"],
-        "q": [1.0, 5.0, 3.0, 9.0],
-    }))
-
-    def build():
-        return dfp.DataframePipeline(steps=[
-            dfp.ComplementLabelEncoder(inputs=["cat"], outputs=["cat_id"]),
-            dfp.Scaler(inputs=["q"], outputs=["q_mm"], strategy="minmax"),
-        ])
-
-    real_collect = DataFrame.collect
-    calls = []
-
-    def counting(self):
-        calls.append(1)
-        return real_collect(self)
-
-    pipe = build()
-    with mock.patch.object(DataFrame, "collect", counting):
-        fused_out = pipe.fit_transform(df)
-        fused_pdf = fused_out.toPandas()
-    assert len(calls) == 1            # encoder stats + scaler min/max, fused
-
-    # unfused reference: disable planning, expect 2 collects
-    pipe2 = build()
-    calls.clear()
-    with mock.patch.object(DataFrame, "collect", counting), \
-         mock.patch.object(dfp.DataframePipeline, "_plan_deferred_fits",
-                           lambda self, d: {}):
-        ref_out = pipe2.fit_transform(df).toPandas()
-    assert len(calls) == 2
-
-    assert pipe.steps[1].offsets == pipe2.steps[1].offsets
-    assert pipe.steps[1].scales == pipe2.steps[1].scales
-    assert_frames_equal(fused_out, ref_out)
-
-
-def test_fused_fit_three_step_and_fit_then_transform_parity(spark):
-    """Fused fit with no carrier (scaler first step is never deferred —
-    j > 0 gate), a mid-pipeline row-preserving step, and a trailing
-    deferrable scaler; plain fit() (non-fused) then transform on a NEW
-    frame must use train statistics."""
+def test_three_step_fit_transform_and_fit_then_transform_parity(spark):
+    """An encoder, a mid-pipeline string step and a trailing minmax
+    scaler: fit_transform scales with the training min/max, and
+    transform on a NEW frame reuses those train statistics."""
     train = spark.createDataFrame(pd.DataFrame({
         "cat": ["a", "b", "a"], "q": [2.0, 4.0, 8.0]}))
     test = spark.createDataFrame(pd.DataFrame({
@@ -170,40 +119,34 @@ def test_fused_fit_three_step_and_fit_then_transform_parity(spark):
     assert got2 == {6.0: 2.0 / 3.0, 10.0: 4.0 / 3.0}
 
 
-def test_fused_fit_gate_fails_closed(spark):
-    """The lineage gate refuses deferral when (a) a preceding step is
-    not ROW_PRESERVING (row filter changes the min/max population),
-    (b) a preceding step WROTE the scaler's input, or (c) the strategy's
-    aggregates are order-dependent (standard: FP summation)."""
+def test_fit_transform_fits_each_step_on_threaded_frame(spark):
+    """Each step fits on the frame the previous step produced: (a) after
+    a row filter the scaler sees only the surviving rows, and (b) after
+    a step rewrites its input the scaler sees the rewritten values."""
     df = spark.createDataFrame(pd.DataFrame({
         "cat": ["a", "b", "a", "c"],
         "q": [1.0, 5.0, 3.0, 9.0],
     }))
 
-    # (a) RowTransformer filters rows -> scaler must fit on the
-    # filtered (threaded) frame; gate must not defer
+    # (a) RowTransformer filters rows -> scaler fits on the filtered frame
     from dataframe_pipeline_spark.operators.row_transformer import \
         RowTransformer
     pipe = dfp.DataframePipeline(steps=[
         RowTransformer(columns=["cat"], drop_values=["c"]),  # drops q=9.0
         dfp.Scaler(inputs=["q"], outputs=["q_mm"], strategy="minmax"),
     ])
-    assert pipe._plan_deferred_fits(df) == {}
     out = {r["q"]: r["q_mm"] for r in
            pipe.fit_transform(df).collect()}
     assert out[5.0] == 1.0            # max of the FILTERED frame
 
-    # (b) a step that writes the read column blocks deferral
+    # (b) a step that doubles q -> scaler fits min/max of the doubled q
     pipe_w = dfp.DataframePipeline(steps=[
         dfp.FunctionTransformer(inputs=["q"], outputs=["q"],
                                 func=lambda x: x * 2),
         dfp.Scaler(inputs=["q"], outputs=["q_mm"], strategy="minmax"),
     ])
-    assert pipe_w._plan_deferred_fits(df) == {}
-
-    # (c) order-dependent strategies never defer
-    pipe_s = dfp.DataframePipeline(steps=[
-        dfp.ComplementLabelEncoder(inputs=["cat"], outputs=["cat_id"]),
-        dfp.Scaler(inputs=["q"], outputs=["q_sd"], strategy="standard"),
-    ])
-    assert pipe_s._plan_deferred_fits(df) == {}
+    out = {r["q"]: r["q_mm"] for r in
+           pipe_w.fit_transform(df).collect()}
+    assert out == {2.0: 0.0, 6.0: 0.25, 10.0: 0.5, 18.0: 1.0}
+    assert pipe_w.steps[1].offsets == [2.0]
+    assert pipe_w.steps[1].scales == [1.0 / 16.0]

@@ -433,25 +433,35 @@ def test_serving_plan_size_independent_of_dictionary(spark):
     assert lengths[0] == lengths[1], lengths
 
 
-@pytest.mark.parametrize("refit", ["scaler", "encoder"])
+@pytest.mark.parametrize("refit", ["scaler", "encoder", "pipeline"])
 def test_serving_recompiles_after_one_step_refit(spark, refit):
-    """Serve, refit one step on shifted data, serve again: the compiled
-    program notices the step's new generation and output equals batch."""
+    """Serve, refit one step (or the whole pipeline through
+    ``fit_transform``) on shifted data, serve again: the compiled program
+    notices the new step generations and output equals batch."""
     from pyspark.sql import functions as F
 
     train, test = _online_split(spark)
     pipe = dfp.DataframePipeline(steps=_online_steps())
     pipe.fit_transform(train)
     rows = test.limit(5).collect()
-    serve_rows(pipe, spark, rows, test.schema)
+    before = serve_rows(pipe, spark, rows, test.schema)
+    value = F.col("value") * 3 + 7
+    event_type = F.concat(F.lit("x_"), "event_type")
     if refit == "scaler":
-        pipe.steps[3].fit(train.withColumn("value", F.col("value") * 3 + 7))
+        pipe.steps[3].fit(train.withColumn("value", value))
+    elif refit == "encoder":
+        pipe.steps[0].fit(train.withColumn("event_type", event_type))
     else:
-        pipe.steps[0].fit(train.withColumn(
-            "event_type", F.concat(F.lit("x_"), "event_type")))
+        pipe.fit_transform(train.withColumns(
+            {"event_type": event_type, "value": value}))
     _, batch = _batch_by_id(pipe, spark, rows, test.schema)
-    for got in serve_rows(pipe, spark, rows, test.schema):
+    after = serve_rows(pipe, spark, rows, test.schema)
+    for got in after:
         _assert_rows_match(got, batch[got["event_id"]])
+    moved = {"scaler": ["value_mm"], "encoder": ["type_id"],
+             "pipeline": ["type_id", "value_mm"]}[refit]
+    for col in moved:
+        assert any(a[col] != b[col] for a, b in zip(after, before)), col
 
 
 def test_serving_save_load_new_session_job_free(spark, tmp_path):
