@@ -10,16 +10,21 @@ optimize the whole pipeline as one logical plan (column pruning, predicate
 pushdown, constant folding come for free).
 
 Fitted state is kept either as small driver-side literals (scalars) or as
-*lookup DataFrames* that are joined back at transform time.  At 100 TB
-scale a fitted frequency/label map can be far too large for a literal
-``F.create_map``; a join (broadcast when small, shuffle otherwise — AQE
-picks at runtime) is the scale-safe representation.
+*lookup tables* (:class:`FittedTable`, built by :func:`fit_table` at the
+end of ``fit``) that are joined back at transform time.  A table of at
+most ``SERVING_MAX_ROWS`` rows is collected once and held on the driver
+as a ``pyarrow.Table`` with a ``LocalRelation`` view; a larger one is a
+local checkpoint on the executors, since at 100 TB a fitted
+frequency/label map can be far too large for the driver.  Either way
+the join (broadcast when small, shuffle otherwise — AQE picks at
+runtime) reads the fitted snapshot, never the training data.
 """
 
 from __future__ import annotations
 
 import itertools
 
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -28,8 +33,8 @@ from pyspark.sql import types as T
 PARM_ALL = "__ALL"
 
 #: Attribute the serving tier (serving.py) keeps a step's compiled
-#: lookup state under: driver-side dicts built from one collect of the
-#: fitted lookup, or ``False`` when the step left the compiled path.
+#: lookup state under: driver-side dicts built from the step's held
+#: fitted tables, or ``False`` when the step left the compiled path.
 #: Declared here so (a) ``fit`` can drop it without a circular import
 #: and (b) persistence can strip it (it is a pure derivation of the
 #: fitted state and is rebuilt after load).
@@ -50,6 +55,119 @@ def invalidate_serving(step) -> None:
     setattr(step, GENERATION_ATTR, next(_generations))
 
 
+#: Fitted lookup tables with at most this many rows are held on the
+#: driver (:func:`fit_table`); serving looks them up in Python dicts.
+#: A larger table is checkpointed on the executors and keeps the batch
+#: join, in serving too.
+SERVING_MAX_ROWS = 100_000
+
+#: the index column of a stacked frame (:func:`stack_inputs`)
+STACK_COL = "__dfp_i"
+
+
+class FittedTable:
+    """A fitted lookup table, the one form batch transform, serving and
+    persistence read.
+
+    *Held* (at most ``SERVING_MAX_ROWS`` rows): ``arrow`` is the
+    ``pyarrow.Table`` collected at fit, and ``df`` its ``LocalRelation``
+    view (``spark.createDataFrame(arrow)``, built on first use), which
+    reads no file and launches no job of its own.  *Large*: ``arrow``
+    is None and ``df`` is a local checkpoint whose RDD blocks (``ids``)
+    are released when the step is refit — or, after load, a parquet
+    scan of the saved table."""
+
+    def __init__(self, spark, arrow=None, df: DataFrame | None = None,
+                 ids=()):
+        self._spark = spark
+        self.arrow = arrow
+        self._df = df
+        self.ids = list(ids)
+
+    @property
+    def held(self) -> bool:
+        return self.arrow is not None
+
+    @property
+    def df(self) -> DataFrame:
+        if self._df is None:
+            self._df = self._spark.createDataFrame(self.arrow)
+        return self._df
+
+    def release(self) -> None:
+        if self.ids:
+            release_checkpoint(self._spark, self.ids)
+            self.ids = []
+
+
+def fit_table(df: DataFrame) -> FittedTable:
+    """The fitted form of lookup plan ``df``: collected once and held if
+    it has at most ``SERVING_MAX_ROWS`` rows, else checkpointed."""
+    arrow = df.limit(SERVING_MAX_ROWS + 1).toArrow()
+    if arrow.num_rows <= SERVING_MAX_ROWS:
+        return FittedTable(df.sparkSession, arrow=arrow)
+    frame, ids = tracked_checkpoint(df)
+    return FittedTable(df.sparkSession, df=frame, ids=ids)
+
+
+def fitted_tables(obj, depth: int = 3) -> list:
+    """Every FittedTable in a step's state: its attributes and the
+    dicts, lists and tuples they hold, ``depth`` levels down."""
+    if isinstance(obj, FittedTable):
+        return [obj]
+    if isinstance(obj, SparkDFPBase):
+        obj = vars(obj)
+    if isinstance(obj, dict):
+        obj = obj.values()
+    elif not isinstance(obj, (list, tuple)):
+        return []
+    if depth == 0:
+        return []
+    return [t for v in obj for t in fitted_tables(v, depth - 1)]
+
+
+def stack_inputs(df: DataFrame, keys: list, **carry: Column) -> DataFrame:
+    """One frame for the keys of several inputs, so that one aggregate
+    fits them all: a row per (row of ``df``, key) with the key's index
+    in ``STACK_COL``, the key in ``__dfp_k<i>`` (the other key columns
+    NULL, so every key keeps its own type) and the ``carry`` columns.
+    One key is a plain projection, with no ``explode``."""
+    carried = [c.alias(n) for n, c in carry.items()]
+    if len(keys) == 1:
+        return df.select(F.lit(0).alias(STACK_COL),
+                         keys[0].alias("__dfp_k0"), *carried)
+    types = df.select(*keys).schema
+    rows = F.array(*[F.struct(
+        F.lit(i).alias(STACK_COL),
+        *[(k if j == i else F.lit(None).cast(types[j].dataType))
+          .alias(f"__dfp_k{j}") for j, k in enumerate(keys)],
+        *carried) for i in range(len(keys))])
+    return df.select(F.explode(rows).alias("__dfp_s")).select("__dfp_s.*")
+
+
+def unstack(table: FittedTable, n: int, key: str, values=()) -> list:
+    """The ``n`` per-input tables of a stacked table (one fitted from a
+    :func:`stack_inputs` frame): for input ``i``, its rows whose key
+    ``__dfp_k<i>`` is not NULL, with the key named ``key``, followed by
+    the ``values`` columns."""
+    out = []
+    for i in range(n):
+        k = f"__dfp_k{i}"
+        names = {k: key, **{v: v for v in values}}
+        if table.held:
+            t = table.arrow
+            rows = t.filter(pc.and_(pc.equal(t[STACK_COL], i),
+                                    pc.is_valid(t[k])))
+            out.append(FittedTable(table._spark, arrow=rows.select(
+                list(names)).rename_columns(list(names.values()))))
+        else:
+            out.append(FittedTable(table._spark, ids=table.ids, df=(
+                table.df.filter((F.col(STACK_COL) == i)
+                                & F.col(k).isNotNull())
+                .select(*[F.col(c).alias(a) for c, a in names.items()]))))
+    return out
+
+
 class SparkDFPBase:
     """Common base: fit/transform contract + column-list helpers.
 
@@ -64,7 +182,8 @@ class SparkDFPBase:
         """Wrap each subclass's ``fit`` so refitting invalidates any
         compiled serving state: without this, ``fit`` rebuilds the
         lookup state but ``serving_transform`` keeps scoring with the
-        OLD lookups — silent batch/serving divergence."""
+        OLD lookups — silent batch/serving divergence.  The refit also
+        releases the checkpoints of the tables it replaced."""
         super().__init_subclass__(**kwargs)
         fit = cls.__dict__.get("fit")
         if fit is not None and not getattr(fit, "_dfp_invalidates", False):
@@ -73,7 +192,11 @@ class SparkDFPBase:
             @functools.wraps(fit)
             def fit_and_invalidate(self, *args, **kw):
                 invalidate_serving(self)
-                return fit(self, *args, **kw)
+                superseded = fitted_tables(self)
+                out = fit(self, *args, **kw)
+                for table in superseded:
+                    table.release()
+                return out
 
             fit_and_invalidate._dfp_invalidates = True
             cls.fit = fit_and_invalidate

@@ -4200,12 +4200,12 @@ def _hll_orderkey_estimate(spark, sf_dir, rsd: float = 0.05) -> int:
 
 
 def _fitted_group_agg_approx(spark, sf_dir, kind):
-    """Fit the grouped sketch aggregator ONCE per (kind, sf_dir), PIN
-    its fitted lookup to collected literal rows (a GK percentile
-    sketch's merge order varies with task completion, so re-evaluating
-    the lazy lookup at transform time could drift from the oracle), and
+    """Fit the grouped sketch aggregator ONCE per (kind, sf_dir) and
     tolerance-check every group's estimate against DuckDB's exact
-    aggregate.  Returns the pinned Aggregator + the literal rows."""
+    aggregate.  The fitted lookup is a snapshot (a GK percentile
+    sketch's merge order varies with task completion, so a lookup
+    re-evaluated at transform time could drift from the oracle).
+    Returns the fitted Aggregator + the fitted rows."""
     import os
 
     from .operators import Aggregator
@@ -4222,8 +4222,8 @@ def _fitted_group_agg_approx(spark, sf_dir, kind):
                              outputs=["parts_per_supp"],
                              groupby=["l_suppkey"], func="approx_nunique")
         agg.fit(li)
-        lookup, outmap = agg._lookups["l_suppkey"]
-        rows = lookup.collect()
+        table, outmap = agg._lookups["l_suppkey"]
+        rows = table.df.collect()
         val_col = next(iter(outmap.values()))
         fitted = {r["__dfp_key"]: r[val_col] for r in rows}
 
@@ -4265,9 +4265,6 @@ def _fitted_group_agg_approx(spark, sf_dir, kind):
                             f"{exact} outside 3-sigma band")
         finally:
             con.close()
-        # pin the lookup so transform replays EXACTLY these values
-        pinned = spark.createDataFrame(rows, lookup.schema)
-        agg._lookups["l_suppkey"] = (pinned, outmap)
         _SKETCH_FIT_CACHE[key] = (agg, sorted(fitted.items()))
     return _SKETCH_FIT_CACHE[key]
 

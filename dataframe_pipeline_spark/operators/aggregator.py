@@ -9,14 +9,15 @@ Spark-first design:
 - **global**: one combined ``df.agg`` job at fit (a single scan computes
   every requested scalar); transform adds ``F.lit(scalar)`` columns —
   constant-folded by Catalyst, zero runtime cost.
-- **grouped**: fit builds one *lookup DataFrame* per distinct group key via
+- **grouped**: fit builds one lookup table per distinct group key via
   ``groupBy(g).agg(...)`` — inputs sharing a group key are fused into one
-  aggregate (one shuffle, map-side partial aggregation).  Transform joins
-  the lookup back on the key; unseen keys null out via the left join,
-  matching the reference's pandas ``.map`` miss → NaN.  The lookup stays a
-  DataFrame (never a driver dict): at 100 TB a frequency table over a
-  high-cardinality key can be GBs — AQE picks broadcast vs shuffle join at
-  runtime from actual sizes.
+  aggregate (one shuffle, map-side partial aggregation) — and keeps it as
+  a :class:`~dataframe_pipeline_spark.base.FittedTable`: held on the
+  driver up to ``SERVING_MAX_ROWS`` keys, checkpointed on the executors
+  above (at 100 TB a table over a high-cardinality key can be GBs).
+  Transform joins the table back on the key; unseen keys null out via
+  the left join, matching the reference's pandas ``.map`` miss → NaN.
+  AQE picks broadcast vs shuffle join at runtime from actual sizes.
 
 Aggregate functions: pandas-compatible names.  ``'std'``/``'var'`` are
 sample (ddof=1) like pandas; ``np.std`` is population like numpy.
@@ -27,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..base import ColumnView, SparkDFPBase, nan_to_null
+from ..base import ColumnView, SparkDFPBase, fit_table, nan_to_null
 
 
 def _resolve_func(func):
@@ -63,41 +64,14 @@ def _resolve_func(func):
     raise ValueError(f"Unsupported aggregate function: {func!r}")
 
 
-#: funcs safe for the fused fit_transform window path: distributive /
-#: algebraic aggregates whose window form computes the identical value
-#: per group.  percentile/median (group-collecting), distinct counts,
-#: first/last (order-dependent) and the sketch tier keep the lookup
-#: join.
-#:
-#: Trade-off (measured r12): the window path wins when the key has at
-#: least ~cores distinct values (agg_group_mean sf1 1.106 → 0.817 s on
-#: the 1 000-supplier key; the lookup join planned SortMergeJoin there
-#: because the aggregate's static size estimate is scan-sized).  On a
-#: near-constant key (2–3 values) a window collapses to one task per
-#: group while the tiny lookup broadcast-joins with no fact exchange —
-#: FrequencyEncoder measured exactly that (0.51 vs 0.57 s sf0.1 on a
-#: 3-value key) and therefore keeps its join.  Every grouped Aggregator
-#: in the registry/examples keys on supplier/part/user ids.
-_WINDOWABLE = {"mean", "avg", "average", "std", "stddev", "var", "sum",
-               "min", "max", "count"}
-
-
 class Aggregator(SparkDFPBase):
-    #: the remembered fit input (fused fit_transform fast path) must
-    #: never be persisted: save_pipeline/_extract writes every DataFrame
-    #: attribute to parquet, so without this a fitted Aggregator would
-    #: write its ENTIRE training frame into the checkpoint (ADVICE r12).
-    #: load_steps restores transients as None; transform then takes the
-    #: fitted-lookup join path.
-    _dfp_transient = ("_fit_frame",)
-
     def __init__(self, inputs=None, outputs=None, groupby=None, func=None):
         self.inputs = list(inputs or [])
         self.outputs = list(outputs or [])
         self.groupby = list(groupby or [])
         self.func = func
         self.vals = []          # global mode: fitted scalars, one per input
-        self._lookups = {}      # grouped mode: groupkey -> (lookup DataFrame, {output: agg_col})
+        self._lookups = {}      # grouped mode: groupkey -> (FittedTable, {output: agg_col})
         assert len(self.inputs) == len(self.outputs)
 
     def _agg_col(self, df: DataFrame, input: str) -> Column:
@@ -106,10 +80,6 @@ class Aggregator(SparkDFPBase):
     def fit(self, df: DataFrame, **params):
         self.vals = []
         self._lookups = {}
-        # remembered for the fused fit_transform fast path (transform
-        # over the very frame fit saw) — declared _dfp_transient so
-        # persistence never writes it
-        self._fit_frame = df
         if not self.groupby:
             row = df.agg(
                 *[self._agg_col(df, c).alias(f"_a{i}") for i, c in enumerate(self.inputs)]
@@ -133,7 +103,8 @@ class Aggregator(SparkDFPBase):
                     .agg(*aggs)
                     .filter(F.col("__dfp_key").isNotNull())
                 )
-                self._lookups[g] = (lookup, {o: f"__dfp_{o}" for _, o in pairs})
+                self._lookups[g] = (fit_table(lookup),
+                                    {o: f"__dfp_{o}" for _, o in pairs})
         return self
 
     def column_exprs(self, view):
@@ -145,44 +116,13 @@ class Aggregator(SparkDFPBase):
     def transform(self, df: DataFrame) -> DataFrame:
         if not self.groupby:
             return df.withColumns(self.column_exprs(ColumnView(df)))
-        # Fused fit_transform fast path: transform() over the SAME frame
-        # fit() just saw (the fit_transform contract — pipeline threading
-        # passes the identical object).  The lookup join would re-scan the
-        # frame for the aggregate and exchange the whole fact for the
-        # join-back (Catalyst's static size estimate of the aggregate
-        # inflates ~65x through upstream lineage, so the join plans
-        # sort-merge); a window aggregate over the group key computes the
-        # identical per-group value with ONE exchange and no second scan.
-        # Unseen keys cannot exist (same rows); NULL/NaN keys are masked
-        # to NULL exactly like the fitted lookup's dropped-null-key miss.
-        func_name = (self.func if isinstance(self.func, str)
-                     else getattr(self.func, "__name__", None))
-        if df is getattr(self, "_fit_frame", None) and func_name in _WINDOWABLE:
-            from pyspark.sql.window import Window
-
-            by_key: dict[str, list[tuple[str, str]]] = {}
-            for input, output, g in zip(self.inputs, self.outputs, self.groupby):
-                by_key.setdefault(g, []).append((input, output))
-            for g, pairs in by_key.items():
-                key = nan_to_null(df, g)
-                w = Window.partitionBy(key)
-                df = df.withColumns({
-                    output: F.when(key.isNull(), F.lit(None))
-                    .otherwise(self._agg_col(df, input).over(w))
-                    for input, output in pairs
-                })
-            return df
-        for g, (lookup, outmap) in self._lookups.items():
-            # Join-back strategy (r11, VERDICT r10 #8 — broadcast hint
-            # tried and REVERTED when measured worse): hinting the
-            # fitted lookup broadcast forces it to compute EAGERLY
-            # through its duplicated upstream lineage into a driver
-            # build before the probe side can stream — flagship sf0.1
-            # min-of-6: plain 1.82 s vs forced broadcast 2.00 s.  The
-            # plain join lets AQE convert to broadcast at runtime from
-            # TRUE post-shuffle sizes (Catalyst's static estimate of
-            # the aggregate inflates ~65× through upstream join
-            # estimates, so no sound static gate can fire).
+        for g, (table, outmap) in self._lookups.items():
+            lookup = table.df
+            # Join-back strategy: a plain join, no broadcast hint.  A
+            # held table's LocalRelation view carries its exact size,
+            # so the planner broadcasts it when small; a checkpointed
+            # one is left to AQE, which converts to broadcast at
+            # runtime from true sizes.
             df = (
                 df.join(lookup, on=nan_to_null(df, g) == lookup["__dfp_key"], how="left")
                 .drop("__dfp_key")

@@ -7,10 +7,12 @@ maps values through the counts, unseen/NaN → 1 (raw counts) or 0.0
 
 Spark-first: fit is ``groupBy(value).count()`` (map-side partial
 aggregation, one shuffle on the value); normalization divides by the
-non-null total inside the same job.  The counts live as a lookup DataFrame
-joined back at transform — at 100 TB a counts table over a high-cardinality
-column (e.g. device id) is far beyond literal-map size; the join
-broadcast/shuffle decision is left to AQE.
+non-null total inside the same job.  The counts are a
+:class:`~dataframe_pipeline_spark.base.FittedTable` joined back at
+transform: held on the driver when small, checkpointed on the executors
+when the column has more than ``SERVING_MAX_ROWS`` distinct values (at
+100 TB a counts table over e.g. a device id is far beyond driver size);
+the join broadcast/shuffle decision is left to AQE.
 """
 
 from __future__ import annotations
@@ -18,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..base import SparkDFPBase, nan_to_null
+from ..base import SparkDFPBase, fit_table, nan_to_null
 
 
 class FrequencyEncoder(SparkDFPBase):
@@ -26,7 +28,7 @@ class FrequencyEncoder(SparkDFPBase):
         self.inputs = list(inputs or [])
         self.outputs = list(outputs or [])
         self.normalize = normalize
-        self._lookups = {}  # input -> lookup DataFrame(__dfp_val, __dfp_cnt)
+        self._lookups = {}  # input -> FittedTable(__dfp_val, __dfp_cnt)
         assert len(self.inputs) == len(self.outputs)
 
     def fit(self, df: DataFrame, **params):
@@ -46,13 +48,13 @@ class FrequencyEncoder(SparkDFPBase):
                     "__dfp_val",
                     (F.col("__dfp_cnt") / F.col("t")).alias("__dfp_cnt"),
                 )
-            self._lookups[input] = counts
+            self._lookups[input] = fit_table(counts)
         return self
 
     def transform(self, df: DataFrame) -> DataFrame:
         default = 0.0 if self.normalize else 1
         for input, output, in zip(self.inputs, self.outputs):
-            lookup = self._lookups[input]
+            lookup = self._lookups[input].df
             df = (
                 df.join(lookup, on=nan_to_null(df, input) == lookup["__dfp_val"], how="left")
                 .withColumn(output, F.coalesce(F.col("__dfp_cnt"), F.lit(default)))

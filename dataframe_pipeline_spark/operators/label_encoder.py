@@ -7,32 +7,35 @@ LabelEncoder classes (lexicographically sorted), always appends
 class, maps values through the fitted dict, and unseen values get the
 reserved class's id; output dtype int32.
 
-Spark-first design: the fitted dictionary is a *lookup DataFrame*
-``(value, id)`` built distributedly:
-
-    distinct(normalized value) ∪ {'extra_category_'}  →  sort  →  row_number-1
-
-The global-order ``row_number`` window runs over the **distinct set only**
-(cardinality ≪ rows), so the single-partition window is not a scale
-bottleneck.  Transform is a left join on the normalized value with
-``coalesce(id, default_id)``.  The broadcast hint is *size-gated*: fit
-already knows each column's distinct count (it comes back in the same
-collect as the default id), so transform hints ``broadcast`` only when
-the dictionary is under ``broadcast_max_rows`` (default 500k entries —
-roughly the autoBroadcastJoinThreshold at ~20 B/entry); above that it
-emits a plain join and lets AQE pick the strategy.  A high-cardinality
-dictionary (e.g. a card1_addr1-style composite) must never be forced
-into executor/driver memory.  No driver-side dict is ever materialized
-except the per-column (cardinality, reserved-class id) scalars.
+Spark-first design: ``fit`` is ONE distinct aggregate over every input
+column (:func:`~dataframe_pipeline_spark.base.stack_inputs`), collected
+once.  The dictionary of each column is its sorted distinct values plus
+``'extra_category_'``, ranked on the driver: Spark orders strings by
+their UTF-8 bytes and Python by code point, and the two orders agree,
+so the ids are the ones sklearn's ``LabelEncoder`` and a Spark window
+would give.  The dictionary is held as a ``(value, id)``
+:class:`~dataframe_pipeline_spark.base.FittedTable`; transform is a
+left join of its view on the normalized value with
+``coalesce(id, default_id)``.  When the distinct values exceed
+``SERVING_MAX_ROWS``, the distinct set is checkpointed on the executors
+instead and ranked there by a window partitioned by column (cardinality
+≪ rows, so not a scale bottleneck), and the ranked table is
+checkpointed in turn.  The broadcast hint is *size-gated*: transform
+hints ``broadcast`` only when the dictionary is under
+``broadcast_max_rows`` (default 500k entries — roughly the
+autoBroadcastJoinThreshold at ~20 B/entry); above that it emits a plain
+join and lets AQE pick the strategy.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..base import (PARM_ALL, ColumnView, SparkDFPBase, is_floating,
-                    literal_df)
+from ..base import (PARM_ALL, STACK_COL, ColumnView, FittedTable,
+                    SparkDFPBase, fit_table, is_floating, literal_df,
+                    stack_inputs, tracked_checkpoint, unstack)
 
 EXTRA = "extra_category_"
 
@@ -49,7 +52,7 @@ class ComplementLabelEncoder(SparkDFPBase):
         self.broadcast_max_rows = (
             self.BROADCAST_MAX_ROWS if broadcast_max_rows is None
             else broadcast_max_rows)
-        # input col -> (lookup DataFrame(__dfp_val, __dfp_id), default_id, cardinality)
+        # input col -> (FittedTable(__dfp_val, __dfp_id), default_id, cardinality)
         self._lookups = {}
 
     @staticmethod
@@ -64,66 +67,66 @@ class ComplementLabelEncoder(SparkDFPBase):
         return F.coalesce(s, F.lit(EXTRA))
 
     def fit(self, df: DataFrame, **params):
-        """All input columns are fitted in ONE Spark job: the normalized
-        values are stacked as (col, val) rows, de-duplicated together,
-        and ranked per column with a partitioned window (parallel across
-        columns — no single-partition global window).  The reference
-        fits one sklearn encoder per column in a Python loop
+        """All input columns are fitted by ONE distinct aggregate over
+        the stacked (column, normalized value) rows.  The reference fits
+        one sklearn encoder per column in a Python loop
         (ComplementLabelEncoder.py:49-66); at N columns that shape costs
         N full scans, this costs one."""
         self.inputs = self.replace_PARM_ALL(df, self.inputs)
         self.outputs = self.replace_PARM_ALL(df, self.outputs)
-        self._lookups = {}
-        spark = df.sparkSession
-        if len(self.inputs) == 1:
-            # single column: the 1-element explode(array(struct)) wrapper
-            # defeats codegen's dictionary fast path — a bare distinct on
-            # the normalized column is the same rows (A/B sf0.1: 0.62 →
-            # 0.42 s fit job)
-            only = self.inputs[0]
-            stacked = (df.select(self._normalized(df, only)
-                                 .alias("__dfp_val")).distinct()
-                       .select(F.lit(only).alias("__dfp_col"), "__dfp_val"))
+        keys = [self._normalized(df, c) for c in self.inputs]
+        values = fit_table(stack_inputs(df, keys).distinct())
+        if values.held:
+            self._lookups = self._rank_held(df.sparkSession, values)
         else:
-            stacked = df.select(F.explode(F.array(*[
-                F.struct(F.lit(c).alias("__dfp_col"),
-                         self._normalized(df, c).alias("__dfp_val"))
-                for c in self.inputs
-            ])).alias("s")).select("s.__dfp_col", "s.__dfp_val").distinct()
-        # JVM-native literal (see base.literal_df): a python-RDD one-row
-        # frame here costs seconds per re-evaluation inside the broadcast.
-        extras = literal_df(spark, list(self.inputs), "__dfp_col").withColumn(
-            "__dfp_val", F.lit(EXTRA))
-        w = Window.partitionBy("__dfp_col").orderBy("__dfp_val")
-        # persist: the default-id collect below materializes the cache, so
-        # transform-time broadcasts reuse it instead of re-running the job.
-        lookup_all = (
-            stacked.union(extras).distinct()
-            .select("__dfp_col", "__dfp_val",
-                    (F.row_number().over(w) - 1).cast("int").alias("__dfp_id"))
-            .persist()
-        )
-        # ONE collect returns both the reserved-class id and the dictionary
-        # cardinality per column; the cardinality gates the transform-time
-        # broadcast hint (see module docstring).
-        rows = lookup_all.groupBy("__dfp_col").agg(
-            F.max(F.when(F.col("__dfp_val") == EXTRA,
-                         F.col("__dfp_id"))).alias("__dfp_default"),
-            F.count(F.lit(1)).alias("__dfp_n"),
-        ).collect()
-        stats = {
-            r["__dfp_col"]: (r["__dfp_default"], r["__dfp_n"]) for r in rows
-        }
-        for input in self.inputs:
-            lookup = (lookup_all.filter(F.col("__dfp_col") == input)
-                      .select("__dfp_val", "__dfp_id"))
-            default_id, n = stats[input]
-            self._lookups[input] = (lookup, default_id, n)
+            self._lookups = self._rank_large(df.sparkSession, values)
         return self
+
+    def _rank_held(self, spark, values: FittedTable) -> dict:
+        lookups = {}
+        for input, t in zip(self.inputs, unstack(values, len(self.inputs),
+                                                 "__dfp_val")):
+            vals = sorted(set(t.arrow["__dfp_val"].to_pylist()) | {EXTRA})
+            table = pa.table({
+                "__dfp_val": pa.array(vals, pa.string()),
+                "__dfp_id": pa.array(range(len(vals)), pa.int32())})
+            lookups[input] = (FittedTable(spark, arrow=table),
+                              vals.index(EXTRA), len(vals))
+        return lookups
+
+    def _rank_large(self, spark, values: FittedTable) -> dict:
+        k = len(self.inputs)
+        vals = values.df.select(STACK_COL, F.coalesce(*[
+            F.col(f"__dfp_k{j}") for j in range(k)]).alias("__dfp_val"))
+        # JVM-native literal (see base.literal_df): a python-RDD frame
+        # here costs seconds per re-evaluation inside the broadcast.
+        extras = literal_df(spark, range(k), STACK_COL, "int").withColumn(
+            "__dfp_val", F.lit(EXTRA))
+        w = Window.partitionBy(STACK_COL).orderBy("__dfp_val")
+        ranked, ids = tracked_checkpoint(
+            vals.union(extras).distinct()
+            .select(STACK_COL, "__dfp_val",
+                    (F.row_number().over(w) - 1).cast("int").alias("__dfp_id")))
+        values.release()
+        # ONE collect returns both the reserved-class id and the
+        # dictionary cardinality per column
+        stats = {r[STACK_COL]: (r["__dfp_default"], r["__dfp_n"])
+                 for r in ranked.groupBy(STACK_COL).agg(
+                     F.max(F.when(F.col("__dfp_val") == EXTRA,
+                                  F.col("__dfp_id"))).alias("__dfp_default"),
+                     F.count(F.lit(1)).alias("__dfp_n")).collect()}
+        lookups = {}
+        for i, input in enumerate(self.inputs):
+            table = (ranked.filter(F.col(STACK_COL) == i)
+                     .select("__dfp_val", "__dfp_id"))
+            lookups[input] = (FittedTable(spark, df=table, ids=ids),
+                              *stats[i])
+        return lookups
 
     def transform(self, df: DataFrame) -> DataFrame:
         for input, output in zip(self.inputs, self.outputs):
-            lookup, default_id, n = self._lookups[input]
+            table, default_id, n = self._lookups[input]
+            lookup = table.df
             if n <= self.broadcast_max_rows:
                 lookup = F.broadcast(lookup)
             key = self._normalized(df, input).alias("__dfp_join_key")

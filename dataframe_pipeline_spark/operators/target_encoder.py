@@ -5,12 +5,16 @@ encoders the reference's label/frequency/one-hot family lacks.
 TargetEncoder (sklearn ``TargetEncoder`` / CatBoost-style smoothing):
 ``code(c) = (n_c * mean_c + m * global_mean) / (n_c + m)`` — categories
 with few observations shrink toward the global mean (``m`` is the
-smoothing pseudo-count).  Fit is ONE grouped aggregate (count + mean
-per category, both partial-aggregatable) plus a global 1-row agg;
-fitted state is a lookup DataFrame applied by broadcast-gated join —
-at 100 TB a hundred-million-row category table stays a join, never a
-driver literal.  Unseen categories and NULL get the global mean
-(sklearn's unseen behavior).
+smoothing pseudo-count).  Fit is ONE grouped aggregate (count + sum
+per category, both partial-aggregatable) over every input stacked
+(:func:`~dataframe_pipeline_spark.base.stack_inputs`), so a fit runs
+the same jobs for one input or many; the global mean and the codes are
+computed from that fitted table, not from the training data.  Each
+input's codes are a :class:`~dataframe_pipeline_spark.base.FittedTable`
+applied by broadcast-gated join — held on the driver when small; at
+100 TB a hundred-million-row category table is checkpointed and stays
+a join.  Unseen categories and NULL get the global mean (sklearn's
+unseen behavior).
 
 HashingEncoder: ``bucket(c) = md5_int(c) % n_buckets`` — stateless
 (nothing to fit, nothing to ship), collision-accepting, map-only.
@@ -25,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..base import SparkDFPBase
+from ..base import STACK_COL, SparkDFPBase, fit_table, stack_inputs, unstack
 
 #: Same bound the label encoder uses: lookup tables under this are
 #: safely broadcast; above it AQE picks the join strategy.
@@ -44,7 +48,7 @@ class TargetEncoder(SparkDFPBase):
         self.target = target
         self.smoothing = float(smoothing)
         self.global_mean_ = None
-        self.lookups_ = []          # per input: DataFrame(__cat, __code)
+        self.lookups_ = []          # per input: FittedTable(__cat, __code)
         self.cards_ = []            # per input: fitted category count
 
     def fit(self, df: DataFrame, **params):
@@ -54,43 +58,33 @@ class TargetEncoder(SparkDFPBase):
         if not self.inputs:
             self.global_mean_ = df.agg(F.avg(t)).collect()[0][0]
             return self
-        for i, c in enumerate(self.inputs):
-            # ONE scan per column: NULL categories are kept in the
-            # grouped aggregate so the global mean falls out of the
-            # same pass (sum of sums / sum of counts == avg), and the
-            # tiny per-category frame is materialized so the broadcast
-            # gate's count() and every transform read fitted state
-            # instead of re-scanning the training data.
-            stats = (df.groupBy(F.col(c).alias("__cat"))
-                     .agg(F.count(t).alias("__n"), F.sum(t).alias("__s"))
-                     .localCheckpoint())
-            # ONE collect per column returns the broadcast-gate
-            # cardinality AND (first column) the global-mean sums —
-            # merging the former lk.count() job into the stats agg
-            # (r13, guide §1.2: sf1 fit_transform 0.54 -> 0.35 s).  The
-            # sum expressions are unchanged, so the global mean stays
-            # bit-identical to the previous two-job fit.
-            card = F.count(F.when(F.col("__cat").isNotNull(), 1))
-            if i == 0:
-                tot = stats.agg(F.sum("__n").alias("n"),
-                                F.sum("__s").alias("s"),
-                                card.alias("c")).collect()[0]
-                self.global_mean_ = (float(tot["s"]) / float(tot["n"])
-                                     if tot["n"] else None)
-                n_cats = tot["c"]
-            else:
-                n_cats = stats.agg(card.alias("c")).collect()[0]["c"]
-            g = F.lit(self.global_mean_)
-            mean = F.col("__s") / F.col("__n")
-            lk = (stats.filter(F.col("__cat").isNotNull())
-                  .select("__cat",
-                          ((F.col("__n") * mean + m * g)
-                           / (F.col("__n") + m)).alias("__code")))
-            self.lookups_.append(lk)
-            # cardinality resolved AT FIT (fit runs jobs; transform must
-            # stay job-free — a count() per transform call would add one
-            # Spark job per column per application at serving time)
-            self.cards_.append(n_cats)
+        # ONE scan for every input: NULL categories are kept in the
+        # grouped aggregate so the global mean falls out of the same
+        # pass (sum of sums / sum of counts == avg, read off input 0)
+        k = len(self.inputs)
+        keys = [f"__dfp_k{j}" for j in range(k)]
+        stats = fit_table(
+            stack_inputs(df, [F.col(c) for c in self.inputs], __t=t)
+            .groupBy(STACK_COL, *keys)
+            .agg(F.count("__t").alias("__n"), F.sum("__t").alias("__s")))
+        # ONE collect over the fitted stats: the global-mean sums and
+        # each input's category count (the broadcast gate, resolved at
+        # fit so transform stays job-free)
+        first = F.col(STACK_COL) == 0
+        tot = stats.df.agg(
+            F.sum(F.when(first, F.col("__n"))).alias("n"),
+            F.sum(F.when(first, F.col("__s"))).alias("s"),
+            *[F.count(F.col(key)).alias(key) for key in keys]).collect()[0]
+        self.global_mean_ = (float(tot["s"]) / float(tot["n"])
+                             if tot["n"] else None)
+        self.cards_ = [tot[key] for key in keys]
+        g = F.lit(self.global_mean_)
+        mean = F.col("__s") / F.col("__n")
+        codes = fit_table(stats.df.select(STACK_COL, *keys,
+                                  ((F.col("__n") * mean + m * g)
+                                   / (F.col("__n") + m)).alias("__code")))
+        stats.release()
+        self.lookups_ = unstack(codes, k, "__cat", ["__code"])
         return self
 
     def transform(self, df: DataFrame) -> DataFrame:
@@ -99,8 +93,8 @@ class TargetEncoder(SparkDFPBase):
         out = df
         for c, o, lk, n in zip(self.inputs, self.outputs, self.lookups_,
                                self.cards_):
-            lkr = (lk.withColumnRenamed("__cat", f"__cat_{o}")
-                     .withColumnRenamed("__code", f"__code_{o}"))
+            lkr = (lk.df.withColumnRenamed("__cat", f"__cat_{o}")
+                   .withColumnRenamed("__code", f"__code_{o}"))
             lkb = F.broadcast(lkr) if n <= BROADCAST_MAX_ROWS else lkr
             out = (out.join(lkb, out[c] == F.col(f"__cat_{o}"), "left")
                    .withColumn(o, F.coalesce(F.col(f"__code_{o}"),
@@ -154,7 +148,7 @@ class CVTargetEncoder(SparkDFPBase):
         self.cv_folds = int(cv_folds)
         self.smoothing = float(smoothing)
         self.global_mean_ = None
-        self.lookups_ = []          # per input: DataFrame(__cat, __fold, __code)
+        self.lookups_ = []          # per input: FittedTable(__cat, __fold, __code)
         self.cards_ = []
 
     def _fold_col(self):
@@ -170,21 +164,19 @@ class CVTargetEncoder(SparkDFPBase):
             self.global_mean_ = df.agg(F.avg(t)).collect()[0][0]
             return self
         for i, c in enumerate(self.inputs):
-            # ONE scan per column (same device as TargetEncoder.fit):
-            # NULL categories ride the (cat, fold) aggregate so the
-            # global mean is a re-sum of the materialized tiny frame,
-            # and the complement arithmetic + transform join all read
-            # the checkpoint instead of re-scanning the training data.
-            pf_all = (df.groupBy(F.col(c).alias("__cat"),
-                                 self._fold_col().alias("__fold"))
-                      .agg(F.count(t).alias("__nf"), F.sum(t).alias("__sf"))
-                      .localCheckpoint())
+            # ONE scan per column: NULL categories ride the (cat, fold)
+            # aggregate so the global mean is a re-sum of the fitted
+            # tiny table, and the complement arithmetic reads that
+            # table instead of re-scanning the training data.
+            stats = fit_table(
+                df.groupBy(F.col(c).alias("__cat"),
+                           self._fold_col().alias("__fold"))
+                .agg(F.count(t).alias("__nf"), F.sum(t).alias("__sf")))
+            pf_all = stats.df
             # ONE collect per column: the broadcast-gate cardinality is
             # |pf| (the tot join is N:1 — tot is grouped FROM pf, so
             # every non-null (cat, fold) row survives exactly once), so
             # it rides the global-mean agg instead of a lk.count() job
-            # (r13, guide §1.2; sum expressions unchanged -> global
-            # mean bit-identical).
             card = F.count(F.when(F.col("__cat").isNotNull(), 1))
             if i == 0:
                 trow = pf_all.agg(F.sum("__nf").alias("n"),
@@ -204,9 +196,10 @@ class CVTargetEncoder(SparkDFPBase):
             code = F.when(oof_n > 0,
                           (oof_n * oof_mean + m * g) / (oof_n + m)
                           ).otherwise(g)
-            lk = (pf.join(tot, "__cat")
-                  .select("__cat", "__fold", code.alias("__code")))
-            self.lookups_.append(lk)
+            self.lookups_.append(fit_table(
+                pf.join(tot, "__cat")
+                .select("__cat", "__fold", code.alias("__code"))))
+            stats.release()
             self.cards_.append(n_codes)
         return self
 
@@ -216,7 +209,7 @@ class CVTargetEncoder(SparkDFPBase):
         out = df.withColumn("__dfp_fold", self._fold_col())
         for c, o, lk, n in zip(self.inputs, self.outputs, self.lookups_,
                                self.cards_):
-            lkr = (lk.withColumnRenamed("__cat", f"__cat_{o}")
+            lkr = (lk.df.withColumnRenamed("__cat", f"__cat_{o}")
                      .withColumnRenamed("__fold", f"__fold_{o}")
                      .withColumnRenamed("__code", f"__code_{o}"))
             lkb = F.broadcast(lkr) if n <= BROADCAST_MAX_ROWS else lkr

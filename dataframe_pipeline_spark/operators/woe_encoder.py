@@ -10,15 +10,17 @@ with additive smoothing ``a`` (Laplace) so rare categories shrink
 toward 0 instead of exploding to ±inf.  Positive WOE = the category
 over-indexes on the positive class.
 
-Spark-first: fit is ONE global aggregate (two scalars) plus ONE
-groupBy per input column producing a (category → woe) lookup whose
-arithmetic runs inside the aggregate plan (no driver math beyond the
-two scalars); transform is a size-gated broadcast left join per
-column, unseen/NULL categories → 0.0 (no evidence).  Same lookup
-discipline as TargetEncoder / FrequencyEncoder; the serving tier
-compiles it to a driver-side lookup (``serving._SERVING_COMPILERS``),
-so a WOE-containing pipeline keeps the job-free LocalRelation fold
-online.
+Spark-first: fit is ONE groupBy over every input column stacked
+(:func:`~dataframe_pipeline_spark.base.stack_inputs`); the two global
+scalars are re-summed from that fitted table, and the (category → woe)
+arithmetic runs in Spark over it (no driver math beyond the two
+scalars).  Each input's table is a
+:class:`~dataframe_pipeline_spark.base.FittedTable`; transform is a
+size-gated broadcast left join per column, unseen/NULL categories →
+0.0 (no evidence).  Same lookup discipline as TargetEncoder /
+FrequencyEncoder; the serving tier looks the held table up on the
+driver, so a WOE-containing pipeline keeps the job-free LocalRelation
+fold online.
 
 Reference parity: the reference has no WOE surface; this extends the
 encoder family the same way TargetEncoder does (beyond-reference,
@@ -30,7 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..base import SparkDFPBase, nan_to_null
+from ..base import (STACK_COL, SparkDFPBase, fit_table, nan_to_null,
+                    stack_inputs, unstack)
 
 BROADCAST_MAX_ROWS = 500_000
 
@@ -46,7 +49,7 @@ class WOEEncoder(SparkDFPBase):
         self.outputs = list(outputs or [])
         self.target = target
         self.alpha = float(alpha)
-        self.lookups_ = []      # per input: DataFrame(__cat, __woe)
+        self.lookups_ = []      # per input: FittedTable(__cat, __woe)
         self.cards_ = []        # per input: fitted category count
         self.totals_ = None     # (pos_total, neg_total)
 
@@ -60,31 +63,32 @@ class WOEEncoder(SparkDFPBase):
             pos_t = float(row["p"] or 0.0)
             self.totals_ = (pos_t, float(row["n"]) - pos_t)
             return self
-        for i, c in enumerate(self.inputs):
-            # ONE scan per column (same device as TargetEncoder.fit):
-            # NULL/NaN categories stay in the grouped aggregate so the
-            # global totals re-sum from the materialized tiny frame,
-            # and the count()/transform joins read the checkpoint
-            # instead of re-scanning the training data.
-            stats = (df.groupBy(nan_to_null(df, c).alias("__cat"))
-                     .agg(F.sum(y).alias("__pos"), F.count(y).alias("__n"))
-                     .localCheckpoint())
-            if i == 0:
-                row = stats.agg(F.sum("__pos").alias("p"),
-                                F.sum("__n").alias("n")).collect()[0]
-                pos_t = float(row["p"] or 0.0)
-                self.totals_ = (pos_t, float(row["n"] or 0) - pos_t)
-            pos_t, neg_t = self.totals_
-            lk = (stats.filter(F.col("__cat").isNotNull())
-                  .select(
-                      "__cat",
-                      F.log(((F.col("__pos") + a)
-                             / F.lit(pos_t + 2 * self.alpha))
-                            / ((F.col("__n") - F.col("__pos") + a)
-                               / F.lit(neg_t + 2 * self.alpha)))
-                      .alias("__woe")))
-            self.lookups_.append(lk)
-            self.cards_.append(lk.count())
+        # ONE scan for every input: NULL/NaN categories stay in the
+        # grouped aggregate so the global totals re-sum from the fitted
+        # table (read off input 0), with each input's category count
+        k = len(self.inputs)
+        keys = [f"__dfp_k{j}" for j in range(k)]
+        stats = fit_table(
+            stack_inputs(df, [nan_to_null(df, c) for c in self.inputs],
+                         __y=y)
+            .groupBy(STACK_COL, *keys)
+            .agg(F.sum("__y").alias("__pos"), F.count("__y").alias("__n")))
+        first = F.col(STACK_COL) == 0
+        row = stats.df.agg(
+            F.sum(F.when(first, F.col("__pos"))).alias("p"),
+            F.sum(F.when(first, F.col("__n"))).alias("n"),
+            *[F.count(F.col(key)).alias(key) for key in keys]).collect()[0]
+        pos_t = float(row["p"] or 0.0)
+        neg_t = float(row["n"] or 0) - pos_t
+        self.totals_ = (pos_t, neg_t)
+        self.cards_ = [row[key] for key in keys]
+        woe = fit_table(stats.df.select(
+            STACK_COL, *keys,
+            F.log(((F.col("__pos") + a) / F.lit(pos_t + 2 * self.alpha))
+                  / ((F.col("__n") - F.col("__pos") + a)
+                     / F.lit(neg_t + 2 * self.alpha))).alias("__woe")))
+        stats.release()
+        self.lookups_ = unstack(woe, k, "__cat", ["__woe"])
         return self
 
     def transform(self, df: DataFrame) -> DataFrame:
@@ -93,7 +97,7 @@ class WOEEncoder(SparkDFPBase):
         out = df
         for c, o, lk, n in zip(self.inputs, self.outputs, self.lookups_,
                                self.cards_):
-            lkr = (lk.withColumnRenamed("__cat", f"__cat_{o}")
+            lkr = (lk.df.withColumnRenamed("__cat", f"__cat_{o}")
                      .withColumnRenamed("__woe", f"__woe_{o}"))
             lkb = F.broadcast(lkr) if n <= BROADCAST_MAX_ROWS else lkr
             out = (out.join(lkb,

@@ -8,7 +8,8 @@ distributed operators (no sklearn required — the wrapped object is
 recognized by class name, so this works with real sklearn objects or any
 stand-in exposing the same class name):
 
-- ``LabelEncoder``   → sorted-distinct + row_number fit, join apply.
+- ``LabelEncoder``   → sorted-distinct + row_number fit into a
+  :class:`~dataframe_pipeline_spark.base.FittedTable`, join apply.
   Plain sklearn semantics (NOT the complement variant): classes are the
   sorted distinct raw values *including* NaN (pandas sort puts NaN last),
   no reserved unseen class.
@@ -26,8 +27,7 @@ any-scale apply; at 100 TB prefer the native operators above, whose fit
 is distributed too.
 
 The LabelEncoder lookup join is *size-gated* like ComplementLabelEncoder:
-fit counts the distinct values (one extra action on the already-computed
-distinct frame) and transform hints ``broadcast`` only under
+fit records the table's size and transform hints ``broadcast`` only under
 ``BROADCAST_MAX_ROWS``; a high-cardinality dictionary goes through a
 plain join so AQE picks the strategy instead of forcing the lookup into
 executor memory.
@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..base import PARM_ALL, SparkDFPBase, field_type, is_floating, nan_to_null
+from ..base import PARM_ALL, SparkDFPBase, fit_table, nan_to_null
 
 
 class WrapTransformer(SparkDFPBase):
@@ -136,16 +136,17 @@ class WrapTransformer(SparkDFPBase):
     def _fit_label(self, df: DataFrame, c: str):
         # sklearn LabelEncoder: classes_ = sorted unique values.  NULL sorts
         # last (like NaN in numpy sort) via asc_nulls_last.  The global
-        # row_number window runs over the distinct set only (cardinality
-        # ≪ rows) so it is not a scale bottleneck; the count() on the
-        # persisted distinct frame returns the cardinality that gates the
-        # transform-time broadcast hint.
-        vals = df.select(nan_to_null(df, c).alias("__dfp_val")).distinct().persist()
-        n = vals.count()
+        # row_number window runs over the fitted distinct set only
+        # (cardinality ≪ rows) so it is not a scale bottleneck; the
+        # table's size gates the transform-time broadcast hint.
+        values = fit_table(
+            df.select(nan_to_null(df, c).alias("__dfp_val")).distinct())
         w = Window.orderBy(F.col("__dfp_val").asc_nulls_last())
-        lookup = vals.select(
-            "__dfp_val", (F.row_number().over(w) - 1).cast("int").alias("__dfp_id")
-        )
+        lookup = fit_table(values.df.select(
+            "__dfp_val",
+            (F.row_number().over(w) - 1).cast("int").alias("__dfp_id")))
+        values.release()
+        n = lookup.arrow.num_rows if lookup.held else lookup.df.count()
         return (lookup, n)
 
     def _fit_scale(self, df: DataFrame, cols):
@@ -182,7 +183,8 @@ class WrapTransformer(SparkDFPBase):
             out_cols = list(output) if isinstance(output, tuple) else [output]
             state = self._state[input]
             if self._kind == "LabelEncoder":
-                lookup, n = state
+                table, n = state
+                lookup = table.df
                 if n <= self.BROADCAST_MAX_ROWS:
                     lookup = F.broadcast(lookup)
                 df = (

@@ -8,27 +8,35 @@ the learned state, score anywhere* — maps to:
 * per-step **config + scalar state** → cloudpickle (ships with pyspark;
   handles lambdas and sklearn objects the same way the reference's
   bytecode compiler / WrapTransformer surface does),
-* per-step **fitted lookup DataFrames** (encoder dictionaries, grouped
-  aggregates) → parquet directories, re-read lazily at load.
+* per-step **held lookup tables** (encoder dictionaries, grouped
+  aggregates: :class:`~dataframe_pipeline_spark.base.FittedTable` of at
+  most ``SERVING_MAX_ROWS`` rows) → Arrow IPC bytes inside the manifest,
+  so saving them runs no Spark job and loading them reads no other file,
+* every other fitted **DataFrame** (a lookup table too large to hold,
+  checkpointed at fit; an index's cells) → a parquet directory, re-read
+  lazily at load.
 
-Writing lookups as parquet is the scale-correct choice: a frequency map
-over a 100 TB key column can be GBs — it must round-trip as a
-distributed table, never through a driver-side dict.
+A table too large for the driver round-trips as a distributed table,
+never through a driver-side dict.  A manifest saved before lookup
+tables were held (a bare parquet-backed DataFrame where the step now
+keeps a FittedTable) still loads and transforms.
 
 Layout::
 
     <path>/manifest.pkl          ordered step classes + pickled state
-    <path>/frames/s<i>_f<j>/     one parquet dir per extracted DataFrame
+                                 (held tables as Arrow IPC bytes)
+    <path>/frames/s<i>_f<j>/     one parquet dir per other DataFrame
 """
 
 from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 from pyspark.cloudpickle import dumps, loads
 from pyspark.sql import DataFrame, SparkSession
 
-from .base import SERVING_CACHE_ATTR
+from .base import SERVING_CACHE_ATTR, FittedTable
 
 
 class _DFRef:
@@ -40,6 +48,26 @@ class _DFRef:
 
     def path(self, root: str) -> str:
         return os.path.join(root, "frames", f"s{self.step}_f{self.idx}")
+
+
+class _Table:
+    """Placeholder for a FittedTable: its Arrow IPC stream when held,
+    else the _DFRef of its frame."""
+
+    def __init__(self, arrow=None, ref: _DFRef | None = None):
+        self.ipc = None
+        if arrow is not None:
+            sink = pa.BufferOutputStream()
+            with pa.ipc.new_stream(sink, arrow.schema) as w:
+                w.write_table(arrow)
+            self.ipc = sink.getvalue().to_pybytes()
+        self.ref = ref
+
+    def restore(self, spark: SparkSession, root: str) -> FittedTable:
+        if self.ipc is None:
+            return FittedTable(spark, df=_restore(self.ref, spark, root))
+        return FittedTable(spark,
+                           arrow=pa.ipc.open_stream(self.ipc).read_all())
 
 
 class _NestedObj:
@@ -62,6 +90,10 @@ def _extract(obj, step: int, sink: list, part_cols=None):
     operator's ``_dfp_partition_hints`` so an index table is written in
     its scale layout (e.g. IVF cells partitioned by ``__list``) and a
     reloaded probe is a partition-pruned scan."""
+    if isinstance(obj, FittedTable):
+        if obj.held:
+            return _Table(arrow=obj.arrow)
+        return _Table(ref=_extract(obj.df, step, sink, part_cols))
     if isinstance(obj, DataFrame):
         sink.append((obj, part_cols))
         return _DFRef(step, len(sink) - 1)
@@ -83,6 +115,8 @@ def _extract(obj, step: int, sink: list, part_cols=None):
 def _restore(obj, spark: SparkSession, root: str):
     if isinstance(obj, _DFRef):
         return spark.read.parquet(obj.path(root))
+    if isinstance(obj, _Table):
+        return obj.restore(spark, root)
     if isinstance(obj, _NestedObj):
         inst = obj.cls.__new__(obj.cls)
         inst.__dict__.update(_restore(obj.state, spark, root))
@@ -134,6 +168,21 @@ def save_pipeline(pipe, path: str) -> None:
         f.write(dumps(manifest))
 
 
+#: where lookup operators keep their FittedTables
+_TABLE_ATTRS = ("_lookups", "lookups_", "_state")
+
+
+def _as_tables(obj, spark: SparkSession):
+    """Bare DataFrames (in dicts, lists, tuples) as FittedTables."""
+    if isinstance(obj, DataFrame):
+        return FittedTable(spark, df=obj)
+    if isinstance(obj, dict):
+        return {k: _as_tables(v, spark) for k, v in obj.items()}
+    if isinstance(obj, (list, tuple)):
+        return type(obj)(_as_tables(v, spark) for v in obj)
+    return obj
+
+
 def _load_steps(spark: SparkSession, path: str) -> list:
     with open(os.path.join(path, "manifest.pkl"), "rb") as f:
         manifest = loads(f.read())
@@ -143,12 +192,16 @@ def _load_steps(spark: SparkSession, path: str) -> list:
         step.__dict__.update(_restore(state, spark, path))
         for name in getattr(cls, "_dfp_transient", ()):
             step.__dict__.setdefault(name, None)
+        for name in _TABLE_ATTRS:
+            if name in step.__dict__:
+                step.__dict__[name] = _as_tables(step.__dict__[name], spark)
         steps.append(step)
     return steps
 
 
 def load_pipeline(spark: SparkSession, path: str):
-    """Reload a fitted pipeline; lookups come back as lazy parquet scans."""
+    """Reload a fitted pipeline: held lookup tables come back from the
+    manifest, other fitted frames as lazy parquet scans."""
     from .pipeline import DataframePipeline
 
     return DataframePipeline(steps=_load_steps(spark, path))

@@ -138,7 +138,7 @@ class DataframePipeline:
         return ``{input_column: dtype}`` for the serving entry point —
         the dict the reference builds for its ONNX graph inputs.
 
-        The artifact here is the parquet+JSON pipeline save (nested
+        The artifact here is the pipeline save of persistence.py (nested
         fitted objects round-trip — which the ONNX path cannot do for 5
         of the reference's own operators, SURVEY quirk 8), scored via
         ``load(...)`` + :meth:`serving_transform`; Catalyst codegen

@@ -9,7 +9,9 @@ compiles the pipeline once per fit of its steps and per input schema:
 * each lookup step (ComplementLabelEncoder, grouped Aggregator,
   FrequencyEncoder, TargetEncoder, WOEEncoder, WrapTransformer
   LabelEncoder) becomes a driver-side ``dict`` per output, built from
-  one collect of its fitted table.  Keys are looked up in Python while
+  the Arrow columns of the fitted table the step holds
+  (:class:`~dataframe_pipeline_spark.base.FittedTable`), so compiling
+  launches no Spark job.  Keys are looked up in Python while
   the request row is rendered, with the batch join's NaN→NULL, unseen
   and NULL-key rules, and the values ride as extra typed columns of
   the inline ``VALUES`` table;
@@ -25,8 +27,9 @@ Python lookups are used only where Python equality matches Spark's
 normalized key (strings, integral types, booleans, dates, and floats
 with NaN normalized); any other key type, or a key written by an
 earlier step, keeps a literal-map lookup inside the select.  A table
-above ``SERVING_MAX_ROWS`` entries (the driver-memory bound) keeps the
-batch join, which launches jobs.  A step without a column hook (an
+fit did not hold (over ``SERVING_MAX_ROWS`` rows, the driver-memory
+bound, so checkpointed on the executors) keeps the batch join, which
+launches jobs.  A step without a column hook (an
 Arrow-UDF lambda, AnnAnnotator, statistics computed at transform time)
 is a barrier: the select so far is applied, the step runs as in batch,
 and composition resumes after it.  Each step that leaves the compiled
@@ -48,16 +51,12 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_type
 
-from .base import (GENERATION_ATTR, SERVING_CACHE_ATTR, ColumnView,
-                   is_floating)
+from .base import (GENERATION_ATTR, SERVING_CACHE_ATTR, SERVING_MAX_ROWS,
+                   ColumnView, is_floating)
 
 log = logging.getLogger("dataframe_pipeline_spark")
-
-#: lookup dictionaries with at most this many entries are held on the
-#: driver (a dict per looked-up output); larger ones keep the batch join
-#: plan, which launches Spark jobs.
-SERVING_MAX_ROWS = 100_000
 
 _PROGRAM_ATTR = "_dfp_serving_program"
 _HIDDEN = "__dfp_lk"
@@ -82,88 +81,53 @@ class _Lookup:
     norm: str
 
 
-def _table(rows) -> dict:
-    return {_NAN if k != k else k: v for k, v in rows}
-
-
-# -- per-operator lookup compilers ---------------------------------------
+# -- per-operator lookup specs --------------------------------------------
 #
-# Each returns the step's lookups from one collect per fitted table, []
-# when the step has no lookup in its configuration, or False when a table
-# is over SERVING_MAX_ROWS.
+# Each yields, per looked-up output of the step: (key column, output,
+# FittedTable, its key column, its value column, the value for an unseen
+# key, key normalization).  The value for a NULL key is the table's
+# entry for a NULL key if it has one (the WrapTransformer LabelEncoder's
+# NULL class), else the unseen value.
 
 def _label_encoder(op):
-    if any(n > SERVING_MAX_ROWS for _, _, n in op._lookups.values()):
-        return False
-    out = []
     for input, output in zip(op.inputs, op.outputs):
-        lookup, default_id, _n = op._lookups[input]
-        out.append(_Lookup(input, output, _table(lookup.collect()),
-                           T.IntegerType(), default_id, default_id, "string"))
-    return out
+        table, default_id, _n = op._lookups[input]
+        yield (input, output, table, "__dfp_val", "__dfp_id", default_id,
+               "string")
 
 
 def _aggregator(op):
-    out = []
-    for g, (lookup, outmap) in (op._lookups.items() if op.groupby else ()):
-        rows = lookup.limit(SERVING_MAX_ROWS + 1).collect()
-        if len(rows) > SERVING_MAX_ROWS:
-            return False
+    for g, (table, outmap) in (op._lookups.items() if op.groupby else ()):
         for o, tmp in outmap.items():
-            out.append(_Lookup(g, o, _table((r["__dfp_key"], r[tmp])
-                                            for r in rows),
-                               lookup.schema[tmp].dataType, None, None, "nan"))
-    return out
+            yield g, o, table, "__dfp_key", tmp, None, "nan"
 
 
 def _frequency_encoder(op):
     default = 0.0 if op.normalize else 1
-    out = []
     for input, output in zip(op.inputs, op.outputs):
-        lookup = op._lookups[input]
-        rows = lookup.limit(SERVING_MAX_ROWS + 1).collect()
-        if len(rows) > SERVING_MAX_ROWS:
-            return False
-        out.append(_Lookup(input, output, _table(rows),
-                           lookup.schema["__dfp_cnt"].dataType,
-                           default, default, "nan"))
-    return out
+        yield (input, output, op._lookups[input], "__dfp_val", "__dfp_cnt",
+               default, "nan")
 
 
 def _target_encoder(op):
-    if any(n > SERVING_MAX_ROWS for n in op.cards_):
-        return False
-    g = op.global_mean_
-    return [_Lookup(c, o, _table(lk.collect()), T.DoubleType(), g, g, "raw")
-            for c, o, lk in zip(op.inputs, op.outputs, op.lookups_)]
+    for c, o, table in zip(op.inputs, op.outputs, op.lookups_):
+        yield c, o, table, "__cat", "__code", op.global_mean_, "raw"
 
 
 def _woe_encoder(op):
-    if any(n > SERVING_MAX_ROWS for n in op.cards_):
-        return False
-    return [_Lookup(c, o, _table(lk.collect()), T.DoubleType(), 0.0, 0.0,
-                    "nan")
-            for c, o, lk in zip(op.inputs, op.outputs, op.lookups_)]
+    for c, o, table in zip(op.inputs, op.outputs, op.lookups_):
+        yield c, o, table, "__cat", "__woe", 0.0, "nan"
 
 
 def _wrap_transformer(op):
-    """Only the LabelEncoder mapping joins a lookup.  Its classes may
-    include the NULL/NaN class (an eqNullSafe join), which answers a
-    NULL key; an unseen key gets NULL."""
+    """Only the LabelEncoder mapping joins a lookup (an eqNullSafe join,
+    so its NULL class answers a NULL key)."""
     if op._kind != "LabelEncoder":
-        return []
-    if any(n > SERVING_MAX_ROWS for _, n in op._state.values()):
-        return False
-    out = []
+        return
     for input, output in zip(op.inputs, op.outputs):
-        rows = op._state[input][0].collect()
-        null_id = next((i for v, i in rows if v is None), None)
-        out.append(_Lookup(
-            input if isinstance(input, str) else input[0],
-            output if isinstance(output, str) else output[0],
-            _table((v, i) for v, i in rows if v is not None),
-            T.IntegerType(), None, null_id, "nan"))
-    return out
+        yield (input if isinstance(input, str) else input[0],
+               output if isinstance(output, str) else output[0],
+               op._state[input][0], "__dfp_val", "__dfp_id", None, "nan")
 
 
 _SERVING_COMPILERS = {
@@ -174,6 +138,26 @@ _SERVING_COMPILERS = {
     "WrapTransformer": _wrap_transformer,
     "WOEEncoder": _woe_encoder,
 }
+
+
+def _compile_lookups(op):
+    """The step's lookups, read from the Arrow columns of its held
+    tables with no Spark job; False when a table is not held (it has
+    over SERVING_MAX_ROWS rows).  A NULL value reads as the unseen
+    value, as the batch join's ``coalesce`` does."""
+    out = []
+    for key, output, table, kcol, vcol, miss, norm in \
+            _SERVING_COMPILERS[type(op).__name__](op):
+        if not table.held:
+            return False
+        values = table.arrow[vcol]
+        entries = {_NAN if k != k else k: miss if v is None else v
+                   for k, v in zip(table.arrow[kcol].to_pylist(),
+                                   values.to_pylist())}
+        null = entries.pop(None, miss)
+        out.append(_Lookup(key, output, entries, from_arrow_type(values.type),
+                           miss, null, norm))
+    return out
 
 
 # -- key normalization -----------------------------------------------------
@@ -310,7 +294,7 @@ class _Program:
             # the compiled path) is worked out again at each compile
             specs = getattr(step, SERVING_CACHE_ATTR, None)
             if specs is None or specs is False:
-                specs = _SERVING_COMPILERS[cls](step)
+                specs = _compile_lookups(step)
                 setattr(step, SERVING_CACHE_ATTR, specs)
         if specs is False:
             _report(i, cls, f"a fitted table is over SERVING_MAX_ROWS="

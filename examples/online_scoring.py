@@ -66,8 +66,8 @@ def main():
         import time
 
         req = events.head()
-        # warm: the first request compiles the program (one collect per
-        # fitted lookup table)
+        # warm: the first request compiles the program from the fitted
+        # lookup tables the steps hold (no Spark job)
         dfp.serve_rows(fitted, spark, [req], events.schema)
         t0 = time.perf_counter()
         out_rows = dfp.serve_rows(fitted, spark, [req], events.schema)

@@ -1,3 +1,4 @@
+import itertools
 import math
 import os
 import sys
@@ -15,6 +16,29 @@ def spark():
     s = get_spark("dfp-tests", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "4")))
     yield s
     s.stop()
+
+
+#: job groups are never reused: the status tracker keeps past jobs
+_job_groups = itertools.count()
+
+
+@pytest.fixture()
+def count_jobs(spark):
+    """``count_jobs(fn, *args)`` runs ``fn`` in a job group of its own
+    and returns ``(its result, the number of Spark jobs it launched)``,
+    read from the status tracker."""
+    sc = spark.sparkContext
+
+    def run(fn, *args, **kwargs):
+        group = f"count_jobs_{next(_job_groups)}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn(*args, **kwargs)
+        finally:
+            sc.setJobGroup("count_jobs_done", "")
+        return out, len(list(sc.statusTracker().getJobIdsForGroup(group)))
+
+    return run
 
 
 def _norm_cell(v):

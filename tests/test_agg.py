@@ -88,36 +88,26 @@ def test_sketch_aggregates_close_to_exact(spark):
         assert abs(av[k] - ev[k]) / ev[k] < 0.05, (k, av[k], ev[k])
 
 
-def test_fused_fit_transform_uses_window_not_join(spark):
-    """fit_transform over one frame computes grouped outputs as a window
-    aggregate (one exchange, no lookup join, no second scan); transform
-    over a DIFFERENT frame keeps the fitted-lookup join with unseen keys
-    nulling out.  Values are identical between the two paths."""
-    import pandas as pd
-
+def test_fit_transform_broadcasts_held_lookup(spark):
+    """fit_transform over one frame joins the fitted lookup, held on the
+    driver, as a broadcast LocalRelation: no window, no shuffle of the
+    fact, no second scan of it; transform over a DIFFERENT frame gives
+    the same values, for windowable and group-collecting funcs alike."""
     from dataframe_pipeline_spark.operators import Aggregator
 
     li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-    agg = Aggregator(inputs=["l_extendedprice"], outputs=["m"],
-                     groupby=["l_suppkey"], func="mean")
-    fused = agg.fit_transform(li)
-    plan = fused._jdf.queryExecution().executedPlan().toString()
-    assert "Window" in plan
-    assert "__dfp_key" not in plan            # no lookup join
-    assert plan.count("Exchange") <= 1        # one hash exchange total
+    for func in ("mean", "median"):
+        agg = Aggregator(inputs=["l_extendedprice"], outputs=["m"],
+                         groupby=["l_suppkey"], func=func)
+        fused = agg.fit_transform(li)
+        plan = fused._jdf.queryExecution().executedPlan().toString()
+        assert "Window" not in plan
+        assert "hashpartitioning" not in plan     # the fact is not shuffled
+        assert "BroadcastHashJoin" in plan and "LocalTableScan" in plan
+        assert plan.count("FileScan") == 1
 
-    # a different frame (same plan, different object) takes the join path
-    joined = agg.transform(li.select("*"))
-    jplan = joined._jdf.queryExecution().executedPlan().toString()
-    assert "__dfp_key" in jplan
-
-    a = sorted(map(tuple, fused.select("l_orderkey", "l_linenumber", "m").collect()))
-    b = sorted(map(tuple, joined.select("l_orderkey", "l_linenumber", "m").collect()))
-    assert a == b
-
-    # non-windowable funcs keep the join even when fused
-    med = Aggregator(inputs=["l_extendedprice"], outputs=["md"],
-                     groupby=["l_suppkey"], func="median")
-    mplan = (med.fit_transform(li)._jdf.queryExecution()
-             .executedPlan().toString())
-    assert "__dfp_key" in mplan
+        joined = agg.transform(li.select("*"))
+        cols = ("l_orderkey", "l_linenumber", "m")
+        a = sorted(map(tuple, fused.select(*cols).collect()))
+        b = sorted(map(tuple, joined.select(*cols).collect()))
+        assert a == b

@@ -2,6 +2,7 @@
 fit once, persist learned state, score a new frame without refitting)."""
 
 import pandas as pd
+import pytest
 
 from dataframe_pipeline_spark import (
     Aggregator,
@@ -64,19 +65,47 @@ def test_save_load_roundtrip(spark, tmp_path):
     assert row_z["x2"] == 70.0
 
 
-def test_load_is_lazy_lookup(spark, tmp_path):
-    """Reloaded encoder state is a parquet-backed DataFrame, not a dict."""
+def test_load_holds_lookup_without_files(spark, tmp_path):
+    """A small fitted dictionary is saved inside the manifest and
+    reloads as the same held Arrow table: no parquet directory is
+    written and the reloaded view is a LocalRelation."""
+    import os
+
     le = ComplementLabelEncoder(inputs=["cat"], outputs=["cat_id"])
     pipe = DataframePipeline(steps=[le])
     pipe.fit(_train(spark))
     path = str(tmp_path / "le_pipe")
     pipe.save(path)
+    assert os.listdir(path) == ["manifest.pkl"]
 
     loaded = DataframePipeline.load(spark, path)
-    lookup, default_id, n = loaded.steps[0]._lookups["cat"]
-    assert lookup.__class__.__name__ == "DataFrame"
+    table, default_id, n = loaded.steps[0]._lookups["cat"]
+    assert table.held and table.arrow.equals(le._lookups["cat"][0].arrow)
+    assert "LocalRelation" in (
+        table.df._jdf.queryExecution().analyzed().toString())
     assert default_id == 3
     assert n == 4
+
+
+def test_load_manifest_with_parquet_lookup(spark, tmp_path):
+    """A lookup saved as a bare DataFrame (the layout written before
+    lookup tables were held) goes to parquet and reloads into the
+    FittedTable form transform reads."""
+    import os
+
+    le = ComplementLabelEncoder(inputs=["cat"], outputs=["cat_id"])
+    le.fit(_train(spark))
+    want = le.transform(_test_frame(spark)).collect()
+    table, default_id, n = le._lookups["cat"]
+    le._lookups["cat"] = (table.df, default_id, n)
+    path = str(tmp_path / "old_layout")
+    DataframePipeline(steps=[le]).save(path)
+    assert os.listdir(os.path.join(path, "frames")) == ["s0_f0"]
+
+    loaded = DataframePipeline.load(spark, path).steps[0]
+    assert not loaded._lookups["cat"][0].held
+    assert sorted(loaded.transform(_test_frame(spark)).collect()) == \
+        sorted(want)
 
 
 def test_ivf_index_roundtrip(spark, tmp_path):
@@ -231,10 +260,10 @@ def test_ann_annotator_pipeline_roundtrip(spark, tmp_path):
 
 def test_fitted_aggregator_roundtrip_drops_fit_frame(spark, tmp_path):
     """A fitted GROUPED Aggregator persists its lookup table only —
-    never the remembered fit input (ADVICE r12: without _dfp_transient
-    the checkpoint wrote the ENTIRE training frame, fact-table-sized at
-    scale).  Exactly one frame dir (the lookup); the reloaded step
-    transforms a NEW frame identically via the lookup-join path."""
+    never its fit input (ADVICE r12: a remembered fit frame once wrote
+    the ENTIRE training frame, fact-table-sized at scale).  No frame
+    dir at all (the held lookup rides in the manifest); the reloaded
+    step transforms a NEW frame identically via the lookup join."""
     import os
 
     from dataframe_pipeline_spark.persistence import (load_operator,
@@ -243,18 +272,100 @@ def test_fitted_aggregator_roundtrip_drops_fit_frame(spark, tmp_path):
     agg = Aggregator(inputs=["x"], outputs=["x_mean_grp"],
                      groupby=["grp"], func="mean")
     train = _train(spark)
-    agg.fit_transform(train)          # sets _fit_frame (window fast path)
+    agg.fit_transform(train)
     path = str(tmp_path / "agg_only")
     save_operator(agg, path)
 
-    frames = sorted(os.listdir(os.path.join(path, "frames")))
-    assert frames == ["s0_f0"], frames   # the lookup, NOT the fit frame
+    assert os.listdir(path) == ["manifest.pkl"]   # NOT the fit frame
 
     agg2 = load_operator(spark, path)
-    assert agg2._fit_frame is None       # transient restored as None
     test = _test_frame(spark)
     exp = {r["grp"]: r["x_mean_grp"]
            for r in agg.transform(test).collect()}
     got = {r["grp"]: r["x_mean_grp"]
            for r in agg2.transform(test).collect()}
     assert got == exp and got[3] is None   # unseen group key -> null
+
+
+def _lookup_pipeline():
+    from dataframe_pipeline_spark import TargetEncoder, WOEEncoder
+
+    return DataframePipeline(steps=[
+        ComplementLabelEncoder(inputs=["cat"], outputs=["cat_id"]),
+        FrequencyEncoder(inputs=["cat"], outputs=["cat_freq"]),
+        Aggregator(inputs=["x"], outputs=["x_mean_grp"], groupby=["grp"],
+                   func="mean"),
+        TargetEncoder(inputs=["cat"], outputs=["cat_te"], target="y",
+                      smoothing=1.0),
+        WOEEncoder(inputs=["cat"], outputs=["cat_woe"], target="y"),
+    ])
+
+
+def _labeled(seed: int) -> pd.DataFrame:
+    n = 30
+    return pd.DataFrame({
+        "id": range(n),
+        "cat": [f"k{(i * seed) % 7}" for i in range(n)],
+        "grp": [(i * seed) % 5 for i in range(n)],
+        "x": [i * 0.1 * seed for i in range(n)],
+        "y": [(i * seed) % 3 == 0 for i in range(n)],
+    }).astype({"y": "int64"})
+
+
+@pytest.mark.parametrize("change", ["overwrite", "delete"])
+def test_fitted_state_is_a_snapshot(spark, tmp_path, change):
+    """A fitted pipeline does not read its training source again: after
+    the source file is overwritten with other rows, or deleted, batch
+    transform, serving and save → load → transform give exactly the
+    answers they gave before (no float rounding)."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from dataframe_pipeline_spark.serving import serve_rows
+
+    src = str(tmp_path / "train.parquet")
+    pq.write_table(pa.Table.from_pandas(_labeled(1), preserve_index=False),
+                   src)
+    pipe = _lookup_pipeline()
+    pipe.fit(spark.read.parquet(src))
+    test = spark.createDataFrame(_labeled(3))
+    rows = test.collect()
+    batch = sorted(pipe.transform(test).collect())
+    served = sorted(serve_rows(pipe, spark, rows, test.schema))
+
+    if change == "overwrite":
+        pq.write_table(pa.Table.from_pandas(_labeled(2),
+                                            preserve_index=False), src)
+    else:
+        os.remove(src)
+    path = str(tmp_path / "model")
+    pipe.save(path)
+    loaded = DataframePipeline.load(spark, path)
+
+    assert sorted(pipe.transform(test).collect()) == batch
+    assert sorted(serve_rows(pipe, spark, rows, test.schema)) == served
+    assert sorted(loaded.transform(test).collect()) == batch
+    assert served == batch
+
+
+def test_held_save_load_and_first_serve_launch_no_jobs(
+        spark, tmp_path, count_jobs):
+    """With every fitted table held, save and load launch no Spark job,
+    and neither does the first request after load (which compiles the
+    serving program from the held tables)."""
+    from dataframe_pipeline_spark.serving import serve_rows
+
+    train = spark.createDataFrame(_labeled(1))
+    pipe = _lookup_pipeline()
+    pipe.fit(train)
+    path = str(tmp_path / "model")
+    _, save_jobs = count_jobs(pipe.save, path)
+    loaded, load_jobs = count_jobs(DataframePipeline.load, spark, path)
+    rows = spark.createDataFrame(_labeled(3)).collect()
+    served, serve_jobs = count_jobs(serve_rows, loaded, spark, rows[:1],
+                                    train.schema)
+    assert (save_jobs, load_jobs, serve_jobs) == (0, 0, 0)
+    assert served == sorted(pipe.transform(
+        spark.createDataFrame(rows[:1], train.schema)).collect())

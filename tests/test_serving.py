@@ -10,8 +10,7 @@ import pandas as pd
 import pytest
 
 import dataframe_pipeline_spark as dfp
-from dataframe_pipeline_spark.serving import (SERVING_MAX_ROWS,
-                                              local_rows_df, serve_rows)
+from dataframe_pipeline_spark.serving import local_rows_df, serve_rows
 
 
 def _fitted_pipe(spark):
@@ -70,16 +69,18 @@ def test_serving_unseen_group_null(spark):
     assert out["user_mean"] is None
 
 
-def test_serving_oversized_lookup_falls_back_to_join(spark):
+def test_serving_oversized_lookup_falls_back_to_join(spark, monkeypatch):
+    from dataframe_pipeline_spark import base
     from dataframe_pipeline_spark.ext_queries import _events
 
     ev = _events(spark, "/root/testdata/sf0.001")
     enc = dfp.ComplementLabelEncoder(inputs=["event_type"],
                                      outputs=["type_id"])
+    # force the gate: the dictionary exceeds the bound, so fit
+    # checkpoints it instead of holding it on the driver
+    monkeypatch.setattr(base, "SERVING_MAX_ROWS", 2)
     enc.fit(ev)
-    # force the gate: pretend the dictionary exceeds the inline cap
-    lookup, default_id, _n = enc._lookups["event_type"]
-    enc._lookups["event_type"] = (lookup, default_id, SERVING_MAX_ROWS + 1)
+    assert not enc._lookups["event_type"][0].held
     pipe = dfp.DataframePipeline(steps=[enc])
     out = pipe.serving_transform(local_rows_df(spark, [ev.head()], ev.schema))
     phys = out._jdf.queryExecution().executedPlan().toString()
@@ -488,7 +489,7 @@ def test_serving_save_load_new_session_job_free(spark, tmp_path):
         _assert_rows_match(g, e)
 
 
-def test_serving_fallbacks_logged_once(spark, caplog):
+def test_serving_fallbacks_logged_once(spark, caplog, monkeypatch):
     """Each step that leaves the compiled path is logged once, with its
     index, class and reason: an oversized lookup (batch join), an
     inexact key type (literal map kept in the select), and a barrier
@@ -496,6 +497,8 @@ def test_serving_fallbacks_logged_once(spark, caplog):
     import logging
 
     from pyspark.sql import functions as F
+
+    from dataframe_pipeline_spark import base
 
     train, test = _online_split(spark)
     train = train.withColumn("value_key", F.round("value", 0))
@@ -512,8 +515,12 @@ def test_serving_fallbacks_logged_once(spark, caplog):
                    strategy="minmax"),
     ])
     pipe.fit_transform(train)
-    lookup, default_id, _n = big._lookups["event_type"]
-    big._lookups["event_type"] = (lookup, default_id, SERVING_MAX_ROWS + 1)
+    # refit step 0 with its dictionary over the bound: checkpointed,
+    # not held (same ids, so the later steps' fits still match)
+    with monkeypatch.context() as m:
+        m.setattr(base, "SERVING_MAX_ROWS", 2)
+        big.fit(train)
+    assert not big._lookups["event_type"][0].held
     rows = test.limit(3).collect()
     with caplog.at_level(logging.WARNING, logger="dataframe_pipeline_spark"):
         for r in rows:
