@@ -16,13 +16,22 @@ most ``SERVING_MAX_ROWS`` rows is collected once and held on the driver
 as a ``pyarrow.Table`` with a ``LocalRelation`` view; a larger one is a
 local checkpoint on the executors, since at 100 TB a fitted
 frequency/label map can be far too large for the driver.  Either way
-the join (broadcast when small, shuffle otherwise — AQE picks at
-runtime) reads the fitted snapshot, never the training data.
+the join reads the fitted snapshot, never the training data.
+
+A lookup operator declares each join once, as :class:`Lookup` values
+built from its fitted state by its ``lookups()`` method: the key
+column and its normalization (:func:`lookup_key`), the table, the
+looked-up columns and the unseen value.  Batch transform applies them
+with :func:`join_lookups`; the serving tier compiles the same
+declarations into driver-side dicts.  A held table's join is hinted
+``broadcast``; a checkpointed one is left to AQE, which picks the
+strategy from its true size.
 """
 
 from __future__ import annotations
 
 import itertools
+from dataclasses import dataclass
 
 import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
@@ -64,6 +73,9 @@ SERVING_MAX_ROWS = 100_000
 #: the index column of a stacked frame (:func:`stack_inputs`)
 STACK_COL = "__dfp_i"
 
+#: the ComplementLabelEncoder class of NULL/NaN (and of unseen values)
+EXTRA = "extra_category_"
+
 
 class FittedTable:
     """A fitted lookup table, the one form batch transform, serving and
@@ -82,6 +94,7 @@ class FittedTable:
         self._spark = spark
         self.arrow = arrow
         self._df = df
+        self._join_view = None
         self.ids = list(ids)
 
     @property
@@ -93,6 +106,14 @@ class FittedTable:
         if self._df is None:
             self._df = self._spark.createDataFrame(self.arrow)
         return self._df
+
+    @property
+    def join_view(self) -> DataFrame:
+        """``df`` as a batch join reads it: hinted ``broadcast`` iff the
+        table is held; a checkpointed table is left to AQE."""
+        if self._join_view is None:
+            self._join_view = F.broadcast(self.df) if self.held else self.df
+        return self._join_view
 
     def release(self) -> None:
         if self.ids:
@@ -108,6 +129,52 @@ def fit_table(df: DataFrame) -> FittedTable:
         return FittedTable(df.sparkSession, arrow=arrow)
     frame, ids = tracked_checkpoint(df)
     return FittedTable(df.sparkSession, df=frame, ids=ids)
+
+
+def lookup_key(view, name: str, norm: str) -> Column:
+    """The table key of column ``name`` (``view``: a ColumnView),
+    normalized as ``norm``: ``"string"`` is the ComplementLabelEncoder
+    key (the string cast, NULL and NaN as ``EXTRA``), ``"nan"`` maps
+    float NaN to NULL, ``"raw"`` is the column as it is."""
+    if norm == "raw":
+        return view.col(name)
+    key = view.nan_to_null(name)
+    if norm == "nan":
+        return key
+    return F.coalesce(key.cast("string"), F.lit(EXTRA))
+
+
+@dataclass
+class Lookup:
+    """One fitted lookup, the declaration batch transform
+    (:func:`join_lookups`) and the serving tier both read: each output
+    is the ``values`` column of the ``table`` row whose ``table_key``
+    equals the normalized ``key`` column, or ``miss`` when no row does.
+    A NULL key matches no row, except with ``null_safe``, where it
+    matches the table's NULL key."""
+
+    key: str
+    norm: str
+    table: FittedTable
+    table_key: str
+    values: dict            # {output column: table value column}
+    miss: object = None
+    null_safe: bool = False
+
+
+def join_lookups(df: DataFrame, lookups) -> DataFrame:
+    """``df`` with the outputs of each :class:`Lookup` written by a left
+    join of its table (:attr:`FittedTable.join_view`) on the key."""
+    for lk in lookups:
+        key = lookup_key(ColumnView(df), lk.key, lk.norm)
+        on = (key.eqNullSafe(F.col(lk.table_key)) if lk.null_safe
+              else key == F.col(lk.table_key))
+        df = (df.join(lk.table.join_view, on, "left")
+              .withColumns({o: F.col(v) if lk.miss is None
+                            else F.coalesce(F.col(v), F.lit(lk.miss))
+                            for o, v in lk.values.items()})
+              .drop(lk.table_key, *lk.values.values()))
+    return df
 
 
 def fitted_tables(obj, depth: int = 3) -> list:

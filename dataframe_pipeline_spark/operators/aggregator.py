@@ -15,9 +15,11 @@ Spark-first design:
   a :class:`~dataframe_pipeline_spark.base.FittedTable`: held on the
   driver up to ``SERVING_MAX_ROWS`` keys, checkpointed on the executors
   above (at 100 TB a table over a high-cardinality key can be GBs).
-  Transform joins the table back on the key; unseen keys null out via
-  the left join, matching the reference's pandas ``.map`` miss → NaN.
-  AQE picks broadcast vs shuffle join at runtime from actual sizes.
+  ``lookups()`` declares one join per group key and transform applies
+  them with :func:`~dataframe_pipeline_spark.base.join_lookups`
+  (broadcast when held, AQE's choice when checkpointed); unseen keys
+  null out via the left join, matching the reference's pandas ``.map``
+  miss → NaN.
 
 Aggregate functions: pandas-compatible names.  ``'std'``/``'var'`` are
 sample (ddof=1) like pandas; ``np.std`` is population like numpy.
@@ -28,7 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..base import ColumnView, SparkDFPBase, fit_table, nan_to_null
+from ..base import (ColumnView, Lookup, SparkDFPBase, fit_table,
+                    join_lookups, nan_to_null)
 
 
 def _resolve_func(func):
@@ -108,25 +111,17 @@ class Aggregator(SparkDFPBase):
         return self
 
     def column_exprs(self, view):
-        """Global mode only; grouped mode is a lookup (serving.py)."""
+        """Global mode only; grouped mode is a lookup (``lookups``)."""
         if self.groupby:
             return None
         return {output: F.lit(v) for output, v in zip(self.outputs, self.vals)}
 
+    def lookups(self) -> list:
+        """Grouped mode only; global mode writes literals."""
+        return [Lookup(g, "nan", table, "__dfp_key", outmap)
+                for g, (table, outmap) in self._lookups.items()]
+
     def transform(self, df: DataFrame) -> DataFrame:
         if not self.groupby:
             return df.withColumns(self.column_exprs(ColumnView(df)))
-        for g, (table, outmap) in self._lookups.items():
-            lookup = table.df
-            # Join-back strategy: a plain join, no broadcast hint.  A
-            # held table's LocalRelation view carries its exact size,
-            # so the planner broadcasts it when small; a checkpointed
-            # one is left to AQE, which converts to broadcast at
-            # runtime from true sizes.
-            df = (
-                df.join(lookup, on=nan_to_null(df, g) == lookup["__dfp_key"], how="left")
-                .drop("__dfp_key")
-            )
-            df = df.withColumns({o: F.col(tmp) for o, tmp in outmap.items()})
-            df = df.drop(*outmap.values())
-        return df
+        return join_lookups(df, self.lookups())

@@ -8,11 +8,13 @@ maps values through the counts, unseen/NaN → 1 (raw counts) or 0.0
 Spark-first: fit is ``groupBy(value).count()`` (map-side partial
 aggregation, one shuffle on the value); normalization divides by the
 non-null total inside the same job.  The counts are a
-:class:`~dataframe_pipeline_spark.base.FittedTable` joined back at
-transform: held on the driver when small, checkpointed on the executors
-when the column has more than ``SERVING_MAX_ROWS`` distinct values (at
-100 TB a counts table over e.g. a device id is far beyond driver size);
-the join broadcast/shuffle decision is left to AQE.
+:class:`~dataframe_pipeline_spark.base.FittedTable`, declared by
+``lookups()`` (NaN-as-NULL key, unseen → the default) and joined back
+by :func:`~dataframe_pipeline_spark.base.join_lookups`: held on the
+driver and broadcast when small, checkpointed on the executors when
+the column has more than ``SERVING_MAX_ROWS`` distinct values (at
+100 TB a counts table over e.g. a device id is far beyond driver size),
+where the join strategy is left to AQE.
 """
 
 from __future__ import annotations
@@ -20,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..base import SparkDFPBase, fit_table, nan_to_null
+from ..base import Lookup, SparkDFPBase, fit_table, join_lookups, nan_to_null
 
 
 class FrequencyEncoder(SparkDFPBase):
@@ -51,13 +53,11 @@ class FrequencyEncoder(SparkDFPBase):
             self._lookups[input] = fit_table(counts)
         return self
 
-    def transform(self, df: DataFrame) -> DataFrame:
+    def lookups(self) -> list:
         default = 0.0 if self.normalize else 1
-        for input, output, in zip(self.inputs, self.outputs):
-            lookup = self._lookups[input].df
-            df = (
-                df.join(lookup, on=nan_to_null(df, input) == lookup["__dfp_val"], how="left")
-                .withColumn(output, F.coalesce(F.col("__dfp_cnt"), F.lit(default)))
-                .drop("__dfp_val", "__dfp_cnt")
-            )
-        return df
+        return [Lookup(c, "nan", self._lookups[c], "__dfp_val",
+                       {o: "__dfp_cnt"}, default)
+                for c, o in zip(self.inputs, self.outputs)]
+
+    def transform(self, df: DataFrame) -> DataFrame:
+        return join_lookups(df, self.lookups())

@@ -14,17 +14,15 @@ once.  The dictionary of each column is its sorted distinct values plus
 their UTF-8 bytes and Python by code point, and the two orders agree,
 so the ids are the ones sklearn's ``LabelEncoder`` and a Spark window
 would give.  The dictionary is held as a ``(value, id)``
-:class:`~dataframe_pipeline_spark.base.FittedTable`; transform is a
-left join of its view on the normalized value with
-``coalesce(id, default_id)``.  When the distinct values exceed
-``SERVING_MAX_ROWS``, the distinct set is checkpointed on the executors
-instead and ranked there by a window partitioned by column (cardinality
-≪ rows, so not a scale bottleneck), and the ranked table is
-checkpointed in turn.  The broadcast hint is *size-gated*: transform
-hints ``broadcast`` only when the dictionary is under
-``broadcast_max_rows`` (default 500k entries — roughly the
-autoBroadcastJoinThreshold at ~20 B/entry); above that it emits a plain
-join and lets AQE pick the strategy.
+:class:`~dataframe_pipeline_spark.base.FittedTable`; ``lookups()``
+declares it keyed on the normalized value (``lookup_key`` norm
+``"string"``) with the ``extra_category_`` id for a miss, and transform
+is :func:`~dataframe_pipeline_spark.base.join_lookups`, a broadcast
+left join.  When the distinct values exceed ``SERVING_MAX_ROWS``, the
+distinct set is checkpointed on the executors instead and ranked there
+by a window partitioned by column (cardinality ≪ rows, so not a scale
+bottleneck), and the ranked table is checkpointed in turn; its join
+carries no hint and AQE picks the strategy.
 """
 
 from __future__ import annotations
@@ -33,38 +31,18 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..base import (PARM_ALL, STACK_COL, ColumnView, FittedTable,
-                    SparkDFPBase, fit_table, is_floating, literal_df,
-                    stack_inputs, tracked_checkpoint, unstack)
-
-EXTRA = "extra_category_"
+from ..base import (EXTRA, PARM_ALL, STACK_COL, ColumnView, FittedTable,
+                    Lookup, SparkDFPBase, fit_table, join_lookups,
+                    literal_df, lookup_key, stack_inputs, tracked_checkpoint,
+                    unstack)
 
 
 class ComplementLabelEncoder(SparkDFPBase):
-    #: dictionaries with at most this many entries get a broadcast hint;
-    #: larger ones go through a plain (AQE-planned) shuffle join.
-    BROADCAST_MAX_ROWS = 500_000
-
-    def __init__(self, inputs=PARM_ALL, outputs=PARM_ALL,
-                 broadcast_max_rows: int | None = None):
+    def __init__(self, inputs=PARM_ALL, outputs=PARM_ALL):
         self.inputs = inputs
         self.outputs = outputs
-        self.broadcast_max_rows = (
-            self.BROADCAST_MAX_ROWS if broadcast_max_rows is None
-            else broadcast_max_rows)
         # input col -> (FittedTable(__dfp_val, __dfp_id), default_id, cardinality)
         self._lookups = {}
-
-    @staticmethod
-    def _normalized(df, input: str):
-        """The dictionary key of ``input``: its string cast, NULL/NaN as
-        the reserved class.  ``df``: a DataFrame or a ``ColumnView``."""
-        view = ColumnView(df) if isinstance(df, DataFrame) else df
-        col = view.col(input)
-        s = col.cast("string")
-        if is_floating(view.dtype(input)):
-            s = F.when(F.isnan(col), F.lit(None)).otherwise(s)
-        return F.coalesce(s, F.lit(EXTRA))
 
     def fit(self, df: DataFrame, **params):
         """All input columns are fitted by ONE distinct aggregate over
@@ -74,7 +52,8 @@ class ComplementLabelEncoder(SparkDFPBase):
         N full scans, this costs one."""
         self.inputs = self.replace_PARM_ALL(df, self.inputs)
         self.outputs = self.replace_PARM_ALL(df, self.outputs)
-        keys = [self._normalized(df, c) for c in self.inputs]
+        view = ColumnView(df)
+        keys = [lookup_key(view, c, "string") for c in self.inputs]
         values = fit_table(stack_inputs(df, keys).distinct())
         if values.held:
             self._lookups = self._rank_held(df.sparkSession, values)
@@ -123,21 +102,10 @@ class ComplementLabelEncoder(SparkDFPBase):
                               *stats[i])
         return lookups
 
+    def lookups(self) -> list:
+        return [Lookup(c, "string", self._lookups[c][0], "__dfp_val",
+                       {o: "__dfp_id"}, self._lookups[c][1])
+                for c, o in zip(self.inputs, self.outputs)]
+
     def transform(self, df: DataFrame) -> DataFrame:
-        for input, output in zip(self.inputs, self.outputs):
-            table, default_id, n = self._lookups[input]
-            lookup = table.df
-            if n <= self.broadcast_max_rows:
-                lookup = F.broadcast(lookup)
-            key = self._normalized(df, input).alias("__dfp_join_key")
-            df = (
-                df.join(
-                    lookup, on=key == lookup["__dfp_val"], how="left"
-                )
-                .withColumn(
-                    output,
-                    F.coalesce(F.col("__dfp_id"), F.lit(default_id)).cast("int"),
-                )
-                .drop("__dfp_val", "__dfp_id")
-            )
-        return df
+        return join_lookups(df, self.lookups())

@@ -11,10 +11,11 @@ per category, both partial-aggregatable) over every input stacked
 the same jobs for one input or many; the global mean and the codes are
 computed from that fitted table, not from the training data.  Each
 input's codes are a :class:`~dataframe_pipeline_spark.base.FittedTable`
-applied by broadcast-gated join — held on the driver when small; at
-100 TB a hundred-million-row category table is checkpointed and stays
-a join.  Unseen categories and NULL get the global mean (sklearn's
-unseen behavior).
+declared by ``lookups()`` (raw key, miss → the global mean) and applied
+by :func:`~dataframe_pipeline_spark.base.join_lookups` — held on the
+driver and broadcast when small; at 100 TB a hundred-million-row
+category table is checkpointed and its join left to AQE.  Unseen
+categories and NULL get the global mean (sklearn's unseen behavior).
 
 HashingEncoder: ``bucket(c) = md5_int(c) % n_buckets`` — stateless
 (nothing to fit, nothing to ship), collision-accepting, map-only.
@@ -29,11 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..base import STACK_COL, SparkDFPBase, fit_table, stack_inputs, unstack
-
-#: Same bound the label encoder uses: lookup tables under this are
-#: safely broadcast; above it AQE picks the join strategy.
-BROADCAST_MAX_ROWS = 2_000_000
+from ..base import (STACK_COL, Lookup, SparkDFPBase, fit_table,
+                    join_lookups, stack_inputs, unstack)
 
 
 class TargetEncoder(SparkDFPBase):
@@ -49,12 +47,11 @@ class TargetEncoder(SparkDFPBase):
         self.smoothing = float(smoothing)
         self.global_mean_ = None
         self.lookups_ = []          # per input: FittedTable(__cat, __code)
-        self.cards_ = []            # per input: fitted category count
 
     def fit(self, df: DataFrame, **params):
         t = F.col(self.target).cast("double")
         m = F.lit(self.smoothing)
-        self.lookups_, self.cards_ = [], []
+        self.lookups_ = []
         if not self.inputs:
             self.global_mean_ = df.agg(F.avg(t)).collect()[0][0]
             return self
@@ -67,17 +64,13 @@ class TargetEncoder(SparkDFPBase):
             stack_inputs(df, [F.col(c) for c in self.inputs], __t=t)
             .groupBy(STACK_COL, *keys)
             .agg(F.count("__t").alias("__n"), F.sum("__t").alias("__s")))
-        # ONE collect over the fitted stats: the global-mean sums and
-        # each input's category count (the broadcast gate, resolved at
-        # fit so transform stays job-free)
+        # ONE collect over the fitted stats: the global-mean sums
         first = F.col(STACK_COL) == 0
         tot = stats.df.agg(
             F.sum(F.when(first, F.col("__n"))).alias("n"),
-            F.sum(F.when(first, F.col("__s"))).alias("s"),
-            *[F.count(F.col(key)).alias(key) for key in keys]).collect()[0]
+            F.sum(F.when(first, F.col("__s"))).alias("s")).collect()[0]
         self.global_mean_ = (float(tot["s"]) / float(tot["n"])
                              if tot["n"] else None)
-        self.cards_ = [tot[key] for key in keys]
         g = F.lit(self.global_mean_)
         mean = F.col("__s") / F.col("__n")
         codes = fit_table(stats.df.select(STACK_COL, *keys,
@@ -87,20 +80,16 @@ class TargetEncoder(SparkDFPBase):
         self.lookups_ = unstack(codes, k, "__cat", ["__code"])
         return self
 
+    def lookups(self) -> list:
+        return [Lookup(c, "raw", table, "__cat", {o: "__code"},
+                       self.global_mean_)
+                for c, o, table in zip(self.inputs, self.outputs,
+                                       self.lookups_)]
+
     def transform(self, df: DataFrame) -> DataFrame:
         if self.global_mean_ is None:
             raise RuntimeError("TargetEncoder.transform before fit")
-        out = df
-        for c, o, lk, n in zip(self.inputs, self.outputs, self.lookups_,
-                               self.cards_):
-            lkr = (lk.df.withColumnRenamed("__cat", f"__cat_{o}")
-                   .withColumnRenamed("__code", f"__code_{o}"))
-            lkb = F.broadcast(lkr) if n <= BROADCAST_MAX_ROWS else lkr
-            out = (out.join(lkb, out[c] == F.col(f"__cat_{o}"), "left")
-                   .withColumn(o, F.coalesce(F.col(f"__code_{o}"),
-                                             F.lit(self.global_mean_)))
-                   .drop(f"__cat_{o}", f"__code_{o}"))
-        return out
+        return join_lookups(df, self.lookups())
 
 
 class CVTargetEncoder(SparkDFPBase):
@@ -119,7 +108,9 @@ class CVTargetEncoder(SparkDFPBase):
     re-aggregation of that tiny frame gives per-category totals, and
     ``oof = (total - fold) / (n_total - n_fold)`` — one scan of the
     data regardless of K.  The code table keyed by (category, fold)
-    applies by broadcast-gated join on the same key pair.
+    applies by a join on the same key pair (its
+    :attr:`~dataframe_pipeline_spark.base.FittedTable.join_view`:
+    broadcast when held).
 
     A category seen ONLY in a row's own fold has no out-of-fold
     evidence → global mean (the unseen-category rule applied at fold
@@ -149,7 +140,6 @@ class CVTargetEncoder(SparkDFPBase):
         self.smoothing = float(smoothing)
         self.global_mean_ = None
         self.lookups_ = []          # per input: FittedTable(__cat, __fold, __code)
-        self.cards_ = []
 
     def _fold_col(self):
         h = F.conv(F.substring(F.md5(F.col(self.fold_key).cast("string")),
@@ -159,7 +149,7 @@ class CVTargetEncoder(SparkDFPBase):
     def fit(self, df: DataFrame, **params):
         t = F.col(self.target).cast("double")
         m = F.lit(self.smoothing)
-        self.lookups_, self.cards_ = [], []
+        self.lookups_ = []
         if not self.inputs:
             self.global_mean_ = df.agg(F.avg(t)).collect()[0][0]
             return self
@@ -173,20 +163,11 @@ class CVTargetEncoder(SparkDFPBase):
                            self._fold_col().alias("__fold"))
                 .agg(F.count(t).alias("__nf"), F.sum(t).alias("__sf")))
             pf_all = stats.df
-            # ONE collect per column: the broadcast-gate cardinality is
-            # |pf| (the tot join is N:1 — tot is grouped FROM pf, so
-            # every non-null (cat, fold) row survives exactly once), so
-            # it rides the global-mean agg instead of a lk.count() job
-            card = F.count(F.when(F.col("__cat").isNotNull(), 1))
             if i == 0:
                 trow = pf_all.agg(F.sum("__nf").alias("n"),
-                                  F.sum("__sf").alias("s"),
-                                  card.alias("c")).collect()[0]
+                                  F.sum("__sf").alias("s")).collect()[0]
                 self.global_mean_ = (float(trow["s"]) / float(trow["n"])
                                      if trow["n"] else None)
-                n_codes = trow["c"]
-            else:
-                n_codes = pf_all.agg(card.alias("c")).collect()[0]["c"]
             g = F.lit(self.global_mean_)
             pf = pf_all.filter(F.col("__cat").isNotNull())
             tot = (pf.groupBy("__cat")
@@ -200,25 +181,20 @@ class CVTargetEncoder(SparkDFPBase):
                 pf.join(tot, "__cat")
                 .select("__cat", "__fold", code.alias("__code"))))
             stats.release()
-            self.cards_.append(n_codes)
         return self
 
     def transform(self, df: DataFrame) -> DataFrame:
         if self.global_mean_ is None:
             raise RuntimeError("CVTargetEncoder.transform before fit")
         out = df.withColumn("__dfp_fold", self._fold_col())
-        for c, o, lk, n in zip(self.inputs, self.outputs, self.lookups_,
-                               self.cards_):
-            lkr = (lk.df.withColumnRenamed("__cat", f"__cat_{o}")
-                     .withColumnRenamed("__fold", f"__fold_{o}")
-                     .withColumnRenamed("__code", f"__code_{o}"))
-            lkb = F.broadcast(lkr) if n <= BROADCAST_MAX_ROWS else lkr
-            out = (out.join(lkb, (out[c] == F.col(f"__cat_{o}"))
-                            & (out["__dfp_fold"] == F.col(f"__fold_{o}")),
+        for c, o, lk in zip(self.inputs, self.outputs, self.lookups_):
+            out = (out.join(lk.join_view,
+                            (F.col(c) == F.col("__cat"))
+                            & (F.col("__dfp_fold") == F.col("__fold")),
                             "left")
-                   .withColumn(o, F.coalesce(F.col(f"__code_{o}"),
+                   .withColumn(o, F.coalesce(F.col("__code"),
                                              F.lit(self.global_mean_)))
-                   .drop(f"__cat_{o}", f"__fold_{o}", f"__code_{o}"))
+                   .drop("__cat", "__fold", "__code"))
         return out.drop("__dfp_fold")
 
 

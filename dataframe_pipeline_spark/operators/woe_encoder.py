@@ -15,12 +15,14 @@ Spark-first: fit is ONE groupBy over every input column stacked
 scalars are re-summed from that fitted table, and the (category → woe)
 arithmetic runs in Spark over it (no driver math beyond the two
 scalars).  Each input's table is a
-:class:`~dataframe_pipeline_spark.base.FittedTable`; transform is a
-size-gated broadcast left join per column, unseen/NULL categories →
-0.0 (no evidence).  Same lookup discipline as TargetEncoder /
-FrequencyEncoder; the serving tier looks the held table up on the
-driver, so a WOE-containing pipeline keeps the job-free LocalRelation
-fold online.
+:class:`~dataframe_pipeline_spark.base.FittedTable` declared by
+``lookups()`` (NaN-as-NULL key, unseen/NULL categories → 0.0, no
+evidence); transform is
+:func:`~dataframe_pipeline_spark.base.join_lookups`, a left join per
+column, broadcast when the table is held.  Same lookup discipline as
+TargetEncoder / FrequencyEncoder; the serving tier looks the held
+table up on the driver, so a WOE-containing pipeline keeps the
+job-free LocalRelation fold online.
 
 Reference parity: the reference has no WOE surface; this extends the
 encoder family the same way TargetEncoder does (beyond-reference,
@@ -32,10 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..base import (STACK_COL, SparkDFPBase, fit_table, nan_to_null,
-                    stack_inputs, unstack)
-
-BROADCAST_MAX_ROWS = 500_000
+from ..base import (STACK_COL, Lookup, SparkDFPBase, fit_table,
+                    join_lookups, nan_to_null, stack_inputs, unstack)
 
 
 class WOEEncoder(SparkDFPBase):
@@ -50,13 +50,12 @@ class WOEEncoder(SparkDFPBase):
         self.target = target
         self.alpha = float(alpha)
         self.lookups_ = []      # per input: FittedTable(__cat, __woe)
-        self.cards_ = []        # per input: fitted category count
         self.totals_ = None     # (pos_total, neg_total)
 
     def fit(self, df: DataFrame, **params):
         y = F.col(self.target).cast("double")
         a = F.lit(self.alpha)
-        self.lookups_, self.cards_ = [], []
+        self.lookups_ = []
         if not self.inputs:
             row = df.agg(F.sum(y).alias("p"),
                          F.count(y).alias("n")).collect()[0]
@@ -65,7 +64,7 @@ class WOEEncoder(SparkDFPBase):
             return self
         # ONE scan for every input: NULL/NaN categories stay in the
         # grouped aggregate so the global totals re-sum from the fitted
-        # table (read off input 0), with each input's category count
+        # table (read off input 0)
         k = len(self.inputs)
         keys = [f"__dfp_k{j}" for j in range(k)]
         stats = fit_table(
@@ -76,12 +75,10 @@ class WOEEncoder(SparkDFPBase):
         first = F.col(STACK_COL) == 0
         row = stats.df.agg(
             F.sum(F.when(first, F.col("__pos"))).alias("p"),
-            F.sum(F.when(first, F.col("__n"))).alias("n"),
-            *[F.count(F.col(key)).alias(key) for key in keys]).collect()[0]
+            F.sum(F.when(first, F.col("__n"))).alias("n")).collect()[0]
         pos_t = float(row["p"] or 0.0)
         neg_t = float(row["n"] or 0) - pos_t
         self.totals_ = (pos_t, neg_t)
-        self.cards_ = [row[key] for key in keys]
         woe = fit_table(stats.df.select(
             STACK_COL, *keys,
             F.log(((F.col("__pos") + a) / F.lit(pos_t + 2 * self.alpha))
@@ -91,19 +88,12 @@ class WOEEncoder(SparkDFPBase):
         self.lookups_ = unstack(woe, k, "__cat", ["__woe"])
         return self
 
+    def lookups(self) -> list:
+        return [Lookup(c, "nan", table, "__cat", {o: "__woe"}, 0.0)
+                for c, o, table in zip(self.inputs, self.outputs,
+                                       self.lookups_)]
+
     def transform(self, df: DataFrame) -> DataFrame:
         if self.totals_ is None:
             raise RuntimeError("WOEEncoder.transform before fit")
-        out = df
-        for c, o, lk, n in zip(self.inputs, self.outputs, self.lookups_,
-                               self.cards_):
-            lkr = (lk.df.withColumnRenamed("__cat", f"__cat_{o}")
-                     .withColumnRenamed("__woe", f"__woe_{o}"))
-            lkb = F.broadcast(lkr) if n <= BROADCAST_MAX_ROWS else lkr
-            out = (out.join(lkb,
-                            nan_to_null(out, c) == F.col(f"__cat_{o}"),
-                            "left")
-                   .withColumn(o, F.coalesce(F.col(f"__woe_{o}"),
-                                             F.lit(0.0)))
-                   .drop(f"__cat_{o}", f"__woe_{o}"))
-        return out
+        return join_lookups(df, self.lookups())

@@ -26,11 +26,11 @@ Arrow-batched pandas UDF for distributed apply.  Test-scale fit /
 any-scale apply; at 100 TB prefer the native operators above, whose fit
 is distributed too.
 
-The LabelEncoder lookup join is *size-gated* like ComplementLabelEncoder:
-fit records the table's size and transform hints ``broadcast`` only under
-``BROADCAST_MAX_ROWS``; a high-cardinality dictionary goes through a
-plain join so AQE picks the strategy instead of forcing the lookup into
-executor memory.
+The LabelEncoder table is declared by ``lookups()`` (NaN-as-NULL key,
+matched null-safe so a NULL value gets the NULL class, unseen → NULL)
+and applied by :func:`~dataframe_pipeline_spark.base.join_lookups`:
+broadcast when the table is held on the driver, a plain join that AQE
+plans when a high-cardinality dictionary is checkpointed.
 """
 
 from __future__ import annotations
@@ -38,14 +38,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..base import PARM_ALL, SparkDFPBase, fit_table, nan_to_null
+from ..base import (PARM_ALL, Lookup, SparkDFPBase, fit_table,
+                    join_lookups, nan_to_null)
 
 
 class WrapTransformer(SparkDFPBase):
-    #: lookups with at most this many entries get a broadcast hint;
-    #: larger ones go through a plain (AQE-planned) join.
-    BROADCAST_MAX_ROWS = 500_000
-
     #: generic (non-mapped) wrap only: the driver-side sklearn ``fit``
     #: refuses inputs above this many rows instead of attempting an
     #: unbounded ``toPandas()`` — the one place the reference semantics
@@ -61,7 +58,9 @@ class WrapTransformer(SparkDFPBase):
         self.outputs = outputs
         self.transformer = transformer
         self._kind = type(transformer).__name__ if transformer is not None else None
-        self._state = {}  # input -> fitted state
+        # input -> fitted state; for LabelEncoder a tuple whose first
+        # item is the FittedTable(__dfp_val, __dfp_id)
+        self._state = {}
 
     # -- fit ---------------------------------------------------------------
     def fit(self, df: DataFrame, **params):
@@ -137,8 +136,7 @@ class WrapTransformer(SparkDFPBase):
         # sklearn LabelEncoder: classes_ = sorted unique values.  NULL sorts
         # last (like NaN in numpy sort) via asc_nulls_last.  The global
         # row_number window runs over the fitted distinct set only
-        # (cardinality ≪ rows) so it is not a scale bottleneck; the
-        # table's size gates the transform-time broadcast hint.
+        # (cardinality ≪ rows) so it is not a scale bottleneck.
         values = fit_table(
             df.select(nan_to_null(df, c).alias("__dfp_val")).distinct())
         w = Window.orderBy(F.col("__dfp_val").asc_nulls_last())
@@ -146,8 +144,7 @@ class WrapTransformer(SparkDFPBase):
             "__dfp_val",
             (F.row_number().over(w) - 1).cast("int").alias("__dfp_id")))
         values.release()
-        n = lookup.arrow.num_rows if lookup.held else lookup.df.count()
-        return (lookup, n)
+        return (lookup,)
 
     def _fit_scale(self, df: DataFrame, cols):
         aggs = []
@@ -177,26 +174,22 @@ class WrapTransformer(SparkDFPBase):
         return [row[f"m{i}"] for i in range(len(cols))]
 
     # -- transform ---------------------------------------------------------
+    def lookups(self) -> list:
+        """The LabelEncoder mapping; the other kinds join nothing."""
+        if self._kind != "LabelEncoder":
+            return []
+        return [Lookup(_first(i), "nan", self._state[i][0], "__dfp_val",
+                       {_first(o): "__dfp_id"}, null_safe=True)
+                for i, o in zip(self.inputs, self.outputs)]
+
     def transform(self, df: DataFrame) -> DataFrame:
+        if self._kind == "LabelEncoder":
+            return join_lookups(df, self.lookups())
         for input, output in zip(self.inputs, self.outputs):
             in_cols = list(input) if isinstance(input, tuple) else [input]
             out_cols = list(output) if isinstance(output, tuple) else [output]
             state = self._state[input]
-            if self._kind == "LabelEncoder":
-                table, n = state
-                lookup = table.df
-                if n <= self.BROADCAST_MAX_ROWS:
-                    lookup = F.broadcast(lookup)
-                df = (
-                    df.join(
-                        lookup,
-                        on=nan_to_null(df, in_cols[0]).eqNullSafe(lookup["__dfp_val"]),
-                        how="left",
-                    )
-                    .withColumn(out_cols[0], F.col("__dfp_id"))
-                    .drop("__dfp_val", "__dfp_id")
-                )
-            elif self._kind in ("StandardScaler", "MinMaxScaler"):
+            if self._kind in ("StandardScaler", "MinMaxScaler"):
                 df = df.withColumns(
                     {
                         o: (nan_to_null(df, c) - F.lit(off)) * F.lit(scale)
@@ -234,3 +227,8 @@ class WrapTransformer(SparkDFPBase):
 
     def get_transformer(self, c):
         return list(self._state.values())[c]
+
+
+def _first(col):
+    """The column of a name, or the first of a tuple of names."""
+    return col if isinstance(col, str) else col[0]

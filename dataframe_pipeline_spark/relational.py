@@ -28,13 +28,14 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 #: Size gate for explicit dim-broadcast hints — the query-shape analog
-#: of label_encoder's BROADCAST_MAX_ROWS gate.  A dim under this bound
-#: is safely an executor-memory broadcast; above it the hint is
-#: withheld and AQE picks the strategy from the true runtime size (it
-#: will still broadcast when the materialized dim turns out small).
-#: 256 MB of *source-scan parquet* over-bounds the narrow pre-joined
-#: dim by the column-pruning factor, so the gate errs conservative in
-#: the OOM-safe direction.
+#: of the fitted-lookup rule (``base.FittedTable.join_view``: a table
+#: held on the driver is hinted, a checkpointed one is not).  A dim
+#: under this bound is safely an executor-memory broadcast; above it
+#: the hint is withheld and AQE picks the strategy from the true
+#: runtime size (it will still broadcast when the materialized dim
+#: turns out small).  256 MB of *source-scan parquet* over-bounds the
+#: narrow pre-joined dim by the column-pruning factor, so the gate errs
+#: conservative in the OOM-safe direction.
 DIM_BROADCAST_MAX_BYTES = 256 << 20
 
 

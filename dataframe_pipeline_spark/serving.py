@@ -8,13 +8,15 @@ compiles the pipeline once per fit of its steps and per input schema:
 
 * each lookup step (ComplementLabelEncoder, grouped Aggregator,
   FrequencyEncoder, TargetEncoder, WOEEncoder, WrapTransformer
-  LabelEncoder) becomes a driver-side ``dict`` per output, built from
-  the Arrow columns of the fitted table the step holds
-  (:class:`~dataframe_pipeline_spark.base.FittedTable`), so compiling
-  launches no Spark job.  Keys are looked up in Python while
-  the request row is rendered, with the batch join's NaN→NULL, unseen
-  and NULL-key rules, and the values ride as extra typed columns of
-  the inline ``VALUES`` table;
+  LabelEncoder) declares its joins with ``lookups()``
+  (:class:`~dataframe_pipeline_spark.base.Lookup`), the declarations
+  its batch transform applies too.  Each becomes a driver-side
+  ``dict`` per output, built from the Arrow columns of the held
+  :class:`~dataframe_pipeline_spark.base.FittedTable`, so compiling
+  launches no Spark job.  Keys are looked up in Python while the
+  request row is rendered, with the declared key normalization,
+  unseen value and NULL-key rule, and the values ride as extra typed
+  columns of the inline ``VALUES`` table;
 * every other step adds its columns through its ``column_exprs`` hook
   (:class:`~dataframe_pipeline_spark.base.ColumnView`), composed over
   the expressions earlier steps wrote into one precomputed select.
@@ -53,8 +55,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import from_arrow_type
 
-from .base import (GENERATION_ATTR, SERVING_CACHE_ATTR, SERVING_MAX_ROWS,
-                   ColumnView, is_floating)
+from .base import (EXTRA, GENERATION_ATTR, SERVING_CACHE_ATTR,
+                   SERVING_MAX_ROWS, ColumnView, Lookup, is_floating,
+                   lookup_key)
 
 log = logging.getLogger("dataframe_pipeline_spark")
 
@@ -65,98 +68,45 @@ _HIDDEN = "__dfp_lk"
 _NAN = object()
 
 
-@dataclass
-class _Lookup:
-    """One looked-up output column: ``table.get(key, miss)``, or ``null``
-    for a NULL key, cast to ``dtype`` — the batch join's result."""
+#: class names of the steps that declare lookups (a ``lookups()``
+#: method, see ``base.Lookup``); perfbench counts them to report the
+#: share of lookup steps compiled
+_SERVING_COMPILERS = frozenset({
+    "ComplementLabelEncoder", "Aggregator", "FrequencyEncoder",
+    "TargetEncoder", "WrapTransformer", "WOEEncoder"})
 
-    key: str
+
+@dataclass
+class _Compiled:
+    """One looked-up output column: ``table.get(key, lookup.miss)``, or
+    ``null`` for a NULL key, cast to ``dtype`` — the batch join's
+    result."""
+
+    lookup: Lookup
     output: str
     table: dict
     dtype: T.DataType
-    miss: object
     null: object
-    #: how the batch join normalizes the key: "string" (the
-    #: ComplementLabelEncoder string cast), "nan" (NaN → NULL) or "raw"
-    norm: str
-
-
-# -- per-operator lookup specs --------------------------------------------
-#
-# Each yields, per looked-up output of the step: (key column, output,
-# FittedTable, its key column, its value column, the value for an unseen
-# key, key normalization).  The value for a NULL key is the table's
-# entry for a NULL key if it has one (the WrapTransformer LabelEncoder's
-# NULL class), else the unseen value.
-
-def _label_encoder(op):
-    for input, output in zip(op.inputs, op.outputs):
-        table, default_id, _n = op._lookups[input]
-        yield (input, output, table, "__dfp_val", "__dfp_id", default_id,
-               "string")
-
-
-def _aggregator(op):
-    for g, (table, outmap) in (op._lookups.items() if op.groupby else ()):
-        for o, tmp in outmap.items():
-            yield g, o, table, "__dfp_key", tmp, None, "nan"
-
-
-def _frequency_encoder(op):
-    default = 0.0 if op.normalize else 1
-    for input, output in zip(op.inputs, op.outputs):
-        yield (input, output, op._lookups[input], "__dfp_val", "__dfp_cnt",
-               default, "nan")
-
-
-def _target_encoder(op):
-    for c, o, table in zip(op.inputs, op.outputs, op.lookups_):
-        yield c, o, table, "__cat", "__code", op.global_mean_, "raw"
-
-
-def _woe_encoder(op):
-    for c, o, table in zip(op.inputs, op.outputs, op.lookups_):
-        yield c, o, table, "__cat", "__woe", 0.0, "nan"
-
-
-def _wrap_transformer(op):
-    """Only the LabelEncoder mapping joins a lookup (an eqNullSafe join,
-    so its NULL class answers a NULL key)."""
-    if op._kind != "LabelEncoder":
-        return
-    for input, output in zip(op.inputs, op.outputs):
-        yield (input if isinstance(input, str) else input[0],
-               output if isinstance(output, str) else output[0],
-               op._state[input][0], "__dfp_val", "__dfp_id", None, "nan")
-
-
-_SERVING_COMPILERS = {
-    "ComplementLabelEncoder": _label_encoder,
-    "Aggregator": _aggregator,
-    "FrequencyEncoder": _frequency_encoder,
-    "TargetEncoder": _target_encoder,
-    "WrapTransformer": _wrap_transformer,
-    "WOEEncoder": _woe_encoder,
-}
 
 
 def _compile_lookups(op):
-    """The step's lookups, read from the Arrow columns of its held
-    tables with no Spark job; False when a table is not held (it has
-    over SERVING_MAX_ROWS rows).  A NULL value reads as the unseen
-    value, as the batch join's ``coalesce`` does."""
+    """The step's declared lookups (``op.lookups()``), read from the
+    Arrow columns of their held tables with no Spark job; False when a
+    table is not held (it has over SERVING_MAX_ROWS rows).  A NULL value
+    reads as the unseen value, as the batch join's ``coalesce`` does."""
     out = []
-    for key, output, table, kcol, vcol, miss, norm in \
-            _SERVING_COMPILERS[type(op).__name__](op):
-        if not table.held:
+    for lk in op.lookups():
+        if not lk.table.held:
             return False
-        values = table.arrow[vcol]
-        entries = {_NAN if k != k else k: miss if v is None else v
-                   for k, v in zip(table.arrow[kcol].to_pylist(),
-                                   values.to_pylist())}
-        null = entries.pop(None, miss)
-        out.append(_Lookup(key, output, entries, from_arrow_type(values.type),
-                           miss, null, norm))
+        keys = lk.table.arrow[lk.table_key].to_pylist()
+        for output, vcol in lk.values.items():
+            values = lk.table.arrow[vcol]
+            entries = {_NAN if k != k else k: lk.miss if v is None else v
+                       for k, v in zip(keys, values.to_pylist())}
+            null = entries.pop(None, lk.miss)
+            out.append(_Compiled(lk, output, entries,
+                                 from_arrow_type(values.type),
+                                 null if lk.null_safe else lk.miss))
     return out
 
 
@@ -166,8 +116,6 @@ def _py_key(norm: str, dtype: T.DataType):
     """Python function from a request value to its table key, normalized
     as the batch join normalizes it; None where Python equality does
     not reproduce Spark's for this key type."""
-    from .operators.label_encoder import EXTRA
-
     def as_date(v):
         return v.date() if isinstance(v, datetime.datetime) else v
 
@@ -192,25 +140,17 @@ def _py_key(norm: str, dtype: T.DataType):
     return None
 
 
-def _key_expr(spec: _Lookup, view) -> "F.Column":
-    if spec.norm == "string":
-        from .operators.label_encoder import ComplementLabelEncoder
-
-        return ComplementLabelEncoder._normalized(view, spec.key)
-    if spec.norm == "nan":
-        return view.nan_to_null(spec.key)
-    return view.col(spec.key)
-
-
-def _map_expr(spec: _Lookup, key) -> "F.Column":
+def _map_expr(spec: _Compiled, view) -> "F.Column":
     """The lookup as a literal map inside the select (inexact key types)."""
+    lk = spec.lookup
+    key = lookup_key(view, lk.key, lk.norm)
     args = []
     for k, v in spec.table.items():
         args += [F.lit(float("nan") if k is _NAN else k), F.lit(v)]
     looked = F.element_at(F.create_map(*args), key) if args else F.lit(None)
-    if spec.miss is not None:
-        looked = F.coalesce(looked, F.lit(spec.miss))
-    if spec.null != spec.miss:
+    if lk.miss is not None:
+        looked = F.coalesce(looked, F.lit(lk.miss))
+    if spec.null != lk.miss:
         looked = F.when(key.isNull(), F.lit(spec.null)).otherwise(looked)
     return looked.cast(spec.dtype)
 
@@ -273,7 +213,7 @@ class _Program:
         self.schema = schema
         self.types = _types(schema)
         self.spark = spark
-        self.lookups: list = []     # (key index, key function, _Lookup)
+        self.lookups: list = []     # (key index, key function, _Compiled)
         self.barrier = None         # (index, step)
         self.tail = None
         env = _Env(spark, schema)
@@ -288,8 +228,9 @@ class _Program:
     def _compose(self, i, step, env, names, render) -> bool:
         """Add step ``i`` to the select; False when it is a barrier."""
         cls = type(step).__name__
+        declares = hasattr(step, "lookups")
         specs = []
-        if cls in _SERVING_COMPILERS:
+        if declares:
             # kept on the step until it is refit; False (a step that left
             # the compiled path) is worked out again at each compile
             specs = getattr(step, SERVING_CACHE_ATTR, None)
@@ -303,23 +244,23 @@ class _Program:
             return False
         inexact = {}
         for spec in specs:
-            key_fn = None
-            if not render or spec.key not in names or spec.key in env.written:
-                why = f"key {spec.key!r} is computed by an earlier step"
+            key, key_fn = spec.lookup.key, None
+            if not render or key not in names or key in env.written:
+                why = f"key {key!r} is computed by an earlier step"
             else:
-                dtype = env.dtype(spec.key)
-                key_fn = _py_key(spec.norm, dtype)
-                why = (f"key {spec.key!r} is {dtype.simpleString()}, whose "
+                dtype = env.dtype(key)
+                key_fn = _py_key(spec.lookup.norm, dtype)
+                why = (f"key {key!r} is {dtype.simpleString()}, whose "
                        "Spark key normalization Python equality does not "
                        "reproduce")
             if key_fn is not None:
                 hidden = f"{_HIDDEN}{len(env.hidden)}"
                 env.hidden.append(T.StructField(hidden, spec.dtype))
-                self.lookups.append((names.index(spec.key), key_fn, spec))
+                self.lookups.append((names.index(key), key_fn, spec))
                 expr = F.col(hidden)
             else:
                 inexact[why] = None
-                expr = _map_expr(spec, _key_expr(spec, env))
+                expr = _map_expr(spec, env)
             env.set({spec.output: expr}, {spec.output: spec.dtype})
         if inexact:
             _report(i, cls, "; ".join(inexact) + "; the lookup stays a "
@@ -327,7 +268,7 @@ class _Program:
         hook = getattr(step, "column_exprs", None)
         updates = hook(env) if hook is not None else None
         if updates is None and not specs:
-            if cls in _SERVING_COMPILERS:
+            if declares:
                 setattr(step, SERVING_CACHE_ATTR, False)
             _report(i, cls, "a barrier step (no column hook for its "
                     "configuration); the select built so far is applied "
@@ -355,7 +296,7 @@ class _Program:
             for idx, key_fn, spec in self.lookups:
                 k = key_fn(vals[idx])
                 vals.append(spec.null if k is None
-                            else spec.table.get(k, spec.miss))
+                            else spec.table.get(k, spec.lookup.miss))
             out.append(vals)
         return out
 

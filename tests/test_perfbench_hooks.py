@@ -60,3 +60,22 @@ def test_online_workload_spans_and_compiled_ratio(spark, tmp_path,
     checked, failed, problems = wl.check()
     assert failed == 0, problems
     assert wl.request_jobs == 0
+
+
+def test_serving_compilers_are_the_lookup_declaring_operators():
+    """perfbench's compiled_steps_ratio counts the steps whose class is
+    in ``serving._SERVING_COMPILERS``; that set must be exactly the
+    package operators declaring lookups (a ``lookups()`` method), the
+    hook the serving compiler reads."""
+    from dataframe_pipeline_spark import serving
+    from dataframe_pipeline_spark.base import SparkDFPBase
+
+    def subclasses(cls):
+        for sub in cls.__subclasses__():
+            yield sub
+            yield from subclasses(sub)
+
+    declaring = {c.__name__ for c in subclasses(SparkDFPBase)
+                 if c.__module__.startswith("dataframe_pipeline_spark")
+                 and callable(getattr(c, "lookups", None))}
+    assert serving._SERVING_COMPILERS == declaring

@@ -11,6 +11,7 @@ from dataframe_pipeline_spark import (
     FrequencyEncoder,
     FunctionTransformer,
     Scaler,
+    base,
 )
 
 
@@ -167,7 +168,36 @@ def test_target_encoder_roundtrip(spark, tmp_path):
     a = sorted((r.id, round(r.code, 9)) for r in enc.transform(df).collect())
     b = sorted((r.id, round(r.code, 9)) for r in enc2.transform(df).collect())
     assert a == b
-    assert enc2.cards_ == enc.cards_      # broadcast gate state survives
+    tables = base.fitted_tables(enc2)     # reloaded in the held tier
+    assert tables and all(t.held for t in tables)
+
+
+def test_load_manifest_with_stale_gate_state(spark, tmp_path):
+    """Steps saved with the attributes of the former row-count broadcast
+    gate (CLE ``broadcast_max_rows``, TE ``cards_``, a class count after
+    the WrapTransformer LabelEncoder table) load and transform as the
+    in-memory steps do; the stale attributes are ignored."""
+    from dataframe_pipeline_spark import TargetEncoder, WrapTransformer
+
+    class LabelEncoder:  # recognized by WrapTransformer by class name
+        pass
+
+    train = _train(spark)
+    le = ComplementLabelEncoder(inputs=["cat"], outputs=["cat_id"])
+    te = TargetEncoder(inputs=["cat"], outputs=["cat_te"], target="x")
+    wrap = WrapTransformer(inputs=["cat"], outputs=["cat_le"],
+                           transformer=LabelEncoder())
+    pipe = DataframePipeline(steps=[le, te, wrap])
+    pipe.fit_transform(train)
+    want = sorted(pipe.transform(_test_frame(spark)).collect())
+    le.broadcast_max_rows = 10
+    te.cards_ = [3]
+    wrap._state["cat"] = (wrap._state["cat"][0], 3)
+    path = str(tmp_path / "stale")
+    pipe.save(path)
+    loaded = DataframePipeline.load(spark, path)
+    assert loaded.steps[0].broadcast_max_rows == 10
+    assert sorted(loaded.transform(_test_frame(spark)).collect()) == want
 
 
 def test_outlier_clipper_roundtrip(spark, tmp_path):

@@ -6,6 +6,8 @@ only show up as 100 TB slowdowns."""
 
 import pytest
 
+from lookup_cases import LOOKUP_OPERATORS, lookup_frame
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -36,43 +38,30 @@ def no_auto_broadcast(spark):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
-def test_label_encode_high_cardinality_is_not_broadcast(
-        spark, no_auto_broadcast):
-    """A fitted dictionary over the broadcast gate must NOT carry a
-    broadcast hint — forcing a multi-GB lookup into executor memory is
-    the 100 TB OOM; above the gate the plan is left to AQE."""
-    from dataframe_pipeline_spark.operators.label_encoder import (
-        ComplementLabelEncoder,
-    )
+@pytest.mark.parametrize("name", sorted(LOOKUP_OPERATORS))
+def test_lookup_join_broadcast_iff_table_held(
+        spark, no_auto_broadcast, monkeypatch, name):
+    """The one broadcast rule of fitted lookups: a table held on the
+    driver is hinted ``broadcast``; one over SERVING_MAX_ROWS,
+    checkpointed on the executors, carries no hint (forcing a multi-GB
+    lookup into executor memory is the 100 TB OOM) and is left to
+    AQE."""
+    from dataframe_pipeline_spark import base
 
-    df = spark.read.parquet(f"{SF}/customer.parquet")
-    enc = ComplementLabelEncoder(
-        inputs=["c_name"], outputs=["c_name_id"], broadcast_max_rows=10
-    ).fit(df)
-    p = _plan(enc.transform(df))
-    assert "BroadcastHashJoin" not in p
-    # and under the gate the explicit hint comes back
-    enc_small = ComplementLabelEncoder(
-        inputs=["c_mktsegment"], outputs=["c_seg_id"]).fit(df)
-    assert "BroadcastHashJoin" in _plan(enc_small.transform(df))
-
-
-def test_wrap_label_encode_high_cardinality_is_not_broadcast(
-        spark, no_auto_broadcast):
-    from dataframe_pipeline_spark.operators.wrap_transformer import (
-        WrapTransformer,
-    )
-
-    class _FakeLabelEncoder:  # recognized by class name
-        pass
-
-    _FakeLabelEncoder.__name__ = "LabelEncoder"
-    df = spark.read.parquet(f"{SF}/customer.parquet")
-    w = WrapTransformer(inputs=["c_name"], outputs=["c_name_id"],
-                        transformer=_FakeLabelEncoder())
-    w.BROADCAST_MAX_ROWS = 10
-    p = _plan(w.fit(df).transform(df))
-    assert "BroadcastHashJoin" not in p
+    df = lookup_frame(spark, 3)
+    held = LOOKUP_OPERATORS[name]().fit(df)
+    p = _plan(held.transform(df))
+    assert "BroadcastHashJoin" in p and "SortMergeJoin" not in p
+    monkeypatch.setattr(base, "SERVING_MAX_ROWS", 1)
+    large = LOOKUP_OPERATORS[name]().fit(df)
+    try:
+        out = large.transform(df)
+        optimized = out._jdf.queryExecution().optimizedPlan().toString()
+        assert "broadcast" not in optimized
+        assert "BroadcastHashJoin" not in _plan(out)
+    finally:
+        for table in base.fitted_tables(large):
+            table.release()
 
 
 def test_events_latest_is_hash_aggregate(spark, qs):

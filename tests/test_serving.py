@@ -535,3 +535,63 @@ def test_serving_fallbacks_logged_once(spark, caplog, monkeypatch):
     assert "step 2 (Imputer)" in msgs[2] and "barrier" in msgs[2]
     want = pipe.transform(spark.createDataFrame([rows[-1]], test.schema))
     _assert_rows_match(got, want.collect()[0])
+
+
+class LabelEncoder:  # sklearn stand-in, recognized by class name
+    pass
+
+
+#: the six served lookup classes, each keyed on a double ``d`` and a
+#: string ``s``
+_SERVED = {
+    "ComplementLabelEncoder": lambda: dfp.ComplementLabelEncoder(
+        inputs=["d", "s"], outputs=["d_o", "s_o"]),
+    "FrequencyEncoder": lambda: dfp.FrequencyEncoder(
+        inputs=["d", "s"], outputs=["d_o", "s_o"]),
+    "Aggregator": lambda: dfp.Aggregator(
+        inputs=["x", "x"], outputs=["d_o", "s_o"], groupby=["d", "s"],
+        func="mean"),
+    "TargetEncoder": lambda: dfp.TargetEncoder(
+        inputs=["d", "s"], outputs=["d_o", "s_o"], target="y"),
+    "WOEEncoder": lambda: dfp.WOEEncoder(
+        inputs=["d", "s"], outputs=["d_o", "s_o"], target="y"),
+    "WrapTransformer": lambda: dfp.WrapTransformer(
+        inputs=["d", "s"], outputs=["d_o", "s_o"],
+        transformer=LabelEncoder()),
+}
+
+
+@pytest.mark.parametrize("tier", ["held", "checkpointed"])
+@pytest.mark.parametrize("name", sorted(_SERVED))
+def test_serving_parity_float_and_null_keys(spark, monkeypatch, name, tier):
+    """Served rows equal batch transform for a double key holding NaN,
+    NULL, seen and unseen values and a string key holding NULL and
+    unseen values, with the table held (Python lookups) or checkpointed
+    (the batch join)."""
+    from dataframe_pipeline_spark import base
+
+    schema = "event_id long, d double, s string, x double, y int"
+    ds = [1.0, 2.0, float("nan"), None, 1.0, 2.0]
+    ss = ["a", "b", None, "a"]
+    train = spark.createDataFrame(
+        [(i, ds[i % 6], ss[i % 4], float(i), i % 2) for i in range(24)],
+        schema)
+    if tier == "checkpointed":
+        monkeypatch.setattr(base, "SERVING_MAX_ROWS", 1)
+    op = _SERVED[name]().fit(train)
+    try:
+        assert all(t.held == (tier == "held")
+                   for t in base.fitted_tables(op))
+        pipe = dfp.DataframePipeline(steps=[op])
+        rows = [(k, d, s, 1.0, 0) for k, (d, s) in enumerate(
+            (d, s) for d in (1.0, float("nan"), None, 9.5)
+            for s in ("a", None, "zz"))]
+        df = spark.createDataFrame(rows, schema)
+        _, batch = _batch_by_id(pipe, spark, rows, df.schema)
+        for got in serve_rows(pipe, spark, rows, df.schema):
+            _assert_rows_match(got, batch[got["event_id"]])
+        # held: compiled into Python lookups; checkpointed: batch join
+        assert bool(getattr(op, base.SERVING_CACHE_ATTR)) == (tier == "held")
+    finally:
+        for table in base.fitted_tables(op):
+            table.release()
