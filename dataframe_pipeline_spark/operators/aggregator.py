@@ -17,9 +17,9 @@ Spark-first design:
   above (at 100 TB a table over a high-cardinality key can be GBs).
   ``lookups()`` declares one join per group key and transform applies
   them with :func:`~dataframe_pipeline_spark.base.join_lookups`
-  (broadcast when held, AQE's choice when checkpointed); unseen keys
-  null out via the left join, matching the reference's pandas ``.map``
-  miss → NaN.
+  (a literal map when tiny, broadcast when held, AQE's choice when
+  checkpointed); unseen keys null out, as in a left join, matching
+  the reference's pandas ``.map`` miss → NaN.
 
 Aggregate functions: pandas-compatible names.  ``'std'``/``'var'`` are
 sample (ddof=1) like pandas; ``np.std`` is population like numpy.

@@ -9,12 +9,12 @@ Spark-first: fit is ``groupBy(value).count()`` (map-side partial
 aggregation, one shuffle on the value); normalization divides by the
 non-null total inside the same job.  The counts are a
 :class:`~dataframe_pipeline_spark.base.FittedTable`, declared by
-``lookups()`` (NaN-as-NULL key, unseen → the default) and joined back
+``lookups()`` (NaN-as-NULL key, unseen → the default) and applied
 by :func:`~dataframe_pipeline_spark.base.join_lookups`: held on the
-driver and broadcast when small, checkpointed on the executors when
-the column has more than ``SERVING_MAX_ROWS`` distinct values (at
-100 TB a counts table over e.g. a device id is far beyond driver size),
-where the join strategy is left to AQE.
+driver (a literal map when tiny, else a broadcast join), checkpointed
+on the executors when the column has more than ``SERVING_MAX_ROWS``
+distinct values (at 100 TB a counts table over e.g. a device id is far
+beyond driver size), where the join strategy is left to AQE.
 """
 
 from __future__ import annotations

@@ -17,12 +17,13 @@ would give.  The dictionary is held as a ``(value, id)``
 :class:`~dataframe_pipeline_spark.base.FittedTable`; ``lookups()``
 declares it keyed on the normalized value (``lookup_key`` norm
 ``"string"``) with the ``extra_category_`` id for a miss, and transform
-is :func:`~dataframe_pipeline_spark.base.join_lookups`, a broadcast
-left join.  When the distinct values exceed ``SERVING_MAX_ROWS``, the
-distinct set is checkpointed on the executors instead and ranked there
-by a window partitioned by column (cardinality ≪ rows, so not a scale
-bottleneck), and the ranked table is checkpointed in turn; its join
-carries no hint and AQE picks the strategy.
+is :func:`~dataframe_pipeline_spark.base.join_lookups` (a literal
+map when tiny, else a broadcast left join).  When the distinct values
+exceed ``SERVING_MAX_ROWS``, the distinct set is checkpointed on the
+executors instead and ranked there by a window partitioned by column
+(cardinality ≪ rows, so not a scale bottleneck), and the ranked table
+is checkpointed in turn; its join carries no hint and AQE picks the
+strategy.
 """
 
 from __future__ import annotations

@@ -8,9 +8,10 @@ literals or the strings ``'mean' | 'median' | 'most_frequent'``, computed
 **at transform time** over the *matched subset* (or the whole column when
 ``use_all_elements=True``).  NaN matches nothing and passes through.
 
-Spark-first: each statistic replacement triggers one small transform-time
-aggregate job (range dicts are tiny config, 2–5 entries); the rewrite is a
-nested
+Spark-first: the ``mean`` and ``median`` replacements of an input are
+computed at transform time by one small aggregate over all its entries,
+and each ``most_frequent`` by a grouped count of its own (range dicts are
+tiny config, 2–5 entries); the rewrite is a nested
 ``F.when`` chain built so that later dict entries wrap (and thus override)
 earlier ones — pure codegen.  ``most_frequent`` uses max-count with
 smallest-value tie-break (pandas ``value_counts().idxmax()`` order is
@@ -23,9 +24,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..base import SparkDFPBase, nan_to_null
-
-_STATS = ("mean", "median", "most_frequent")
-
 
 class RangeTransformer(SparkDFPBase):
     def __init__(self, inputs=None, outputs=None, dict=None, use_all_elements: bool = False):
@@ -46,34 +44,43 @@ class RangeTransformer(SparkDFPBase):
             cond = cond & (col >= F.lit(lower))
         return cond
 
-    def _stat_value(self, df: DataFrame, input: str, cond, stat: str):
-        v = nan_to_null(df, input)
-        tgt = v if self.use_all_elements else F.when(cond, v)
-        if stat == "mean":
-            return df.agg(F.mean(tgt)).collect()[0][0]
-        if stat == "median":
-            return df.agg(F.percentile(tgt, F.lit(0.5))).collect()[0][0]
-        # most_frequent: mode of the subset, ties → smallest value
-        sub = df.select(tgt.alias("v")).filter(F.col("v").isNotNull())
-        row = (
-            sub.groupBy("v").count().orderBy(F.col("count").desc(), F.col("v")).limit(1).collect()
-        )
-        return row[0]["v"] if row else None
+    def _replacements(self, df: DataFrame, col: Column, entries) -> list:
+        """The replacement of each ``(cond, v)`` entry: ``v``, or the
+        statistic it names over the entry's subset.  Every ``mean`` and
+        ``median`` comes from one aggregate; ``most_frequent`` is the
+        mode of the subset, ties → smallest value."""
+        tgts = [col if self.use_all_elements else F.when(cond, col)
+                for cond, _ in entries]
+        aggs = {f"__s{i}": (F.mean(t) if v == "mean"
+                            else F.percentile(t, F.lit(0.5)))
+                for i, (t, (_, v)) in enumerate(zip(tgts, entries))
+                if isinstance(v, str) and v in ("mean", "median")}
+        row = (df.agg(*[a.alias(n) for n, a in aggs.items()]).collect()[0]
+               if aggs else None)
+        out = []
+        for i, (t, (_, v)) in enumerate(zip(tgts, entries)):
+            if f"__s{i}" in aggs:
+                v = row[f"__s{i}"]
+            elif isinstance(v, str) and v == "most_frequent":
+                sub = df.select(t.alias("v")).filter(F.col("v").isNotNull())
+                top = (sub.groupBy("v").count()
+                       .orderBy(F.col("count").desc(), F.col("v"))
+                       .limit(1).collect())
+                v = top[0]["v"] if top else None
+            out.append(v)
+        return out
 
     def transform(self, df: DataFrame) -> DataFrame:
         if not self.dict:
             return df
         for input, output in zip(self.inputs, self.outputs):
             col = nan_to_null(df, input)
+            ranges = [(upper, lower, self._range_cond(col, upper, lower), v)
+                      for (upper, lower), v in self.dict.items()]
+            ranges = [r for r in ranges if r[2] is not None]
+            values = self._replacements(df, col, [r[2:] for r in ranges])
             expr = F.col(input)
-            for (upper, lower), v in self.dict.items():
-                cond = self._range_cond(col, upper, lower)
-                if cond is None:
-                    continue
-                if isinstance(v, str) and v in _STATS:
-                    newv = self._stat_value(df, input, cond, v)
-                else:
-                    newv = v
+            for (upper, lower, cond, _), newv in zip(ranges, values):
                 try:
                     self.values_dict[(input, upper, lower)] = float(newv)
                 except (TypeError, ValueError):

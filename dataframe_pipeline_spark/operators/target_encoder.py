@@ -13,9 +13,10 @@ computed from that fitted table, not from the training data.  Each
 input's codes are a :class:`~dataframe_pipeline_spark.base.FittedTable`
 declared by ``lookups()`` (raw key, miss → the global mean) and applied
 by :func:`~dataframe_pipeline_spark.base.join_lookups` — held on the
-driver and broadcast when small; at 100 TB a hundred-million-row
-category table is checkpointed and its join left to AQE.  Unseen
-categories and NULL get the global mean (sklearn's unseen behavior).
+driver (a literal map when tiny, else a broadcast join); at 100 TB a
+hundred-million-row category table is checkpointed and its join left
+to AQE.  Unseen categories and NULL get the global mean (sklearn's
+unseen behavior).
 
 HashingEncoder: ``bucket(c) = md5_int(c) % n_buckets`` — stateless
 (nothing to fit, nothing to ship), collision-accepting, map-only.

@@ -18,11 +18,11 @@ scalars).  Each input's table is a
 :class:`~dataframe_pipeline_spark.base.FittedTable` declared by
 ``lookups()`` (NaN-as-NULL key, unseen/NULL categories → 0.0, no
 evidence); transform is
-:func:`~dataframe_pipeline_spark.base.join_lookups`, a left join per
-column, broadcast when the table is held.  Same lookup discipline as
-TargetEncoder / FrequencyEncoder; the serving tier looks the held
-table up on the driver, so a WOE-containing pipeline keeps the
-job-free LocalRelation fold online.
+:func:`~dataframe_pipeline_spark.base.join_lookups` (a literal map
+when tiny, else a left join per column, broadcast when held).  Same
+lookup discipline as TargetEncoder / FrequencyEncoder; the serving
+tier looks the held table up on the driver, so a WOE-containing
+pipeline keeps the job-free LocalRelation fold online.
 
 Reference parity: the reference has no WOE surface; this extends the
 encoder family the same way TargetEncoder does (beyond-reference,

@@ -29,8 +29,9 @@ is distributed too.
 The LabelEncoder table is declared by ``lookups()`` (NaN-as-NULL key,
 matched null-safe so a NULL value gets the NULL class, unseen → NULL)
 and applied by :func:`~dataframe_pipeline_spark.base.join_lookups`:
-broadcast when the table is held on the driver, a plain join that AQE
-plans when a high-cardinality dictionary is checkpointed.
+a literal map when tiny, broadcast when the table is held on the
+driver, a plain join that AQE plans when a high-cardinality
+dictionary is checkpointed.
 """
 
 from __future__ import annotations

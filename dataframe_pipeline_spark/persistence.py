@@ -10,7 +10,8 @@ the learned state, score anywhere* — maps to:
   bytecode compiler / WrapTransformer surface does),
 * per-step **held lookup tables** (encoder dictionaries, grouped
   aggregates: :class:`~dataframe_pipeline_spark.base.FittedTable` of at
-  most ``SERVING_MAX_ROWS`` rows) → Arrow IPC bytes inside the manifest,
+  most ``SERVING_MAX_ROWS`` rows) → zstd-compressed Arrow IPC bytes
+  inside the manifest,
   so saving them runs no Spark job and loading them reads no other file,
 * every other fitted **DataFrame** (a lookup table too large to hold,
   checkpointed at fit; an index's cells) → a parquet directory, re-read
@@ -51,14 +52,16 @@ class _DFRef:
 
 
 class _Table:
-    """Placeholder for a FittedTable: its Arrow IPC stream when held,
-    else the _DFRef of its frame."""
+    """Placeholder for a FittedTable: its Arrow IPC stream when held
+    (zstd-compressed; the reader reads compressed and uncompressed
+    streams alike), else the _DFRef of its frame."""
 
     def __init__(self, arrow=None, ref: _DFRef | None = None):
         self.ipc = None
         if arrow is not None:
             sink = pa.BufferOutputStream()
-            with pa.ipc.new_stream(sink, arrow.schema) as w:
+            opts = pa.ipc.IpcWriteOptions(compression="zstd")
+            with pa.ipc.new_stream(sink, arrow.schema, options=opts) as w:
                 w.write_table(arrow)
             self.ipc = sink.getvalue().to_pybytes()
         self.ref = ref

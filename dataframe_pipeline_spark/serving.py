@@ -28,7 +28,10 @@ driver, and the plan's size does not grow with the dictionaries.
 Python lookups are used only where Python equality matches Spark's
 normalized key (strings, integral types, booleans, dates, and floats
 with NaN normalized); any other key type, or a key written by an
-earlier step, keeps a literal-map lookup inside the select.  A table
+earlier step, keeps a literal-map lookup inside the select.  That
+literal map is :func:`~dataframe_pipeline_spark.base.literal_lookup`,
+the one batch transform writes for a tiny held table, so batch and
+serving share one literal-map rule.  A table
 fit did not hold (over ``SERVING_MAX_ROWS`` rows, the driver-memory
 bound, so checkpointed on the executors) keeps the batch join, which
 launches jobs.  A step without a column hook (an
@@ -57,7 +60,7 @@ from pyspark.sql.pandas.types import from_arrow_type
 
 from .base import (EXTRA, GENERATION_ATTR, SERVING_CACHE_ATTR,
                    SERVING_MAX_ROWS, ColumnView, Lookup, is_floating,
-                   lookup_key)
+                   literal_lookup)
 
 log = logging.getLogger("dataframe_pipeline_spark")
 
@@ -138,21 +141,6 @@ def _py_key(norm: str, dtype: T.DataType):
     if isinstance(dtype, (T.StringType, T.IntegralType, T.BooleanType)):
         return lambda v: v
     return None
-
-
-def _map_expr(spec: _Compiled, view) -> "F.Column":
-    """The lookup as a literal map inside the select (inexact key types)."""
-    lk = spec.lookup
-    key = lookup_key(view, lk.key, lk.norm)
-    args = []
-    for k, v in spec.table.items():
-        args += [F.lit(float("nan") if k is _NAN else k), F.lit(v)]
-    looked = F.element_at(F.create_map(*args), key) if args else F.lit(None)
-    if lk.miss is not None:
-        looked = F.coalesce(looked, F.lit(lk.miss))
-    if spec.null != lk.miss:
-        looked = F.when(key.isNull(), F.lit(spec.null)).otherwise(looked)
-    return looked.cast(spec.dtype)
 
 
 # -- compile ---------------------------------------------------------------
@@ -257,11 +245,12 @@ class _Program:
                 hidden = f"{_HIDDEN}{len(env.hidden)}"
                 env.hidden.append(T.StructField(hidden, spec.dtype))
                 self.lookups.append((names.index(key), key_fn, spec))
-                expr = F.col(hidden)
+                env.set({spec.output: F.col(hidden)},
+                        {spec.output: spec.dtype})
             else:
                 inexact[why] = None
-                expr = _map_expr(spec, env)
-            env.set({spec.output: expr}, {spec.output: spec.dtype})
+                env.set({spec.output: literal_lookup(env, spec.lookup,
+                                                     spec.output)})
         if inexact:
             _report(i, cls, "; ".join(inexact) + "; the lookup stays a "
                     "literal map inside the select")

@@ -18,6 +18,17 @@ def spark():
     s.stop()
 
 
+@pytest.fixture()
+def no_auto_broadcast(spark):
+    """Planner-chosen broadcasts off, so any BroadcastHashJoin in the
+    plan can only come from an explicit operator hint — isolates what
+    the gate tests actually assert."""
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    yield
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
 #: job groups are never reused: the status tracker keeps past jobs
 _job_groups = itertools.count()
 

@@ -1,5 +1,7 @@
 """Golden-frame tests ported from /root/reference/dfpipeline/tests/test_agg.py."""
 import pandas as pd
+import pytest
+from lookup_cases import assert_lookup_rule, executed
 
 import dataframe_pipeline_spark as dfp
 from tests.conftest import assert_frames_equal
@@ -88,26 +90,36 @@ def test_sketch_aggregates_close_to_exact(spark):
         assert abs(av[k] - ev[k]) / ev[k] < 0.05, (k, av[k], ev[k])
 
 
-def test_fit_transform_broadcasts_held_lookup(spark):
-    """fit_transform over one frame joins the fitted lookup, held on the
-    driver, as a broadcast LocalRelation: no window, no shuffle of the
-    fact, no second scan of it; transform over a DIFFERENT frame gives
-    the same values, for windowable and group-collecting funcs alike."""
+def test_fit_transform_broadcasts_held_lookup(spark, no_auto_broadcast):
+    """fit_transform over one frame applies the fitted lookup, held on
+    the driver, with no window, no shuffle of the fact and no second
+    scan of it: the 10-supplier table is a literal map, and a broadcast
+    LocalRelation with ``INLINE_MAX_ROWS`` 0 (``assert_lookup_rule``
+    pins the three plans).  Transform over a DIFFERENT frame gives the
+    same values, for windowable and group-collecting funcs alike."""
+    from dataframe_pipeline_spark import base
     from dataframe_pipeline_spark.operators import Aggregator
 
     li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
     for func in ("mean", "median"):
-        agg = Aggregator(inputs=["l_extendedprice"], outputs=["m"],
-                         groupby=["l_suppkey"], func=func)
-        fused = agg.fit_transform(li)
-        plan = fused._jdf.queryExecution().executedPlan().toString()
-        assert "Window" not in plan
-        assert "hashpartitioning" not in plan     # the fact is not shuffled
-        assert "BroadcastHashJoin" in plan and "LocalTableScan" in plan
-        assert plan.count("FileScan") == 1
+        def agg():
+            return Aggregator(inputs=["l_extendedprice"], outputs=["m"],
+                              groupby=["l_suppkey"], func=func)
 
-        joined = agg.transform(li.select("*"))
-        cols = ("l_orderkey", "l_linenumber", "m")
-        a = sorted(map(tuple, fused.select(*cols).collect()))
-        b = sorted(map(tuple, joined.select(*cols).collect()))
-        assert a == b
+        assert_lookup_rule(spark, lambda: agg().fit_transform(li))
+        for limit in (base.INLINE_MAX_ROWS, 0):
+            with pytest.MonkeyPatch.context() as m:
+                m.setattr(base, "INLINE_MAX_ROWS", limit)
+                a1 = agg()
+                fused = a1.fit_transform(li)
+                joined = a1.transform(li.select("*"))
+            plan = executed(fused)
+            assert "Window" not in plan
+            assert "hashpartitioning" not in plan  # fact not shuffled
+            assert plan.count("FileScan") == 1
+            assert ("LocalTableScan" in plan) == (limit == 0)
+
+            cols = ("l_orderkey", "l_linenumber", "m")
+            a = sorted(map(tuple, fused.select(*cols).collect()))
+            b = sorted(map(tuple, joined.select(*cols).collect()))
+            assert a == b

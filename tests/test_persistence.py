@@ -200,6 +200,37 @@ def test_load_manifest_with_stale_gate_state(spark, tmp_path):
     assert sorted(loaded.transform(_test_frame(spark)).collect()) == want
 
 
+def test_load_uncompressed_manifest(spark, tmp_path, monkeypatch):
+    """Held tables are saved as zstd-compressed Arrow IPC; a manifest
+    whose tables are uncompressed (as saved before) loads to the same
+    tables and transforms as the in-memory pipeline does."""
+    import pyarrow as pa
+
+    pipe = DataframePipeline(steps=[
+        ComplementLabelEncoder(inputs=["cat"], outputs=["cat_id"]),
+        FrequencyEncoder(inputs=["cat"], outputs=["cat_freq"]),
+        Aggregator(inputs=["x"], outputs=["x_mean"], groupby=["grp"],
+                   func="mean"),
+    ])
+    pipe.fit_transform(_train(spark))
+    want = sorted(pipe.transform(_test_frame(spark)).collect())
+    pipe.save(str(tmp_path / "zstd"))
+    new_stream = pa.ipc.new_stream
+    with monkeypatch.context() as m:
+        m.setattr(pa.ipc, "new_stream",
+                  lambda sink, schema, options=None: new_stream(sink, schema))
+        pipe.save(str(tmp_path / "plain"))
+    manifests = [(tmp_path / d / "manifest.pkl").read_bytes()
+                 for d in ("zstd", "plain")]
+    assert manifests[0] != manifests[1]
+    tables = [t.arrow for t in base.fitted_tables(pipe.steps[0])]
+    for d in ("zstd", "plain"):
+        loaded = DataframePipeline.load(spark, str(tmp_path / d))
+        assert [t.arrow for t in base.fitted_tables(loaded.steps[0])] \
+            == tables
+        assert sorted(loaded.transform(_test_frame(spark)).collect()) == want
+
+
 def test_outlier_clipper_roundtrip(spark, tmp_path):
     from dataframe_pipeline_spark import OutlierClipper
     from dataframe_pipeline_spark.persistence import (load_operator,

@@ -6,7 +6,8 @@ only show up as 100 TB slowdowns."""
 
 import pytest
 
-from lookup_cases import LOOKUP_OPERATORS, lookup_frame
+from lookup_cases import (JOINED, LOOKUP_OPERATORS, assert_lookup_rule,
+                          lookup_frame)
 
 SF = "/root/testdata/sf0.001"
 
@@ -22,46 +23,27 @@ def qs():
     return e.queries()
 
 
-def test_label_encode_broadcasts_lookup(spark, qs):
-    p = _plan(qs["label_encode"](spark, SF))
-    assert "BroadcastHashJoin" in p
-
-
-@pytest.fixture()
-def no_auto_broadcast(spark):
-    """Planner-chosen broadcasts off, so any BroadcastHashJoin in the
-    plan can only come from an explicit operator hint — isolates what
-    the gate tests actually assert."""
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    yield
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+def test_label_encode_broadcasts_lookup(spark, no_auto_broadcast, qs):
+    """The registry's label encoding: its 6-row dictionary is a literal
+    map, a broadcast join with ``INLINE_MAX_ROWS`` 0, and a join with
+    no hint when checkpointed (``assert_lookup_rule``)."""
+    assert_lookup_rule(spark, lambda: qs["label_encode"](spark, SF))
 
 
 @pytest.mark.parametrize("name", sorted(LOOKUP_OPERATORS))
-def test_lookup_join_broadcast_iff_table_held(
-        spark, no_auto_broadcast, monkeypatch, name):
-    """The one broadcast rule of fitted lookups: a table held on the
-    driver is hinted ``broadcast``; one over SERVING_MAX_ROWS,
+def test_lookup_join_broadcast_iff_table_held(spark, no_auto_broadcast,
+                                              name):
+    """The one rule of fitted lookups: a held table of at most
+    ``INLINE_MAX_ROWS`` rows is a literal map, with no join; a larger
+    held table (here: the bound at 0), or CVTargetEncoder's table on a
+    key pair, is hinted ``broadcast``; one over SERVING_MAX_ROWS,
     checkpointed on the executors, carries no hint (forcing a multi-GB
     lookup into executor memory is the 100 TB OOM) and is left to
     AQE."""
-    from dataframe_pipeline_spark import base
-
     df = lookup_frame(spark, 3)
-    held = LOOKUP_OPERATORS[name]().fit(df)
-    p = _plan(held.transform(df))
-    assert "BroadcastHashJoin" in p and "SortMergeJoin" not in p
-    monkeypatch.setattr(base, "SERVING_MAX_ROWS", 1)
-    large = LOOKUP_OPERATORS[name]().fit(df)
-    try:
-        out = large.transform(df)
-        optimized = out._jdf.queryExecution().optimizedPlan().toString()
-        assert "broadcast" not in optimized
-        assert "BroadcastHashJoin" not in _plan(out)
-    finally:
-        for table in base.fitted_tables(large):
-            table.release()
+    assert_lookup_rule(
+        spark, lambda: LOOKUP_OPERATORS[name]().fit(df).transform(df),
+        inlined=name not in JOINED)
 
 
 def test_events_latest_is_hash_aggregate(spark, qs):

@@ -85,3 +85,29 @@ def test_range4(spark):
         "C2": [-1000.0, -1000.0, -1000.0, -1000.0, 15.75, None, 15.75, 15.75, 15.75, 1000.0],
         "C3": [1000.0, 1000.0, 1000.0, 15.75, 15.75, 15.75, None, 15.75, -1000.0, -1000.0],
     }))
+
+
+def test_range_statistics_share_one_aggregate(spark, count_jobs):
+    """Every mean/median entry of an input comes from one aggregate: two
+    median entries launch the jobs of one, with the values each entry
+    gets from an aggregate of its own."""
+    from pyspark.sql import functions as F
+
+    df = _df(spark)
+    one = {(20, 9): "median"}
+    two = {(20, 9): "median", (6, None): "median", (None, 20): "mean"}
+
+    def transform(entries):
+        r = dfp.RangeTransformer(inputs=["C2"], outputs=["C2_norm"],
+                                 dict=entries)
+        return r, count_jobs(r.transform, df)[1]
+
+    transform(one)                      # warm
+    _, jobs_one = transform(one)
+    r, jobs_two = transform(two)
+    assert jobs_two == jobs_one
+    v = F.when(F.isnan("C2"), None).otherwise(F.col("C2"))
+    want = df.agg(F.percentile(F.when((v <= 20) & (v >= 9), v), F.lit(0.5)),
+                  F.percentile(F.when(v <= 6, v), F.lit(0.5)),
+                  F.mean(F.when(v >= 20, v))).collect()[0]
+    assert [r.values_dict[("C2", *k)] for k in two] == list(want)

@@ -60,8 +60,11 @@ def test_woe_validation():
         WOEEncoder(inputs=["c"], outputs=["w"], target="y", alpha=-1)
 
 
-def test_woe_broadcast_lookup_plan(spark, labeled):
-    enc = WOEEncoder(inputs=["cat"], outputs=["w"], target="y").fit(labeled)
-    plan = (enc.transform(labeled)
-            ._jdf.queryExecution().executedPlan().toString())
-    assert "BroadcastHashJoin" in plan      # size-gated lookup join
+def test_woe_broadcast_lookup_plan(spark, no_auto_broadcast, labeled):
+    """The 3-row WOE table: a literal map, a broadcast join with
+    ``INLINE_MAX_ROWS`` 0, no hint when checkpointed."""
+    from lookup_cases import assert_lookup_rule
+
+    assert_lookup_rule(spark, lambda: WOEEncoder(
+        inputs=["cat"], outputs=["w"], target="y").fit(labeled)
+        .transform(labeled))
