@@ -28,37 +28,7 @@ try:
 except ImportError:
     TPCH_QUERIES = {}
 
-# Queries whose code or oracle changed this round enumerate FIRST, so
-# the driver's 50-query correctness sampler lands on the changed
-# surface instead of the freshly-verified tail.  The list is
-# SCRIPT-GENERATED from the round's git diff (VERDICT r11 #1: the
-# hand-maintained rotation missed the r11 q21 rewrite) — run
-# ``python scripts/gen_front_list.py`` after committing query changes;
-# it diffs against the last ``round N:`` boundary commit, computes the
-# changed top-level symbols, closes over references to a fixpoint, and
-# writes ``front_list_generated.py``.  _PINNED_FIRST stays manual for
-# rows a verdict names explicitly.  Coverage math: the r1–r11 union
-# has all 182 registry rows green on their latest check (stalest r7),
-# so rotation pressure is now only on changed rows.
-_PINNED_FIRST = [
-    # VERDICT r11 #1: plan rewritten in r11, last driver check r9 —
-    # verify FIRST regardless of this round's diff
-    "tpch_q21_waiting",
-]
-
-try:
-    from front_list_generated import CHANGED_QUERIES as _CHANGED
-except ImportError:
-    _CHANGED = []
-
-_NEVER_CHECKED_FIRST = _PINNED_FIRST + \
-    [q for q in _CHANGED if q not in _PINNED_FIRST]
-
-_MERGED = {**CORE_QUERIES, **EXT_QUERIES, **TPCH_QUERIES}
-_ALL = {
-    **{k: _MERGED[k] for k in _NEVER_CHECKED_FIRST if k in _MERGED},
-    **_MERGED,
-}
+_ALL = {**CORE_QUERIES, **EXT_QUERIES, **TPCH_QUERIES}
 
 
 def entry(spark: SparkSession) -> DataFrame:

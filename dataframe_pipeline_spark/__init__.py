@@ -9,7 +9,7 @@ Catalyst; Python only runs inside Arrow-batched pandas UDFs on genuinely
 non-relational paths.
 """
 
-from .base import PARM_ALL, SparkDFPBase, exact_percentiles
+from .base import PARM_ALL, SparkDFPBase
 from .operators import (
     Aggregator,
     ColumnSelector,
@@ -46,7 +46,6 @@ __version__ = "0.1.0"
 __all__ = [
     "PARM_ALL",
     "SparkDFPBase",
-    "exact_percentiles",
     "DataframePipeline",
     "get_spark",
     "save_pipeline",

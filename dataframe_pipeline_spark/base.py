@@ -611,159 +611,3 @@ def release_checkpoint(spark, ids) -> None:
                 rdd.unpersist(False)
     except Exception:
         pass
-
-
-def exact_percentiles(df: DataFrame, cols, qs_per_col,
-                      accuracy: int = 10000):
-    """Exact interpolated percentiles (the same values as Spark's
-    ``percentile`` / DuckDB's ``quantile_cont``) computed the
-    scale-safe way: approximate BRACKET then exact-rank REFINE.
-
-    ``percentile()`` is exact but materializes every value in executor
-    memory per partition (an OOM at 100 TB) and is ~16x slower than the
-    GK sketch on 6M rows (measured 18.5s vs 1.2s at sf1).  This helper:
-
-    1. ONE agg job: per column, the non-null count and a GK
-       ``approx_percentile`` at q +- 3/acc — the sketch's rank-error
-       guarantee (<= n/acc) makes the two returned DATA VALUES a
-       certain bracket around the target order statistics;
-    2. ONE agg job: per (column, q), the exact rank of the bracket's
-       low value (``count(v < lo)``), the tie counts at both bracket
-       endpoints, and a sorted collect of the strictly-interior values
-       — by the rank guarantee at most ~8n/acc rows (+0 ties risk:
-       endpoint ties are COUNTED, never collected), driver-bounded;
-    3. driver: index the order statistics out of
-       (below | lo-ties | interior | hi-ties) and interpolate with
-       Spark's own formula ``v_lo*(h-pos) + v_hi*(pos-l)``.
-
-    ``accuracy`` scales with n (``max(accuracy, ceil(n/8192))``) so the
-    collected window stays ~64k rows at any corpus size: pass 1 runs at
-    the caller's accuracy, and iff the observed count implies a window
-    over ~64k rows (n > 8192*accuracy — 82M rows at the default) it is
-    re-run once with the scaled accuracy before pass 2 is built, so the
-    rescale costs nothing at small n and bounds both executor agg state
-    and the driver collect at any n (ADVICE r7: the contract was
-    documented but unimplemented).  The GK sketch's memory is O(acc),
-    so the scaled pass trades bounded sketch growth (n/8192 doubles)
-    for the otherwise O(n) collect — the right side of the trade at
-    every scale.  If the bracket guarantee is ever violated (defensive;
-    not observed), the affected column falls back to exact
-    ``percentile()``.
-
-    cols: list of Column expressions (NaN already normalized to NULL);
-    qs_per_col: list of [q, ...] per column.  Returns list of
-    [value|None, ...] aligned with the inputs; None for all-NULL
-    columns (matching ``percentile``'s NULL).
-    """
-    import math
-
-    cols = list(cols)
-    qs_per_col = [list(qs) for qs in qs_per_col]
-
-    # pass 1: counts + bracket values
-    def _pass1(acc):
-        aggs = [F.count(c).alias(f"__n{i}") for i, c in enumerate(cols)]
-        for i, (c, qs) in enumerate(zip(cols, qs_per_col)):
-            bq = []
-            for q in qs:
-                bq += [max(0.0, q - 3.0 / acc), min(1.0, q + 3.0 / acc)]
-            aggs.append(F.percentile_approx(
-                c, F.array(*[F.lit(q) for q in bq]), F.lit(acc))
-                .alias(f"__b{i}"))
-        return df.agg(*aggs).collect()[0]
-
-    acc0 = int(accuracy)
-    row1 = _pass1(acc0)
-    n_max = max((int(row1[f"__n{i}"]) for i in range(len(cols))),
-                default=0)
-    if n_max > 8192 * acc0:
-        # pass-2's interior gather is <= ~8n/acc values per (col, q);
-        # rescale the sketch so that window stays ~64k at any n
-        acc0 = -(-n_max // 8192)
-        row1 = _pass1(acc0)
-
-    # pass 2: exact ranks + endpoint tie counts + interior gather
-    aggs2, meta = [], []
-    for i, (c, qs) in enumerate(zip(cols, qs_per_col)):
-        n = int(row1[f"__n{i}"])
-        brackets = row1[f"__b{i}"]
-        for j, q in enumerate(qs):
-            if n == 0:
-                meta.append((i, j, n, None, None, None))
-                continue
-            lo = float(brackets[2 * j])
-            hi = float(brackets[2 * j + 1])
-            k = len(aggs2)
-            aggs2 += [
-                F.sum((c < F.lit(lo)).cast("long")).alias(f"__lt{k}"),
-                F.sum((c == F.lit(lo)).cast("long")).alias(f"__el{k}"),
-                F.sum((c == F.lit(hi)).cast("long")).alias(f"__eh{k}"),
-                F.sort_array(F.collect_list(
-                    F.when((c > F.lit(lo)) & (c < F.lit(hi)), c)))
-                .alias(f"__mid{k}"),
-            ]
-            meta.append((i, j, n, lo, hi, k))
-    row2 = df.agg(*aggs2).collect()[0] if aggs2 else None
-
-    out = [[None] * len(qs) for qs in qs_per_col]
-    fallback_cols = set()
-    for (i, j, n, lo, hi, k) in meta:
-        if n == 0:
-            continue
-        lt = int(row2[f"__lt{k}"] or 0)
-        el = int(row2[f"__el{k}"] or 0)
-        eh = int(row2[f"__eh{k}"] or 0)
-        mid = list(row2[f"__mid{k}"])
-        q = qs_per_col[i][j]
-        pos = (n - 1) * q
-        l_idx, h_idx = int(math.floor(pos)), int(math.ceil(pos))
-
-        def stat(idx):
-            kk = idx - lt
-            if kk < 0:
-                raise IndexError
-            if lo == hi:
-                # degenerate bracket (both approx points returned the
-                # same data value): el and eh counted the SAME rows, so
-                # only ranks [lt, lt+el) are covered — anything beyond
-                # must fall back, NOT silently map into the eh block
-                if kk < el:
-                    return lo
-                raise IndexError
-            if kk < el:
-                return lo
-            kk -= el
-            if kk < len(mid):
-                return mid[kk]
-            kk -= len(mid)
-            if kk < eh:
-                return hi
-            raise IndexError
-
-        try:
-            v_l = float(stat(l_idx))
-            if l_idx == h_idx:
-                out[i][j] = v_l
-            else:
-                v_h = float(stat(h_idx))
-                # Spark's Percentile short-circuits when both ranks
-                # fall on the same DISTINCT value (its counts-map
-                # lerp would otherwise be v*(h-p) + v*(p-l), which is
-                # not bit-equal to v) — replicate exactly
-                if v_h == v_l:
-                    out[i][j] = v_l
-                else:
-                    out[i][j] = v_l * (h_idx - pos) + v_h * (pos - l_idx)
-        except IndexError:
-            fallback_cols.add(i)
-
-    if fallback_cols:
-        aggs3 = [F.percentile(cols[i],
-                              F.array(*[F.lit(q) for q in qs_per_col[i]]))
-                 .alias(f"__f{i}") for i in sorted(fallback_cols)]
-        row3 = df.agg(*aggs3).collect()[0]
-        for i in sorted(fallback_cols):
-            vals = row3[f"__f{i}"]
-            out[i] = ([None] * len(qs_per_col[i]) if vals is None
-                      else [None if v is None else float(v) for v in vals])
-    return out

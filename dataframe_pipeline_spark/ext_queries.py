@@ -3169,8 +3169,8 @@ WHERE NOT ((('0x' || substr(md5(o_custkey::VARCHAR), 1, 8))::BIGINT)
 def q_quantile_bin(spark, sf_dir):
     """Equal-frequency quartile binning of order value — learned
     boundaries (exact interpolated percentiles), codegen assignment.
-    Fit (two aggregate jobs: GK bracket + exact-rank refine) runs on
-    EVERY call (VERDICT r12 #1: no cross-run fit memo)."""
+    Fit (one ``percentile`` aggregate) runs on EVERY call (VERDICT r12
+    #1: no cross-run fit memo)."""
     from .operators import QuantileBinner
 
     od = _t(spark, sf_dir, "orders")
@@ -4617,18 +4617,19 @@ def q_curriculum_buckets(spark, sf_dir):
     """Perplexity-bucketed curriculum assignment (r7): score every
     document under the corpus bigram LM (text.NgramScorer — the
     perplexity proxy), then quartile-bin the scores with EXACT
-    interpolated boundaries (operators.QuantileBinner on the
-    bracket-and-refine percentile tier) — the prep step for
-    easy-to-hard curriculum ordering / difficulty-stratified sampling
-    of training data.  One composed lazy plan: LM fit (two keyed count
-    shuffles) → score (bigram explode + broadcast count joins) →
-    bin-boundary fit (two bounded agg jobs) → map-only bin assignment.
+    interpolated boundaries (operators.QuantileBinner, Spark's exact
+    ``percentile``) — the prep step for easy-to-hard curriculum
+    ordering / difficulty-stratified sampling of training data.  One
+    composed lazy plan: LM fit (two keyed count shuffles) → score
+    (bigram explode + broadcast count joins) → bin-boundary fit (one
+    percentile aggregate) → map-only bin assignment.
 
     The scored frame is localCheckpoint-ed before the binner: its plan
     (bigram explode + count joins + re-agg) is the expensive part, and
-    without the cut it would be recomputed THREE times — once per
-    exact_percentiles agg job plus once for the final output (VERDICT
-    r7 #2 measured the 3x at sf1: 6.97s vs text_lm_score's 3.14s).
+    without the cut it would be recomputed twice — once for the
+    boundary aggregate and once for the final output (VERDICT r7 #2
+    measured the cost at sf1, when the fit took two aggregates: 6.97s
+    vs text_lm_score's 3.14s).
     The checkpointed state is 2 narrow columns per doc — trivially
     executor-resident at any corpus scale."""
     from .operators.quantile_binner import QuantileBinner

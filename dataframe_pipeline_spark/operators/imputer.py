@@ -13,9 +13,12 @@ Parity notes:
 - ``fillna`` replaces both NaN and None → fill with ``coalesce`` over the
   NULL-normalized column.
 
-The per-transform aggregate is one combined ``df.agg`` over all inputs —
-a single extra scan; at scale this is the price of the reference's
-per-batch semantics (a fitted variant would hoist it to fit).
+The per-transform statistics are one ``df.agg`` over all inputs (``mean``
+or exact ``percentile(c, 0.5)``), run while the plan is built; at scale
+this is the price of the reference's per-batch semantics.
+``percentile`` holds each partition's values in executor memory, so a
+median fill over many millions of rows is slow (SCALE.md §Round 7), but
+it is exact.
 """
 
 from __future__ import annotations
@@ -48,24 +51,13 @@ class Imputer(SparkDFPBase):
         return self._fill_exprs(view, [self.val] * len(self.inputs))
 
     def transform(self, df: DataFrame) -> DataFrame:
-        self.values = []
-        if self.strategy == "mean":
-            row = df.agg(
-                *[F.mean(nan_to_null(df, c)).alias(f"v{i}")
-                  for i, c in enumerate(self.inputs)]
-            ).collect()[0]
-            fills = [row[f"v{i}"] for i in range(len(self.inputs))]
-        elif self.strategy == "median":
-            # exact interpolated median via the bracket-and-refine
-            # helper: same values as percentile(c, 0.5), but bounded
-            # executor memory and ~4x faster (base.exact_percentiles)
-            from ..base import exact_percentiles
-
-            res = exact_percentiles(
-                df, [nan_to_null(df, c) for c in self.inputs],
-                [[0.5]] * len(self.inputs))
-            fills = [r[0] for r in res]
-        else:
+        if self.strategy is None:
             fills = [self.val] * len(self.inputs)
+        else:
+            stat = (F.mean if self.strategy == "mean"
+                    else lambda v: F.percentile(v, F.lit(0.5)))
+            row = df.agg(*[stat(nan_to_null(df, c)).alias(f"v{i}")
+                           for i, c in enumerate(self.inputs)]).collect()[0]
+            fills = list(row)
         self.values = fills
         return df.withColumns(self._fill_exprs(ColumnView(df), fills))

@@ -10,10 +10,12 @@ bounds, where the bounds come from either
 
 Spark-first, same fit discipline as Scaler: ONE ``df.agg`` computes
 every bound for every column in a single scan.  ``exact=True`` uses
-``percentile`` (full sort-based, needed for engine-parity oracles);
-the default ``exact=False`` uses ``approx_percentile`` (Greenwald-
-Khanna sketch, partial-aggregatable, bounded memory — the only sane
-choice at 100 TB; accuracy set by ``accuracy``).  Transform is pure
+``percentile`` (exact interpolation, needed for engine-parity oracles;
+it holds each partition's values in executor memory, so it is slow
+over many millions of rows — SCALE.md §Round 7); the default
+``exact=False`` uses ``approx_percentile`` (Greenwald-Khanna sketch,
+partial-aggregatable, bounded memory — the only sane choice at 100 TB;
+``accuracy`` feeds only this sketch).  Transform is pure
 Column arithmetic (``least``/``greatest`` or a filter) folded into
 whole-stage codegen — no second pass, no UDF.
 
@@ -66,23 +68,10 @@ class OutlierClipper(SparkDFPBase):
         qs = ((self.lo_q, self.hi_q) if self.strategy == "quantile"
               else (0.25, 0.75))
         vcols = [nan_to_null(df, c) for c in self.inputs]
-        if self.exact:
-            # exact tier via bracket-and-refine (base.exact_percentiles):
-            # identical values to percentile(), bounded executor memory,
-            # ~4x faster at sf1 (18.5s -> 5s on lineitem)
-            from ..base import exact_percentiles
-
-            pairs = exact_percentiles(df, vcols,
-                                      [list(qs)] * len(self.inputs),
-                                      accuracy=self.accuracy)
-        else:
-            aggs = [self._pctl_pair(v, qs[0], qs[1]).alias(f"p{i}")
-                    for i, v in enumerate(vcols)]
-            row = df.agg(*aggs).collect()[0]
-            pairs = [row[f"p{i}"] for i in range(len(self.inputs))]
+        row = df.agg(*[self._pctl_pair(v, qs[0], qs[1]).alias(f"p{i}")
+                       for i, v in enumerate(vcols)]).collect()[0]
         self.bounds_ = []
-        for i in range(len(self.inputs)):
-            pair = pairs[i]
+        for pair in row:
             a = float(pair[0]) if pair is not None and pair[0] is not None \
                 else None
             b = float(pair[1]) if pair is not None and pair[1] is not None \

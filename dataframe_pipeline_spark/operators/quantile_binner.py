@@ -13,11 +13,13 @@ boundary fall in the lower bin, NULL/NaN propagates as NULL.  Duplicate
 boundaries (heavy-tailed data) collapse naturally: an empty bin is
 simply never assigned.
 
-Spark-first / 100 TB notes: fit is ONE ``df.agg`` over all inputs —
-a single scan returning ``n_inputs × (n_bins-1)`` doubles to the
-driver; exact percentile state is bounded by column cardinality and at
-extreme scale the ``percentile_approx`` sketch tier (Aggregator's
-``approx_median`` pattern, aggregator.py:58) is the swap-in.  Transform
+Spark-first / 100 TB notes: fit is ONE ``df.agg`` of
+``percentile(v, array(qs))`` over all inputs — a single scan returning
+``n_inputs × (n_bins-1)`` doubles to the driver.  Exact percentile
+state is a value-count map per partition, so it grows with the
+column's cardinality and is slow over many millions of rows (SCALE.md
+§Round 7); at extreme scale the ``percentile_approx`` sketch tier
+(Aggregator's ``approx_median`` pattern) is the swap-in.  Transform
 is a codegen comparison chain — map-only, no shuffle, no UDF.
 """
 
@@ -39,19 +41,12 @@ class QuantileBinner(SparkDFPBase):
         self.boundaries_ = []  # per input: list of n_bins-1 floats
 
     def fit(self, df: DataFrame, **params):
-        # exact interpolated boundaries via bracket-and-refine
-        # (base.exact_percentiles): identical values to percentile(),
-        # bounded executor memory, ~4x faster on a 6M-row fit
-        from ..base import exact_percentiles
-
-        qs = [i / self.n_bins for i in range(1, self.n_bins)]
-        res = exact_percentiles(
-            df, [nan_to_null(df, c) for c in self.inputs],
-            [qs] * len(self.inputs))
-        self.boundaries_ = [
-            [] if any(v is None for v in r) else [float(v) for v in r]
-            for r in res
-        ]
+        qs = F.array(*[F.lit(i / self.n_bins) for i in range(1, self.n_bins)])
+        row = df.agg(*[F.percentile(nan_to_null(df, c), qs).alias(f"b{i}")
+                       for i, c in enumerate(self.inputs)]).collect()[0]
+        # an all-NULL column's percentile is NULL: no boundaries
+        self.boundaries_ = [[] if r is None else [float(v) for v in r]
+                            for r in row]
         return self
 
     def transform(self, df: DataFrame) -> DataFrame:

@@ -12,8 +12,11 @@ Parity notes (what the sklearn scalers actually compute):
 - robust:    (x - median) / IQR with interpolated quartiles (sklearn
   RobustScaler defaults: centering on the median, scaling by
   Q3 - Q1); zero IQR → divisor 1.  Fit uses exact ``percentile``
-  (sort-based) for sklearn/oracle parity — at 100 TB swap in the
-  bounded-memory ``approx_percentile`` sketch as OutlierClipper does.
+  for sklearn/oracle parity; it holds each partition's values in
+  executor memory, so over many millions of rows it is slow (SCALE.md
+  §Round 7) and ``approx=True`` (the bounded-memory
+  ``percentile_approx`` sketch, rank error set by ``accuracy``) is the
+  large-input path.
 - NaN is ignored when fitting and propagates through transform (our
   arithmetic over NULL-normalized values does the same).
 
@@ -35,9 +38,10 @@ class Scaler(SparkDFPBase):
                  approx: bool = False, accuracy: int = 10000):
         """``approx`` (robust strategy only): fit the quartiles with the
         bounded-memory ``percentile_approx`` sketch instead of the exact
-        sort-based ``percentile`` — the 100 TB path.  Rank error is at
-        most n/``accuracy`` per quantile (Greenwald-Khanna guarantee);
-        sklearn parity keeps the exact default."""
+        ``percentile`` — the 100 TB path.  ``accuracy`` feeds only that
+        sketch: rank error is at most n/``accuracy`` per quantile
+        (Greenwald-Khanna guarantee); sklearn parity keeps the exact
+        default."""
         self.inputs = list(inputs or [])
         self.outputs = list(outputs or [])
         self.strategy = strategy
@@ -50,25 +54,6 @@ class Scaler(SparkDFPBase):
 
     def fit(self, df: DataFrame, **params):
         self.offsets, self.scales = [], []
-        if self.strategy == "robust" and not self.approx:
-            # exact tier via bracket-and-refine (base.exact_percentiles):
-            # identical values to percentile(), bounded executor memory,
-            # ~4x faster at sf1 — the approx tier below stays the
-            # single-sketch GK aggregate
-            from ..base import exact_percentiles
-
-            res = exact_percentiles(
-                df, [nan_to_null(df, c) for c in self.inputs],
-                [[0.25, 0.5, 0.75]] * len(self.inputs),
-                accuracy=self.accuracy)
-            for qs in res:
-                md = qs[1]
-                iqr = (qs[2] - qs[0]) if (qs[0] is not None
-                                          and qs[2] is not None) else None
-                scale = 1.0 / iqr if iqr not in (None, 0, 0.0) else 1.0
-                self.offsets.append(md)
-                self.scales.append(scale)
-            return self
         aggs = []
         for i, c in enumerate(self.inputs):
             v = nan_to_null(df, c)
@@ -82,8 +67,9 @@ class Scaler(SparkDFPBase):
                 # percentile aggregates each building its own — 3x the
                 # dominant fit cost at scale (measured on 6M rows)
                 qarr = F.array(F.lit(0.25), F.lit(0.5), F.lit(0.75))
-                aggs += [F.percentile_approx(v, qarr, F.lit(self.accuracy))
-                         .alias(f"qs{i}")]
+                q = (F.percentile_approx(v, qarr, F.lit(self.accuracy))
+                     if self.approx else F.percentile(v, qarr))
+                aggs += [q.alias(f"qs{i}")]
             else:  # min
                 aggs += [F.min(v).alias(f"lo{i}")]
         row = df.agg(*aggs).collect()[0]

@@ -411,6 +411,48 @@ def test_fitted_state_is_a_snapshot(spark, tmp_path, change):
     assert served == batch
 
 
+def test_transform_time_statistics_follow_the_scored_batch(spark,
+                                                           tmp_path):
+    """Imputer mean/median and RangeTransformer statistics are per batch
+    by design (the reference computes them at transform time): a
+    pipeline fitted on A, saved and loaded fills B with B's own
+    statistics, not A's."""
+    from pyspark.sql import functions as F
+
+    from dataframe_pipeline_spark import Imputer, RangeTransformer
+
+    def frame(xs):
+        return spark.createDataFrame([(i, x) for i, x in enumerate(xs)],
+                                     "i long, x double")
+
+    a = frame([1.0, 2.0, None, 3.0, 50.0])
+    b = frame([10.0, None, 20.0, 40.0, 200.0, 300.0, float("nan")])
+    pipe = DataframePipeline(steps=[
+        Imputer(inputs=["x"], outputs=["x_mean"], strategy="mean"),
+        Imputer(inputs=["x"], outputs=["x_median"], strategy="median"),
+        RangeTransformer(inputs=["x"], outputs=["x_range"],
+                         dict={(100.0, None): "median",
+                               (None, 100.0): "mean"}),
+    ])
+    pipe.fit_transform(a)
+    path = str(tmp_path / "model")
+    pipe.save(path)
+    out = {r.i: r for r in
+           DataframePipeline.load(spark, path).transform(b).collect()}
+
+    v = F.when(F.isnan("x"), None).otherwise(F.col("x"))
+    want = b.agg(F.mean(v), F.percentile(v, F.lit(0.5)),
+                 F.percentile(F.when(v <= 100.0, v), F.lit(0.5)),
+                 F.mean(F.when(v >= 100.0, v))).collect()[0]
+    mean, median, low_median, high_mean = want
+    assert (mean, median) != tuple(a.agg(F.mean(v), F.percentile(
+        v, F.lit(0.5))).collect()[0])
+    assert out[1].x_mean == mean and out[6].x_mean == mean
+    assert out[1].x_median == median and out[6].x_median == median
+    assert out[0].x_range == low_median and out[3].x_range == low_median
+    assert out[4].x_range == high_mean and out[5].x_range == high_mean
+
+
 def test_held_save_load_and_first_serve_launch_no_jobs(
         spark, tmp_path, count_jobs):
     """With every fitted table held, save and load launch no Spark job,

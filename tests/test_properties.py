@@ -308,23 +308,21 @@ def test_local_rows_df_matches_createdataframe_property(spark, rows):
                              allow_nan=False),
                    min_size=1, max_size=40),
        qs=st.lists(st.floats(min_value=0.0, max_value=1.0),
-                   min_size=1, max_size=4))
+                   min_size=2, max_size=2, unique=True),
+       n_bins=st.integers(min_value=2, max_value=6))
 @SET
-def test_exact_percentiles_matches_percentile(spark, xs, qs):
-    """base.exact_percentiles must equal Spark's exact percentile()
-    bit-for-bit on arbitrary data and quantile points — including
-    duplicate-heavy lists and q on the 0/1 boundaries."""
-    from pyspark.sql import functions as F
-
-    from dataframe_pipeline_spark.base import exact_percentiles
+def test_exact_percentile_operators_match_percentile(spark, xs, qs, n_bins):
+    """Imputer(median), Scaler(robust), OutlierClipper(exact=True) and
+    QuantileBinner must learn exactly Spark's percentile() on arbitrary
+    data and quantile points — including duplicate-heavy lists and q on
+    the 0/1 boundaries."""
+    from percentile_cases import assert_operators_match_percentile
 
     # duplicate-heavy variant: repeat the first value many times
     data = xs + [xs[0]] * 15
     sdf = spark.createDataFrame(pd.DataFrame({"x": data}))
-    got = exact_percentiles(sdf, [F.col("x")], [list(qs)])[0]
-    want = [float(v) for v in sdf.agg(F.percentile(
-        "x", F.array(*[F.lit(q) for q in qs]))).collect()[0][0]]
-    assert got == want
+    assert_operators_match_percentile(sdf, ["x"], clip_qs=[sorted(qs)],
+                                      n_bins=n_bins)
 
 
 @given(c=st.integers(min_value=0, max_value=10**13),
