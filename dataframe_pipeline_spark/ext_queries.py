@@ -17,7 +17,6 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -562,16 +561,10 @@ def q_cluster_embeddings(spark, sf_dir):
     discovery, and stratified subsampling of training data.
 
     The k-means fit (driver-resident centroid literals — nothing to
-    cache-evict) is memoized per (session, sf_dir): a cluster profile
-    is refreshed many times against one fitted quantizer in deployment,
-    so the timed query is the map-only assignment + ONE hash aggregate,
-    not a refit per call (VERDICT r7 #4: 7.65x at sf1 was the refit)."""
+    release) runs on every call: fitted state lives on the fitted
+    object, never in module state between calls."""
     emb = _t(spark, sf_dir, "embeddings")
-    key = (spark.sparkContext.applicationId, sf_dir, "semclust8")
-    d = _PQ_FIT_MEMO.get(key)
-    if d is None:
-        d = dd.SemanticDeduplicator(n_clusters=8).fit(emb)
-        _memo_put(_PQ_FIT_MEMO, key, d)
+    d = dd.SemanticDeduplicator(n_clusters=8).fit(emb)
     # cohesion: sum the 6-dp csims in exact DECIMAL (reduction-order
     # independent), divide once in double — engine-portable.
     # assign_stats is the Arrow-vectorized assignment twin (one int64
@@ -771,71 +764,34 @@ LIMIT 10
 """
 
 
-_IVF_FIT_MEMO: dict = {}
-
-
-def _memo_put(memo: dict, key: tuple, value) -> None:
-    """Insert a fitted-state memo entry, EVICTING any previous entry of
-    the same family (same session + same trailing tag, different
-    sf_dir) and unpersisting the frames it pinned (``_assigned`` /
-    ``_codes`` / ``_table``).  Without eviction a long session benching
-    several sf_dirs accumulates executor storage unboundedly (ADVICE
-    r7): each fitted index pins a persisted DataFrame for the process
-    lifetime.  One live entry per family is the deployment shape —
-    an index serves one corpus at a time."""
-    stale = [k for k in memo
-             if k != key and k[0] == key[0] and k[2:] == key[2:]]
-    for k in stale:
-        old = memo.pop(k)
-        frames = [getattr(old, a, None)
-                  for a in ("_assigned", "_codes", "_table")]
-        if isinstance(old, DataFrame):   # memoized frame (e.g. pr_adj)
-            frames.append(old)
-        for frame in frames:
-            if frame is not None:
-                try:
-                    frame.unpersist()
-                except Exception:
-                    pass
-    memo[key] = value
-
-
 def _ivf_fitted(spark, sf_dir) -> "sim.IVFIndex":
-    """ONE fitted IVFIndex(k=5, n_lists=8, n_probe=2) per (session,
-    sf_dir), shared by the three queries that fit identical parameters
-    on the full corpus — the fit-once-search-many deployment shape
-    (same rationale and keying as the PQ family's ``_pq_fitted``)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    idx = _IVF_FIT_MEMO.get(key)
-    if idx is None:
-        emb = _t(spark, sf_dir, "embeddings")
-        idx = sim.IVFIndex(k=5, n_lists=8, n_probe=2).fit(emb)
-        _memo_put(_IVF_FIT_MEMO, key, idx)
-    return idx
+    """A freshly fitted IVFIndex(k=5, n_lists=8, n_probe=2) over the
+    full corpus — the parameters every IVF query shares.  Fit is
+    deterministic (id-ordered bounded sample), so every call yields
+    bit-identical centroids.  The index keeps its fit-time persisted
+    cell table, as any ``IVFIndex.fit`` caller's does."""
+    emb = _t(spark, sf_dir, "embeddings")
+    return sim.IVFIndex(k=5, n_lists=8, n_probe=2).fit(emb)
 
 
 def _ivf_reloaded(spark, sf_dir) -> "sim.IVFIndex":
-    """The memoized IVF index in its PARQUET-BACKED form: `_ivf_fitted`
-    → write (``__list``-partitioned cell table) → read, memo stores the
-    RELOADED index (VERDICT r8 #3 — the exact pattern `_ivfpq_fitted`
-    uses).  The fit-path memo's ``_assigned`` is a ``.persist()`` whose
-    cell join cannot partition-prune; the reloaded layout's ``__list``
-    is a real partition column, so `search_batch`'s cell equi-join
-    prunes to the probed cells (dynamic partition pruning against the
-    tiny exploded query side)."""
+    """The IVF index in its PARQUET-BACKED form: `_ivf_fitted` → write
+    (``__list``-partitioned cell table) → release the fit-time persist
+    → read (the pattern `_ivfpq_fitted` uses).  The fitted index's
+    ``_assigned`` is a ``.persist()`` whose cell join cannot
+    partition-prune; the reloaded layout's ``__list`` is a real
+    partition column, so `search_batch`'s cell equi-join prunes to the
+    probed cells (dynamic partition pruning against the tiny exploded
+    query side)."""
     import hashlib
     import os
 
-    key = (spark.sparkContext.applicationId, sf_dir, "ivf_reloaded")
-    idx = _IVF_FIT_MEMO.get(key)
-    if idx is None:
-        fitted = _ivf_fitted(spark, sf_dir)
-        tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        path = os.path.join(_ivf_scratch_dir(), f"ivf_idx_{tag}")
-        fitted.write(path)
-        idx = sim.IVFIndex.read(spark, path)
-        _memo_put(_IVF_FIT_MEMO, key, idx)
-    return idx
+    fitted = _ivf_fitted(spark, sf_dir)
+    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    path = os.path.join(_ivf_scratch_dir(), f"ivf_idx_{tag}")
+    fitted.write(path)
+    fitted._assigned.unpersist()
+    return sim.IVFIndex.read(spark, path)
 
 
 def q_sim_ann_ivf(spark, sf_dir):
@@ -939,10 +895,11 @@ def q_sim_ann_ivf_persisted(spark, sf_dir):
     in-session index, so it shares sim_ann_ivf's generated oracle.  The
     reloaded probe carries a ``__list IN (...)`` partition filter — at
     scale it scans n_probe/n_lists of the data (plan-asserted in
-    test_plans.py).  Shares the memoized fit (_ivf_fitted)."""
+    test_plans.py).  The fit-time persist is released once written."""
     idx = _ivf_fitted(spark, sf_dir)
     path = _ivf_scratch_dir()
     idx.write(path)
+    idx._assigned.unpersist()
     return sim.IVFIndex.read(spark, path).search(query_id=0)
 
 
@@ -1126,24 +1083,14 @@ def _sql_events_ann_annotate(sf_dir: str = "/root/testdata/sf0.01") -> str | Non
     return _sql_sim_ann_ivf_batch(sf_dir, ranked=True, qid_lo=5, qid_hi=10)
 
 
-_PQ_FIT_MEMO: dict = {}
-
-
 def _pq_fitted(spark, sf_dir) -> "sim.PQIndex":
-    """ONE fitted PQIndex per (session, sf_dir), shared by the three
-    PQ-family queries: an index is fit once and searched many times in
-    any real deployment, so benching three cold fits of the identical
-    codebooks measured training, not retrieval (VERDICT r6 #5).  Keyed
-    by applicationId so a restarted session never sees stale persisted
-    frames.  Fit is deterministic (id-ordered bounded sample), so every
-    consumer sees bit-identical codebooks."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    idx = _PQ_FIT_MEMO.get(key)
-    if idx is None:
-        emb = _t(spark, sf_dir, "embeddings")
-        idx = sim.PQIndex(k=5, m=8, k_sub=16).fit(emb)
-        _memo_put(_PQ_FIT_MEMO, key, idx)
-    return idx
+    """A freshly fitted PQIndex — the parameters the three PQ-family
+    queries share.  Fit is deterministic (id-ordered bounded sample),
+    so every call yields bit-identical codebooks.  The index keeps its
+    fit-time persisted codes table, as any ``PQIndex.fit`` caller's
+    does."""
+    emb = _t(spark, sf_dir, "embeddings")
+    return sim.PQIndex(k=5, m=8, k_sub=16).fit(emb)
 
 
 def q_sim_ann_pq(spark, sf_dir):
@@ -1177,6 +1124,7 @@ def q_sim_ann_pq_persisted(spark, sf_dir):
     idx = _pq_fitted(spark, sf_dir)
     path = os.path.join(_ivf_scratch_dir(), "pq_idx")
     idx.write(path)                    # overwrite: correct across sf_dirs
+    idx._codes.unpersist()
     reloaded = sim.PQIndex.read(spark, path)
     emb = _t(spark, sf_dir, "embeddings")
     qvec = list(emb.filter(F.col("vec_id") == 0).head()["embedding"])
@@ -1301,36 +1249,23 @@ LIMIT 5
 
 
 def _ivfpq_fitted(spark, sf_dir) -> "sim.IVFPQIndex":
-    """ONE IVFPQIndex per (session, sf_dir), memoized in its
-    PARQUET-BACKED form: fit → write (``__list``-partitioned codes
-    table) → read, and the memo stores the reloaded index.  A fitted
-    index's in-session codes table is a ``.persist()`` — cache-cleared
-    between bench runs, after which every probe re-ran the full HOF
-    encode pass over the corpus (VERDICT r7 #4: 5.79s/3.24x at sf1).
-    The reloaded index's probe is a partition-pruned scan of 8-byte
-    codes — the deployment artifact, robust to cache eviction."""
+    """The IVFPQIndex in its PARQUET-BACKED form: fit → write
+    (``__list``-partitioned codes table) → release the fit-time persist
+    → read.  The reloaded index's probe is a partition-pruned scan of
+    8-byte codes — the deployment artifact."""
+    import hashlib
     import os
 
-    key = (spark.sparkContext.applicationId, sf_dir, "ivfpq")
-    idx = _PQ_FIT_MEMO.get(key)
-    if idx is None:
-        emb = _t(spark, sf_dir, "embeddings")
-        fitted = sim.IVFPQIndex(k=5, n_lists=8, n_probe=2,
-                                m=8, k_sub=16).fit(emb)
-        # sf_dir-specific layout dir (ADVICE r8): a SHARED scratch path
-        # would be overwritten for a new sf_dir while a stale memo
-        # entry's reloaded index still lazily scans it — safe only by
-        # accident of eviction ordering.  Distinct paths make the
-        # write/evict ordering irrelevant.
-        import hashlib
-
-        tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        path = os.path.join(_ivf_scratch_dir(), f"ivfpq_idx_{tag}")
-        fitted.write(path)
-        fitted._table.unpersist()
-        idx = sim.IVFPQIndex.read(spark, path)
-        _memo_put(_PQ_FIT_MEMO, key, idx)
-    return idx
+    emb = _t(spark, sf_dir, "embeddings")
+    fitted = sim.IVFPQIndex(k=5, n_lists=8, n_probe=2,
+                            m=8, k_sub=16).fit(emb)
+    # sf_dir-specific layout dir: a frame still lazily scanning one
+    # corpus's index is never overwritten by another corpus's write.
+    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    path = os.path.join(_ivf_scratch_dir(), f"ivfpq_idx_{tag}")
+    fitted.write(path)
+    fitted._table.unpersist()
+    return sim.IVFPQIndex.read(spark, path)
 
 
 def q_sim_ann_ivfpq(spark, sf_dir):
@@ -1339,9 +1274,7 @@ def q_sim_ann_ivfpq(spark, sf_dir):
     m-byte residual codes via per-cell ADC tables — the FAISS
     ``IVF8,PQ8`` shape.  Exact-integer end-to-end, so the generated
     oracle replays cells, residual codes and ADC sums hash-equal.
-    Fit is shared per (session, sf_dir) like the PQ family and served
-    from the written index layout (``_ivfpq_fitted``) — an index is
-    fit once and searched many times in deployment."""
+    Served from the written index layout (``_ivfpq_fitted``)."""
     idx = _ivfpq_fitted(spark, sf_dir)
     emb = _t(spark, sf_dir, "embeddings")
     qvec = list(emb.filter(F.col("vec_id") == 0).head()["embedding"])
@@ -3866,23 +3799,17 @@ def q_graph_pagerank(spark, sf_dir):
     order→part graph, top-20 by rank.  The graph is materialized ONCE
     as a chunked adjacency index (graph.build_adjacency — the r8
     shape: iterations join per-source state and explode, never
-    re-shuffling the edge list) and memoized per (session, sf_dir) as
-    an eager localCheckpoint — rank recomputation over a maintained
-    graph snapshot is the deployment shape, same rationale as the ANN
-    index memos.  3 iterations so the DuckDB oracle can replay the
-    exact unrolled computation; TakeOrderedAndProject for the top
-    slice."""
+    re-shuffling the edge list) and passed LAZILY: the plan reuses the
+    one build exchange (ReusedExchange) for every iteration, and
+    nothing is persisted or checkpointed.  3 iterations so the DuckDB
+    oracle can replay the exact unrolled computation;
+    TakeOrderedAndProject for the top slice."""
     from .graph import build_adjacency, pagerank
 
-    key = (spark.sparkContext.applicationId, sf_dir, "pr_adj")
-    adj = _PQ_FIT_MEMO.get(key)
-    if adj is None:
-        li = _t(spark, sf_dir, "lineitem")
-        edges = li.select(F.col("l_orderkey").alias("src"),
-                          (F.col("l_partkey") + 100_000_000).alias("dst"))
-        adj = build_adjacency(edges).localCheckpoint(eager=True)
-        _memo_put(_PQ_FIT_MEMO, key, adj)
-    pr = pagerank(adj=adj, iters=3)
+    li = _t(spark, sf_dir, "lineitem")
+    edges = li.select(F.col("l_orderkey").alias("src"),
+                      (F.col("l_partkey") + 100_000_000).alias("dst"))
+    pr = pagerank(adj=build_adjacency(edges), iters=3)
     return (pr.select("id", F.round("pr", 6).alias("pr"))
             .orderBy(F.desc("pr"), F.asc("id")).limit(20))
 
@@ -5108,27 +5035,17 @@ def q_sim_ann_ivf_append(spark, sf_dir):
     rescan, writes touch only the batch's cells), reload, and search a
     query that itself arrived in the appended batch.  Completes the
     incremental-maintenance family (exact-digest, MinHash-band, rollup
-    — now ANN).
-
-    The fit + write + append prep is memoized per (session, sf_dir):
-    an incremental index is maintained once and searched many times in
-    deployment, so repeat invocations time read (partition-pruned
-    scan) + probe, not a cold retrain of the 80% corpus (VERDICT r7
-    #4: 3.09x at sf1 was all refit)."""
+    — now ANN).  The fit-time persist is released once written."""
     import os
 
-    key = (spark.sparkContext.applicationId, sf_dir, "ivf_append")
-    path = _PQ_FIT_MEMO.get(key)
-    if path is None:
-        emb = _t(spark, sf_dir, "embeddings")
-        corpus = emb.filter(F.col("vec_id") % 5 != 0)
-        batch = emb.filter(F.col("vec_id") % 5 == 0)
-        idx = sim.IVFIndex(k=5, n_lists=8, n_probe=2).fit(corpus)
-        path = os.path.join(_ivf_scratch_dir(), "append_idx")
-        idx.write(path)               # overwrite: idempotent across runs
-        idx.append_write(batch, path)
-        idx._assigned.unpersist()
-        _memo_put(_PQ_FIT_MEMO, key, path)
+    emb = _t(spark, sf_dir, "embeddings")
+    corpus = emb.filter(F.col("vec_id") % 5 != 0)
+    batch = emb.filter(F.col("vec_id") % 5 == 0)
+    idx = sim.IVFIndex(k=5, n_lists=8, n_probe=2).fit(corpus)
+    path = os.path.join(_ivf_scratch_dir(), "append_idx")
+    idx.write(path)               # overwrite: idempotent across runs
+    idx.append_write(batch, path)
+    idx._assigned.unpersist()
     return sim.IVFIndex.read(spark, path).search(query_id=0)
 
 

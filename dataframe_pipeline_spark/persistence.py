@@ -18,9 +18,7 @@ the learned state, score anywhere* — maps to:
   lazily at load.
 
 A table too large for the driver round-trips as a distributed table,
-never through a driver-side dict.  A manifest saved before lookup
-tables were held (a bare parquet-backed DataFrame where the step now
-keeps a FittedTable) still loads and transforms.
+never through a driver-side dict.
 
 Layout::
 
@@ -171,21 +169,6 @@ def save_pipeline(pipe, path: str) -> None:
         f.write(dumps(manifest))
 
 
-#: where lookup operators keep their FittedTables
-_TABLE_ATTRS = ("_lookups", "lookups_", "_state")
-
-
-def _as_tables(obj, spark: SparkSession):
-    """Bare DataFrames (in dicts, lists, tuples) as FittedTables."""
-    if isinstance(obj, DataFrame):
-        return FittedTable(spark, df=obj)
-    if isinstance(obj, dict):
-        return {k: _as_tables(v, spark) for k, v in obj.items()}
-    if isinstance(obj, (list, tuple)):
-        return type(obj)(_as_tables(v, spark) for v in obj)
-    return obj
-
-
 def _load_steps(spark: SparkSession, path: str) -> list:
     with open(os.path.join(path, "manifest.pkl"), "rb") as f:
         manifest = loads(f.read())
@@ -195,9 +178,6 @@ def _load_steps(spark: SparkSession, path: str) -> list:
         step.__dict__.update(_restore(state, spark, path))
         for name in getattr(cls, "_dfp_transient", ()):
             step.__dict__.setdefault(name, None)
-        for name in _TABLE_ATTRS:
-            if name in step.__dict__:
-                step.__dict__[name] = _as_tables(step.__dict__[name], spark)
         steps.append(step)
     return steps
 

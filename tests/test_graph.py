@@ -67,3 +67,34 @@ def test_pagerank_validation(spark):
         pagerank(df, iters=0)
     with pytest.raises(ValueError, match="damping"):
         pagerank(df, damping=1.0)
+
+
+def test_registry_pagerank_pins_nothing(spark):
+    """The ``graph_pagerank`` registry row builds its adjacency lazily:
+    collecting it adds nothing to the persistent-RDD map, and it ranks
+    as a run over a checkpointed adjacency does."""
+    import pyspark.sql.functions as F
+
+    from dataframe_pipeline_spark import base
+    from dataframe_pipeline_spark.ext_queries import q_graph_pagerank
+    from dataframe_pipeline_spark.graph import build_adjacency
+    from test_plans import SF as sf
+
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    got = q_graph_pagerank(spark, sf).collect()
+    # earlier tests' RDDs may be released meanwhile; none may be added
+    assert set(jsc.getPersistentRDDs().keySet()) <= before
+
+    li = spark.read.parquet(f"{sf}/lineitem.parquet")
+    edges = li.select(F.col("l_orderkey").alias("src"),
+                      (F.col("l_partkey") + 100_000_000).alias("dst"))
+    adj, ids = base.tracked_checkpoint(build_adjacency(edges))
+    try:
+        want = (pagerank(adj=adj, iters=3)
+                .select("id", F.round("pr", 6).alias("pr"))
+                .orderBy(F.desc("pr"), F.asc("id")).limit(20).collect())
+    finally:
+        base.release_checkpoint(spark, ids)
+    assert len(got) == 20
+    assert got == want

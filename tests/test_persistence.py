@@ -89,24 +89,31 @@ def test_load_holds_lookup_without_files(spark, tmp_path):
 
 
 def test_load_manifest_with_parquet_lookup(spark, tmp_path):
-    """A lookup saved as a bare DataFrame (the layout written before
-    lookup tables were held) goes to parquet and reloads into the
-    FittedTable form transform reads."""
+    """A lookup table above ``SERVING_MAX_ROWS`` is checkpointed at fit,
+    saved as parquet, and reloads as a non-held FittedTable that
+    transforms as the in-memory step does."""
     import os
 
-    le = ComplementLabelEncoder(inputs=["cat"], outputs=["cat_id"])
-    le.fit(_train(spark))
-    want = le.transform(_test_frame(spark)).collect()
-    table, default_id, n = le._lookups["cat"]
-    le._lookups["cat"] = (table.df, default_id, n)
-    path = str(tmp_path / "old_layout")
-    DataframePipeline(steps=[le]).save(path)
-    assert os.listdir(os.path.join(path, "frames")) == ["s0_f0"]
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    try:
+        with pytest.MonkeyPatch.context() as m:
+            m.setattr(base, "SERVING_MAX_ROWS", 1)
+            le = ComplementLabelEncoder(inputs=["cat"], outputs=["cat_id"])
+            le.fit(_train(spark))
+        assert not le._lookups["cat"][0].held
+        want = le.transform(_test_frame(spark)).collect()
+        path = str(tmp_path / "checkpointed")
+        DataframePipeline(steps=[le]).save(path)
+        assert os.listdir(os.path.join(path, "frames")) == ["s0_f0"]
 
-    loaded = DataframePipeline.load(spark, path).steps[0]
-    assert not loaded._lookups["cat"][0].held
-    assert sorted(loaded.transform(_test_frame(spark)).collect()) == \
-        sorted(want)
+        loaded = DataframePipeline.load(spark, path).steps[0]
+        assert not loaded._lookups["cat"][0].held
+        assert sorted(loaded.transform(_test_frame(spark)).collect()) == \
+            sorted(want)
+    finally:
+        base.release_checkpoint(spark, [
+            i for i in jsc.getPersistentRDDs().keySet() if i not in before])
 
 
 def test_ivf_index_roundtrip(spark, tmp_path):

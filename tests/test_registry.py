@@ -40,3 +40,18 @@ def test_planlint_covers_exactly_the_registry():
         f"queries never plan-linted (run scripts/plan_lint.py): {unlinted}")
     stale = sorted(linted - qs)
     assert not stale, f"PLANLINT entries for removed queries: {stale}"
+
+
+def test_queries_md_matches_generator():
+    """QUERIES.md is the committed output of scripts/gen_queries_md.py:
+    a docstring edit without a regeneration fails here."""
+    import subprocess
+    import sys
+
+    out = subprocess.run(
+        [sys.executable, os.path.join(REPO, "scripts", "gen_queries_md.py")],
+        cwd=REPO, capture_output=True, text=True, check=True).stdout
+    with open(os.path.join(REPO, "QUERIES.md")) as f:
+        assert out == f.read(), (
+            "QUERIES.md is stale: run "
+            "python scripts/gen_queries_md.py > QUERIES.md")
