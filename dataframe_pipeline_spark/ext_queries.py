@@ -768,7 +768,7 @@ def _ivf_fitted(spark, sf_dir) -> "sim.IVFIndex":
     """A freshly fitted IVFIndex(k=5, n_lists=8, n_probe=2) over the
     full corpus — the parameters every IVF query shares.  Fit is
     deterministic (id-ordered bounded sample), so every call yields
-    bit-identical centroids.  The index keeps its fit-time persisted
+    bit-identical centroids.  The index keeps its fit-time checkpointed
     cell table, as any ``IVFIndex.fit`` caller's does."""
     emb = _t(spark, sf_dir, "embeddings")
     return sim.IVFIndex(k=5, n_lists=8, n_probe=2).fit(emb)
@@ -776,9 +776,9 @@ def _ivf_fitted(spark, sf_dir) -> "sim.IVFIndex":
 
 def _ivf_reloaded(spark, sf_dir) -> "sim.IVFIndex":
     """The IVF index in its PARQUET-BACKED form: `_ivf_fitted` → write
-    (``__list``-partitioned cell table) → release the fit-time persist
+    (``__list``-partitioned cell table) → release the fit-time checkpoint
     → read (the pattern `_ivfpq_fitted` uses).  The fitted index's
-    ``_assigned`` is a ``.persist()`` whose cell join cannot
+    ``_assigned`` is a local checkpoint whose cell join cannot
     partition-prune; the reloaded layout's ``__list`` is a real
     partition column, so `search_batch`'s cell equi-join prunes to the
     probed cells (dynamic partition pruning against the tiny exploded
@@ -790,7 +790,7 @@ def _ivf_reloaded(spark, sf_dir) -> "sim.IVFIndex":
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     path = os.path.join(_ivf_scratch_dir(), f"ivf_idx_{tag}")
     fitted.write(path)
-    fitted._assigned.unpersist()
+    fitted.release()
     return sim.IVFIndex.read(spark, path)
 
 
@@ -895,11 +895,11 @@ def q_sim_ann_ivf_persisted(spark, sf_dir):
     in-session index, so it shares sim_ann_ivf's generated oracle.  The
     reloaded probe carries a ``__list IN (...)`` partition filter — at
     scale it scans n_probe/n_lists of the data (plan-asserted in
-    test_plans.py).  The fit-time persist is released once written."""
+    test_plans.py).  The fit-time checkpoint is released once written."""
     idx = _ivf_fitted(spark, sf_dir)
     path = _ivf_scratch_dir()
     idx.write(path)
-    idx._assigned.unpersist()
+    idx.release()
     return sim.IVFIndex.read(spark, path).search(query_id=0)
 
 
@@ -911,7 +911,7 @@ def q_sim_ann_ivf_batch(spark, sf_dir):
     No per-query driver round-trips.  Served from the RELOADED
     ``__list``-partitioned index layout (`_ivf_reloaded`, VERDICT r8
     #3) so the cell join partition-prunes instead of scanning the
-    fit-path persisted frame."""
+    fit-path checkpoint."""
     emb = _t(spark, sf_dir, "embeddings")
     idx = _ivf_reloaded(spark, sf_dir)
     queries = (emb.filter(F.col("vec_id") < 5)
@@ -1087,7 +1087,7 @@ def _pq_fitted(spark, sf_dir) -> "sim.PQIndex":
     """A freshly fitted PQIndex — the parameters the three PQ-family
     queries share.  Fit is deterministic (id-ordered bounded sample),
     so every call yields bit-identical codebooks.  The index keeps its
-    fit-time persisted codes table, as any ``PQIndex.fit`` caller's
+    fit-time checkpointed codes table, as any ``PQIndex.fit`` caller's
     does."""
     emb = _t(spark, sf_dir, "embeddings")
     return sim.PQIndex(k=5, m=8, k_sub=16).fit(emb)
@@ -1124,7 +1124,7 @@ def q_sim_ann_pq_persisted(spark, sf_dir):
     idx = _pq_fitted(spark, sf_dir)
     path = os.path.join(_ivf_scratch_dir(), "pq_idx")
     idx.write(path)                    # overwrite: correct across sf_dirs
-    idx._codes.unpersist()
+    idx.release()
     reloaded = sim.PQIndex.read(spark, path)
     emb = _t(spark, sf_dir, "embeddings")
     qvec = list(emb.filter(F.col("vec_id") == 0).head()["embedding"])
@@ -1250,7 +1250,7 @@ LIMIT 5
 
 def _ivfpq_fitted(spark, sf_dir) -> "sim.IVFPQIndex":
     """The IVFPQIndex in its PARQUET-BACKED form: fit → write
-    (``__list``-partitioned codes table) → release the fit-time persist
+    (``__list``-partitioned codes table) → release the fit-time checkpoint
     → read.  The reloaded index's probe is a partition-pruned scan of
     8-byte codes — the deployment artifact."""
     import hashlib
@@ -1264,7 +1264,7 @@ def _ivfpq_fitted(spark, sf_dir) -> "sim.IVFPQIndex":
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     path = os.path.join(_ivf_scratch_dir(), f"ivfpq_idx_{tag}")
     fitted.write(path)
-    fitted._table.unpersist()
+    fitted.release()
     return sim.IVFPQIndex.read(spark, path)
 
 
@@ -2361,73 +2361,6 @@ SELECT DISTINCT user_id, event_type FROM events
 """
 
 
-#: Pack modulus for the latest-per-key ordering key: (ts, event_id)
-#: collapses to ``unix_micros(ts)·10¹² + event_id`` — strictly
-#: monotonic in the lexicographic order whenever footer statistics
-#: prove ``0 ≤ event_id < 10¹²``.
-_LATEST_PACK = 10**12
-
-
-def _latest_long_pack_params(ev, ts_col: str = "ts",
-                             id_col: str = "event_id"):
-    """(base_micros, bucket) when footer statistics PROVE the
-    (ts, id) ordering pair packs into ONE BIGINT:
-    ``(unix_micros(ts) − base)·bucket + id`` with ``id ∈ [0, bucket)``
-    and the maximum packed value inside the long range — pure long
-    codegen, so the argmax aggregate's ``max``/``max_by`` buffers are
-    primitive and HashAggregate applies with NO per-row decimal work.
-    None when the bound can't be proven (caller falls to the decimal
-    pack, then to struct-max — each tier exact, only slower).
-
-    The packed key is only COMPARED, never summed, so the gate can use
-    the full 2⁶³ long range (no accumulation headroom needed) and the
-    bucket is the exact ``id_max+1``, not a power of two — at sf3 the
-    pow2-bucket/2⁶² variant of this gate fell back to decimal while
-    the exact form fits with 16% margin.  The span×bucket product is
-    data-bounded, not schema-bounded: a 30-day window × 3M ids ≈ 2⁶²·⁸
-    fits; a multi-year corpus with 10⁹ ids (~2⁷⁷) falls through.  Base
-    shifts to the observed minimum so only the SPAN costs bits.  NULL
-    ts coalesces to base−1 → packs below every real row and still
-    tie-breaks by id (−bucket+id is monotonic in id)."""
-    import datetime as _dt
-
-    try:
-        if not _is_single_parquet_scan(ev):
-            return None
-        files = ev.inputFiles()
-        if not files:
-            return None
-        id_mn = id_mx = ts_mn = ts_mx = None
-        for f in files:
-            a, b = _parquet_col_minmax(f, id_col)
-            c, d = _parquet_col_minmax(f, ts_col)
-            if a is None or c is None:
-                return None
-            id_mn = a if id_mn is None else min(id_mn, a)
-            id_mx = b if id_mx is None else max(id_mx, b)
-            ts_mn = c if ts_mn is None else min(ts_mn, c)
-            ts_mx = d if ts_mx is None else max(ts_mx, d)
-        if not isinstance(id_mn, int) or id_mn < 0:
-            return None
-        epoch = _dt.datetime(1970, 1, 1)
-        if isinstance(ts_mn, _dt.datetime):
-            if ts_mn.tzinfo is not None:      # stats are wall-clock NTZ
-                return None
-            lo = (ts_mn - epoch) // _dt.timedelta(microseconds=1) - 1
-            hi = (ts_mx - epoch) // _dt.timedelta(microseconds=1) + 1
-        else:
-            return None
-        bucket = int(id_mx) + 1
-        # pk_max < (hi-lo+1)·bucket with base=lo (padded bounds above);
-        # the key is compared, never summed, so the whole long range is
-        # usable — require strictly inside 2⁶³
-        if (hi - lo + 1) * bucket >= (1 << 63):
-            return None
-        return lo, bucket
-    except Exception:
-        return None
-
-
 def q_events_latest(spark, sf_dir):
     """Latest event per (user, type) as an aggregate, not a window
     (VERDICT r11 #3): the winner of ``row_number() OVER (ORDER BY ts
@@ -2436,58 +2369,13 @@ def q_events_latest(spark, sf_dir):
     (user, type) instead of every event, which is the shape that holds
     at 100×.
 
-    Three statistics-gated tiers (plan-pinned in test_plans.py; each
-    tier is exact, they differ only in per-row cost):
-
-    * **long pack** — when footers prove the (ts, id) range fits 62
-      bits (:func:`_latest_long_pack_params`: base-shifted micros span
-      × next-pow2 id bucket), the ordering pair packs into ONE BIGINT
-      — pure long codegen, primitive ``max``/``max_by`` buffers,
-      **HashAggregate**, zero decimal work.
-    * **decimal pack** — footers prove only ``0 ≤ event_id < 10¹²``
-      (:func:`_col_within`): ``unix_micros(ts)·10¹² + event_id`` as
-      ``decimal(38,0)`` (exact — max ~1.7e27 ≪ 10³⁸; strictly
-      monotonic; NULL ts coalesces below any real timestamp so
-      all-NULL groups still tie-break by id).  Decimal/double buffers
-      are hash-mutable → still HashAggregate, ~2 BigDecimal ops/row.
-    * **struct fallback** — ``max(struct(ts, event_id, value))`` is
-      always-correct for any id domain but plans as SortAggregate
-      (struct buffers aren't hash-mutable), costing a map-side
-      chunk sort.
-
-    A/B sf1 (1M events):
-    window 1.86 s / struct-max 1.78 s / decimal pack 1.45 s / long
-    pack 1.01 s, identical results on all four — the long tier sits on
-    the profile twin's 1.10 s scalar-max floor."""
+    ``max(struct(ts, event_id, value))`` orders exactly as the window
+    does: struct fields compare left to right, and a NULL field sorts
+    below any value, as NULL ``ts`` sorts last under ``ts DESC``, so a
+    group whose every ``ts`` is NULL still tie-breaks by ``event_id``.
+    Struct buffers are not hash-mutable, so the aggregate plans as a
+    partial then final SortAggregate (plan-pinned in test_plans.py)."""
     ev = _events(spark, sf_dir)
-    lp = _latest_long_pack_params(ev)
-    if lp is not None:
-        base, bucket = lp
-        pk = ((F.coalesce(F.unix_micros("ts"), F.lit(base - 1))
-               - F.lit(base)) * F.lit(bucket) + F.col("event_id"))
-        return (
-            ev.withColumn("__pk", pk)
-            .groupBy("user_id", "event_type")
-            .agg(F.max("__pk").alias("__mx"),
-                 F.max_by("value", F.col("__pk")).alias("value"))
-            .select(F.pmod(F.col("__mx"), F.lit(bucket))
-                    .alias("event_id"),
-                    "user_id", "event_type", "value")
-        )
-    if _col_within(ev, "event_id", 0, _LATEST_PACK):
-        pk = (F.coalesce(F.unix_micros("ts"), F.lit(-(10**18)))
-              .cast("decimal(38,0)")
-              * F.lit(_LATEST_PACK).cast("decimal(38,0)")
-              + F.col("event_id").cast("decimal(38,0)"))
-        return (
-            ev.withColumn("__pk", pk)
-            .groupBy("user_id", "event_type")
-            .agg(F.max("__pk").alias("__mx"),
-                 F.max_by("value", F.col("__pk")).alias("value"))
-            .select(F.pmod(F.col("__mx"), F.lit(_LATEST_PACK))
-                    .cast("long").alias("event_id"),
-                    "user_id", "event_type", "value")
-        )
     return (
         ev.groupBy("user_id", "event_type")
         .agg(F.max(F.struct("ts", "event_id", "value")).alias("__m"))
@@ -2520,260 +2408,35 @@ def _dec(c: str):
 
 _REV = "CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))"
 
-# --------------------------------------------------------------------------
-# Exact integer-cents revenue arithmetic (r10, VERDICT r9 #1).
-#
-# The decimal(18,2) multiply-sum pays three per-row costs Spark cannot
-# codegen away: the double→decimal cast allocates a java BigDecimal per
-# value, the (18,2)×(18,2) product is precision-37 so it leaves the
-# compact long representation, and the decimal(38,4) sum buffer is a
-# 16-byte UnsafeRow field that is re-serialized on every update.  For
-# POSITIVE 2-dp money there is an exact all-integer formulation:
-#
-#   price_cents = floor(price·100 + 0.5)   (pure double + long cast —
-#       NOT round(), whose double path also routes through BigDecimal)
-#   rev·10⁴     = price_cents · (100 − disc_pct)    (one long multiply)
-#   revenue     = (Σ rev·10⁴) / 10⁴   — divided ONCE, in decimal, at
-#       the end: the exact rational sum gets exactly one double
-#       rounding, same as DuckDB's CAST(sum(decimal) AS DOUBLE).
-#
-# A/B at sf1 (6M-row scan+agg, min of 3 interleaved): decimal
-# 1.156s / cents-long 0.368s / pure-double (inexact) 0.332s /
-# no-arithmetic floor 0.273s — the cents path
-# removes ~97% of the arithmetic residual and value-parity holds at
-# 6 dp.  Summing the long product as decimal(28,0) instead was
-# measured a LOSS (1.146s ≈ the decimal status quo: the >18-precision
-# sum buffer is the cost, not the multiply), so the long sum is the
-# only fast exact shape — and long sums can overflow, hence the gate:
-#
-#   the fast path is taken only when the fact SCAN statistic proves
-#   rows_ub · PER_ROW_MAX ≤ 2⁶², with rows_ub = bytes / 8 (no parquet
-#   layout of this table compresses below 8 B/row; measured 18 B/row)
-#   and PER_ROW_MAX = 2³¹ for rev·10⁴ (data max 1.05e9: price ≤ $105k
-#   — TPC-H money domain ≤ 50 · p_retailprice).  That keeps the fast
-#   path up to ~16 GB of lineitem scan (~2e9 rows, ~sf300); past the
-#   gate the exact-decimal formulation runs unchanged — the same
-#   statistics-gated graceful degradation as maybe_broadcast /
-#   maybe_shuffle_hash.  Both branches produce identical 6-dp values,
-#   so the gate never flips a value hash.
-# --------------------------------------------------------------------------
 
-#: Worst-case per-row magnitude of rev·10⁴ (cents × (100−pct)):
-#: 2× headroom over the $105k TPC-H price ceiling.
-_REV4_ROW_MAX = 1 << 31
-
-
-def _long_sum_ok(bound_df, per_row_max: int = _REV4_ROW_MAX) -> bool:
-    """True when metadata PROVES a long sum of ``per_row_max``-bounded
-    terms cannot overflow 2⁶² (2× headroom under 2⁶³).
-
-    Row bound (ADVICE r10): EXACT row counts from the parquet footers of
-    ``bound_df``'s input files — footer metadata only, read driver-side
-    via pyarrow with no Spark job and no data pages.  The earlier
-    ``sizeInBytes / 8`` heuristic rested a correctness gate on an
-    assumed 8 B/row compression floor that a heavily RLE/zstd-encoded
-    layout could undercut; footers carry the true count.  The footer
-    sweep short-circuits the moment the running count crosses the
-    threshold, so driver work is bounded even on a million-file table —
-    and any failure to prove the bound (non-file source, unreadable
-    footer) falls back to the always-correct exact-decimal path by
-    returning False, never to a guess."""
-    max_rows = (1 << 62) // per_row_max
-    try:
-        if not _is_single_parquet_scan(bound_df):
-            return False            # inputFiles() only trusted for scans
-        files = bound_df.inputFiles()
-    except Exception:
-        return False
-    if not files:
-        return False
-    try:
-        total = 0
-        for f in files:
-            total += _parquet_file_rows(f)
-            if total > max_rows:
-                return False
-        return True
-    except Exception:
-        return False
-
-
-def _is_single_parquet_scan(df) -> bool:
-    """True iff ``df``'s optimized plan is exactly one parquet
-    file-source relation (plus projections/filters) — the shape for
-    which ``inputFiles()`` is a COMPLETE listing.  The API is
-    documented best-effort in general (ADVICE r11: a partially-reported
-    list would under-count rows and unsafely open the long fast path),
-    so the overflow gate trusts it only when the plan proves the
-    relation is a plain parquet scan.  Driver-side plan-string check,
-    no job."""
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    return plan.count("Relation") == 1 and "parquet" in plan
-
-
-def _col_within(bound_df, col: str, lo: int, hi: int) -> bool:
-    """True when parquet FOOTER column statistics PROVE every value of
-    ``col`` in ``bound_df``'s input files lies in ``[lo, hi)`` — the
-    same metadata-only, fail-closed discipline as :func:`_long_sum_ok`
-    (driver-side footer reads, no Spark job, no data pages).  Any file
-    without complete min/max statistics for the column, any non-scan
-    plan, or any non-integer statistic returns False and the caller
-    takes its always-correct slow path."""
-    try:
-        if not _is_single_parquet_scan(bound_df):
-            return False
-        files = bound_df.inputFiles()
-        if not files:
-            return False
-        for f in files:
-            mn, mx = _parquet_col_minmax(f, col)
-            if mn is None or mx is None or mn < lo or mx >= hi:
-                return False
-        return True
-    except Exception:
-        return False
-
-
-_FOOTER_COL_CACHE: dict = {}
-
-
-def _parquet_col_minmax(uri: str, col: str):
-    """(min, max) of ``col`` across one parquet file's row-group
-    statistics, or (None, None) when any row group lacks them.  Cached
-    per (path, mtime, size, col) like :func:`_parquet_file_rows`."""
-    from urllib.parse import urlparse
-
-    import pyarrow.parquet as pq
-
-    parsed = urlparse(uri)
-    if parsed.scheme not in ("", "file"):
-        raise ValueError(f"non-local input: {uri}")
-    path = parsed.path or uri
-    st = os.stat(path)
-    key = (path, st.st_mtime_ns, st.st_size, col)
-    cached = _FOOTER_COL_CACHE.get(key)
-    if cached is not None:
-        return cached
-    md = pq.ParquetFile(path).metadata
-    idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-    if col not in idx:
-        result = (None, None)
-    else:
-        mn = mx = None
-        for rg in range(md.num_row_groups):
-            s = md.row_group(rg).column(idx[col]).statistics
-            if s is None or not s.has_min_max:
-                mn = mx = None
-                break
-            mn = s.min if mn is None else min(mn, s.min)
-            mx = s.max if mx is None else max(mx, s.max)
-        result = (mn, mx)
-    _FOOTER_COL_CACHE[key] = result
-    return result
-
-
-_FOOTER_ROWS_CACHE: dict = {}
-
-
-def _parquet_file_rows(uri: str) -> int:
-    """Exact row count from one parquet footer (cached per
-    ``(uri, mtime, size)`` — the overflow gate runs once per query and
-    bench sweeps hit the same table files repeatedly, but a file
-    REWRITTEN at a stable path must not reuse the stale count: the gate
-    proves an overflow bound, so the cache key carries the stat
-    identity, ADVICE r11).  Raises on non-parquet / non-local URIs so
-    the caller degrades to the exact-decimal path."""
-    from urllib.parse import urlparse
-
-    import pyarrow.parquet as pq
-
-    parsed = urlparse(uri)
-    if parsed.scheme not in ("", "file"):
-        raise ValueError(f"non-local input: {uri}")
-    path = parsed.path or uri
-    if not path.endswith((".parquet", ".parq")):
-        raise ValueError(f"not a parquet file: {uri}")
-    st = os.stat(path)
-    key = (path, st.st_mtime_ns, st.st_size)
-    cached = _FOOTER_ROWS_CACHE.get(key)
-    if cached is not None:
-        return cached
-    n = pq.ParquetFile(path).metadata.num_rows
-    _FOOTER_ROWS_CACHE[key] = n
-    return n
-
-
-def _cents(c: str):
-    """Exact integer cents of a positive 2-dp money double, in pure
-    double+long codegen: floor(x·100 + 0.5).  round() would be wrong
-    here — Spark's double round routes through BigDecimal per value,
-    which is the exact cost being removed."""
-    return (F.col(c) * 100 + F.lit(0.5)).cast("long")
-
-
-def _rev4():
-    """rev·10⁴ as a long: price_cents × (100 − discount_pct)."""
-    return _cents("l_extendedprice") * (F.lit(100) - _cents("l_discount"))
-
-
-#: |long| bound under which ``cast(long as double)`` is EXACT (every
-#: integer below 2⁵³ is representable), so the pure-double finisher
-#: below is bit-identical to the decimal one.
-_EXACT_DOUBLE_MAX = 1 << 53
-
-
-def _fin4(col, scale: int = 10000):
-    """Finish an integer-units sum with exactly ONE double rounding,
-    matching the oracle's ``CAST(sum AS DOUBLE)``.
-
-    Fast path (r11): when ``|sum| < 2⁵³`` the long→double cast is exact
-    and the IEEE divide by the exactly-representable ``scale`` is
-    correctly rounded — the SAME single rounding of the same exact
-    rational the decimal divide produces, at pure-codegen double cost.
-    Measured on q11's 180k-row per-part finisher (the only >10³-row
-    finisher site): the per-row decimal divide was ~0.2 s of its wall.
-    Above the bound (a group sum past 9e15 — possible for GLOBAL
-    totals at large sf) the row takes the exact decimal divide; the
-    ``when`` evaluates that branch only on such rows, so the value is
-    identical everywhere and the cost is double-path almost always."""
-    exact = col.cast("double") / F.lit(float(scale))
-    slow = (col.cast("decimal(38,0)") / F.lit(scale)).cast("double")
-    return F.when(F.abs(col) < F.lit(_EXACT_DOUBLE_MAX), exact) \
-        .otherwise(slow)
+def _rev():
+    """The Spark twin of :data:`_REV`: exact decimal revenue per row.
+    Each revenue query sums it and casts the sum to double once, as the
+    oracle's ``CAST(sum(...) AS DOUBLE)`` does."""
+    return (_dec("l_extendedprice")
+            * (F.lit(1).cast("decimal(18,2)") - _dec("l_discount")))
 
 
 def q_tpch_pricing_summary(spark, sf_dir):
     """TPC-H Q1 shape: filtered scan → 4-way aggregate per flag/status.
-
-    All three money/quantity sums run on the gated integer-cents fast
-    path (r10, see the ``_rev4`` block comment) — the rev·10⁴ term
-    dominates the per-row bound, so one gate covers all three."""
+    Each money or quantity sum is an exact decimal sum, cast to double
+    once."""
     li = _t(spark, sf_dir, "lineitem")
     filtered = li.filter(
         F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
-    if _long_sum_ok(li):
-        qty, bp, rev = _cents("l_quantity"), _cents("l_extendedprice"), _rev4()
-        fin = _fin4
-        scales = (100, 100, 10000)
-    else:
-        qty, bp = _dec("l_quantity"), _dec("l_extendedprice")
-        rev = (_dec("l_extendedprice")
-               * (F.lit(1).cast("decimal(18,2)") - _dec("l_discount")))
-        fin = (lambda c, scale=None: c.cast("double"))
-        scales = (None, None, None)
+    sum_qty = F.col("_sq").cast("double")
     return (
         filtered
         .groupBy("l_returnflag", "l_linestatus")
-        .agg(F.sum(qty).alias("_sq"),
-             F.sum(bp).alias("_sbp"),
-             F.sum(rev).alias("_sdp"),
+        .agg(F.sum(_dec("l_quantity")).alias("_sq"),
+             F.sum(_dec("l_extendedprice")).alias("_sbp"),
+             F.sum(_rev()).alias("_sdp"),
              F.count(F.lit(1)).alias("count_order"))
         .select("l_returnflag", "l_linestatus",
-                fin(F.col("_sq"), scales[0]).alias("sum_qty"),
-                fin(F.col("_sbp"), scales[1]).alias("sum_base_price"),
-                fin(F.col("_sdp"), scales[2]).alias("sum_disc_price"),
-                F.round(fin(F.col("_sq"), scales[0]) / F.col("count_order"),
-                        6).alias("avg_qty"),
+                sum_qty.alias("sum_qty"),
+                F.col("_sbp").cast("double").alias("sum_base_price"),
+                F.col("_sdp").cast("double").alias("sum_disc_price"),
+                F.round(sum_qty / F.col("count_order"), 6).alias("avg_qty"),
                 "count_order")
     )
 
@@ -2802,13 +2465,6 @@ def q_top_revenue_orders(spark, sf_dir):
           .filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey"))
     od = _t(spark, sf_dir, "orders")
     li = _t(spark, sf_dir, "lineitem")
-    # Gated integer-cents revenue (r10, see the _rev4 block comment).
-    if _long_sum_ok(li):
-        rev, fin = _rev4(), _fin4
-    else:
-        rev = (_dec("l_extendedprice")
-               * (F.lit(1).cast("decimal(18,2)") - _dec("l_discount")))
-        fin = (lambda c, scale=None: c.cast("double"))
     # The customer filter dim is size-gate broadcast (true small dim);
     # the orders-derived semi-join result is left to AQE — measured
     # A/B at sf1 (scale_tail_analysis round): forcing the fact-derived
@@ -2819,19 +2475,17 @@ def q_top_revenue_orders(spark, sf_dir):
     od_b = (od.join(maybe_broadcast(cu), od.o_custkey == cu.c_custkey,
                     "left_semi")
             .select("o_orderkey", "o_orderdate"))
-    # Rank on the RAW sum and finish only the surviving 10 rows: the
-    # finisher is strictly monotone (a positive divide), so desc order
-    # and ties are identical — and the per-row finish cost never
-    # touches the ~|orders| group rows (measured r10: finishing before
-    # the top-k cost ~0.4s at sf1).
+    # Rank on the exact decimal sum and cast only the surviving 10 rows
+    # to double: the cast is monotone, so desc order and ties are the
+    # oracle's.
     return (
         li.join(od_b, li.l_orderkey == od_b.o_orderkey)
         .groupBy("o_orderkey", "o_orderdate")
-        .agg(F.sum(rev).alias("_r"))
+        .agg(F.sum(_rev()).alias("_r"))
         .orderBy(F.desc("_r"), F.asc("o_orderkey"))
         .limit(10)
         .select("o_orderkey", "o_orderdate",
-                fin(F.col("_r")).alias("revenue"))
+                F.col("_r").cast("double").alias("revenue"))
     )
 
 
@@ -2870,18 +2524,9 @@ def q_revenue_by_nation(spark, sf_dir):
     od_scan = _t(spark, sf_dir, "orders")
     od = od_scan.select("o_orderkey", "o_custkey")
     li = _t(spark, sf_dir, "lineitem")
-    # Gated integer-cents revenue (r10, see the _rev4 block comment):
-    # the pre-aggregate's 6M-row multiply-sum and the per-nation re-sum
-    # both run in pure long codegen under the gate; one exact decimal
-    # divide at the 25-row end.
-    if _long_sum_ok(li):
-        rev, fin = _rev4(), _fin4
-    else:
-        rev = (_dec("l_extendedprice")
-               * (F.lit(1).cast("decimal(18,2)") - _dec("l_discount")))
-        fin = (lambda c, scale=None: c.cast("double"))
     li_pre = (li.groupBy("l_orderkey")
-              .agg(F.sum(rev).alias("_r"), F.count(F.lit(1)).alias("_n")))
+              .agg(F.sum(_rev()).alias("_r"),
+                   F.count(F.lit(1)).alias("_n")))
     dim = (od.join(maybe_broadcast(cu), od.o_custkey == cu.c_custkey)
            .select("o_orderkey", "c_nationkey"))
     return (
@@ -2891,7 +2536,7 @@ def q_revenue_by_nation(spark, sf_dir):
         .agg(F.sum("_r").alias("_r"), F.sum("_n").alias("_n"))
         .join(maybe_broadcast(na),
               F.col("c_nationkey") == na.n_nationkey)
-        .select("n_name", fin(F.col("_r")).alias("revenue"),
+        .select("n_name", F.col("_r").cast("double").alias("revenue"),
                 F.col("_n").alias("n_items"))
     )
 
@@ -2908,12 +2553,7 @@ GROUP BY n_name
 
 def q_revenue_rollup(spark, sf_dir):
     """Hierarchical subtotals (ROLLUP) — a grouping-sets capability the
-    reference lacks entirely; exposed as the stock Spark primitive.
-
-    Revenue runs on the gated integer-cents fast path (r10 — see the
-    ``_rev4`` block comment: sf1 A/B 1.78s → cents removes ~97% of the
-    per-row decimal cost; past the overflow gate the exact decimal
-    formulation runs unchanged)."""
+    reference lacks entirely; exposed as the stock Spark primitive."""
     li = _t(spark, sf_dir, "lineitem")
     # Pre-aggregate to the finest grouping (6 rows), then run Spark's
     # native rollup() ON THE PRE-AGGREGATE inside the same plan.  The
@@ -2922,19 +2562,13 @@ def q_revenue_rollup(spark, sf_dir):
     # re-summing partials is exact — one scan, one job, one tiny extra
     # shuffle, no persist (VERDICT r8 #2: the previous persist+3-action
     # shape cost three job launches for a one-scan query).
-    if _long_sum_ok(li):
-        rev, fin = _rev4(), _fin4
-    else:
-        rev = (_dec("l_extendedprice")
-               * (F.lit(1).cast("decimal(18,2)") - _dec("l_discount")))
-        fin = (lambda c, scale=None: c.cast("double"))
     base = (li.groupBy("l_returnflag", "l_linestatus")
-            .agg(F.sum(rev).alias("_r"), F.count(F.lit(1)).alias("_n")))
+            .agg(F.sum(_rev()).alias("_r"), F.count(F.lit(1)).alias("_n")))
     return (
         base.rollup("l_returnflag", "l_linestatus")
         .agg(F.sum("_r").alias("_r2"), F.sum("_n").alias("n_items"))
         .select("l_returnflag", "l_linestatus",
-                fin(F.col("_r2")).alias("revenue"), "n_items")
+                F.col("_r2").cast("double").alias("revenue"), "n_items")
     )
 
 
@@ -2953,9 +2587,7 @@ def q_revenue_cube(spark, sf_dir):
     from .reshape import cube_agg
 
     li = _t(spark, sf_dir, "lineitem")
-    rev = (_dec("l_extendedprice")
-           * (F.lit(1).cast("decimal(18,2)") - _dec("l_discount")))
-    out = cube_agg(li.withColumn("__rev", rev),
+    out = cube_agg(li.withColumn("__rev", _rev()),
                    dims=["l_returnflag", "l_linestatus"],
                    sums={"revenue": "__rev"}, count_col="n_items")
     # report in millions: a grand-total revenue sum reaches ~5e11 at
@@ -2985,18 +2617,12 @@ def q_revenue_grouping_sets(spark, sf_dir):
     but not (flag)) and a CUBE over-produces, via Spark's native
     ``DataFrame.groupingSets``.  Same one-scan discipline as
     revenue_rollup: the Expand runs on the 6-row finest pre-aggregate,
-    not the fact scan; revenue takes the gated integer-cents path.
+    not the fact scan.
     ``grouping()`` flags disambiguate a rolled-up NULL from a data
     NULL — same contract as SQL GROUPING()."""
     li = _t(spark, sf_dir, "lineitem")
-    if _long_sum_ok(li):
-        rev, fin = _rev4(), _fin4
-    else:
-        rev = (_dec("l_extendedprice")
-               * (F.lit(1).cast("decimal(18,2)") - _dec("l_discount")))
-        fin = (lambda c, scale=None: c.cast("double"))
     base = (li.groupBy("l_returnflag", "l_linestatus")
-            .agg(F.sum(rev).alias("_r"), F.count(F.lit(1)).alias("_n")))
+            .agg(F.sum(_rev()).alias("_r"), F.count(F.lit(1)).alias("_n")))
     return (
         base.groupingSets(
             [["l_returnflag", "l_linestatus"], ["l_linestatus"], []],
@@ -3005,7 +2631,7 @@ def q_revenue_grouping_sets(spark, sf_dir):
              F.grouping("l_returnflag").cast("long").alias("g_flag"),
              F.grouping("l_linestatus").cast("long").alias("g_status"))
         .select("l_returnflag", "l_linestatus", "g_flag", "g_status",
-                fin(F.col("_r2")).alias("revenue"), "n_items")
+                F.col("_r2").cast("double").alias("revenue"), "n_items")
     )
 
 
@@ -3209,21 +2835,14 @@ def q_join_salted(spark, sf_dir):
     from .relational import salted_join
     li = _t(spark, sf_dir, "lineitem")
     od = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
-    # Gated integer-cents revenue (r10, see the _rev4 block comment).
-    if _long_sum_ok(li):
-        rev, fin = _rev4(), _fin4
-    else:
-        rev = (_dec("l_extendedprice")
-               * (F.lit(1).cast("decimal(18,2)") - _dec("l_discount")))
-        fin = (lambda c, scale=None: c.cast("double"))
     j = salted_join(li.withColumnRenamed("l_orderkey", "o_orderkey"), od,
                     on="o_orderkey", how="inner", n_salts=8,
                     salt_src=["o_orderkey", "l_linenumber"])
     return (j.groupBy("o_orderpriority")
-            .agg(F.sum(rev).alias("_r"),
+            .agg(F.sum(_rev()).alias("_r"),
                  F.count(F.lit(1)).alias("n_items"))
-            .select("o_orderpriority", fin(F.col("_r")).alias("revenue"),
-                    "n_items"))
+            .select("o_orderpriority",
+                    F.col("_r").cast("double").alias("revenue"), "n_items"))
 
 
 SQL_JOIN_SALTED = f"""
@@ -3247,21 +2866,15 @@ def q_join_salted_auto(spark, sf_dir):
     from .relational import maybe_salted_join
     li = _t(spark, sf_dir, "lineitem")
     od = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
-    if _long_sum_ok(li):
-        rev, fin = _rev4(), _fin4
-    else:
-        rev = (_dec("l_extendedprice")
-               * (F.lit(1).cast("decimal(18,2)") - _dec("l_discount")))
-        fin = (lambda c, scale=None: c.cast("double"))
     j = maybe_salted_join(
         li.withColumnRenamed("l_orderkey", "o_orderkey"), od,
         on="o_orderkey", how="inner", n_salts=8,
         salt_src=["o_orderkey", "l_linenumber"])
     return (j.groupBy("o_orderpriority")
-            .agg(F.sum(rev).alias("_r"),
+            .agg(F.sum(_rev()).alias("_r"),
                  F.count(F.lit(1)).alias("n_items"))
-            .select("o_orderpriority", fin(F.col("_r")).alias("revenue"),
-                    "n_items"))
+            .select("o_orderpriority",
+                    F.col("_r").cast("double").alias("revenue"), "n_items"))
 
 
 def q_filter_blocklist(spark, sf_dir):
@@ -5035,7 +4648,7 @@ def q_sim_ann_ivf_append(spark, sf_dir):
     rescan, writes touch only the batch's cells), reload, and search a
     query that itself arrived in the appended batch.  Completes the
     incremental-maintenance family (exact-digest, MinHash-band, rollup
-    — now ANN).  The fit-time persist is released once written."""
+    — now ANN).  The fit-time checkpoint is released once written."""
     import os
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -5045,7 +4658,7 @@ def q_sim_ann_ivf_append(spark, sf_dir):
     path = os.path.join(_ivf_scratch_dir(), "append_idx")
     idx.write(path)               # overwrite: idempotent across runs
     idx.append_write(batch, path)
-    idx._assigned.unpersist()
+    idx.release()
     return sim.IVFIndex.read(spark, path).search(query_id=0)
 
 

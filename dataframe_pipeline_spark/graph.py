@@ -26,7 +26,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 #: Cut plan lineage every this many PageRank iterations.
 CHECKPOINT_EVERY = 5
@@ -86,8 +85,8 @@ def pagerank(edges: DataFrame | None = None, iters: int = 3,
     ``pr/out_degree`` (division, not reciprocal-multiply) so the
     unrolled SQL oracle replays the identical doubles.
 
-    Plan: ONE build shuffle turns the edge list into a persisted
-    adjacency table ``(src, neighbors[], out_degree)`` — ``collect_set``
+    Plan: ONE build shuffle turns the edge list into an adjacency
+    table ``(src, neighbors[], out_degree)`` — ``collect_set``
     dedups map-side, hub arrays chunked at ``ADJ_CHUNK``.  Each
     iteration LEFT-joins the previous SPARSE contribution table (only
     nodes with indegree > 0 carry state; an absent source reads as the
@@ -99,10 +98,11 @@ def pagerank(edges: DataFrame | None = None, iters: int = 3,
     recovered with one anti-join at the end (no second pass over the
     edges).  State per node is ONE double.
 
-    Pass ``adj`` (a frame from :func:`build_adjacency`, already
+    Pass ``adj`` (a frame from :func:`build_adjacency`, lazy or
     materialized by the caller) to rank against a maintained graph
-    index without paying the build shuffle; otherwise the adjacency is
-    built from ``edges`` and persisted for the duration of the plan.
+    index; otherwise it is built lazily from ``edges`` and never
+    persisted: the plan reuses the one build exchange for every
+    iteration.
     """
     if iters < 1:
         raise ValueError("iters must be >= 1")
@@ -111,9 +111,7 @@ def pagerank(edges: DataFrame | None = None, iters: int = 3,
     if adj is None:
         if edges is None:
             raise ValueError("pass edges or adj")
-        adj = build_adjacency(edges, src, dst) \
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        adj.count()
+        adj = build_adjacency(edges, src, dst)
     base = F.lit(1.0 - damping)
     d = F.lit(damping)
 

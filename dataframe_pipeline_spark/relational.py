@@ -206,8 +206,7 @@ PROBE_MIN_SAMPLED_ROWS = 1000
 #: was already this API's documented contract; the cache makes it so:
 #: repeated gated joins over the same (unchanged) fact skip the probe
 #: job entirely, and a rewritten file misses the cache because its
-#: stat identity changed (same invalidation rule as the footer-row
-#: cache in ext_queries).
+#: stat identity changed.
 _HOT_SHARE_CACHE: dict = {}
 
 

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .base import cheap_row_count
+from .base import cheap_row_count, release_checkpoint, tracked_checkpoint
 from .dedup import QuantizedCosineDeduplicator, spread
 
 
@@ -243,8 +243,9 @@ class IVFIndex:
     _dfp_partition_hints = {"_assigned": ("__list",)}
     #: driver-resident serving-replica cache (search_batch_local) —
     #: a pure derivation of the fitted state; dropped at save time and
-    #: rebuilt lazily after load (persistence._NestedObj contract)
-    _dfp_transient = ("_replica", "_replica_id_col")
+    #: rebuilt lazily after load (persistence._NestedObj contract).
+    #: ``_pinned`` holds the ids of this session's checkpoint blocks.
+    _dfp_transient = ("_replica", "_replica_id_col", "_pinned")
 
     def __init__(self, k: int = 10, n_lists: int = 8, n_probe: int = 2,
                  scale: int = 1000, max_train: int = 65536):
@@ -255,6 +256,7 @@ class IVFIndex:
         self.max_train = max_train
         self.centroids_int = None    # list[list[int]]
         self._assigned = None        # DataFrame(id, __q, __nrm, __list)
+        self._pinned = []            # RDD ids of the checkpointed _assigned
         self._id_col = None
 
     def fit(self, df: DataFrame, id_col: str = "vec_id",
@@ -279,9 +281,19 @@ class IVFIndex:
             collect_vectors(sample, id_col), self.n_lists, scale=self.scale)
 
         self._id_col = id_col
-        self._assigned = self._assign(df, id_col, vec_col).persist()
-        self._assigned.count()
+        self.release()
+        self._assigned, self._pinned = tracked_checkpoint(
+            self._assign(df, id_col, vec_col))
         return self
+
+    def release(self) -> None:
+        """Free the cell table pinned by :meth:`fit` or :meth:`append`.
+        The blocks are this index's own checkpoint, so releasing never
+        uncaches a twin index fitted on the same frame.  A reloaded
+        index pins nothing."""
+        if self._pinned:
+            release_checkpoint(self._assigned.sparkSession, self._pinned)
+        self._pinned = []
 
     def _assign(self, df: DataFrame, id_col: str,
                 vec_col: str = "embedding") -> DataFrame:
@@ -324,11 +336,10 @@ class IVFIndex:
         above this API (recall drifts only if the data distribution
         does)."""
         assert self._assigned is not None, "call fit or read first"
-        old = self._assigned
-        self._assigned = old.unionByName(
-            self._assign(batch, self._id_col, vec_col)).persist()
-        self._assigned.count()
-        old.unpersist()
+        assigned, pinned = tracked_checkpoint(self._assigned.unionByName(
+            self._assign(batch, self._id_col, vec_col)))
+        self.release()
+        self._assigned, self._pinned = assigned, pinned
         # The driver-resident serving replica (search_batch_local) is a
         # fold of the PRE-append cell table — drop it so the next local
         # probe rebuilds against the extended corpus, preserving the
@@ -898,6 +909,9 @@ class PQIndex:
     the fit/export contract the write()/read() pair mirrors).
     """
 
+    #: ids of this session's checkpoint blocks: never saved
+    _dfp_transient = ("_pinned",)
+
     def __init__(self, k: int = 10, m: int = 8, k_sub: int = 16,
                  scale: int = 1000, max_train: int = 65536):
         self.k = k
@@ -907,6 +921,7 @@ class PQIndex:
         self.max_train = max_train
         self.codebooks = None        # list[m][k_sub][sub_dim] int
         self._codes = None           # DataFrame(id, __codes array<int>)
+        self._pinned = []            # RDD ids of the checkpointed _codes
         self._id_col = None
         self._src = None             # source frame, for search-by-id
 
@@ -965,14 +980,19 @@ class PQIndex:
         self._src = df.select(F.col(id_col), F.col(vec_col))
         qexpr = (f"transform({vec_col}, x -> "
                  f"cast(round(cast(x as double) * {self.scale}) as bigint))")
-        self._codes = (
+        self.release()
+        self._codes, self._pinned = tracked_checkpoint(
             spread_for_cpu(df)
             .select(F.col(id_col),
-                    F.expr(self._encode_expr(qexpr)).alias("__codes"))
-            .persist()
-        )
-        self._codes.count()
+                    F.expr(self._encode_expr(qexpr)).alias("__codes")))
         return self
+
+    def release(self) -> None:
+        """Free the codes table pinned by :meth:`fit` (see
+        :meth:`IVFIndex.release`)."""
+        if self._pinned:
+            release_checkpoint(self._codes.sparkSession, self._pinned)
+        self._pinned = []
 
     # -- search ------------------------------------------------------
 
@@ -1162,6 +1182,8 @@ class IVFPQIndex:
     """
 
     _dfp_partition_hints = {"_table": ("__list",)}
+    #: ids of this session's checkpoint blocks: never saved
+    _dfp_transient = ("_pinned",)
 
     def __init__(self, k: int = 10, n_lists: int = 8, n_probe: int = 2,
                  m: int = 8, k_sub: int = 16, scale: int = 1000,
@@ -1176,6 +1198,7 @@ class IVFPQIndex:
         self.coarse_int = None       # list[n_lists][dim] int
         self.codebooks = None        # list[m][k_sub][sub_dim] int (residual domain)
         self._table = None           # DataFrame(id, __list, __codes)
+        self._pinned = []            # RDD ids of the checkpointed _table
         self._id_col = None
         self._src = None
 
@@ -1253,18 +1276,23 @@ class IVFPQIndex:
                  f"(cb, s) -> {per_sub}))[0]")
         self._id_col = id_col
         self._src = df.select(F.col(id_col), F.col(vec_col))
-        self._table = (
+        self.release()
+        self._table, self._pinned = tracked_checkpoint(
             spread_for_cpu(df)
             .select(F.col(id_col), F.expr(qexpr).alias("__q"))
             .withColumn("__dists", F.expr(dists))
             .withColumn("__list", F.expr(lst))
             .withColumn("__res", F.expr(res))
             .withColumn("__codes", F.expr(codes))
-            .select(F.col(id_col), "__list", "__codes")
-            .persist()
-        )
-        self._table.count()
+            .select(F.col(id_col), "__list", "__codes"))
         return self
+
+    def release(self) -> None:
+        """Free the codes table pinned by :meth:`fit` (see
+        :meth:`IVFIndex.release`)."""
+        if self._pinned:
+            release_checkpoint(self._table.sparkSession, self._pinned)
+        self._pinned = []
 
     def _adc_expr(self, tables: list[list[int]]) -> str:
         tbls = ", ".join(

@@ -20,7 +20,9 @@ classic TPC-H shapes (Q1/Q3/Q5 live in ``ext_queries``).
 Scale notes (the 100 TB plan, not the sf0.01 one):
 
 * Every sum that feeds a value hash is an exact DECIMAL sum cast to
-  double at the end — reduction order can never flip a hash.
+  double once at the end (revenue is ``ext_queries._rev``, the twin of
+  the oracle's ``_REV``) — reduction order can never flip a hash, and
+  each query has one plan whatever its input's statistics.
 * True dims (nation/region/supplier/part subsets, per-part or per-order
   aggregates bounded by a dim) get the size-gated ``maybe_broadcast``
   hint; anything fact-derived is left to AQE, per the sf1 A/B in
@@ -41,27 +43,10 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from .ext_queries import _REV, _cents, _dec, _fin4, _long_sum_ok, _rev4
+from .ext_queries import _REV, _dec, _rev
 from .queries import _t
 from .relational import (DIM_BROADCAST_MAX_BYTES, maybe_broadcast,
                          maybe_shuffle_hash, stats_bytes)
-
-# Exact-decimal revenue expression (Spark side).  The SQL twin is
-# ext_queries._REV.
-def _rev():
-    return _dec("l_extendedprice") * (F.lit(1).cast("decimal(18,2)") - _dec("l_discount"))
-
-
-def _rev_plan(li):
-    """(row_expr, finish) for exact revenue aggregation: the gated
-    integer-cents fast path (r10 — rationale, A/B numbers, and the
-    overflow gate are documented at ext_queries._rev4).  Sum the row
-    expression (partials re-sum freely — associative), then
-    ``finish(col)`` yields the double, with exactly one double rounding
-    on either branch so the gate can never flip a value hash."""
-    if _long_sum_ok(li):
-        return _rev4(), _fin4
-    return _rev(), (lambda c, scale=None: c.cast("double"))
 
 
 def _dbl(c):
@@ -182,9 +167,7 @@ def q_tpch_q7_volume(spark, sf_dir):
     od = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     dim = (od.join(maybe_broadcast(cu), od.o_custkey == cu.c_custkey)
            .select("o_orderkey", "cust_nation"))
-    li_scan = _t(spark, sf_dir, "lineitem")
-    rv, fin = _rev_plan(li_scan)
-    li = (li_scan
+    li = (_t(spark, sf_dir, "lineitem")
           .filter((F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
                   & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))))
     return (
@@ -194,9 +177,9 @@ def q_tpch_q7_volume(spark, sf_dir):
                 | ((F.col("supp_nation") == _Q7_N2) & (F.col("cust_nation") == _Q7_N1)))
         .groupBy("supp_nation", "cust_nation",
                  F.year("l_shipdate").alias("l_year"))
-        .agg(F.sum(rv).alias("_r"))
+        .agg(F.sum(_rev()).alias("_r"))
         .select("supp_nation", "cust_nation", "l_year",
-                fin(F.col("_r")).alias("revenue"))
+                _dbl("_r").alias("revenue"))
     )
 
 
@@ -255,9 +238,7 @@ def q_tpch_q8_share(spark, sf_dir):
                 F.col("s_nationkey") == F.col("n_nationkey"))
           .select("s_suppkey", "supp_nation"))
     li = _t(spark, sf_dir, "lineitem")
-    vol, fin = _rev_plan(li)
-    zero = (F.lit(0).cast("long") if _long_sum_ok(li)
-            else F.lit(0).cast("decimal(18,2)"))
+    vol = _rev()
     return (
         li.join(maybe_broadcast(pt), li.l_partkey == pt.p_partkey, "left_semi")
         .join(maybe_broadcast(su), li.l_suppkey == su.s_suppkey)
@@ -265,11 +246,10 @@ def q_tpch_q8_share(spark, sf_dir):
         .groupBy(F.year("o_orderdate").alias("o_year"))
         .agg(
             F.sum(F.when(F.col("supp_nation") == _Q8_NATION, vol)
-                  .otherwise(zero)).alias("_num"),
+                  .otherwise(F.lit(0).cast("decimal(18,2)"))).alias("_num"),
             F.sum(vol).alias("_den"))
         .select("o_year",
-                F.round(fin(F.col("_num"))
-                        / fin(F.col("_den")), 6).alias("mkt_share"))
+                F.round(_dbl("_num") / _dbl("_den"), 6).alias("mkt_share"))
     )
 
 
@@ -326,24 +306,9 @@ def q_tpch_q9_profit(spark, sf_dir):
     shuffle, and the (nation, year) aggregate partial-sums in the join
     stage, so the post-join exchange is ~175 rows."""
     li = _t(spark, sf_dir, "lineitem")
-    # Gated integer arithmetic for BOTH money terms (r10, rationale at
-    # ext_queries._rev4): revenue as rev·10⁴ longs; cost in tenth-cent
-    # units — supp_cost = 0.5·p_retailprice has at most 3 decimals, so
-    # retail_cents·5 (computed once on the 200k-row part dim) times the
-    # integer quantity is exact, per-row ≤ 5.25e7 (under the same
-    # bound the gate proves for rev·10⁴).  Each term's sum gets ONE
-    # exact decimal divide then one double rounding, matching the
-    # oracle's CAST(sum AS DOUBLE) per term.
-    fast = _long_sum_ok(li)
-    if fast:
-        supp_cost = (_cents("p_retailprice") * F.lit(5)).alias("supp_cost")
-        cost = F.col("supp_cost") * F.col("l_quantity").cast("long")
-        rv = _rev4()
-    else:
-        supp_cost = (F.col("p_retailprice").cast("decimal(12,2)")
-                     * F.lit("0.5").cast("decimal(4,2)")).alias("supp_cost")
-        cost = (F.col("supp_cost") * F.col("l_quantity").cast("decimal(12,2)"))
-        rv = _rev()
+    supp_cost = (F.col("p_retailprice").cast("decimal(12,2)")
+                 * F.lit("0.5").cast("decimal(4,2)")).alias("supp_cost")
+    cost = F.col("supp_cost") * F.col("l_quantity").cast("decimal(12,2)")
     pt = (_t(spark, sf_dir, "part")
           .filter(F.col("p_name").contains(_Q9_PATTERN))
           .select("p_partkey", supp_cost))
@@ -358,7 +323,7 @@ def q_tpch_q9_profit(spark, sf_dir):
         li.join(maybe_broadcast(pt), li.l_partkey == pt.p_partkey)
         .join(maybe_broadcast(su), li.l_suppkey == su.s_suppkey)
         .select("l_orderkey", "n_name",
-                rv.alias("_rv"), cost.alias("_cv"))
+                _rev().alias("_rv"), cost.alias("_cv"))
     )
     agg = (
         fact.join(maybe_shuffle_hash(od, bound_df=od_scan),
@@ -366,12 +331,8 @@ def q_tpch_q9_profit(spark, sf_dir):
         .groupBy(F.col("n_name").alias("nation"), "o_year")
         .agg(F.sum("_rv").alias("_r"), F.sum("_cv").alias("_c"))
     )
-    if fast:
-        profit = _fin4(F.col("_r")) - _fin4(F.col("_c"), 1000)
-    else:
-        profit = F.col("_r").cast("double") - F.col("_c").cast("double")
     return agg.select("nation", "o_year",
-                      F.round(profit, 6).alias("sum_profit"))
+                      F.round(_dbl("_r") - _dbl("_c"), 6).alias("sum_profit"))
 
 
 SQL_TPCH_Q9 = f"""
@@ -407,26 +368,23 @@ def q_tpch_q10_returns(spark, sf_dir):
           .filter((F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
                   & (F.col("o_orderdate") < F.lit("1996-04-01").cast("timestamp")))
           .select("o_orderkey", "o_custkey"))
-    li_scan = _t(spark, sf_dir, "lineitem")
-    rv, fin = _rev_plan(li_scan)
-    li = li_scan.filter(F.col("l_returnflag") == "R")
+    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
     rev_per_cust = (
         li.join(od, li.l_orderkey == od.o_orderkey)
         .groupBy("o_custkey")
-        .agg(F.sum(rv).alias("_r")))
+        .agg(F.sum(_rev()).alias("_r")))
     cu = _t(spark, sf_dir, "customer")
     na = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    # Rank on the RAW per-customer sum (the finisher is strictly
-    # monotone, so order and ties are identical) and finish only the
-    # surviving 20 rows — the per-row finish never touches the
-    # per-customer grain.
+    # Rank on the exact per-customer sum (the double cast is monotone,
+    # so order and ties are the oracle's) and cast only the surviving
+    # 20 rows.
     return (
         rev_per_cust
         .join(maybe_broadcast(cu), rev_per_cust.o_custkey == cu.c_custkey)
         .join(maybe_broadcast(na), cu.c_nationkey == na.n_nationkey)
         .orderBy(F.desc("_r"), F.asc("c_custkey"))
         .limit(20)
-        .select("c_custkey", "c_name", fin(F.col("_r")).alias("revenue"),
+        .select("c_custkey", "c_name", _dbl("_r").alias("revenue"),
                 "c_acctbal", "n_name", "c_mktsegment")
     )
 
@@ -500,20 +458,16 @@ def q_tpch_q14_promo(spark, sf_dir):
     One scan, one broadcast dim join, one aggregate — the CASE share
     pattern again (no self-join, no second pass)."""
     pt = _t(spark, sf_dir, "part").select("p_partkey", "p_type")
-    li_scan = _t(spark, sf_dir, "lineitem")
-    vol, fin = _rev_plan(li_scan)
-    zero = (F.lit(0).cast("long") if _long_sum_ok(li_scan)
-            else F.lit(0).cast("decimal(18,2)"))
-    li = (li_scan
+    vol = _rev()
+    li = (_t(spark, sf_dir, "lineitem")
           .filter((F.col("l_shipdate") >= F.lit("1996-03-01").cast("timestamp"))
                   & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))))
     return (
         li.join(maybe_broadcast(pt), li.l_partkey == pt.p_partkey)
         .agg(F.sum(F.when(F.col("p_type") == "PROMO", vol)
-                   .otherwise(zero)).alias("_num"),
+                   .otherwise(F.lit(0).cast("decimal(18,2)"))).alias("_num"),
              F.sum(vol).alias("_den"))
-        .select(F.round(F.lit(100.0) * fin(F.col("_num"))
-                        / fin(F.col("_den")), 6)
+        .select(F.round(F.lit(100.0) * _dbl("_num") / _dbl("_den"), 6)
                 .alias("promo_revenue_pct"))
     )
 
@@ -538,23 +492,20 @@ def q_tpch_q15_top_supplier(spark, sf_dir):
     The scalar subquery becomes a 1-row max aggregate broadcast-joined
     against the per-supplier aggregate; equality compares the exact
     decimals, so ties and float fuzz can't drop a row."""
-    li_scan = _t(spark, sf_dir, "lineitem")
-    rv, fin = _rev_plan(li_scan)
-    li = (li_scan
+    li = (_t(spark, sf_dir, "lineitem")
           .filter((F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
                   & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))))
     per_supp = (li.groupBy("l_suppkey")
-                .agg(F.sum(rv).alias("_total")))
+                .agg(F.sum(_rev()).alias("_total")))
     mx = per_supp.agg(F.max("_total").alias("_mx"))
     su = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    # the max-equality join compares the exact raw sums (longs under
-    # the gate, decimals past it) — ties and float fuzz can't drop a
-    # row; the finisher runs only on the surviving tie rows
+    # the max-equality join compares the exact decimal sums — ties and
+    # float fuzz can't drop a row; only the surviving tie rows are cast
     return (
         per_supp.join(F.broadcast(mx), per_supp._total == mx._mx)
         .join(maybe_broadcast(su), F.col("l_suppkey") == su.s_suppkey)
         .select("s_suppkey", "s_name",
-                fin(F.col("_total")).alias("total_revenue"))
+                _dbl("_total").alias("total_revenue"))
     )
 
 
@@ -707,10 +658,9 @@ def q_tpch_q19_disjunct(spark, sf_dir):
            & F.col("l_quantity").between(10, 20))
         | ((F.col("p_brand") == "Brand#3") & F.col("p_size").between(1, 25)
            & F.col("l_quantity").between(20, 30)))
-    rv, fin = _rev_plan(li)
     return (joined.filter(cond)
-            .agg(F.sum(rv).alias("_r"))
-            .select(fin(F.col("_r")).alias("revenue")))
+            .agg(F.sum(_rev()).alias("_r"))
+            .select(_dbl("_r").alias("revenue")))
 
 
 SQL_TPCH_Q19 = f"""
@@ -977,14 +927,12 @@ def q_tpch_q11_value(spark, sf_dir):
     su = (_t(spark, sf_dir, "supplier")
           .join(F.broadcast(na), F.col("s_nationkey") == na.n_nationkey)
           .select("s_suppkey"))
-    li_scan = _t(spark, sf_dir, "lineitem")
-    rv, fin = _rev_plan(li_scan)
-    li = (li_scan
+    li = (_t(spark, sf_dir, "lineitem")
           .select("l_partkey", "l_suppkey", "l_extendedprice", "l_discount")
           .join(maybe_broadcast(su), F.col("l_suppkey") == su.s_suppkey,
                 "left_semi"))
     per_part = (li.groupBy("l_partkey")
-                .agg(F.sum(rv).alias("_val"))
+                .agg(F.sum(_rev()).alias("_val"))
                 .localCheckpoint(eager=True))
     # the threshold compare replays the oracle's DOUBLE comparison
     # exactly: finish both sides (one rounding each), then compare —
@@ -997,10 +945,10 @@ def q_tpch_q11_value(spark, sf_dir):
     # (filter both sides + projection), the same per-row decimal cost
     # class the r10 finisher lesson documents in SCALE.md.
     total = (per_part.agg(F.sum("_val").alias("_t"))
-             .select(fin(F.col("_t")).alias("_totd")))
+             .select(_dbl("_t").alias("_totd")))
     return (
         per_part
-        .withColumn("part_value", fin(F.col("_val")))
+        .withColumn("part_value", _dbl("_val"))
         .crossJoin(F.broadcast(total))
         .filter(F.col("part_value") > F.lit(_Q11_FRACTION) * F.col("_totd"))
         .select(F.col("l_partkey").alias("p_partkey"), "part_value")

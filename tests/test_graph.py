@@ -69,6 +69,19 @@ def test_pagerank_validation(spark):
         pagerank(df, damping=1.0)
 
 
+def test_pagerank_over_edges_pins_nothing(spark):
+    """``pagerank(edges=...)`` builds its adjacency lazily: collecting
+    it adds no id to the persistent-RDD map."""
+    jsc = spark.sparkContext._jsc
+    edges = spark.createDataFrame([(1, 2), (2, 3), (3, 1)],
+                                  "src long, dst long")
+    before = set(jsc.getPersistentRDDs().keySet())
+    got = {r.id: r.pr for r in pagerank(edges, iters=2).collect()}
+    assert set(got) == {1, 2, 3}
+    # earlier tests' RDDs may be released meanwhile; none may be added
+    assert set(jsc.getPersistentRDDs().keySet()) <= before
+
+
 def test_registry_pagerank_pins_nothing(spark):
     """The ``graph_pagerank`` registry row builds its adjacency lazily:
     collecting it adds nothing to the persistent-RDD map, and it ranks

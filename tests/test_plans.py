@@ -47,39 +47,57 @@ def test_lookup_join_broadcast_iff_table_held(spark, no_auto_broadcast,
 
 
 def test_events_latest_is_hash_aggregate(spark, qs):
-    """VERDICT r11 #3: latest-per-key must plan as a partial-aggregated
-    HASH aggregate (packed decimal ordering key) — no Window, no
-    SortAggregate (a struct-max buffer would silently fall back to
-    per-partition sorts)."""
+    """VERDICT r11 #3: latest-per-key is an aggregate, not a window, and
+    it aggregates partially before the shuffle, so the exchange carries
+    at most one row per (user, type) per task.  The struct-max buffer
+    plans as a SortAggregate; the partial ``max`` must sit below the
+    exchange."""
     p = _plan(qs["events_latest"](spark, SF))
     assert "Window" not in p
-    assert "SortAggregate" not in p
-    assert "HashAggregate" in p
+    exchange = p.index("Exchange hashpartitioning(user_id")
+    assert exchange < p.index("partial_max(struct(")
 
 
-def test_events_latest_pack_gate_falls_back(spark):
-    """All three statistics-gated tiers (long pack / decimal pack /
-    struct-max) agree on values; disabling each gate takes the next
-    always-correct tier."""
-    import unittest.mock as mock
+def test_events_latest_matches_row_number_reference(spark, tmp_path):
+    """events_latest returns the row that ``row_number() OVER (PARTITION
+    BY user_id, event_type ORDER BY ts DESC, event_id DESC)`` ranks
+    first, on the test events plus crafted ties: two NULL ``ts`` in one
+    group (the larger ``event_id`` wins), a NULL beside a real ``ts``
+    (the real one wins) and two equal ``ts``."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
 
     from dataframe_pipeline_spark import ext_queries as xq
 
-    fast = xq.q_events_latest(spark, SF)          # long pack at test SF
-    assert "SortAggregate" not in _plan(fast)
-    with mock.patch.object(xq, "_latest_long_pack_params",
-                           return_value=None):
-        mid = xq.q_events_latest(spark, SF)       # decimal pack
-    assert "SortAggregate" not in _plan(mid)
-    with mock.patch.object(xq, "_latest_long_pack_params",
-                           return_value=None), \
-            mock.patch.object(xq, "_col_within", return_value=False):
-        slow = xq.q_events_latest(spark, SF)      # struct fallback
-    p = _plan(slow)
-    assert "Window" not in p          # still an aggregate, not a window
-    want = sorted(map(tuple, fast.collect()))
-    assert want == sorted(map(tuple, mid.collect()))
-    assert want == sorted(map(tuple, slow.collect()))
+    events = pq.read_table(SF + "/events.parquet")
+    t0, t1 = dt.datetime(2030, 1, 1), dt.datetime(2030, 1, 2)
+    u1, u2, e0 = 10**9, 10**9 + 1, 10**6
+    extra = pa.table({
+        "event_id": [e0 + i for i in range(7)],
+        "ts": [None, None, None, t0, t1, t1, t0],
+        "user_id": [u1, u1, u1, u1, u2, u2, u2],
+        "event_type": ["x", "x", "y", "y", "x", "x", "x"],
+        "value": [float(i) for i in range(7)],
+        "props": [None] * 7}, schema=events.schema)
+    pq.write_table(pa.concat_tables([events, extra]),
+                   str(tmp_path / "events.parquet"))
+    sf = str(tmp_path)
+
+    w = (Window.partitionBy("user_id", "event_type")
+         .orderBy(F.desc("ts"), F.desc("event_id")))
+    want = (xq._events(spark, sf)
+            .withColumn("__rn", F.row_number().over(w))
+            .filter("__rn = 1")
+            .select("event_id", "user_id", "event_type", "value"))
+    got = xq.q_events_latest(spark, sf).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want.collect()))
+    assert {(r.user_id, r.event_type): r.event_id
+            for r in got if r.user_id >= u1} == {
+        (u1, "x"): e0 + 1, (u1, "y"): e0 + 3, (u2, "x"): e0 + 5}
 
 
 def test_row_filter_pushed_to_scan(spark, qs):
@@ -299,14 +317,11 @@ def test_incremental_dedup_shuffles_digests_not_bodies(spark, qs):
 
 
 def test_revenue_by_nation_preagg_below_join(spark, qs):
-    """The r9 shuffle-minimal shape + r10 cents arithmetic, pinned
-    (VERDICT r9 #3): the per-orderkey pre-aggregate must sit BELOW the
-    fact join (the join moves ~|orders| partials, never |lineitem| raw
-    rows), the group/shuffle key must be the INT nationkey with the
-    25-row name join after the aggregate, and under the overflow gate
-    the fact aggregate must sum LONGS (no decimal(18,2) anywhere in
-    the plan — the fast path's only decimal is the final 25-row
-    finisher)."""
+    """The r9 shuffle-minimal shape, pinned (VERDICT r9 #3): the
+    per-orderkey pre-aggregate must sit BELOW the fact join (the join
+    moves ~|orders| partials, never |lineitem| raw rows), and the
+    group/shuffle key must be the INT nationkey with the 25-row name
+    join after the aggregate."""
     p = _plan(qs["revenue_by_nation"](spark, SF))
     pre = p.index("HashAggregate(keys=[l_orderkey")
     # the fact join appears above (= earlier in the tree print than)
@@ -315,14 +330,12 @@ def test_revenue_by_nation_preagg_below_join(spark, qs):
                               p.find("SortMergeJoin")) if i >= 0)
     assert join_at < pre
     assert "hashpartitioning(c_nationkey" in p
-    assert "decimal(18,2)" not in p            # cents fast path engaged
 
 
 def test_revenue_rollup_single_expand_on_preagg(spark, qs):
     """Rollup runs on the 6-row pre-aggregate: ONE scan, ONE Expand,
     and the Expand sits above the finest-grain aggregate — never on
-    the raw fact rows (VERDICT r9 #3).  Long-cents sums under the
-    gate."""
+    the raw fact rows (VERDICT r9 #3)."""
     p = _plan(qs["revenue_rollup"](spark, SF))
     assert p.count("FileScan") == 1
     assert p.count("Expand") == 1
@@ -331,64 +344,16 @@ def test_revenue_rollup_single_expand_on_preagg(spark, qs):
     # l_returnflag and prints first), and the finest agg above the scan
     finest = p.rindex("HashAggregate(keys=[l_returnflag")
     assert p.index("Expand") < finest < p.index("FileScan")
-    assert "decimal(18,2)" not in p            # cents fast path engaged
 
 
 def test_q9_shuffle_hash_under_gate(spark, qs):
     """Q9's only shuffle join is the size-gated SHUFFLE-HASH against
     orders (r9, A/B-measured); under the gate the hint must
-    materialize as a ShuffledHashJoin, with the dims broadcast and the
-    money terms in long cents (VERDICT r9 #3)."""
+    materialize as a ShuffledHashJoin, with the dims broadcast
+    (VERDICT r9 #3)."""
     p = _plan(qs["tpch_q9_profit"](spark, SF))
     assert "ShuffledHashJoin" in p
     assert p.count("BroadcastHashJoin") >= 2   # part, supplier⋈nation
-    assert "decimal(18,2)" not in p            # cents fast path engaged
-
-
-def test_long_sum_gate_uses_exact_footer_rows(spark):
-    """ADVICE r10: the overflow gate must bound rows EXACTLY from
-    parquet footers (no compressed-bytes/8 heuristic), open the fast
-    path on the tiny table, close it when the per-row bound makes the
-    exact count overflow-unsafe, and refuse (False) for non-file
-    sources where no footer exists — degrading to the always-correct
-    decimal path, never to a guess."""
-    from dataframe_pipeline_spark.ext_queries import (_long_sum_ok,
-                                                      _parquet_file_rows)
-
-    li = spark.read.parquet(SF + "/lineitem.parquet")
-    n_exact = li.count()
-    footer_total = sum(_parquet_file_rows(f) for f in li.inputFiles())
-    assert footer_total == n_exact             # footers ARE the count
-    assert _long_sum_ok(li)                    # sf0.001 provably safe
-    # per-row bound so large that even this tiny table must refuse
-    assert not _long_sum_ok(li, per_row_max=1 << 62)
-    # bound sized to the exact count still passes
-    assert _long_sum_ok(li, per_row_max=(1 << 62) // n_exact)
-    # non-file source: no footer to prove the bound -> decimal path
-    assert not _long_sum_ok(spark.range(10))
-
-
-def test_fin4_double_fast_path_is_bit_identical(spark):
-    """r11: the gated pure-double finisher must produce the EXACT bits
-    of the decimal divide on both sides of the 2^53 boundary — below it
-    the long→double cast is exact and the IEEE divide by 10000.0 is the
-    same single rounding; above it the row must take the decimal
-    branch.  Values chosen to make a naive double path differ."""
-    from pyspark.sql import functions as F
-
-    from dataframe_pipeline_spark.ext_queries import _fin4
-
-    vals = [0, 1, 12345, 10**9 + 7, (1 << 53) - 1, (1 << 53) + 1,
-            10**16 + 1, 10**17 + 3, -(10**16 + 1)]
-    df = spark.createDataFrame([(v,) for v in vals], "v long")
-    got = [r["f"] for r in
-           df.select(_fin4(F.col("v")).alias("f")).collect()]
-    want = [r["f"] for r in df.select(
-        (F.col("v").cast("decimal(38,0)") / F.lit(10000))
-        .cast("double").alias("f")).collect()]
-    import struct
-    assert [struct.pack("d", g) for g in got] == \
-        [struct.pack("d", w) for w in want]
 
 
 def test_funnel_single_shuffle(spark, qs):

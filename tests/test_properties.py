@@ -323,51 +323,3 @@ def test_exact_percentile_operators_match_percentile(spark, xs, qs, n_bins):
     sdf = spark.createDataFrame(pd.DataFrame({"x": data}))
     assert_operators_match_percentile(sdf, ["x"], clip_qs=[sorted(qs)],
                                       n_bins=n_bins)
-
-
-@given(c=st.integers(min_value=0, max_value=10**13),
-       d=st.integers(min_value=0, max_value=99))
-@SET
-def test_integer_cents_formulation_is_exact(c, d):
-    """The r10 gated cents fast path's exactness claim, as a property:
-    for ANY positive 2-dp money value (c cents, up to 10^11 dollars —
-    far past the overflow gate's own bound) the pure-double
-    ``(x*100 + 0.5) -> long`` recovery returns exactly c (float64
-    error at 10^13 is ~0.005, under the 0.5 guard), and the long
-    product cents*(100-disc_pct) equals the exact rational
-    price*(1-disc)*10^4 — i.e. the fast path computes the same number
-    the decimal(18,2) multiply-sum computes, term by term."""
-    from fractions import Fraction
-
-    price = c / 100.0                       # the parquet double
-    cents = int(price * 100.0 + 0.5)        # Spark: (col*100+0.5) cast long
-    assert cents == c
-    disc = d / 100.0
-    dpct = int(disc * 100.0 + 0.5)
-    assert dpct == d
-    rev4 = cents * (100 - dpct)
-    assert Fraction(rev4, 10**4) == \
-        Fraction(c, 100) * (1 - Fraction(d, 100))
-
-
-def test_integer_cents_matches_decimal_sum_on_frame(spark):
-    """Same claim end-to-end through Spark codegen: the long-cents sum
-    finished by one decimal divide equals the decimal(18,2)
-    multiply-sum, on a frame that includes the rounding-hostile cases
-    (x.x5 cents, large magnitudes)."""
-    from pyspark.sql import functions as F
-
-    from dataframe_pipeline_spark.ext_queries import _cents, _dec, _fin4
-
-    rows = [(c / 100.0, d / 100.0)
-            for c in [1, 5, 99, 105, 1005, 123456789012, 10**13 - 7]
-            for d in [0, 5, 7, 99]]
-    df = spark.createDataFrame(rows, "l_extendedprice double, l_discount double")
-    fast = df.agg(_fin4(F.sum(_cents("l_extendedprice")
-                               * (F.lit(100) - _cents("l_discount"))))
-                  .alias("v")).head()["v"]
-    slow = df.agg(F.sum(_dec("l_extendedprice")
-                        * (F.lit(1).cast("decimal(18,2)")
-                           - _dec("l_discount")))
-                  .cast("double").alias("v")).head()["v"]
-    assert fast == slow

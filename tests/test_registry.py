@@ -1,4 +1,4 @@
-"""Registry hygiene gate (VERDICT r5 #8): the two invariants the
+"""Registry hygiene gate (VERDICT r5 #8): the invariants the
 judge otherwise has to verify by hand each round.
 
 (a) every declared query has a DuckDB oracle (value-parity, not
@@ -6,15 +6,35 @@ judge otherwise has to verify by hand each round.
     silent downgrade of the correctness gate;
 (b) the committed PLANLINT.json covers exactly the current registry
     with zero violations — a new query that never went through the
-    plan linter could hide a cartesian/row-Python regression.
+    plan linter could hide a cartesian/row-Python regression;
+(c) the rows with one exact revenue or latest-per-key plan return
+    their oracle's values at sf0.001.
 """
 
+import importlib.util
 import json
 import os
+
+import pytest
 
 import __spark_entry__ as entrymod
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+SF = "/root/testdata/sf0.001"
+#: q7's nation pair and q11's value threshold keep no row at sf0.001
+SF_NONEMPTY = {"tpch_q7_volume": "/root/testdata/sf0.01",
+               "tpch_q11_value": "/root/testdata/sf0.01"}
+
+#: Rows whose revenue sum or latest-per-key aggregate has one exact plan;
+#: each is compared value for value with its DuckDB oracle.
+ONE_PLAN_ROWS = [
+    "tpch_pricing_summary", "top_revenue_orders", "revenue_by_nation",
+    "revenue_rollup", "revenue_grouping_sets", "join_salted",
+    "join_salted_auto", "tpch_q7_volume", "tpch_q8_share",
+    "tpch_q9_profit", "tpch_q10_returns", "tpch_q11_value",
+    "tpch_q14_promo", "tpch_q15_top_supplier", "tpch_q19_disjunct",
+    "events_latest",
+]
 
 
 def test_every_query_has_an_oracle():
@@ -55,3 +75,44 @@ def test_queries_md_matches_generator():
         assert out == f.read(), (
             "QUERIES.md is stale: run "
             "python scripts/gen_queries_md.py > QUERIES.md")
+
+
+@pytest.fixture(scope="module")
+def check_oracle():
+    spec = importlib.util.spec_from_file_location(
+        "check_oracle", os.path.join(REPO, "scripts", "check_oracle.py"))
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+@pytest.fixture(scope="module")
+def duck(check_oracle):
+    """``duck(sf_dir)``: a DuckDB connection with the tables of
+    ``sf_dir`` as views, one per directory."""
+    import duckdb
+
+    cons = {}
+
+    def connect(sf_dir):
+        if sf_dir not in cons:
+            con = cons[sf_dir] = duckdb.connect()
+            for t in check_oracle.TABLES:
+                con.sql(f"CREATE VIEW {t} AS "
+                        f"SELECT * FROM '{sf_dir}/{t}.parquet'")
+        return cons[sf_dir]
+
+    yield connect
+    for con in cons.values():
+        con.close()
+
+
+@pytest.mark.parametrize("name", ONE_PLAN_ROWS)
+def test_one_plan_row_matches_oracle(spark, check_oracle, duck, name):
+    """The row's Spark plan returns its oracle's rows, normalized as
+    scripts/check_oracle.py compares them."""
+    sf = SF_NONEMPTY.get(name, SF)
+    got = entrymod.queries()[name](spark, sf).toPandas()
+    exp = duck(sf).sql(entrymod.oracle_sql(sf, names={name})[name]).df()
+    assert len(exp) > 0
+    assert check_oracle.norm_rows(got) == check_oracle.norm_rows(exp)

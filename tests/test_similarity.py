@@ -62,6 +62,32 @@ def test_ivf_index_matches_bruteforce_top1(spark):
     assert 0 < part.count() <= 5
 
 
+def test_ivf_release_keeps_twin_index_pinned(spark):
+    """Each index pins its own cell table: releasing one of two indexes
+    fitted identically on the same frame leaves the other's blocks in
+    the persistent-RDD map and its search results unchanged."""
+    from dataframe_pipeline_spark.similarity import IVFIndex
+
+    jsc = spark.sparkContext._jsc
+
+    def live():
+        return set(jsc.getPersistentRDDs().keySet())
+
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    before = live()
+    first = IVFIndex(k=5, n_lists=4, n_probe=2).fit(emb)
+    mid = live()
+    second = IVFIndex(k=5, n_lists=4, n_probe=2).fit(emb)
+    first_ids, second_ids = mid - before, live() - mid
+    assert first_ids and second_ids, "each index pins blocks of its own"
+    want = second.search(query_id=0).collect()
+    first.release()
+    assert second_ids <= live()
+    assert second.search(query_id=0).collect() == want
+    second.release()
+    assert not (first_ids | second_ids) & live()
+
+
 def test_ivf_fit_is_partition_independent(spark):
     """The IVF trainer's sample is content-addressed (md5-mod of the id,
     then id-ordered) — fitted centroids must be identical no matter how
