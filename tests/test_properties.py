@@ -4,11 +4,12 @@ pandas formulas (NaN→NULL normalized).  Beyond the reference's own test
 suite, which is golden-frame only (SURVEY.md §5)."""
 
 import math
+from fractions import Fraction
 
 import numpy as np
 import pandas as pd
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 SET = settings(max_examples=10, deadline=None,
@@ -117,7 +118,16 @@ def test_scaler_minmax_matches_sklearn_formula(spark, xs):
         assert _norm(out[i]) == _norm(None if math.isnan(v) else exp[i])
 
 
+def _exact_mean(xs):
+    """Correctly rounded mean of the non-NaN values, NaN if none: the
+    arithmetic mean pandas' ``mean`` approximates in summation order."""
+    vals = [Fraction(v) for v in xs if not math.isnan(v)]
+    return float(sum(vals) / len(vals)) if vals else float("nan")
+
+
 @given(xs=floats)
+@example(xs=[float("nan"), 0.0, 0.5, -0.5, 1.401298464324817e-45])
+@example(xs=[1e6, 1e-11, -1e6, float("nan")])
 @SET
 def test_imputer_mean_transform_time(spark, xs):
     from dataframe_pipeline_spark import Imputer
@@ -125,20 +135,51 @@ def test_imputer_mean_transform_time(spark, xs):
     sdf = _spark_floats(spark, xs)
     out = _col(Imputer(inputs=["x"], outputs=["y"], strategy="mean")
                .fit_transform(sdf), "y")
-    mean = pd.Series(xs).mean()   # pandas skips NaN
+    # Under cancellation a summation-order mean (pandas', or Spark's avg
+    # over partitions) can miss by far more than an ulp: the first
+    # example's mean is 2**-151, which partition-order sums round to 0.0.
+    mean = _exact_mean(xs)
     for i, v in enumerate(xs):
         if math.isnan(v):
-            if pd.isna(mean):     # all-NaN column stays missing
+            if math.isnan(mean):  # all-NaN column stays missing
                 assert _norm(out[i]) is None
             else:
-                # Spark's avg and pandas' mean legitimately differ in
-                # the last ulp (different summation order); a 9-decimal
-                # round can land on different sides of the boundary, so
-                # compare the IMPUTED cells relatively (hypothesis
-                # found -333333.4444444245 vs ...4244 flipping _norm).
                 assert math.isclose(out[i], mean, rel_tol=1e-12)
         else:
             assert _norm(out[i]) == _norm(v)
+
+
+def test_imputer_mean_is_exact_across_magnitudes(spark):
+    """The mean fill is the correctly rounded mean for subnormals, exact
+    powers of two (where ``log2`` may round across the boundary), sums
+    past the double maximum, cancellation and float32 columns, over
+    several partitions."""
+    from dataframe_pipeline_spark import Imputer
+
+    tiny = 5e-324
+    cols = {
+        "sub": [tiny, 3 * tiny, -tiny, 2.0 ** -1022, 2.0 ** -1022 - tiny],
+        "pow2": [2.0 ** e for e in (-1074, -60, -1, 0, 1, 52, 53, 1023)],
+        "big": [1.7e308, 1.7e308, -1.7e308, 1.7976931348623157e308],
+        "cancel": [1e16, 1.0, -1e16, 1.0, 0.1],
+    }
+    n = max(map(len, cols.values())) + 1   # every column ends in NaN
+    pdf = pd.DataFrame({c: pd.array(v + [math.nan] * (n - len(v)),
+                                    dtype="float64")
+                        for c, v in cols.items()})
+    pdf["f32"] = pd.array([0.1, -0.3, 7.5] + [math.nan] * (n - 3),
+                          dtype="float32")
+    pdf["i"] = range(n)
+    names = [c for c in pdf.columns if c != "i"]
+    out = {r["i"]: r for r in
+           Imputer(inputs=names, outputs=names, strategy="mean")
+           .fit_transform(spark.createDataFrame(pdf).repartition(3))
+           .collect()}
+    for c in names:
+        want = _exact_mean([float(v) for v in pdf[c]])
+        for i, v in enumerate(pdf[c]):
+            if math.isnan(v):
+                assert out[i][c] == want, (c, i, out[i][c], want)
 
 
 @given(vals=cats)
