@@ -23,7 +23,10 @@ built from its fitted state by its ``lookups()`` method: the key
 column and its normalization (:func:`lookup_key`), the table, the
 looked-up columns and the unseen value.  Batch transform applies them
 with :func:`join_lookups`; the serving tier compiles the same
-declarations into driver-side dicts.  How a lookup is applied depends
+declarations into driver-side dicts.  Other per-row outputs are
+declared by a ``column_exprs`` hook (:class:`ColumnView`), and batch
+transform is derived from the two (:meth:`SparkDFPBase.transform`).
+How a lookup is applied depends
 on its table.  A held table of at most ``INLINE_MAX_ROWS`` rows is
 written inline as a literal map (:func:`literal_lookup`), with no join
 and no job.  A larger held table is joined with a ``broadcast`` hint.
@@ -361,7 +364,20 @@ class SparkDFPBase:
         return self
 
     def transform(self, df: DataFrame) -> DataFrame:
-        raise NotImplementedError
+        """Batch transform, derived from the step's declarations in the
+        order serving composes them: ``lookups()`` (:func:`join_lookups`),
+        then the ``column_exprs`` hook (one ``withColumns``, and a
+        ``drop`` of the columns it maps to ``None``)."""
+        if hasattr(self, "lookups"):
+            df = join_lookups(df, self.lookups())
+        hook = getattr(self, "column_exprs", None)
+        updates = hook(ColumnView(df)) if hook else {}
+        if updates is None:
+            raise NotImplementedError(f"{type(self).__name__}: no column hook")
+        kept = {c: e for c, e in updates.items() if e is not None}
+        dropped = [c for c, e in updates.items() if e is None]
+        df = df.withColumns(kept) if kept else df
+        return df.drop(*dropped) if dropped else df
 
     def fit_transform(self, df: DataFrame, **params) -> DataFrame:
         return self.fit(df, **params).transform(df)
@@ -385,14 +401,6 @@ def is_floating(dtype: T.DataType) -> bool:
     return isinstance(dtype, _FLOATING)
 
 
-def is_numeric(dtype: T.DataType) -> bool:
-    return isinstance(dtype, T.NumericType)
-
-
-def field_type(df: DataFrame, name: str) -> T.DataType:
-    return df.schema[name].dataType
-
-
 def nan_to_null(df: DataFrame, name: str) -> Column:
     """Column expr for ``name`` with float NaN mapped to NULL.
 
@@ -406,14 +414,15 @@ class ColumnView:
     """The columns a step's column hook reads: the expression and type
     of each column of the frame it applies to.
 
-    An operator whose transform is pure per-row Column arithmetic
-    exposes ``column_exprs(view) -> {output: Column}`` (``None`` as a
-    value drops the column; ``None`` instead of a dict means this
+    An operator whose outputs are per-row Column arithmetic exposes
+    ``column_exprs(view) -> {output: Column}`` (``None`` as a value
+    drops the column; ``None`` instead of a dict means this
     configuration cannot be written as columns).  Over a DataFrame,
-    ``view.col(name)`` is ``F.col(name)``, so batch transform is
-    ``df.withColumns(step.column_exprs(ColumnView(df)))``; the serving
-    compiler passes a view whose columns are the expressions earlier
-    steps wrote, which composes a whole pipeline into one ``select``.
+    ``view.col(name)`` is ``F.col(name)``, and the default batch
+    transform (:meth:`SparkDFPBase.transform`) writes the hook's
+    columns with one ``withColumns``; the serving compiler passes a
+    view whose columns are the expressions earlier steps wrote, which
+    composes a whole pipeline into one ``select``.
     """
 
     def __init__(self, df: DataFrame):
@@ -429,24 +438,50 @@ class ColumnView:
     def dtype(self, name: str) -> T.DataType:
         return self._df.schema[name].dataType
 
+    def type_of(self, expr: Column) -> T.DataType:
+        """The type of an expression over the view (analysis, no job)."""
+        return self._df.select(expr).schema[0].dataType
+
     def nan_to_null(self, name: str) -> Column:
         col = self.col(name)
         if is_floating(self.dtype(name)):
             return F.when(F.isnan(col), F.lit(None)).otherwise(col)
         return col
 
+    def after(self, updates: dict) -> "ColumnView":
+        """This view after ``updates`` (a column hook's result) are
+        written: for a hook whose later outputs read its earlier ones."""
+        return _Written(self, updates)
 
-def stringify(df: DataFrame, name: str) -> Column:
+
+class _Written(ColumnView):
+    """``view`` with a hook's outputs written over it
+    (:meth:`ColumnView.after`)."""
+
+    def __init__(self, view: ColumnView, updates: dict):
+        self._view, self._updates = view, dict(updates)
+
+    def col(self, name: str) -> Column:
+        if name in self._updates:
+            return self._updates[name]
+        return self._view.col(name)
+
+    def dtype(self, name: str) -> T.DataType:
+        if name in self._updates:
+            return self._view.type_of(self._updates[name])
+        return self._view.dtype(name)
+
+
+def stringify(view: ColumnView, name: str) -> Column:
     """Cast a column to string the way ``str(x)`` does in Python.
 
     pandas ``astype(str)`` renders float NaN as ``'nan'``; Spark's cast
     renders it ``'NaN'`` — normalize to the pandas spelling so string ops
     (concat/split) agree with the reference.
     """
-    col = F.col(name)
-    dt = field_type(df, name)
+    col = view.col(name)
     s = col.cast("string")
-    if is_floating(dt):
+    if is_floating(view.dtype(name)):
         s = F.when(F.isnan(col), F.lit("nan")).otherwise(s)
     return s
 

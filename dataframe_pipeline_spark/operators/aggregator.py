@@ -30,8 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..base import (ColumnView, Lookup, SparkDFPBase, fit_table,
-                    join_lookups, nan_to_null)
+from ..base import Lookup, SparkDFPBase, fit_table, nan_to_null
 
 
 def _resolve_func(func):
@@ -110,18 +109,11 @@ class Aggregator(SparkDFPBase):
                                     {o: f"__dfp_{o}" for _, o in pairs})
         return self
 
-    def column_exprs(self, view):
-        """Global mode only; grouped mode is a lookup (``lookups``)."""
-        if self.groupby:
-            return None
+    def column_exprs(self, view) -> dict:
+        """Global mode's fitted scalars (none in grouped mode)."""
         return {output: F.lit(v) for output, v in zip(self.outputs, self.vals)}
 
     def lookups(self) -> list:
-        """Grouped mode only; global mode writes literals."""
+        """Grouped mode: one lookup per group key (none in global mode)."""
         return [Lookup(g, "nan", table, "__dfp_key", outmap)
                 for g, (table, outmap) in self._lookups.items()]
-
-    def transform(self, df: DataFrame) -> DataFrame:
-        if not self.groupby:
-            return df.withColumns(self.column_exprs(ColumnView(df)))
-        return join_lookups(df, self.lookups())

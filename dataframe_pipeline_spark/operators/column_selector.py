@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from ..base import ColumnView, SparkDFPBase
+from ..base import SparkDFPBase
 
 
 class ColumnSelector(SparkDFPBase):
@@ -38,8 +38,3 @@ class ColumnSelector(SparkDFPBase):
             listed = set(self.columns)
             drop = [c for c in columns if (c in listed) == self.drop]
         return {c: None for c in drop if c in columns}
-
-    def transform(self, df: DataFrame) -> DataFrame:
-        if self.drop_columns is None:  # allow un-fitted stateless use
-            self.fit(df)
-        return df.drop(*self.column_exprs(ColumnView(df)))

@@ -21,7 +21,6 @@ reference.  ``origin`` mode: ``timestamp_seconds(unix_ts(origin) + col)``.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..base import SparkDFPBase
@@ -34,29 +33,15 @@ class DateTransformer(SparkDFPBase):
         self.column = column
         self.origin = origin
 
-    def _timestamp(self, col):
-        if self.origin is None:
-            return F.to_timestamp(col)
-        return F.timestamp_seconds(
-            F.unix_timestamp(F.to_timestamp(F.lit(self.origin))) + col.cast("long")
-        )
-
-    @staticmethod
-    def _fields(column: str, t) -> dict:
-        fields = {
-            f"{column}_MY": F.month(t),
-            f"{column}_WY": F.weekofyear(t),
-            f"{column}_DY": F.dayofyear(t),
-            f"{column}_DM": F.dayofmonth(t),
-            f"{column}_DW": (F.dayofweek(t) + F.lit(5)) % 7,
-            f"{column}_HD": F.hour(t),
-        }
-        return {k: v.cast("long") for k, v in fields.items()}
-
     def column_exprs(self, view) -> dict:
-        ts = self._timestamp(view.col(self.column))
-        return {self.column: ts, **self._fields(self.column, ts)}
-
-    def transform(self, df: DataFrame) -> DataFrame:
-        df = df.withColumn(self.column, self._timestamp(F.col(self.column)))
-        return df.withColumns(self._fields(self.column, F.col(self.column)))
+        t = view.col(self.column)
+        if self.origin is None:
+            t = F.to_timestamp(t)
+        else:
+            t = F.timestamp_seconds(F.unix_timestamp(
+                F.to_timestamp(F.lit(self.origin))) + t.cast("long"))
+        fields = {"MY": F.month(t), "WY": F.weekofyear(t),
+                  "DY": F.dayofyear(t), "DM": F.dayofmonth(t),
+                  "DW": (F.dayofweek(t) + F.lit(5)) % 7, "HD": F.hour(t)}
+        return {self.column: t, **{f"{self.column}_{k}": v.cast("long")
+                                   for k, v in fields.items()}}

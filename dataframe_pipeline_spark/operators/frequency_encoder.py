@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..base import Lookup, SparkDFPBase, fit_table, join_lookups, nan_to_null
+from ..base import Lookup, SparkDFPBase, fit_table, nan_to_null
 
 
 class FrequencyEncoder(SparkDFPBase):
@@ -58,6 +58,3 @@ class FrequencyEncoder(SparkDFPBase):
         return [Lookup(c, "nan", self._lookups[c], "__dfp_val",
                        {o: "__dfp_cnt"}, default)
                 for c, o in zip(self.inputs, self.outputs)]
-
-    def transform(self, df: DataFrame) -> DataFrame:
-        return join_lookups(df, self.lookups())

@@ -110,10 +110,8 @@ class FunctionTransformer(SparkDFPBase):
 
     def transform(self, df: DataFrame) -> DataFrame:
         for input, output in zip(self.inputs, self.outputs):
-            input_cols = self._input_cols(input)
-            native = self._try_native([F.col(c) for c in input_cols])
-            if native is not None:
-                df = df.withColumn(output, native)
-            else:
-                df = df.withColumn(output, self._pandas_udf_col(df, input_cols))
+            cols = self._input_cols(input)
+            native = self._try_native([F.col(c) for c in cols])
+            df = df.withColumn(output, native if native is not None
+                               else self._pandas_udf_col(df, cols))
         return df

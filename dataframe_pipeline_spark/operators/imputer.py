@@ -16,7 +16,7 @@ Parity notes:
 The per-transform statistics are aggregated while the plan is built; at
 scale this is the price of the reference's per-batch semantics.  A
 median is one ``df.agg`` of exact ``percentile(c, 0.5)`` over all inputs.
-A float/double mean is the correctly rounded mean (``_exact_means``):
+A float/double mean is the correctly rounded mean (:func:`statistics`):
 Spark's ``avg`` sums doubles in partition order, so under cancellation
 it depends on the partitioning (``[0.0, 0.5, -0.5, 2**-149]`` averages
 to 0.0 or to 2**-151).  Integral and decimal columns keep ``avg``, whose
@@ -61,71 +61,89 @@ class Imputer(SparkDFPBase):
 
     def transform(self, df: DataFrame) -> DataFrame:
         if self.strategy is None:
-            fills = [self.val] * len(self.inputs)
-        elif self.strategy == "median":
-            fills = list(df.agg(*[
-                F.percentile(nan_to_null(df, c), F.lit(0.5)).alias(f"v{i}")
-                for i, c in enumerate(self.inputs)]).collect()[0])
+            return super().transform(df)
+        exprs = [nan_to_null(df, c) for c in self.inputs]
+        if self.strategy == "mean":
+            self.values = statistics(df, means=exprs)[0]
         else:
-            view = ColumnView(df)
-            floats = [c for c in self.inputs if is_floating(view.dtype(c))]
-            means = _exact_means(df, floats) if floats else {}
-            rest = [c for c in self.inputs if c not in means]
-            if rest:
-                row = df.agg(*[F.mean(view.col(c)).alias(f"v{i}")
-                               for i, c in enumerate(rest)]).collect()[0]
-                means.update(zip(rest, row))
-            fills = [means[c] for c in self.inputs]
-        self.values = fills
-        return df.withColumns(self._fill_exprs(ColumnView(df), fills))
+            self.values = statistics(df, medians=exprs)[1]
+        return df.withColumns(self._fill_exprs(ColumnView(df), self.values))
 
 
-def _exact_means(df: DataFrame, cols: list) -> dict:
-    """Correctly rounded mean of each floating column, NULL and NaN skipped.
+def statistics(df: DataFrame, means=(), medians=()) -> tuple[list, list]:
+    """The mean of each of ``means`` and the exact ``percentile(x, 0.5)``
+    of each of ``medians`` (expressions over ``df``; NULL skipped, callers
+    map NaN to NULL).  A floating mean is correctly rounded
+    (:func:`_exact_means`, whose aggregate the medians then share); any
+    other is Spark's ``avg``, whose sum is exact."""
+    floating = ([is_floating(f.dataType) for f in df.select(*means).schema]
+                if means else [])
+    exact = [e for e, fl in zip(means, floating) if fl]
+    aggs = [F.mean(e) for e, fl in zip(means, floating) if not fl]
+    got = None      # the medians, when the exact aggregate computed them
+    if exact:
+        exact, got = _exact_means(df, exact, medians)
+    else:
+        aggs += [F.percentile(e, F.lit(0.5)) for e in medians]
+    row = iter(df.agg(*[a.alias(f"v{i}") for i, a in enumerate(aggs)])
+               .collect()[0] if aggs else ())
+    exact = iter(exact)
+    return ([next(exact) if fl else next(row) for fl in floating],
+            list(row) if got is None else got)
+
+
+def _exact_means(df: DataFrame, exprs: list, medians=()) -> tuple[list, list]:
+    """Correctly rounded mean of each of ``exprs`` (cast to double; NULL
+    skipped), and the exact median of each of ``medians`` from the same
+    aggregate, each median's cells a group of their own (``k`` NULL).
 
     Each finite non-zero ``x`` is split exactly into an integer ``m`` and a
     scale ``k`` with ``x == m / 2**k``: ``k = 53 - floor(log2|x|)`` makes
     ``m`` an integer below ``2**55`` even when ``log2`` is off by one near
     a power of two.  ``x`` is scaled by ``2**(k//2)`` then ``2**(k - k//2)``
     (``2**k`` alone overflows for ``k > 1023``), each product exact.  One grouped aggregation sums ``m`` per
-    (column, ``k``) as ``decimal(20,0)``, exact in any order; the driver
-    adds the few groups as fractions and divides once.  A column holding
-    ``inf`` and ``-inf`` averages to NaN and one holding either to that
-    infinity, as ``avg`` does; an empty column to NULL.
+    (expression, ``k``) as ``decimal(20,0)``, exact in any order; the driver
+    adds the few groups as fractions and divides once.  An expression
+    holding ``inf`` and ``-inf`` averages to NaN and one holding either to
+    that infinity, as ``avg`` does; an empty one to NULL.
     """
-    view = ColumnView(df)
+    n = len(exprs)
     cells = F.explode(F.array(*[
-        F.struct(F.lit(i).alias("i"),
-                 view.nan_to_null(c).cast("double").alias("x"))
-        for i, c in enumerate(cols)]))
-    x = F.col("x")
-    finite = (x != 0) & (F.abs(x) != _INF)
+        F.struct(F.lit(i).alias("i"), e.cast("double").alias("x"))
+        for i, e in enumerate([*exprs, *medians])]))
+    x, med = F.col("x"), F.col("i") >= n
+    finite = ~med & (x != 0) & (F.abs(x) != _INF)
     k = F.when(finite, 53 - F.floor(F.log2(F.abs(x))))
     half = F.shiftright(F.col("k"), 1)
     m = x * F.pow(F.lit(2.0), half) * F.pow(F.lit(2.0), F.col("k") - half)
+    aggs = [F.sum(F.when(finite, m.cast("long").cast("decimal(20,0)")))
+            .alias("m"),
+            F.count("*").alias("n"),
+            F.count(F.when(x == _INF, 1)).alias("pos"),
+            F.count(F.when(x == -_INF, 1)).alias("neg")]
+    if medians:
+        aggs.append(F.percentile(F.when(med, x), F.lit(0.5)).alias("p"))
     rows = (df.select(cells.alias("s")).select("s.i", "s.x")
             .where(x.isNotNull()).withColumn("k", k)
-            .groupBy("i", "k")
-            .agg(F.sum(F.when(finite, m.cast("long").cast("decimal(20,0)")))
-                 .alias("m"),
-                 F.count("*").alias("n"),
-                 F.count(F.when(x == _INF, 1)).alias("pos"),
-                 F.count(F.when(x == -_INF, 1)).alias("neg"))
-            .collect())
-    sums = [Fraction(0)] * len(cols)
-    counts, pos, neg = ([0] * len(cols) for _ in range(3))
+            .groupBy("i", "k").agg(*aggs).collect())
+    sums = [Fraction(0)] * n
+    counts, pos, neg = ([0] * n for _ in range(3))
+    out_medians = [None] * len(medians)
     for r in rows:
+        if r.i >= n:
+            out_medians[r.i - n] = r.p
+            continue
         counts[r.i] += r.n
         pos[r.i] += r.pos
         neg[r.i] += r.neg
         if r.k is not None:
             sums[r.i] += Fraction(int(r.m)) * Fraction(2) ** -r.k
-    means = {}
-    for i, c in enumerate(cols):
+    means = []
+    for i in range(n):
         if pos[i] and neg[i]:
-            means[c] = float("nan")
+            means.append(float("nan"))
         elif pos[i] or neg[i]:
-            means[c] = _INF if pos[i] else -_INF
+            means.append(_INF if pos[i] else -_INF)
         else:
-            means[c] = float(sums[i] / counts[i]) if counts[i] else None
-    return means
+            means.append(float(sums[i] / counts[i]) if counts[i] else None)
+    return means, out_medians

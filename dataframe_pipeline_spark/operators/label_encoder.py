@@ -33,9 +33,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..base import (EXTRA, PARM_ALL, STACK_COL, ColumnView, FittedTable,
-                    Lookup, SparkDFPBase, fit_table, join_lookups,
-                    literal_df, lookup_key, stack_inputs, tracked_checkpoint,
-                    unstack)
+                    Lookup, SparkDFPBase, fit_table, literal_df, lookup_key,
+                    stack_inputs, tracked_checkpoint, unstack)
 
 
 class ComplementLabelEncoder(SparkDFPBase):
@@ -107,6 +106,3 @@ class ComplementLabelEncoder(SparkDFPBase):
         return [Lookup(c, "string", self._lookups[c][0], "__dfp_val",
                        {o: "__dfp_id"}, self._lookups[c][1])
                 for c, o in zip(self.inputs, self.outputs)]
-
-    def transform(self, df: DataFrame) -> DataFrame:
-        return join_lookups(df, self.lookups())

@@ -20,10 +20,9 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..base import ColumnView, SparkDFPBase, is_floating, to_spark_type
+from ..base import SparkDFPBase, is_floating, to_spark_type
 
 
 def _is_nan_key(k) -> bool:
@@ -68,6 +67,3 @@ class MapTransformer(SparkDFPBase):
                 mapped = mapped.cast(to_spark_type(self.dtype))
             updates[output] = mapped
         return updates
-
-    def transform(self, df: DataFrame) -> DataFrame:
-        return df.withColumns(self.column_exprs(ColumnView(df)))

@@ -7,7 +7,7 @@ the NaN fill passes through float), originals retained.
 
 Spark-first: the category list is collected to the driver at fit — it is a
 *small* fitted artifact by construction (one-hot over unbounded cardinality
-is meaningless) — and transform emits one ``F.when(col == cat, 1.0)
+is meaningless) — and its hook emits one ``F.when(col == cat, 1.0)
 .otherwise(0.0)`` projection per category: pure codegen, no shuffle, no
 join.  (MLlib's OneHotEncoder emits sparse Vectors; the reference needs
 discrete named columns, so we generate them directly.)
@@ -46,13 +46,8 @@ class OneHotEncoder(SparkDFPBase):
             self.onehot_cats.append([r["v"] for r in rows])
         return self
 
-    def transform(self, df: DataFrame) -> DataFrame:
-        if not self.columns:
-            return df
-        updates = {}
-        for c, cats in zip(self.columns, self.onehot_cats):
-            for cat in cats:
-                updates[f"{c}__{cat}"] = (
-                    F.when(F.col(c) == F.lit(cat), F.lit(1.0)).otherwise(F.lit(0.0))
-                )
-        return df.withColumns(updates)
+    def column_exprs(self, view) -> dict:
+        return {f"{c}__{cat}": F.when(view.col(c) == F.lit(cat), F.lit(1.0))
+                .otherwise(F.lit(0.0))
+                for c, cats in zip(self.columns, self.onehot_cats)
+                for cat in cats}

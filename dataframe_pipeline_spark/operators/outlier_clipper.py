@@ -17,7 +17,8 @@ over many millions of rows — SCALE.md §Round 7); the default
 partial-aggregatable, bounded memory — the only sane choice at 100 TB;
 ``accuracy`` feeds only this sketch).  Transform is pure
 Column arithmetic (``least``/``greatest`` or a filter) folded into
-whole-stage codegen — no second pass, no UDF.
+whole-stage codegen — no second pass, no UDF.  Clip mode is a column
+hook; filter mode, a row filter, is a serving barrier.
 
 ``mode='clip'`` (default) clamps into the bounds, preserving row count
 (NULL/NaN pass through untouched); ``mode='filter'`` drops rows outside
@@ -30,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..base import SparkDFPBase, nan_to_null
+from ..base import ColumnView, SparkDFPBase, nan_to_null
 
 
 class OutlierClipper(SparkDFPBase):
@@ -85,21 +86,27 @@ class OutlierClipper(SparkDFPBase):
                 self.bounds_.append((a, b))
         return self
 
-    def transform(self, df: DataFrame) -> DataFrame:
+    def column_exprs(self, view):
+        """Clip mode; filter mode drops rows (its own ``transform``)."""
         if len(self.bounds_) != len(self.inputs):
             raise RuntimeError("OutlierClipper.transform before fit")
-        if self.mode == "clip":
-            updates = {}
-            for c, out, (lo, hi) in zip(self.inputs, self.outputs,
-                                        self.bounds_):
-                col = nan_to_null(df, c)
-                if lo is None:
-                    updates[out] = col
-                else:
-                    # greatest/least skip NULLs (they'd clamp a missing
-                    # value to the bound) — guard NULL through explicitly
-                    updates[out] = F.when(col.isNull(), col).otherwise(
-                        F.least(F.greatest(col, F.lit(lo)), F.lit(hi)))
+        if self.mode != "clip":
+            return None
+        updates = {}
+        for c, out, (lo, hi) in zip(self.inputs, self.outputs, self.bounds_):
+            col = view.nan_to_null(c)
+            if lo is None:
+                updates[out] = col
+            else:
+                # greatest/least skip NULLs (they'd clamp a missing
+                # value to the bound) — guard NULL through explicitly
+                updates[out] = F.when(col.isNull(), col).otherwise(
+                    F.least(F.greatest(col, F.lit(lo)), F.lit(hi)))
+        return updates
+
+    def transform(self, df: DataFrame) -> DataFrame:
+        updates = self.column_exprs(ColumnView(df))
+        if updates is not None:
             return df.withColumns(updates)
         cond = F.lit(True)
         for c, (lo, hi) in zip(self.inputs, self.bounds_):

@@ -49,15 +49,15 @@ class QuantileBinner(SparkDFPBase):
                             for r in row]
         return self
 
-    def transform(self, df: DataFrame) -> DataFrame:
+    def column_exprs(self, view) -> dict:
         updates = {}
         for input, output, bounds in zip(self.inputs, self.outputs,
                                          self.boundaries_):
-            v = nan_to_null(df, input)
+            v = view.nan_to_null(input)
             bin_no = F.lit(0)
             for b in bounds:
                 bin_no = bin_no + F.when(v > F.lit(float(b)), 1).otherwise(0)
             # NULL in -> NULL out (the when-chain alone would yield bin 0)
             updates[output] = F.when(v.isNull(), F.lit(None)).otherwise(
                 bin_no).cast("int")
-        return df.withColumns(updates)
+        return updates

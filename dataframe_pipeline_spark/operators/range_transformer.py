@@ -9,7 +9,8 @@ literals or the strings ``'mean' | 'median' | 'most_frequent'``, computed
 ``use_all_elements=True``).  NaN matches nothing and passes through.
 
 Spark-first: the ``mean`` and ``median`` replacements of an input are
-computed at transform time by one small aggregate over all its entries,
+computed at transform time by one small aggregate over all its entries
+(a float mean is correctly rounded, as Imputer's is),
 and each ``most_frequent`` by a grouped count of its own (range dicts are
 tiny config, 2–5 entries); the rewrite is a nested
 ``F.when`` chain built so that later dict entries wrap (and thus override)
@@ -24,6 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..base import SparkDFPBase, nan_to_null
+from .imputer import statistics
 
 class RangeTransformer(SparkDFPBase):
     def __init__(self, inputs=None, outputs=None, dict=None, use_all_elements: bool = False):
@@ -47,21 +49,20 @@ class RangeTransformer(SparkDFPBase):
     def _replacements(self, df: DataFrame, col: Column, entries) -> list:
         """The replacement of each ``(cond, v)`` entry: ``v``, or the
         statistic it names over the entry's subset.  Every ``mean`` and
-        ``median`` comes from one aggregate; ``most_frequent`` is the
+        ``median`` comes from one aggregate (:func:`.imputer.statistics`:
+        a floating mean is correctly rounded); ``most_frequent`` is the
         mode of the subset, ties → smallest value."""
         tgts = [col if self.use_all_elements else F.when(cond, col)
                 for cond, _ in entries]
-        aggs = {f"__s{i}": (F.mean(t) if v == "mean"
-                            else F.percentile(t, F.lit(0.5)))
-                for i, (t, (_, v)) in enumerate(zip(tgts, entries))
-                if isinstance(v, str) and v in ("mean", "median")}
-        row = (df.agg(*[a.alias(n) for n, a in aggs.items()]).collect()[0]
-               if aggs else None)
+        kinds = [v if isinstance(v, str) else None for _, v in entries]
+        means, medians = map(iter, statistics(
+            df, means=[t for t, k in zip(tgts, kinds) if k == "mean"],
+            medians=[t for t, k in zip(tgts, kinds) if k == "median"]))
         out = []
-        for i, (t, (_, v)) in enumerate(zip(tgts, entries)):
-            if f"__s{i}" in aggs:
-                v = row[f"__s{i}"]
-            elif isinstance(v, str) and v == "most_frequent":
+        for t, k, (_, v) in zip(tgts, kinds, entries):
+            if k in ("mean", "median"):
+                v = next(means if k == "mean" else medians)
+            elif k == "most_frequent":
                 sub = df.select(t.alias("v")).filter(F.col("v").isNotNull())
                 top = (sub.groupBy("v").count()
                        .orderBy(F.col("count").desc(), F.col("v"))

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..base import ColumnView, SparkDFPBase, nan_to_null
+from ..base import SparkDFPBase, nan_to_null
 
 
 class Scaler(SparkDFPBase):
@@ -106,6 +106,3 @@ class Scaler(SparkDFPBase):
             else:
                 updates[output] = (col - F.lit(off)) * F.lit(scale)
         return updates
-
-    def transform(self, df: DataFrame) -> DataFrame:
-        return df.withColumns(self.column_exprs(ColumnView(df)))

@@ -10,13 +10,14 @@ ints ending in zero, and the *accumulated* concatenation is re-stripped at
 every fold step.  ``rstrip`` strips a character *set* repeatedly, which is
 exactly ``regexp_replace(s, '0+$', '')`` then ``regexp_replace(s, '\\.+$','')``.
 Arity-1 inputs copy the column unchanged (no strip), as in the reference.
+Tuples apply in order: a later tuple reads what an earlier one wrote.
 """
 
 from __future__ import annotations
 
 import re
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from ..base import SparkDFPBase, stringify
@@ -32,26 +33,28 @@ class StringConcatenator(SparkDFPBase):
         self.outputs = list(outputs or [])
         self.separator = separator
 
-    def transform(self, df: DataFrame) -> DataFrame:
+    def column_exprs(self, view) -> dict:
+        updates = {}
         for output, input_tuple in zip(self.outputs, self.inputs):
             if not isinstance(input_tuple, (tuple, list)):
                 input_tuple = (input_tuple,)
+            v = view.after(updates) if updates else view
             if len(input_tuple) == 1:
-                df = df.withColumn(output, F.col(input_tuple[0]))
+                updates[output] = v.col(input_tuple[0])
                 continue
             # Iterative fold: at every step the accumulator (raw column at
             # step 1, already-concatenated string later) is re-stripped, so
             # intermediate results ending in '0' lose it — exactly the
             # reference's behavior.  The final result is not stripped.
-            out = stringify(df, input_tuple[0])
+            out = stringify(v, input_tuple[0])
             for nxt in input_tuple[1:]:
                 out = F.concat(
                     _strip_trailing(out),
                     F.lit(self.separator),
-                    _strip_trailing(stringify(df, nxt)),
+                    _strip_trailing(stringify(v, nxt)),
                 )
-            df = df.withColumn(output, out)
-        return df
+            updates[output] = out
+        return updates
 
 
 class StringSplitter(SparkDFPBase):
@@ -70,8 +73,8 @@ class StringSplitter(SparkDFPBase):
         self.index = index
         self.keep = keep
 
-    def _split_col(self, df: DataFrame, input: str) -> Column:
-        s = stringify(df, input)
+    def _split_col(self, view, input: str) -> Column:
+        s = stringify(view, input)
         if self.separator is not None:
             parts = F.split(s, re.escape(self.separator))
             idx = self.keep + 1 if self.keep >= 0 else self.keep
@@ -89,8 +92,6 @@ class StringSplitter(SparkDFPBase):
             return s.substr(F.greatest(length + n + 1, F.lit(1)), length)
         raise ValueError("keep can be set only to 0 or -1")
 
-    def transform(self, df: DataFrame) -> DataFrame:
-        return df.withColumns(
-            {output: self._split_col(df, input)
-             for input, output in zip(self.inputs, self.outputs)}
-        )
+    def column_exprs(self, view) -> dict:
+        return {output: self._split_col(view, input)
+                for input, output in zip(self.inputs, self.outputs)}

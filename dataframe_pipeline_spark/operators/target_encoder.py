@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..base import (STACK_COL, Lookup, SparkDFPBase, fit_table,
-                    join_lookups, stack_inputs, unstack)
+                    stack_inputs, unstack)
 
 
 class TargetEncoder(SparkDFPBase):
@@ -82,15 +82,12 @@ class TargetEncoder(SparkDFPBase):
         return self
 
     def lookups(self) -> list:
+        if self.global_mean_ is None:
+            raise RuntimeError("TargetEncoder.transform before fit")
         return [Lookup(c, "raw", table, "__cat", {o: "__code"},
                        self.global_mean_)
                 for c, o, table in zip(self.inputs, self.outputs,
                                        self.lookups_)]
-
-    def transform(self, df: DataFrame) -> DataFrame:
-        if self.global_mean_ is None:
-            raise RuntimeError("TargetEncoder.transform before fit")
-        return join_lookups(df, self.lookups())
 
 
 class CVTargetEncoder(SparkDFPBase):
@@ -210,12 +207,12 @@ class HashingEncoder(SparkDFPBase):
         self.outputs = list(outputs or [])
         self.n_buckets = int(n_buckets)
 
-    def transform(self, df: DataFrame) -> DataFrame:
+    def column_exprs(self, view) -> dict:
         updates = {}
         for c, o in zip(self.inputs, self.outputs):
-            h = F.conv(F.substring(F.md5(F.col(c).cast("string")), 1, 8),
+            col = view.col(c)
+            h = F.conv(F.substring(F.md5(col.cast("string")), 1, 8),
                        16, 10).cast("bigint")
-            updates[o] = F.when(
-                F.col(c).isNull(), None).otherwise(
+            updates[o] = F.when(col.isNull(), None).otherwise(
                 F.pmod(h, F.lit(self.n_buckets)).cast("int"))
-        return df.withColumns(updates)
+        return updates

@@ -7,9 +7,6 @@ whole-stage codegen.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
 from ..base import SparkDFPBase, to_spark_type
 
 
@@ -18,8 +15,8 @@ class TypeConverter(SparkDFPBase):
         self.columns = list(columns or [])
         self.type = type
 
-    def transform(self, df: DataFrame) -> DataFrame:
-        if not self.columns or self.type is None:
-            return df
+    def column_exprs(self, view) -> dict:
+        if self.type is None:
+            return {}
         spark_type = to_spark_type(self.type)
-        return df.withColumns({c: F.col(c).cast(spark_type) for c in self.columns})
+        return {c: view.col(c).cast(spark_type) for c in self.columns}

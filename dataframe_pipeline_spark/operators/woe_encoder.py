@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..base import (STACK_COL, Lookup, SparkDFPBase, fit_table,
-                    join_lookups, nan_to_null, stack_inputs, unstack)
+                    nan_to_null, stack_inputs, unstack)
 
 
 class WOEEncoder(SparkDFPBase):
@@ -89,11 +89,8 @@ class WOEEncoder(SparkDFPBase):
         return self
 
     def lookups(self) -> list:
+        if self.totals_ is None:
+            raise RuntimeError("WOEEncoder.transform before fit")
         return [Lookup(c, "nan", table, "__cat", {o: "__woe"}, 0.0)
                 for c, o, table in zip(self.inputs, self.outputs,
                                        self.lookups_)]
-
-    def transform(self, df: DataFrame) -> DataFrame:
-        if self.totals_ is None:
-            raise RuntimeError("WOEEncoder.transform before fit")
-        return join_lookups(df, self.lookups())

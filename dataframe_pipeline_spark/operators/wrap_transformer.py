@@ -13,9 +13,12 @@ stand-in exposing the same class name):
   Plain sklearn semantics (NOT the complement variant): classes are the
   sorted distinct raw values *including* NaN (pandas sort puts NaN last),
   no reserved unseen class.
-- ``StandardScaler`` → population-std standardization (Scaler 'standard').
-- ``MinMaxScaler``   → min-max scaling (Scaler 'minmax').
-- ``SimpleImputer``  → mean imputation (strategy='mean' supported).
+- ``StandardScaler`` → a fitted :class:`.Scaler` (population std).
+- ``MinMaxScaler``   → a fitted :class:`.Scaler` (``'minmax'``).
+- ``SimpleImputer``  → a constant :class:`.Imputer` per column, filled
+  with its fitted mean (strategy='mean' supported).
+A mapped kind's outputs are its native operators' column hooks (or
+``lookups()``), which batch transform and serving both read.
 
 Any *other* transformer falls back to the generic wrap the reference
 implements (WrapTransform.py:65-86: deep-copy per input, ``fit`` on the
@@ -39,8 +42,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..base import (PARM_ALL, Lookup, SparkDFPBase, fit_table,
-                    join_lookups, nan_to_null)
+from ..base import PARM_ALL, Lookup, SparkDFPBase, fit_table, nan_to_null
+from .imputer import Imputer, statistics
+from .scaler import Scaler
+
+#: sklearn scaler class name -> Scaler strategy; these, LabelEncoder and
+#: SimpleImputer are mapped to native operators
+_SCALERS = {"StandardScaler": "standard", "MinMaxScaler": "minmax"}
+_MAPPED = ("LabelEncoder", "SimpleImputer", *_SCALERS)
 
 
 class WrapTransformer(SparkDFPBase):
@@ -59,8 +68,9 @@ class WrapTransformer(SparkDFPBase):
         self.outputs = outputs
         self.transformer = transformer
         self._kind = type(transformer).__name__ if transformer is not None else None
-        # input -> fitted state; for LabelEncoder a tuple whose first
-        # item is the FittedTable(__dfp_val, __dfp_id)
+        # input -> fitted state: (FittedTable(__dfp_val, __dfp_id),) for
+        # LabelEncoder, fitted native operators for a scaler or
+        # SimpleImputer, else the fitted wrapped object
         self._state = {}
 
     # -- fit ---------------------------------------------------------------
@@ -68,20 +78,23 @@ class WrapTransformer(SparkDFPBase):
         self.inputs = self.replace_PARM_ALL(df, self.inputs)
         self.outputs = self.replace_PARM_ALL(df, self.outputs)
         self._state = {}
-        for input in self.inputs:
-            cols = list(input) if isinstance(input, tuple) else [input]
+        for input, output in zip(self.inputs, self.outputs):
+            cols, out_cols = _names(input), _names(output)
             if self._kind == "LabelEncoder":
                 self._state[input] = self._fit_label(df, cols[0])
-            elif self._kind in ("StandardScaler", "MinMaxScaler"):
-                self._state[input] = self._fit_scale(df, cols)
+            elif self._kind in _SCALERS:
+                self._state[input] = [Scaler(
+                    inputs=cols, outputs=out_cols,
+                    strategy=_SCALERS[self._kind]).fit(df)]
             elif self._kind == "SimpleImputer":
                 strategy = getattr(self.transformer, "strategy", "mean")
                 if strategy != "mean":
                     raise ValueError(f"SimpleImputer strategy {strategy!r} not mapped")
-                self._state[input] = self._fit_mean(df, cols)
+                means = statistics(
+                    df, means=[nan_to_null(df, c) for c in cols])[0]
+                self._state[input] = [Imputer(inputs=[c], outputs=[o], val=m)
+                                      for c, o, m in zip(cols, out_cols, means)]
             else:
-                output = self.outputs[self.inputs.index(input)]
-                out_cols = list(output) if isinstance(output, tuple) else [output]
                 self._state[input] = self._fit_generic(df, cols, out_cols)
         return self
 
@@ -147,66 +160,38 @@ class WrapTransformer(SparkDFPBase):
         values.release()
         return (lookup,)
 
-    def _fit_scale(self, df: DataFrame, cols):
-        aggs = []
-        for i, c in enumerate(cols):
-            v = nan_to_null(df, c)
-            if self._kind == "StandardScaler":
-                aggs += [F.mean(v).alias(f"a{i}"), F.stddev_pop(v).alias(f"b{i}")]
-            else:
-                aggs += [F.min(v).alias(f"a{i}"), F.max(v).alias(f"b{i}")]
-        row = df.agg(*aggs).collect()[0]
-        state = []
-        for i in range(len(cols)):
-            a, b = row[f"a{i}"], row[f"b{i}"]
-            if self._kind == "StandardScaler":
-                scale = 1.0 / b if b not in (None, 0.0) else 1.0
-                state.append((a, scale))
-            else:
-                rng = (b - a) if (a is not None and b is not None) else None
-                scale = 1.0 / rng if rng not in (None, 0.0) else 1.0
-                state.append((a, scale))
-        return state
-
-    def _fit_mean(self, df: DataFrame, cols):
-        row = df.agg(
-            *[F.mean(nan_to_null(df, c)).alias(f"m{i}") for i, c in enumerate(cols)]
-        ).collect()[0]
-        return [row[f"m{i}"] for i in range(len(cols))]
-
     # -- transform ---------------------------------------------------------
     def lookups(self) -> list:
         """The LabelEncoder mapping; the other kinds join nothing."""
         if self._kind != "LabelEncoder":
             return []
-        return [Lookup(_first(i), "nan", self._state[i][0], "__dfp_val",
-                       {_first(o): "__dfp_id"}, null_safe=True)
+        return [Lookup(_names(i)[0], "nan", self._state[i][0], "__dfp_val",
+                       {_names(o)[0]: "__dfp_id"}, null_safe=True)
                 for i, o in zip(self.inputs, self.outputs)]
 
-    def transform(self, df: DataFrame) -> DataFrame:
+    def column_exprs(self, view):
+        """A scaler or SimpleImputer: its native operators' column
+        hooks, each input reading what the inputs before it wrote.  The
+        LabelEncoder writes through ``lookups()``; the generic kind is an
+        Arrow UDF, so it has no hook (None)."""
         if self._kind == "LabelEncoder":
-            return join_lookups(df, self.lookups())
+            return {}
+        if self._kind not in _MAPPED:
+            return None
+        updates = {}
+        for ops in self._state.values():
+            v = view.after(updates) if updates else view
+            for op in ops:
+                updates.update(op.column_exprs(v))
+        return updates
+
+    def transform(self, df: DataFrame) -> DataFrame:
+        if self._kind in _MAPPED:
+            return super().transform(df)
+        # generic fitted object, Arrow-batched apply
         for input, output in zip(self.inputs, self.outputs):
-            in_cols = list(input) if isinstance(input, tuple) else [input]
-            out_cols = list(output) if isinstance(output, tuple) else [output]
-            state = self._state[input]
-            if self._kind in ("StandardScaler", "MinMaxScaler"):
-                df = df.withColumns(
-                    {
-                        o: (nan_to_null(df, c) - F.lit(off)) * F.lit(scale)
-                        for c, o, (off, scale) in zip(in_cols, out_cols, state)
-                    }
-                )
-            elif self._kind == "SimpleImputer":
-                df = df.withColumns(
-                    {
-                        o: F.coalesce(nan_to_null(df, c), F.lit(m))
-                        for c, o, m in zip(in_cols, out_cols, state)
-                    }
-                )
-            else:  # generic fitted object, Arrow-batched apply
-                df = df.withColumn(
-                    out_cols[0], self._generic_udf_col(state, in_cols))
+            df = df.withColumn(_names(output)[0], self._generic_udf_col(
+                self._state[input], _names(input)))
         return df
 
     @staticmethod
@@ -230,6 +215,6 @@ class WrapTransformer(SparkDFPBase):
         return list(self._state.values())[c]
 
 
-def _first(col):
-    """The column of a name, or the first of a tuple of names."""
-    return col if isinstance(col, str) else col[0]
+def _names(col) -> list:
+    """The columns of a name or of a tuple of names."""
+    return list(col) if isinstance(col, tuple) else [col]

@@ -20,6 +20,7 @@ compiles the pipeline once per fit of its steps and per input schema:
 * every other step adds its columns through its ``column_exprs`` hook
   (:class:`~dataframe_pipeline_spark.base.ColumnView`), composed over
   the expressions earlier steps wrote into one precomputed select.
+  Batch transform is derived from the same two declarations.
 
 A request is render → ``select(*compiled)`` → ``collect``.  Catalyst
 folds the plan into a ``LocalRelation``, so ``collect`` runs on the
@@ -34,8 +35,9 @@ the one batch transform writes for a tiny held table, so batch and
 serving share one literal-map rule.  A table
 fit did not hold (over ``SERVING_MAX_ROWS`` rows, the driver-memory
 bound, so checkpointed on the executors) keeps the batch join, which
-launches jobs.  A step without a column hook (an
-Arrow-UDF lambda, AnnAnnotator, statistics computed at transform time)
+launches jobs.  A step without a column hook for its configuration
+(statistics of the batch being transformed, a row filter, set algebra,
+an Arrow-UDF lambda or wrapped object, a two-key join, AnnAnnotator)
 is a barrier: the select so far is applied, the step runs as in batch,
 and composition resumes after it.  Each step that leaves the compiled
 path is logged once per compile on
@@ -167,12 +169,15 @@ class _Env(ColumnView):
 
     def dtype(self, name: str) -> T.DataType:
         if name not in self.types:
-            # analysis of an empty JVM-side relation: no job
-            empty = self._spark.range(0).select(*[
-                F.lit(None).cast(f.dataType).alias(f.name)
-                for f in self.base + self.hidden])
-            self.types[name] = empty.select(self.col(name)).schema[0].dataType
+            self.types[name] = self.type_of(self.col(name))
         return self.types[name]
+
+    def type_of(self, expr) -> T.DataType:
+        # analysis of an empty JVM-side relation: no job
+        empty = self._spark.range(0).select(*[
+            F.lit(None).cast(f.dataType).alias(f.name)
+            for f in self.base + self.hidden])
+        return empty.select(expr).schema[0].dataType
 
     def set(self, updates: dict, dtypes: dict | None = None) -> None:
         for name, expr in updates.items():

@@ -25,6 +25,7 @@ Exit 1 when any non-whitelisted violation exists.
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -80,12 +81,19 @@ FIT_BEARING = {
 }
 
 
+def parse_args(argv) -> argparse.Namespace:
+    """``[sf_dir] [--out PATH]``: ``--out`` takes a value, so the path
+    after it is never read as the sf_dir."""
+    p = argparse.ArgumentParser(description="Lint every registry query's "
+                                "physical plan.")
+    p.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.001")
+    p.add_argument("--out", default="PLANLINT.json")
+    return p.parse_args(argv)
+
+
 def main():
-    argv = [a for a in sys.argv[1:] if not a.startswith("--")]
-    sf_dir = argv[0] if argv else "/root/testdata/sf0.001"
-    out_path = "PLANLINT.json"
-    if "--out" in sys.argv:
-        out_path = sys.argv[sys.argv.index("--out") + 1]
+    args = parse_args(sys.argv[1:])
+    sf_dir, out_path = args.sf_dir, args.out
 
     spark = get_spark("plan-lint")
     qs = entrymod.queries()

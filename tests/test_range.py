@@ -111,3 +111,17 @@ def test_range_statistics_share_one_aggregate(spark, count_jobs):
                   F.percentile(F.when(v <= 6, v), F.lit(0.5)),
                   F.mean(F.when(v >= 20, v))).collect()[0]
     assert [r.values_dict[("C2", *k)] for k in two] == list(want)
+
+
+def test_range_mean_is_correctly_rounded(spark):
+    """A ``mean`` replacement is the correctly rounded mean, as
+    Imputer's is.  Spark's ``avg`` sums each partition in order, and the
+    last partition's 0.5 + 2**-149 rounds to 0.5: it returns 0.0 for a
+    mean of 2**-151."""
+    xs = [0.0, -0.5, 0.5, 2.0 ** -149]
+    df = spark.createDataFrame(
+        spark.sparkContext.parallelize([(x,) for x in xs], 3), "x double")
+    r = dfp.RangeTransformer(inputs=["x"], outputs=["y"],
+                             dict={(1.0, -1.0): "mean"},
+                             use_all_elements=True)
+    assert {row.y for row in r.transform(df).collect()} == {2.0 ** -151}

@@ -30,3 +30,19 @@ def test_every_script_is_named_somewhere():
                    if p != script):
             unnamed.append(os.path.basename(script))
     assert not unnamed, f"scripts nothing names: {unnamed}"
+
+
+def test_plan_lint_out_takes_a_value():
+    """``--out PATH`` takes a value: the path after it is not read as the
+    sf_dir.  Only the argument parsing runs, no query."""
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "plan_lint", os.path.join(REPO, "scripts", "plan_lint.py"))
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    default = mod.parse_args([]).sf_dir
+    args = mod.parse_args(["--out", "x.json"])
+    assert (args.sf_dir, args.out) == (default, "x.json")
+    args = mod.parse_args(["sf_dir", "--out", "x.json"])
+    assert (args.sf_dir, args.out) == ("sf_dir", "x.json")

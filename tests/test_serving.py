@@ -595,3 +595,140 @@ def test_serving_parity_float_and_null_keys(spark, monkeypatch, name, tier):
     finally:
         for table in base.fitted_tables(op):
             table.release()
+
+
+# -- per-row operators: one definition for batch and serving --------------
+
+class StandardScaler:  # sklearn stand-ins, recognized by class name
+    pass
+
+
+class MinMaxScaler:
+    pass
+
+
+class SimpleImputer:
+    strategy = "mean"
+
+
+#: one configuration of each per-row operator, over a string ``s``, a
+#: double ``x``, a double ``d`` and a date string ``t``
+_ROW_OPS = {
+    "OneHotEncoder": lambda: dfp.OneHotEncoder(columns=["s"]),
+    "QuantileBinner": lambda: dfp.QuantileBinner(
+        inputs=["x"], outputs=["x_bin"], n_bins=4),
+    "OutlierClipper": lambda: dfp.OutlierClipper(
+        inputs=["x", "d"], outputs=["x_clip", "d"], exact=True),
+    "HashingEncoder": lambda: dfp.HashingEncoder(
+        inputs=["s", "x"], outputs=["s_h", "x_h"], n_buckets=8),
+    "StringSplitter": lambda: dfp.StringSplitter(
+        inputs=["s", "x"], outputs=["s_sp", "x_sp"], separator="."),
+    "TypeConverter": lambda: dfp.TypeConverter(columns=["x", "d"],
+                                               type="string"),
+    # the first tuple's output ``s`` is the second tuple's input
+    "StringConcatenator": lambda: dfp.StringConcatenator(
+        inputs=[("s", "x"), ("s", "d"), ("x",)], outputs=["s", "sd", "x2"],
+        separator="_"),
+    "DateTransformer": lambda: dfp.DateTransformer(column="t"),
+    "Wrap StandardScaler": lambda: dfp.WrapTransformer(
+        inputs=[("x", "d")], outputs=[("x_z", "d_z")],
+        transformer=StandardScaler()),
+    # the second input reads the first one's output
+    "Wrap MinMaxScaler": lambda: dfp.WrapTransformer(
+        inputs=["x", "d"], outputs=["d", "d2"], transformer=MinMaxScaler()),
+    "Wrap SimpleImputer": lambda: dfp.WrapTransformer(
+        inputs=[("x", "d")], outputs=[("x", "d_fill")],
+        transformer=SimpleImputer()),
+}
+
+_ROW_SCHEMA = "event_id long, s string, x double, d double, t string"
+
+
+def _row_frame(spark, rows):
+    return spark.createDataFrame(rows, _ROW_SCHEMA)
+
+
+def _row_train(spark):
+    ss = ["a.b", "c", None, "a.b", "d.e.f"]
+    xs = [1.5, 20.0, float("nan"), None, -3.25, 7.0, 100.0]
+    return _row_frame(spark, [
+        (i, ss[i % 5], xs[i % 7], float(i % 3), f"2024-0{1 + i % 9}-1{i % 10}")
+        for i in range(40)])
+
+
+def _row_requests():
+    return [(k, s, x, d, t) for k, (s, x, d, t) in enumerate(
+        (s, x, d, t) for s in ("a.b", None, "zz")
+        for x in (1.5, float("nan"), None, 1e6)
+        for d in (0.0, None)
+        for t in ("2024-02-29 13:45:00", None))]
+
+
+@pytest.mark.parametrize("name", sorted(_ROW_OPS))
+def test_serving_row_operators_compiled(spark, caplog, count_jobs, name):
+    """Each per-row operator serves through its column hook: every
+    served row equals batch transform, no step leaves the compiled path
+    (no warning on the package logger) and a request launches no job."""
+    import logging
+
+    train, rows = _row_train(spark), _row_requests()
+    schema = train.schema
+    pipe = dfp.DataframePipeline(steps=[_ROW_OPS[name]()])
+    pipe.fit_transform(train)
+    _, batch = _batch_by_id(pipe, spark, rows, schema)
+    with caplog.at_level(logging.WARNING, logger="dataframe_pipeline_spark"):
+        served, jobs = count_jobs(serve_rows, pipe, spark, rows, schema)
+    assert not [m for m in caplog.records
+                if m.name == "dataframe_pipeline_spark"]
+    assert jobs == 0
+    assert len(served) == len(rows)
+    for got in served:
+        _assert_rows_match(got, batch[got["event_id"]])
+
+
+def test_wrap_scaler_save_load_parity(spark, tmp_path):
+    """A pipeline with a wrapped scaler, saved and loaded, transforms
+    and serves as the fitted one does."""
+    train = _row_train(spark)
+    pipe = dfp.DataframePipeline(steps=[_ROW_OPS["Wrap StandardScaler"]()])
+    pipe.fit_transform(train)
+    rows = _row_requests()
+    _, want = _batch_by_id(pipe, spark, rows, train.schema)
+    pipe.save(str(tmp_path / "wrap_scaler"))
+    loaded = dfp.DataframePipeline.load(spark, str(tmp_path / "wrap_scaler"))
+    _, got = _batch_by_id(loaded, spark, rows, train.schema)
+    for row in [*got.values(), *serve_rows(loaded, spark, rows,
+                                           train.schema)]:
+        _assert_rows_match(row, want[row["event_id"]])
+
+
+#: operators that keep a batch transform of their own, and why neither
+#: ``lookups()`` nor ``column_exprs`` can express it
+_OWN_TRANSFORM = {
+    "Imputer": "mean/median are statistics of the batch being transformed",
+    "RangeTransformer": "its statistics are of the batch being transformed",
+    "MinorityTransformer": "its counts are of the batch being transformed",
+    "RowTransformer": "a row filter",
+    "OutlierClipper": "mode='filter' is a row filter",
+    "SetTransformer": "whole-column set algebra padded by row position",
+    "FunctionTransformer": "the Arrow-UDF tier samples its return type",
+    "WrapTransformer": "the generic kind applies its object in an Arrow UDF",
+    "CVTargetEncoder": "a join on two keys (category, fold)",
+}
+
+
+def test_every_operator_declares_or_is_listed():
+    """Every exported operator declares its outputs (``column_exprs`` or
+    ``lookups``), which batch transform and serving both read, or is
+    listed above with the reason it keeps a transform of its own; only a
+    listed operator defines ``transform``.  A new per-row operator thus
+    cannot become a serving barrier unnoticed."""
+    from dataframe_pipeline_spark import operators
+    from dataframe_pipeline_spark.base import SparkDFPBase
+
+    for name in operators.__all__:
+        cls = getattr(operators, name)
+        declares = hasattr(cls, "column_exprs") or hasattr(cls, "lookups")
+        assert declares or name in _OWN_TRANSFORM, name
+        own = cls.transform is not SparkDFPBase.transform
+        assert own == (name in _OWN_TRANSFORM), name

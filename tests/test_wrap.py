@@ -120,3 +120,16 @@ def test_wrap_generic_fit_row_cap(spark):
     w2 = WrapTransformer(inputs=["x"], outputs=["y"], transformer=Identity())
     w2.GENERIC_FIT_MAX_ROWS = 200
     assert w2.fit_transform(df).count() == 100
+
+
+def test_wrap_simple_imputer_mean_is_correctly_rounded(spark):
+    """The fitted mean is Imputer's correctly rounded mean.  Spark's
+    ``avg`` sums each partition in order, and the middle partition's
+    0.5 + 2**-149 rounds to 0.5: it returns 0.0 for a mean of 2**-151."""
+    xs = [0.0, 0.5, 2.0 ** -149, -0.5, float("nan")]
+    df = spark.createDataFrame(
+        spark.sparkContext.parallelize([(x,) for x in xs], 3), "x double")
+    w = dfp.WrapTransformer(inputs=["x"], outputs=["y"],
+                            transformer=SimpleImputer(strategy="mean"))
+    got = [r.y for r in w.fit_transform(df).collect() if np.isnan(r.x)]
+    assert got == [2.0 ** -151]
