@@ -6,9 +6,11 @@ pair; transform writes the scalar as a constant column or maps the group
 key through the dict, unseen key → NaN).
 
 Spark-first design:
-- **global**: one combined ``df.agg`` job at fit (a single scan computes
-  every requested scalar); transform adds ``F.lit(scalar)`` columns —
-  constant-folded by Catalyst, zero runtime cost.
+- **global**: one aggregate at fit (a single scan computes every
+  requested scalar; means come from Imputer's
+  :func:`~dataframe_pipeline_spark.operators.imputer.statistics`, so a
+  floating mean is correctly rounded); transform adds ``F.lit(scalar)``
+  columns — constant-folded by Catalyst, zero runtime cost.
 - **grouped**: fit builds one lookup table per distinct group key via
   ``groupBy(g).agg(...)`` — inputs sharing a group key are fused into one
   aggregate (one shuffle, map-side partial aggregation) — and keeps it as
@@ -31,6 +33,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..base import Lookup, SparkDFPBase, fit_table, nan_to_null
+from .imputer import statistics
 
 
 def _resolve_func(func):
@@ -82,7 +85,11 @@ class Aggregator(SparkDFPBase):
     def fit(self, df: DataFrame, **params):
         self.vals = []
         self._lookups = {}
-        if not self.groupby:
+        if not self.groupby and _resolve_func(self.func) is F.mean:
+            # correctly rounded, whatever the partition order
+            self.vals = statistics(
+                df, means=[nan_to_null(df, c) for c in self.inputs])[0]
+        elif not self.groupby:
             row = df.agg(
                 *[self._agg_col(df, c).alias(f"_a{i}") for i, c in enumerate(self.inputs)]
             ).collect()[0]

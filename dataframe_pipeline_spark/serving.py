@@ -1,6 +1,6 @@
 """Online-scoring tier: a fitted pipeline compiled once, then each
-request is one local relation, one ``select`` and one ``collect``,
-with no Spark job.
+request is evaluated by a projection bound once, with no Spark job and
+no SQL parse, analysis or optimization.
 
 Batch transform JOINs fitted lookup tables, the scale-correct shape;
 for one row per request that plan costs a Spark job.  Serving instead
@@ -16,15 +16,26 @@ compiles the pipeline once per fit of its steps and per input schema:
   launches no Spark job.  Keys are looked up in Python while the
   request row is rendered, with the declared key normalization,
   unseen value and NULL-key rule, and the values ride as extra typed
-  columns of the inline ``VALUES`` table;
+  columns of the request row;
 * every other step adds its columns through its ``column_exprs`` hook
   (:class:`~dataframe_pipeline_spark.base.ColumnView`), composed over
   the expressions earlier steps wrote into one precomputed select.
   Batch transform is derived from the same two declarations.
 
-A request is render → ``select(*compiled)`` → ``collect``.  Catalyst
-folds the plan into a ``LocalRelation``, so ``collect`` runs on the
-driver, and the plan's size does not grow with the dictionaries.
+The first request is rendered as an inline ``VALUES`` relation, the
+select is applied and the result collected: Catalyst folds that plan
+into a ``LocalRelation`` by evaluating the select with an interpreted
+projection (``ConvertToLocalRelation``), on the driver, and the plan's
+size does not grow with the dictionaries.  The program then binds that
+same projection once (:class:`_Projection`), and checks it gives the
+first request's result exactly.  Every later request is render →
+encode by declared type → project → decode, four Py4J calls a row,
+under a per-program lock.  Requests keep the ``VALUES`` path (the
+parity reference) in a program with a barrier, for a select with a
+nondeterministic expression, where binding fails or its template
+result differs (each logged once), for a request whose values are not
+of their declared types (``createDataFrame`` rejects them, ``VALUES``
+casts them), and from the first request the projection fails on (logged).
 
 Python lookups are used only where Python equality matches Spark's
 normalized key (strings, integral types, booleans, dates, and floats
@@ -39,12 +50,13 @@ launches jobs.  A step without a column hook for its configuration
 (statistics of the batch being transformed, a row filter, set algebra,
 an Arrow-UDF lambda or wrapped object, a two-key join, AnnAnnotator)
 is a barrier: the select so far is applied, the step runs as in batch,
-and composition resumes after it.  Each step that leaves the compiled
-path is logged once per compile on
+and composition resumes after it (a tail program).  Each step that
+leaves the compiled path is logged once per compile on
 ``logging.getLogger("dataframe_pipeline_spark")`` with its index, class
 and reason.  The compiled program lives on the pipeline object and is
 never saved; refitting a step bumps its generation
-(``base.invalidate_serving``) and the next request recompiles.  This is
+(``base.invalidate_serving``), and the next request recompiles, as does
+a request in another session.  This is
 the analogue of the reference's compiled export, which scores single
 rows from a graph built once.
 """
@@ -52,13 +64,20 @@ rows from a graph built once.
 from __future__ import annotations
 
 import datetime
+import decimal
 import logging
+import math
+import threading
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from py4j.protocol import Py4JError, Py4JJavaError
+from pyspark.errors.exceptions.captured import CapturedException
+from pyspark.serializers import CPickleSerializer
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import from_arrow_type
+from pyspark.sql.types import _make_type_verifier
 
 from .base import (EXTRA, GENERATION_ATTR, SERVING_CACHE_ATTR,
                    SERVING_MAX_ROWS, ColumnView, Lookup, is_floating,
@@ -217,6 +236,11 @@ class _Program:
                 break
         self.rendered_schema = T.StructType(list(schema.fields) + env.hidden)
         self.select = env.select()
+        # the select bound on the first request (a _Projection); False
+        # where requests keep the VALUES path
+        self.projection = None if self.barrier is None else False
+        self._lock = threading.Lock()
+        self._mistyped = False      # a mistyped request was logged
 
     def _compose(self, i, step, env, names, render) -> bool:
         """Add step ``i`` to the select; False when it is a barrier."""
@@ -271,8 +295,9 @@ class _Program:
         env.set(updates or {})
         return True
 
-    def valid(self, steps, schema) -> bool:
-        return ((schema is self.schema or _types(schema) == self.types)
+    def valid(self, steps, spark, schema) -> bool:
+        return (spark is self.spark
+                and (schema is self.schema or _types(schema) == self.types)
                 and len(steps) == len(self.signature)
                 and all(s is s0 and getattr(s, GENERATION_ATTR, 0) == g
                         for s, (s0, g) in zip(steps, self.signature)))
@@ -294,6 +319,71 @@ class _Program:
             out.append(vals)
         return out
 
+    def serve(self, pipeline, rows) -> list:
+        """Rendered ``rows`` through the bound projection, or through a
+        VALUES relation, the select and ``collect``.  The first request
+        served through VALUES is the template the projection is bound
+        from."""
+        projection, error = self.projection, None
+        if projection and rows:
+            try:
+                out = projection(rows)
+            except (Py4JJavaError, CapturedException) as e:
+                out, error = None, e
+            if out is not None:
+                return out
+            if error is None and not self._mistyped:
+                self._mistyped = True
+                log.warning("serving: a request holds a value not of its "
+                            "column's declared type; such requests are "
+                            "cast by the VALUES relation, parsed, analyzed "
+                            "and optimized per request")
+        out = serving_transform(pipeline, local_rows_df(
+            self.spark, rows, self.rendered_schema)).collect()
+        if error is not None:
+            # the VALUES path serves what the projection failed on
+            self._fall_back(f"the projection failed on a request: "
+                            f"{_summary(error)}")
+        elif projection is None:
+            self._bind(rows, out)
+        return out
+
+    def _bind(self, rows, out) -> None:
+        """Bind the select once the projection gives the VALUES path's
+        ``out`` for the template request ``rows`` exactly; a template
+        whose values are not of their declared types waits for the next.
+        The select is analyzed over one all-NULL row: an inline table's
+        column is nullable only if it holds a NULL, and the projection
+        writes a NULL only into an output analyzed as nullable."""
+        with self._lock:
+            if self.projection is not None:
+                return
+            nulls = [None] * len(self.rendered_schema.fields)
+            try:
+                template = self.apply(local_rows_df(
+                    self.spark, [nulls], self.rendered_schema))
+                projection = _Projection(template, self.rendered_schema)
+                got = projection(rows)
+            except _Unbound as e:
+                why = str(e)
+            except Exception as e:  # an internal Catalyst API failed
+                why = f"binding it failed: {_summary(e)}"
+            else:
+                if got is None:
+                    return
+                why = (None if _same(got, out) else "the projection's "
+                       "result differs from the VALUES path's on the "
+                       "template request")
+            if why is None:
+                self.projection = projection
+            else:
+                self._fall_back(why)
+
+    def _fall_back(self, why: str) -> None:
+        self.projection = False
+        log.warning("serving: requests keep the VALUES relation (parsed, "
+                    "analyzed and optimized per request): %s", why)
+
     def apply(self, df: DataFrame) -> DataFrame:
         X = df.select(*self.select) if self.select is not None else df
         if self.barrier is None:
@@ -306,6 +396,105 @@ class _Program:
             steps = [s for s, _ in self.signature]
             self.tail = _Program(steps, self.spark, schema, start=i + 1)
         return self.tail.apply(X)
+
+
+class _Unbound(Exception):
+    """Why a program's select cannot be bound to a projection."""
+
+
+def _node(plan) -> str:
+    return plan.getClass().getSimpleName()
+
+
+class _Projection:
+    """A program's select bound once to the attributes of its rendered
+    relation.  Catalyst evaluates a select over a ``LocalRelation`` with
+    an ``InterpretedMutableProjection`` (``ConvertToLocalRelation``); this
+    keeps one, built from the analyzed plan of the select ``df`` after
+    ``ReplaceExpressions``, so a request skips parsing, analysis and
+    optimization.  A request is encoded as ``createDataFrame`` encodes it
+    (type verification, ``StructType.toInternal``, a pickle read into an
+    internal row by ``EvaluatePython.makeFromJava``) and decoded as
+    ``collect()`` decodes it (``EvaluatePython.toJava`` pickled by the
+    registered pickler): four Py4J calls per row.  The projection and the
+    pickler keep state, so rows are evaluated under a lock."""
+
+    _serializer = CPickleSerializer()
+
+    def __init__(self, df: DataFrame, schema: T.StructType):
+        jvm = df.sparkSession._jvm
+        plan = jvm.org.apache.spark.sql.catalyst.optimizer \
+            .ReplaceExpressions.apply(df._jdf.queryExecution().analyzed())
+        if _node(plan) != "Project":
+            raise _Unbound(f"the analyzed select is a {_node(plan)}")
+        exprs = plan.projectList()
+        for i in range(exprs.size()):
+            if not exprs.apply(i).deterministic():
+                raise _Unbound(f"{exprs.apply(i).sql()} is nondeterministic")
+        relation = plan.child()
+        while _node(relation) in ("Project", "SubqueryAlias"):
+            relation = relation.child()
+        if _node(relation) != "LocalRelation":
+            raise _Unbound(f"the select reads a {_node(relation)}")
+        projection = jvm.org.apache.spark.sql.catalyst.expressions \
+            .InterpretedMutableProjection(exprs, relation.output())
+        projection.initialize(0)
+        python = jvm.org.apache.spark.sql.execution.python.EvaluatePython
+        python.registerPicklers()
+        jvm.org.apache.spark.api.python.SerDeUtil.initialize()
+        session = df.sparkSession._jsparkSession
+        jschema = session.parseDataType(schema.json())
+        self._evaluate = python.makeFromJava(jschema).andThen(projection)
+        self._to_java = python.toJava
+        self._binary_as_bytes = session.sessionState().conf() \
+            .pysparkBinaryAsBytes()
+        self._out = df._jdf.schema()
+        self._pickler = jvm.net.razorvine.pickle.Pickler(True, False)
+        self._unpickler = jvm.net.razorvine.pickle.Unpickler()
+        self._schema = schema
+        self._verify = _make_type_verifier(schema)
+        self._lock = threading.Lock()
+
+    def __call__(self, rows) -> list | None:
+        """The served rows; None when a value is not of its declared
+        type (``createDataFrame`` would reject it, the VALUES path casts
+        it)."""
+        try:
+            for vals in rows:
+                self._verify(vals)
+        except (TypeError, ValueError):
+            return None
+        dumps, loads = self._serializer.dumps, self._serializer.loads
+        encoded = [dumps(self._schema.toInternal(vals)) for vals in rows]
+        out = []
+        with self._lock:
+            for data in encoded:
+                row = self._evaluate.apply(self._unpickler.loads(data))
+                out.append(self._pickler.dumps(self._to_java(
+                    row, self._out, self._binary_as_bytes)))
+        return [loads(data) for data in out]
+
+
+def _same(a, b) -> bool:
+    """Equal values of equal types, a NaN equal to a NaN: the template
+    check, stricter than ``==`` on rows (names, types) and NaN-aware."""
+    if isinstance(a, (tuple, list)):
+        return (type(a) is type(b) and len(a) == len(b)
+                and getattr(a, "__fields__", None)
+                == getattr(b, "__fields__", None)
+                and all(map(_same, a, b)))
+    if isinstance(a, float) and a != a:
+        return isinstance(b, float) and b != b
+    return type(a) is type(b) and a == b
+
+
+def _summary(error: Exception) -> str:
+    """The error's type and first line; for a Py4J error, the line
+    naming the JVM exception."""
+    lines = [line.lstrip(": ") for line in str(error).splitlines()
+             if line.strip()] or [""]
+    java = isinstance(error, Py4JError) and len(lines) > 1
+    return f"{type(error).__name__}: {lines[1 if java else 0]}"
 
 
 def _types(schema: T.StructType) -> list:
@@ -324,14 +513,14 @@ def _program(pipeline, spark, schema: T.StructType) -> _Program:
     """The pipeline's compiled program for ``schema``, compiled on first
     use and again after any step is refit or replaced."""
     prog = pipeline.__dict__.get(_PROGRAM_ATTR)
-    if prog is None or not prog.valid(pipeline.steps, schema):
+    if prog is None or not prog.valid(pipeline.steps, spark, schema):
         prog = _Program(pipeline.steps, spark, schema)
         setattr(pipeline, _PROGRAM_ATTR, prog)
     return prog
 
 
 def _serve_ann_annotator(op, df: DataFrame) -> DataFrame:
-    """ANN stage on the serving path (r10, VERDICT r9 #7): the
+    """ANN stage on the serving path: the
     upstream serving plan is a folded LocalRelation, so ``collect()``
     here is a driver-side expression evaluation — no job; each row's
     vector then probes the in-process :class:`IVFServingReplica`
@@ -368,13 +557,6 @@ _SERVING_BARRIERS = {"AnnAnnotator": _serve_ann_annotator}
 # and collect() is ~4 ms, job-free.
 
 def _sql_literal(v, dt) -> str:
-    import datetime
-    import decimal
-    import math
-
-    from pyspark.sql import Row
-    from pyspark.sql import types as T
-
     if v is None:
         return f"CAST(NULL AS {dt.simpleString()})"
     if isinstance(v, bool):
@@ -449,14 +631,12 @@ def local_rows_df(spark, rows, schema) -> DataFrame:
 
 def serve_rows(pipeline, spark, rows, schema) -> list:
     """Score ``rows`` (Rows, dicts or tuples of ``schema``) through a
-    fitted pipeline: Python lookups while the rows are rendered into an
-    inline VALUES relation, the compiled select, and one collect.
-    Job-free for every step on the compiled path."""
+    fitted pipeline: Python lookups while the rows are rendered, then the
+    compiled select, evaluated by the projection bound on the first
+    request (or, where it is not bound, over an inline VALUES relation
+    with one collect).  Job-free for every step on the compiled path."""
     prog = _program(pipeline, spark, schema)
-    if prog.lookups:
-        rows, schema = prog.render(rows), prog.rendered_schema
-    return serving_transform(pipeline, local_rows_df(spark, rows, schema)) \
-        .collect()
+    return prog.serve(pipeline, prog.render(rows))
 
 
 def serving_transform(pipeline, df: DataFrame) -> DataFrame:

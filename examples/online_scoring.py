@@ -57,17 +57,20 @@ def main():
 
         # 'serve': single-request path — the fitted pipeline is compiled
         # once into driver-side lookup dicts plus one precomputed select.
-        # A request looks its keys up in Python while the row is rendered
-        # as an inline-VALUES LocalRelation, applies the select and
-        # collects: the plan folds to LocalTableScan, so collect()
-        # launches NO Spark job, and its size does not grow with the
-        # dictionaries.  Lookups above serving.SERVING_MAX_ROWS keep the
-        # batch join; such fallbacks are logged (see serving.py)
+        # A request looks its keys up in Python while the row is rendered.
+        # The first request is served as an inline-VALUES LocalRelation
+        # with the select applied (the plan folds to LocalTableScan, so
+        # collect() launches NO Spark job) and binds that select as a
+        # projection; every later request is evaluated by the projection
+        # directly, with no SQL parse, analysis or optimization.  Barrier
+        # steps and logged fallbacks keep the VALUES path; lookups above
+        # serving.SERVING_MAX_ROWS keep the batch join (see serving.py)
         import time
 
         req = events.head()
         # warm: the first request compiles the program from the fitted
-        # lookup tables the steps hold (no Spark job)
+        # lookup tables the steps hold and binds its projection (no
+        # Spark job)
         dfp.serve_rows(fitted, spark, [req], events.schema)
         t0 = time.perf_counter()
         out_rows = dfp.serve_rows(fitted, spark, [req], events.schema)

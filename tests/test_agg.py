@@ -123,3 +123,16 @@ def test_fit_transform_broadcasts_held_lookup(spark, no_auto_broadcast):
             a = sorted(map(tuple, fused.select(*cols).collect()))
             b = sorted(map(tuple, joined.select(*cols).collect()))
             assert a == b
+
+
+def test_global_mean_is_correctly_rounded(spark):
+    """A global ``mean`` is the correctly rounded mean, as Imputer's is.
+    Spark's ``avg`` sums each partition in order: laid out in 3
+    partitions, ``[0.0, 0.5, 2**-149, -0.5]`` averages to 0.0 there, for
+    a mean of 2**-151."""
+    xs = [0.0, 0.5, 2.0 ** -149, -0.5]
+    df = spark.createDataFrame(
+        spark.sparkContext.parallelize([(x,) for x in xs], 3), "x double")
+    agg = dfp.Aggregator(inputs=["x"], outputs=["x_mean"], func="mean")
+    assert agg.fit(df).vals == [2.0 ** -151]
+    assert {r.x_mean for r in agg.transform(df).collect()} == {2.0 ** -151}

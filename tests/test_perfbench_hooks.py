@@ -37,8 +37,9 @@ def test_layer_targets_resolve(perfbench):
 def test_online_workload_spans_and_compiled_ratio(spark, tmp_path,
                                                   perfbench):
     """The online workload on a small input: requests go through the
-    wrapped serving layers (render, plan, collect), launch no job, equal
-    batch, and every lookup step is compiled."""
+    wrapped ``serve_rows`` but, once the program is bound at set-up, not
+    through the VALUES path's layers (render, plan); they launch no job,
+    equal batch, and every lookup step is compiled."""
     workloads, tracer, SparkCounters = perfbench
     tr = tracer.Tracer()
     ctx = workloads.Context(spark, "/root/testdata/sf0.001", str(tmp_path),
@@ -56,7 +57,8 @@ def test_online_workload_spans_and_compiled_ratio(spark, tmp_path,
         tr.enabled = False
         tr.uninstall()
     spans = {s[0] for s in tr.spans}
-    assert {"serving.serve_rows", "serving.render", "serving.plan"} <= spans
+    assert "serving.serve_rows" in spans
+    assert not {"serving.render", "serving.plan"} & spans
     checked, failed, problems = wl.check()
     assert failed == 0, problems
     assert wl.request_jobs == 0

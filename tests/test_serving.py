@@ -4,12 +4,16 @@ launches no job), recompilation on refit, logged fallbacks, and
 inline-VALUES row rendering."""
 
 import datetime as dt
+import decimal
 import math
+import struct
+import types
 
 import pandas as pd
 import pytest
 
 import dataframe_pipeline_spark as dfp
+from dataframe_pipeline_spark.base import SparkDFPBase
 from dataframe_pipeline_spark.serving import local_rows_df, serve_rows
 
 
@@ -732,3 +736,229 @@ def test_every_operator_declares_or_is_listed():
         assert declares or name in _OWN_TRANSFORM, name
         own = cls.transform is not SparkDFPBase.transform
         assert own == (name in _OWN_TRANSFORM), name
+
+
+# -- the bound projection: a request without parse, analysis or optimizer --
+
+def _assert_exact(got, want):
+    """Same columns in the same order, values of the same type and equal
+    bit for bit (a NaN equals a NaN; -0.0 differs from 0.0)."""
+    assert list(got.asDict()) == list(want.asDict())
+    for k, w in want.asDict().items():
+        g = got[k]
+        assert type(g) is type(w), (k, g, w)
+        if isinstance(w, float):
+            assert (math.isnan(g) and math.isnan(w)) \
+                or struct.pack("<d", g) == struct.pack("<d", w), (k, g, w)
+        else:
+            assert g == w, (k, g, w)
+
+
+@pytest.fixture()
+def values_path(monkeypatch):
+    """Records each ``local_rows_df`` call (one per request served
+    through VALUES); ``forbid()`` makes any further call raise."""
+    from dataframe_pipeline_spark import serving
+
+    calls = []
+    render = serving.local_rows_df
+
+    def counted(*args):
+        calls.append(args)
+        return render(*args)
+
+    def forbid():
+        def refuse(*args):
+            raise AssertionError("local_rows_df called after binding")
+        monkeypatch.setattr(serving, "local_rows_df", refuse)
+
+    monkeypatch.setattr(serving, "local_rows_df", counted)
+    return types.SimpleNamespace(calls=calls, forbid=forbid)
+
+
+_TYPED_SCHEMA = ("event_id long, i long, t timestamp, d date, "
+                 "m decimal(10,2), x double, s string")
+
+
+def _typed_rows():
+    utc5 = dt.timezone(dt.timedelta(hours=5))
+    ts = [dt.datetime(2024, 2, 29, 13, 45, 0, 123456),
+          dt.datetime(2024, 1, 2, 3, 4, 5, tzinfo=utc5), None]
+    ds = [dt.date(2024, 2, 29), dt.date(1969, 12, 31), None]
+    ms = [decimal.Decimal("12.34"), decimal.Decimal("-0.05"), None]
+    xs = [1.5, float("nan"), None, -0.0, 1e300]
+    ss = ["a", "it's", "back\\slash", "'\\'", None, "never seen"]
+    return [(k, k % 4, ts[k % 3], ds[k % 3], ms[k % 3], xs[k % 5], ss[k % 6])
+            for k in range(30)]
+
+
+def _typed_pipe(spark):
+    train = spark.createDataFrame(_typed_rows()[:20], _TYPED_SCHEMA)
+    pipe = dfp.DataframePipeline(steps=[
+        dfp.ComplementLabelEncoder(inputs=["s"], outputs=["s_id"]),
+        dfp.FrequencyEncoder(inputs=["i"], outputs=["i_freq"]),
+        dfp.DateTransformer(column="t"),
+        dfp.Scaler(inputs=["x"], outputs=["x_mm"], strategy="minmax"),
+        dfp.FunctionTransformer(inputs=["i"], outputs=["i3"],
+                                func=lambda i: i * 3),
+    ])
+    pipe.fit_transform(train)
+    return pipe, train.schema
+
+
+def test_serving_projection_typed_inputs_exact(spark, count_jobs,
+                                              values_path):
+    """After the first request binds the projection, requests never
+    render a VALUES relation, and every served row equals batch bit for
+    bit: LongType inputs as small Python ints, naive and tz-aware
+    timestamps, dates, decimals, NaN/None/-0.0 doubles and strings with
+    quotes and backslashes, one per call and all in one call."""
+    from dataframe_pipeline_spark import serving
+
+    pipe, schema = _typed_pipe(spark)
+    rows = _typed_rows()
+    _, batch = _batch_by_id(pipe, spark, rows, schema)
+    serve_rows(pipe, spark, rows[:1], schema)
+    prog = pipe._dfp_serving_program
+    assert isinstance(prog.projection, serving._Projection)
+    values_path.forbid()
+    one_by_one, jobs = count_jobs(
+        lambda: [serve_rows(pipe, spark, [r], schema)[0] for r in rows])
+    assert jobs == 0
+    for got in one_by_one + serve_rows(pipe, spark, rows, schema):
+        _assert_exact(got, batch[got["event_id"]])
+    assert pipe._dfp_serving_program is prog
+
+
+def test_serving_projection_threads(spark, values_path):
+    """One bound program serves 4 threads × 25 requests, switching
+    threads often; each equals batch."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    train, test = _online_split(spark)
+    pipe = dfp.DataframePipeline(steps=_online_steps())
+    pipe.fit_transform(train)
+    rows = test.limit(100).collect()
+    _, batch = _batch_by_id(pipe, spark, rows, test.schema)
+    serve_rows(pipe, spark, rows[:1], test.schema)
+    values_path.forbid()
+
+    def client(k):
+        return [serve_rows(pipe, spark, [r], test.schema)[0]
+                for r in rows[k::4]]
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(max_workers=4) as pool:
+            served = [r for part in pool.map(client, range(4), timeout=600)
+                      for r in part]
+    finally:
+        sys.setswitchinterval(interval)
+    assert len(served) == 100
+    for got in served:
+        _assert_exact(got, batch[got["event_id"]])
+
+
+class _RandomGate(SparkDFPBase):
+    """A column hook with a nondeterministic expression whose value is
+    not random: ``x`` wherever ``rand(1) < 2``."""
+
+    def column_exprs(self, view):
+        from pyspark.sql import functions as F
+
+        return {"x_gated": F.when(F.rand(1) < 2, view.col("x"))}
+
+
+def _fallback_case(spark, caplog, values_path, pipe, schema, reason):
+    """Three requests keep the VALUES path, the fallback is logged once
+    with ``reason``, and every served row equals batch."""
+    import logging
+
+    rows = _typed_rows()[:3]
+    _, batch = _batch_by_id(pipe, spark, rows, schema)
+    with caplog.at_level(logging.WARNING, logger="dataframe_pipeline_spark"):
+        served = serve_rows(pipe, spark, rows[:1], schema)
+        compiled = len(values_path.calls)
+        served += [serve_rows(pipe, spark, [r], schema)[0] for r in rows[1:]]
+    msgs = [m.getMessage() for m in caplog.records
+            if m.name == "dataframe_pipeline_spark"]
+    assert len(msgs) == 1 and "VALUES" in msgs[0] and reason in msgs[0], msgs
+    assert pipe._dfp_serving_program.projection is False
+    assert len(values_path.calls) == compiled + 2
+    for got in served:
+        _assert_exact(got, batch[got["event_id"]])
+
+
+def test_serving_projection_construction_failure_falls_back(
+        spark, caplog, monkeypatch, values_path):
+    from dataframe_pipeline_spark import serving
+
+    def fail(*args):
+        raise RuntimeError("InterpretedMutableProjection: no constructor")
+
+    pipe, schema = _typed_pipe(spark)
+    monkeypatch.setattr(serving, "_Projection", fail)
+    _fallback_case(spark, caplog, values_path, pipe, schema,
+                   "RuntimeError: InterpretedMutableProjection")
+
+
+def test_serving_nondeterministic_hook_keeps_values_path(spark, caplog,
+                                                         values_path):
+    pipe, schema = _typed_pipe(spark)
+    pipe.steps.append(_RandomGate())
+    _fallback_case(spark, caplog, values_path, pipe, schema,
+                   "nondeterministic")
+
+
+def test_serving_mistyped_request_keeps_values_path(spark, caplog,
+                                                    values_path):
+    """A request value that ``createDataFrame`` would reject (an int in
+    a double column) is cast by the VALUES path, logged once; the
+    program stays bound for well-typed requests."""
+    import logging
+
+    pipe, schema = _typed_pipe(spark)
+    rows = _typed_rows()
+    _, batch = _batch_by_id(pipe, spark, rows[:1], schema)
+    serve_rows(pipe, spark, rows[:1], schema)
+    compiled = len(values_path.calls)
+    mistyped = [rows[0][:5] + (3,) + rows[0][6:]] * 2
+    with caplog.at_level(logging.WARNING, logger="dataframe_pipeline_spark"):
+        served = [serve_rows(pipe, spark, [r], schema)[0] for r in mistyped]
+    msgs = [m.getMessage() for m in caplog.records
+            if m.name == "dataframe_pipeline_spark"]
+    assert len(msgs) == 1 and "declared type" in msgs[0], msgs
+    assert len(values_path.calls) == compiled + 2
+    assert pipe._dfp_serving_program.projection
+    typed = dict(batch[0].asDict(), x=3.0)
+    _, want = _batch_by_id(pipe, spark, [tuple(typed[f.name] for f in
+                                               schema.fields)], schema)
+    for got in served:
+        _assert_exact(got, want[0])
+    values_path.forbid()
+    _assert_exact(serve_rows(pipe, spark, rows[:1], schema)[0], batch[0])
+
+
+def test_serving_projection_failure_falls_back(spark, caplog, values_path):
+    """A request the bound projection fails on but the VALUES path
+    serves is served through VALUES; the program unbinds, logged once."""
+    import logging
+
+    pipe, schema = _typed_pipe(spark)
+    rows = _typed_rows()[:3]
+    _, batch = _batch_by_id(pipe, spark, rows, schema)
+    serve_rows(pipe, spark, rows[:1], schema)
+    prog = pipe._dfp_serving_program
+    jvm = spark._jvm
+    prog.projection._evaluate = types.SimpleNamespace(
+        apply=lambda row: jvm.java.lang.Long.parseLong("not a number"))
+    with caplog.at_level(logging.WARNING, logger="dataframe_pipeline_spark"):
+        served = [serve_rows(pipe, spark, [r], schema)[0] for r in rows]
+    msgs = [m.getMessage() for m in caplog.records
+            if m.name == "dataframe_pipeline_spark"]
+    assert len(msgs) == 1 and "NumberFormatException" in msgs[0], msgs
+    assert prog.projection is False
+    for got in served:
+        _assert_exact(got, batch[got["event_id"]])
