@@ -19,8 +19,9 @@ median is one ``df.agg`` of exact ``percentile(c, 0.5)`` over all inputs.
 A float/double mean is the correctly rounded mean (:func:`statistics`):
 Spark's ``avg`` sums doubles in partition order, so under cancellation
 it depends on the partitioning (``[0.0, 0.5, -0.5, 2**-149]`` averages
-to 0.0 or to 2**-151).  Integral and decimal columns keep ``avg``, whose
-sum is already exact.
+to 0.0 or to 2**-151).  Integral columns join that aggregate when it
+runs; alone, integral and decimal columns keep ``avg``, whose sum is
+already exact.
 ``percentile`` holds each partition's values in executor memory, so a
 median fill over many millions of rows is slow (SCALE.md §Round 7), but
 it is exact.
@@ -32,6 +33,7 @@ from fractions import Fraction
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DecimalType
 
 from ..base import ColumnView, SparkDFPBase, is_floating, nan_to_null
 
@@ -70,32 +72,44 @@ class Imputer(SparkDFPBase):
         return df.withColumns(self._fill_exprs(ColumnView(df), self.values))
 
 
-def statistics(df: DataFrame, means=(), medians=()) -> tuple[list, list]:
-    """The mean of each of ``means`` and the exact ``percentile(x, 0.5)``
-    of each of ``medians`` (expressions over ``df``; NULL skipped, callers
-    map NaN to NULL).  A floating mean is correctly rounded
-    (:func:`_exact_means`, whose aggregate the medians then share); any
-    other is Spark's ``avg``, whose sum is exact."""
-    floating = ([is_floating(f.dataType) for f in df.select(*means).schema]
-                if means else [])
-    exact = [e for e, fl in zip(means, floating) if fl]
-    aggs = [F.mean(e) for e, fl in zip(means, floating) if not fl]
-    got = None      # the medians, when the exact aggregate computed them
-    if exact:
-        exact, got = _exact_means(df, exact, medians)
+def statistics(df: DataFrame, means=(), medians=(),
+               stddevs=()) -> tuple[list, list, list]:
+    """The mean of each of ``means``, the exact ``percentile(x, 0.5)`` of
+    each of ``medians`` and the ``stddev_pop`` of each of ``stddevs``
+    (expressions over ``df``; NULL skipped, callers map NaN to NULL), in
+    one aggregate.  A floating mean is correctly rounded
+    (:func:`_exact_means`, whose grouped aggregate then computes every
+    other statistic too, an integral mean correctly rounded as well); a
+    mean of integral or decimal columns alone is Spark's ``avg``, whose
+    sum is exact."""
+    dtypes = ([f.dataType for f in df.select(*means).schema]
+              if means else [])
+    grouped = any(map(is_floating, dtypes))
+    exact = [grouped and not isinstance(t, DecimalType) for t in dtypes]
+    aggs = [F.mean(e) for e, ex in zip(means, exact) if not ex]
+    got = None      # the medians and deviations of the grouped aggregate
+    if grouped:
+        got = _exact_means(df, [e for e, ex in zip(means, exact) if ex],
+                           medians, stddevs)
     else:
         aggs += [F.percentile(e, F.lit(0.5)) for e in medians]
+        aggs += [F.stddev_pop(e) for e in stddevs]
     row = iter(df.agg(*[a.alias(f"v{i}") for i, a in enumerate(aggs)])
                .collect()[0] if aggs else ())
-    exact = iter(exact)
-    return ([next(exact) if fl else next(row) for fl in floating],
-            list(row) if got is None else got)
+    plain = iter([next(row) for ex in exact if not ex])
+    if got is None:
+        got = ([], [next(row) for _ in medians], list(row))
+    grouped_means = iter(got[0])
+    return ([next(grouped_means if ex else plain) for ex in exact],
+            got[1], got[2])
 
 
-def _exact_means(df: DataFrame, exprs: list, medians=()) -> tuple[list, list]:
+def _exact_means(df: DataFrame, exprs: list, medians=(),
+                 stddevs=()) -> tuple[list, list, list]:
     """Correctly rounded mean of each of ``exprs`` (cast to double; NULL
-    skipped), and the exact median of each of ``medians`` from the same
-    aggregate, each median's cells a group of their own (``k`` NULL).
+    skipped), and the exact median of each of ``medians`` and the
+    ``stddev_pop`` of each of ``stddevs`` from the same aggregate, each
+    of those expressions' cells a group of their own (``k`` NULL).
 
     Each finite non-zero ``x`` is split exactly into an integer ``m`` and a
     scale ``k`` with ``x == m / 2**k``: ``k = 53 - floor(log2|x|)`` makes
@@ -107,12 +121,12 @@ def _exact_means(df: DataFrame, exprs: list, medians=()) -> tuple[list, list]:
     holding ``inf`` and ``-inf`` averages to NaN and one holding either to
     that infinity, as ``avg`` does; an empty one to NULL.
     """
-    n = len(exprs)
+    n, n_med = len(exprs), len(medians)
     cells = F.explode(F.array(*[
         F.struct(F.lit(i).alias("i"), e.cast("double").alias("x"))
-        for i, e in enumerate([*exprs, *medians])]))
-    x, med = F.col("x"), F.col("i") >= n
-    finite = ~med & (x != 0) & (F.abs(x) != _INF)
+        for i, e in enumerate([*exprs, *medians, *stddevs])]))
+    i, x = F.col("i"), F.col("x")
+    finite = (i < n) & (x != 0) & (F.abs(x) != _INF)
     k = F.when(finite, 53 - F.floor(F.log2(F.abs(x))))
     half = F.shiftright(F.col("k"), 1)
     m = x * F.pow(F.lit(2.0), half) * F.pow(F.lit(2.0), F.col("k") - half)
@@ -122,14 +136,21 @@ def _exact_means(df: DataFrame, exprs: list, medians=()) -> tuple[list, list]:
             F.count(F.when(x == _INF, 1)).alias("pos"),
             F.count(F.when(x == -_INF, 1)).alias("neg")]
     if medians:
-        aggs.append(F.percentile(F.when(med, x), F.lit(0.5)).alias("p"))
+        aggs.append(F.percentile(F.when((i >= n) & (i < n + n_med), x),
+                                 F.lit(0.5)).alias("p"))
+    if stddevs:
+        aggs.append(F.stddev_pop(F.when(i >= n + n_med, x)).alias("sd"))
     rows = (df.select(cells.alias("s")).select("s.i", "s.x")
             .where(x.isNotNull()).withColumn("k", k)
             .groupBy("i", "k").agg(*aggs).collect())
     sums = [Fraction(0)] * n
     counts, pos, neg = ([0] * n for _ in range(3))
-    out_medians = [None] * len(medians)
+    out_medians = [None] * n_med
+    out_stddevs = [None] * len(stddevs)
     for r in rows:
+        if r.i >= n + n_med:
+            out_stddevs[r.i - n - n_med] = r.sd
+            continue
         if r.i >= n:
             out_medians[r.i - n] = r.p
             continue
@@ -146,4 +167,4 @@ def _exact_means(df: DataFrame, exprs: list, medians=()) -> tuple[list, list]:
             means.append(_INF if pos[i] else -_INF)
         else:
             means.append(float(sums[i] / counts[i]) if counts[i] else None)
-    return means, out_medians
+    return means, out_medians, out_stddevs

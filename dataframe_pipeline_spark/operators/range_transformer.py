@@ -55,7 +55,7 @@ class RangeTransformer(SparkDFPBase):
         tgts = [col if self.use_all_elements else F.when(cond, col)
                 for cond, _ in entries]
         kinds = [v if isinstance(v, str) else None for _, v in entries]
-        means, medians = map(iter, statistics(
+        means, medians, _ = map(iter, statistics(
             df, means=[t for t, k in zip(tgts, kinds) if k == "mean"],
             medians=[t for t, k in zip(tgts, kinds) if k == "median"]))
         out = []

@@ -20,9 +20,12 @@ Parity notes (what the sklearn scalers actually compute):
 - NaN is ignored when fitting and propagates through transform (our
   arithmetic over NULL-normalized values does the same).
 
-Spark-first: fit runs ONE combined ``df.agg`` over every input column
+Spark-first: fit runs ONE combined aggregate over every input column
 (single scan, scalars to the driver — a handful of doubles regardless of
 data size); transform is pure Column arithmetic folded into codegen.
+The standard mean is the correctly rounded one of
+:func:`.imputer.statistics` (``avg`` depends on the partition order), whose
+aggregate computes ``stddev_pop`` too.
 """
 
 from __future__ import annotations
@@ -31,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..base import SparkDFPBase, nan_to_null
+from .imputer import statistics
 
 
 class Scaler(SparkDFPBase):
@@ -54,13 +58,19 @@ class Scaler(SparkDFPBase):
 
     def fit(self, df: DataFrame, **params):
         self.offsets, self.scales = [], []
+        if self.strategy == "standard":
+            # the correctly rounded mean, whatever the partition order,
+            # and the deviation in the same aggregate
+            vs = [nan_to_null(df, c) for c in self.inputs]
+            self.offsets, _, sds = statistics(df, means=vs, stddevs=vs)
+            self.scales = [1.0 / sd if sd not in (None, 0, 0.0) else 1.0
+                           for sd in sds]
+            return self
         aggs = []
         for i, c in enumerate(self.inputs):
             v = nan_to_null(df, c)
             if self.strategy == "minmax":
                 aggs += [F.min(v).alias(f"lo{i}"), F.max(v).alias(f"hi{i}")]
-            elif self.strategy == "standard":
-                aggs += [F.mean(v).alias(f"mu{i}"), F.stddev_pop(v).alias(f"sd{i}")]
             elif self.strategy == "robust":
                 # ONE array-percentile state per column (a single
                 # value-count map over the data), not three separate
@@ -79,11 +89,6 @@ class Scaler(SparkDFPBase):
                 rng = (hi - lo) if (hi is not None and lo is not None) else None
                 scale = 1.0 / rng if rng not in (None, 0, 0.0) else 1.0
                 self.offsets.append(lo)
-                self.scales.append(scale)
-            elif self.strategy == "standard":
-                mu, sd = row[f"mu{i}"], row[f"sd{i}"]
-                scale = 1.0 / sd if sd not in (None, 0, 0.0) else 1.0
-                self.offsets.append(mu)
                 self.scales.append(scale)
             elif self.strategy == "robust":
                 qs = row[f"qs{i}"]

@@ -29,8 +29,9 @@ projection (``ConvertToLocalRelation``), on the driver, and the plan's
 size does not grow with the dictionaries.  The program then binds that
 same projection once (:class:`_Projection`), and checks it gives the
 first request's result exactly.  Every later request is render →
-encode by declared type → project → decode, four Py4J calls a row,
-under a per-program lock.  Requests keep the ``VALUES`` path (the
+encode by declared type → one JVM function that unpickles, projects and
+pickles the row → decode: one Py4J call a row, under a per-program
+lock.  Requests keep the ``VALUES`` path (the
 parity reference) in a program with a barrier, for a select with a
 nondeterministic expression, where binding fails or its template
 result differs (each logged once), for a request whose values are not
@@ -70,6 +71,7 @@ import math
 import threading
 from dataclasses import dataclass
 
+from py4j.java_gateway import get_java_class
 from py4j.protocol import Py4JError, Py4JJavaError
 from pyspark.errors.exceptions.captured import CapturedException
 from pyspark.serializers import CPickleSerializer
@@ -413,10 +415,14 @@ class _Projection:
     keeps one, built from the analyzed plan of the select ``df`` after
     ``ReplaceExpressions``, so a request skips parsing, analysis and
     optimization.  A request is encoded as ``createDataFrame`` encodes it
-    (type verification, ``StructType.toInternal``, a pickle read into an
-    internal row by ``EvaluatePython.makeFromJava``) and decoded as
-    ``collect()`` decodes it (``EvaluatePython.toJava`` pickled by the
-    registered pickler): four Py4J calls per row.  The projection and the
+    (type verification, ``StructType.toInternal``, a pickle) and decoded
+    as ``collect()`` decodes it (``pickle.loads``, then the output
+    schema's ``fromInternal``, which is ``collect()``'s row converter).
+    In between, one JVM function composed at bind time (:class:`_Invoke`)
+    unpickles the row, reads it into an internal row
+    (``EvaluatePython.makeFromJava``), projects it, converts it back
+    (``EvaluatePython.toJava``) and pickles its values with the
+    registered pickler: one Py4J call per row.  The projection and the
     pickler keep state, so rows are evaluated under a lock."""
 
     _serializer = CPickleSerializer()
@@ -444,13 +450,24 @@ class _Projection:
         jvm.org.apache.spark.api.python.SerDeUtil.initialize()
         session = df.sparkSession._jsparkSession
         jschema = session.parseDataType(schema.json())
-        self._evaluate = python.makeFromJava(jschema).andThen(projection)
-        self._to_java = python.toJava
-        self._binary_as_bytes = session.sessionState().conf() \
-            .pysparkBinaryAsBytes()
-        self._out = df._jdf.schema()
-        self._pickler = jvm.net.razorvine.pickle.Pickler(True, False)
-        self._unpickler = jvm.net.razorvine.pickle.Unpickler()
+        binary_as_bytes = session.sessionState().conf().pysparkBinaryAsBytes()
+        pickle, h = jvm.net.razorvine.pickle, _Invoke(df.sparkSession)
+        self._apply = h.function([
+            h.virtual(pickle.Unpickler, "loads", f"([B){_OBJECT}",
+                      pickle.Unpickler()),
+            h.virtual(jvm.scala.Function1, "apply", f"({_OBJECT}){_OBJECT}",
+                      python.makeFromJava(jschema).andThen(projection)),
+            h.static(python, "toJava", f"({_OBJECT}Lorg/apache/spark/sql/"
+                     f"types/DataType;Z){_OBJECT}", df._jdf.schema(),
+                     binary_as_bytes),
+            # the row's values alone: a pickled row would carry its
+            # schema as JSON, parsed again for every row
+            h.virtual(jvm.org.apache.spark.sql.catalyst.expressions
+                      .GenericRow, "values", f"()[{_OBJECT}"),
+            h.virtual(pickle.Pickler, "dumps", f"({_OBJECT})[B",
+                      pickle.Pickler(True, False)),
+        ]).apply
+        self._out = df.schema
         self._schema = schema
         self._verify = _make_type_verifier(schema)
         self._lock = threading.Lock()
@@ -466,25 +483,77 @@ class _Projection:
             return None
         dumps, loads = self._serializer.dumps, self._serializer.loads
         encoded = [dumps(self._schema.toInternal(vals)) for vals in rows]
-        out = []
         with self._lock:
-            for data in encoded:
-                row = self._evaluate.apply(self._unpickler.loads(data))
-                out.append(self._pickler.dumps(self._to_java(
-                    row, self._out, self._binary_as_bytes)))
-        return [loads(data) for data in out]
+            out = [self._apply(data) for data in encoded]
+        return [self._out.fromInternal(loads(data)) for data in out]
+
+
+_OBJECT = "Ljava/lang/Object;"
+
+
+class _Invoke:
+    """Public JVM methods as ``java.lang.invoke`` method handles, joined
+    into one JVM function, so a Python caller pays one Py4J call for a
+    chain of calls."""
+
+    def __init__(self, spark):
+        self._gateway = spark.sparkContext._gateway
+        self._invoke = spark._jvm.java.lang.invoke
+        self._lookup = self._invoke.MethodHandles.publicLookup()
+
+    def _find(self, owner, name: str, descriptor: str, static: bool):
+        owner = get_java_class(owner)
+        mtype = self._invoke.MethodType.fromMethodDescriptorString(
+            descriptor, owner.getClassLoader())
+        find = self._lookup.findStatic if static else self._lookup.findVirtual
+        return find(owner, name, mtype)
+
+    def static(self, owner, name: str, descriptor: str, *bound):
+        """The public static method ``name`` of class ``owner`` (a
+        ``JavaClass``) with JVM ``descriptor``; ``bound`` fill its
+        parameters after the first."""
+        handle = self._find(owner, name, descriptor, static=True)
+        args = self._gateway.new_array(self._gateway.jvm.java.lang.Object,
+                                       len(bound))
+        for i, v in enumerate(bound):
+            args[i] = v
+        return self._invoke.MethodHandles.insertArguments(handle, 1, args)
+
+    def virtual(self, owner, name: str, descriptor: str, receiver=None):
+        """The public instance method ``name`` of class ``owner`` (a
+        ``JavaClass``) with JVM ``descriptor``, bound to ``receiver``,
+        or called on its argument without one."""
+        handle = self._find(owner, name, descriptor, static=False)
+        return handle if receiver is None else handle.bindTo(receiver)
+
+    def function(self, handles):
+        """One ``java.util.function.Function`` applying ``handles`` (each
+        of one parameter) in turn, each to the previous one's result
+        (``MethodHandles.filterReturnValue``)."""
+        generic = self._invoke.MethodType.genericMethodType(1)
+        chain = None
+        for handle in handles:
+            handle = handle.asType(generic)
+            chain = (handle if chain is None else self._invoke.MethodHandles
+                     .filterReturnValue(chain, handle))
+        return self._invoke.MethodHandleProxies.asInterfaceInstance(
+            get_java_class(self._gateway.jvm.java.util.function.Function),
+            chain)
 
 
 def _same(a, b) -> bool:
-    """Equal values of equal types, a NaN equal to a NaN: the template
-    check, stricter than ``==`` on rows (names, types) and NaN-aware."""
+    """Equal values of equal types, floats bit for bit but a NaN equal to
+    a NaN: the template check, stricter than ``==`` on rows (names,
+    types, the sign of zero) and NaN-aware."""
     if isinstance(a, (tuple, list)):
         return (type(a) is type(b) and len(a) == len(b)
                 and getattr(a, "__fields__", None)
                 == getattr(b, "__fields__", None)
                 and all(map(_same, a, b)))
-    if isinstance(a, float) and a != a:
-        return isinstance(b, float) and b != b
+    if isinstance(a, float):
+        return type(b) is float and (
+            a != a and b != b
+            or a == b and math.copysign(1.0, a) == math.copysign(1.0, b))
     return type(a) is type(b) and a == b
 
 
@@ -568,6 +637,9 @@ def _sql_literal(v, dt) -> str:
             return "CAST('NaN' AS DOUBLE)"
         if math.isinf(v):
             return f"CAST('{'-' if v < 0 else ''}Infinity' AS DOUBLE)"
+        if v == 0 and math.copysign(1.0, v) < 0:
+            # SQL reads -0.0 as a decimal zero, which has no sign
+            return "CAST('-0.0' AS DOUBLE)"
         return repr(v)
     if isinstance(v, decimal.Decimal):
         return str(v)

@@ -62,7 +62,9 @@ def main():
         # with the select applied (the plan folds to LocalTableScan, so
         # collect() launches NO Spark job) and binds that select as a
         # projection; every later request is evaluated by the projection
-        # directly, with no SQL parse, analysis or optimization.  Barrier
+        # directly, with no SQL parse, analysis or optimization, in one
+        # Py4J call a row (unpickle, project and pickle are composed
+        # into one JVM function when the projection is bound).  Barrier
         # steps and logged fallbacks keep the VALUES path; lookups above
         # serving.SERVING_MAX_ROWS keep the batch join (see serving.py)
         import time

@@ -113,6 +113,8 @@ def test_local_rows_df_type_fidelity(spark):
     assert got[0]["t"] == dt.datetime(2024, 1, 2, 3, 4, 5, 123456)
     assert got[1]["i"] is None and got[1]["s"] is None and got[1]["t"] is None
     assert got[2]["x"] == float("inf") and got[2]["s"] == ""
+    # the sign of zero survives, as in createDataFrame
+    assert math.copysign(1.0, got[1]["x"]) == -1.0
     # and it is a LocalRelation, not a Python RDD
     assert "LocalTableScan" in df._jdf.queryExecution().executedPlan().toString()
 
@@ -358,13 +360,16 @@ def _online_split(spark):
     return sources.split_mod(ev, "event_id")
 
 
-def _assert_rows_match(got, want):
-    assert list(got.asDict()) == list(want.asDict())   # column order
+def _assert_exact(got, want):
+    """Same columns in the same order, values of the same type and equal
+    bit for bit (a NaN equals a NaN; -0.0 differs from 0.0)."""
+    assert list(got.asDict()) == list(want.asDict())
     for k, w in want.asDict().items():
         g = got[k]
-        if isinstance(w, float) and isinstance(g, float):
+        assert type(g) is type(w), (k, g, w)
+        if isinstance(w, float):
             assert (math.isnan(g) and math.isnan(w)) \
-                or g == pytest.approx(w, rel=1e-9, abs=0.0), (k, g, w)
+                or struct.pack("<d", g) == struct.pack("<d", w), (k, g, w)
         else:
             assert g == w, (k, g, w)
 
@@ -377,7 +382,7 @@ def _batch_by_id(pipe, spark, rows, schema):
 def test_serving_parity_every_row(spark):
     """Every held-out row, served one per call and all in one N-row
     call, equals batch transform: column order, dtypes, values (floats
-    within 1e-9 relative), including NULL/NaN/unseen inputs."""
+    bit for bit), including NULL/NaN/unseen inputs."""
     train, test = _online_split(spark)
     pipe = dfp.DataframePipeline(steps=_online_steps())
     pipe.fit_transform(train)
@@ -397,7 +402,7 @@ def test_serving_parity_every_row(spark):
     all_at_once = serve_rows(pipe, spark, rows, schema)
     assert len(all_at_once) == len(rows)
     for got in one_by_one + all_at_once:
-        _assert_rows_match(got, batch[got["event_id"]])
+        _assert_exact(got, batch[got["event_id"]])
     served = pipe.serving_transform(local_rows_df(spark, rows, schema))
     assert [(f.name, f.dataType) for f in served.schema.fields] == \
         [(f.name, f.dataType) for f in batch_schema.fields]
@@ -462,7 +467,7 @@ def test_serving_recompiles_after_one_step_refit(spark, refit):
     _, batch = _batch_by_id(pipe, spark, rows, test.schema)
     after = serve_rows(pipe, spark, rows, test.schema)
     for got in after:
-        _assert_rows_match(got, batch[got["event_id"]])
+        _assert_exact(got, batch[got["event_id"]])
     moved = {"scaler": ["value_mm"], "encoder": ["type_id"],
              "pipeline": ["type_id", "value_mm"]}[refit]
     for col in moved:
@@ -490,7 +495,7 @@ def test_serving_save_load_new_session_job_free(spark, tmp_path):
         sc.setJobGroup(None, None)
     assert sc.statusTracker().getJobIdsForGroup("serve-after-load") == []
     for g, e in zip(got, expected):
-        _assert_rows_match(g, e)
+        _assert_exact(g, e)
 
 
 def test_serving_fallbacks_logged_once(spark, caplog, monkeypatch):
@@ -538,7 +543,7 @@ def test_serving_fallbacks_logged_once(spark, caplog, monkeypatch):
     assert "value_key" in msgs[1] and "literal map" in msgs[1]
     assert "step 2 (Imputer)" in msgs[2] and "barrier" in msgs[2]
     want = pipe.transform(spark.createDataFrame([rows[-1]], test.schema))
-    _assert_rows_match(got, want.collect()[0])
+    _assert_exact(got, want.collect()[0])
 
 
 class LabelEncoder:  # sklearn stand-in, recognized by class name
@@ -593,7 +598,7 @@ def test_serving_parity_float_and_null_keys(spark, monkeypatch, name, tier):
         df = spark.createDataFrame(rows, schema)
         _, batch = _batch_by_id(pipe, spark, rows, df.schema)
         for got in serve_rows(pipe, spark, rows, df.schema):
-            _assert_rows_match(got, batch[got["event_id"]])
+            _assert_exact(got, batch[got["event_id"]])
         # held: compiled into Python lookups; checkpointed: batch join
         assert bool(getattr(op, base.SERVING_CACHE_ATTR)) == (tier == "held")
     finally:
@@ -687,7 +692,7 @@ def test_serving_row_operators_compiled(spark, caplog, count_jobs, name):
     assert jobs == 0
     assert len(served) == len(rows)
     for got in served:
-        _assert_rows_match(got, batch[got["event_id"]])
+        _assert_exact(got, batch[got["event_id"]])
 
 
 def test_wrap_scaler_save_load_parity(spark, tmp_path):
@@ -703,7 +708,7 @@ def test_wrap_scaler_save_load_parity(spark, tmp_path):
     _, got = _batch_by_id(loaded, spark, rows, train.schema)
     for row in [*got.values(), *serve_rows(loaded, spark, rows,
                                            train.schema)]:
-        _assert_rows_match(row, want[row["event_id"]])
+        _assert_exact(row, want[row["event_id"]])
 
 
 #: operators that keep a batch transform of their own, and why neither
@@ -739,20 +744,6 @@ def test_every_operator_declares_or_is_listed():
 
 
 # -- the bound projection: a request without parse, analysis or optimizer --
-
-def _assert_exact(got, want):
-    """Same columns in the same order, values of the same type and equal
-    bit for bit (a NaN equals a NaN; -0.0 differs from 0.0)."""
-    assert list(got.asDict()) == list(want.asDict())
-    for k, w in want.asDict().items():
-        g = got[k]
-        assert type(g) is type(w), (k, g, w)
-        if isinstance(w, float):
-            assert (math.isnan(g) and math.isnan(w)) \
-                or struct.pack("<d", g) == struct.pack("<d", w), (k, g, w)
-        else:
-            assert g == w, (k, g, w)
-
 
 @pytest.fixture()
 def values_path(monkeypatch):
@@ -941,24 +932,114 @@ def test_serving_mistyped_request_keeps_values_path(spark, caplog,
     _assert_exact(serve_rows(pipe, spark, rows[:1], schema)[0], batch[0])
 
 
-def test_serving_projection_failure_falls_back(spark, caplog, values_path):
+def test_serving_projection_failure_falls_back(spark, caplog, monkeypatch,
+                                              values_path):
     """A request the bound projection fails on but the VALUES path
-    serves is served through VALUES; the program unbinds, logged once."""
+    serves is served through VALUES; the program unbinds, logged once.
+    The failure is a JVM exception inside the one composed call: the
+    request's pickle is replaced by bytes the JVM unpickler rejects."""
     import logging
 
     pipe, schema = _typed_pipe(spark)
     rows = _typed_rows()[:3]
     _, batch = _batch_by_id(pipe, spark, rows, schema)
     serve_rows(pipe, spark, rows[:1], schema)
-    prog = pipe._dfp_serving_program
-    jvm = spark._jvm
-    prog.projection._evaluate = types.SimpleNamespace(
-        apply=lambda row: jvm.java.lang.Long.parseLong("not a number"))
+    prog, compiled = pipe._dfp_serving_program, len(values_path.calls)
+    real = prog.projection._serializer
+    monkeypatch.setattr(prog.projection, "_serializer", types.SimpleNamespace(
+        dumps=lambda obj: b"\xff" + real.dumps(obj), loads=real.loads))
     with caplog.at_level(logging.WARNING, logger="dataframe_pipeline_spark"):
         served = [serve_rows(pipe, spark, [r], schema)[0] for r in rows]
     msgs = [m.getMessage() for m in caplog.records
             if m.name == "dataframe_pipeline_spark"]
-    assert len(msgs) == 1 and "NumberFormatException" in msgs[0], msgs
+    assert len(msgs) == 1 and "projection failed" in msgs[0] \
+        and "Py4JJavaError: net.razorvine.pickle" in msgs[0], msgs
     assert prog.projection is False
+    assert len(values_path.calls) == compiled + len(rows)
     for got in served:
         _assert_exact(got, batch[got["event_id"]])
+
+
+def test_serving_handle_chain_failure_falls_back(spark, caplog, monkeypatch,
+                                                 values_path):
+    """Where the JVM function cannot be composed (here ``toJava`` is
+    looked up without its binary-as-bytes flag, as on a Spark whose
+    ``toJava`` has another arity), binding fails, logged once, and every
+    request keeps the VALUES path with batch's results."""
+    from dataframe_pipeline_spark import serving
+
+    static = serving._Invoke.static
+
+    def other_arity(self, owner, name, descriptor, *bound):
+        if name == "toJava":
+            descriptor, bound = descriptor.replace("Z)", ")"), bound[:-1]
+        return static(self, owner, name, descriptor, *bound)
+
+    pipe, schema = _typed_pipe(spark)
+    monkeypatch.setattr(serving._Invoke, "static", other_arity)
+    _fallback_case(spark, caplog, values_path, pipe, schema,
+                   "binding it failed: Py4JJavaError: "
+                   "java.lang.NoSuchMethodException")
+
+
+def test_serving_bound_request_one_py4j_call_per_row(spark, monkeypatch,
+                                                     values_path):
+    """A bound request costs one Py4J round trip per row: 50 one-row
+    requests make 50 calls and one 7-row request makes 7.  Only this
+    thread's calls count: Py4J releases collected Java objects from a
+    finalizer thread."""
+    import threading
+
+    pipe, schema = _typed_pipe(spark)
+    rows = _typed_rows()
+    _, batch = _batch_by_id(pipe, spark, rows, schema)
+    serve_rows(pipe, spark, rows[:1], schema)
+    values_path.forbid()
+    client = spark.sparkContext._gateway._gateway_client
+    calls = []
+    send = client.send_command
+
+    me = threading.get_ident()
+
+    def counted(*args, **kwargs):
+        if threading.get_ident() == me:
+            calls.append(args[0])
+        return send(*args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counted)
+    served = [serve_rows(pipe, spark, [rows[k % len(rows)]], schema)[0]
+              for k in range(50)]
+    assert len(calls) == 50, calls[:8]
+    served += serve_rows(pipe, spark, rows[:7], schema)
+    assert len(calls) == 57, calls[50:]
+    monkeypatch.undo()
+    for got in served:
+        _assert_exact(got, batch[got["event_id"]])
+
+
+def test_serving_negative_zero_template_exact(spark, values_path):
+    """A first request holding -0.0 binds the projection and is served
+    with its sign, as batch serves it; so is the next request."""
+    pipe, schema = _typed_pipe(spark)
+    rows = [r for r in _typed_rows() if r[5] == 0.0][:2]
+    assert all(math.copysign(1.0, r[5]) < 0 for r in rows)
+    _, batch = _batch_by_id(pipe, spark, rows, schema)
+    served = serve_rows(pipe, spark, rows[:1], schema)
+    assert pipe._dfp_serving_program.projection
+    values_path.forbid()
+    served += serve_rows(pipe, spark, rows[1:], schema)
+    for got in served:
+        assert math.copysign(1.0, got["x"]) < 0
+        _assert_exact(got, batch[got["event_id"]])
+
+
+def test_serving_template_check_compares_float_bits():
+    from pyspark.sql import Row
+
+    from dataframe_pipeline_spark.serving import _same
+
+    nan = float("nan")
+    assert _same(Row(x=-0.0, y=nan), Row(x=-0.0, y=nan))
+    assert not _same(Row(x=-0.0), Row(x=0.0))
+    assert not _same([0.0], [-0.0])
+    assert not _same(Row(x=1.0), Row(x=1))
