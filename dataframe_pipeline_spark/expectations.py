@@ -28,9 +28,9 @@ Design for the 100 TB case:
   needs a second relation.  Each dimension's (deduplicated) key set
   is LEFT-joined with a hit marker onto a projection of JUST the
   checked column, and the miss count aggregates in that same narrow
-  subtree, cross-joined onto the report like exact unique.  The join
-  is size-gate broadcast (map-side probe when the dim fits; keyed
-  shuffle when it doesn't), the probe reads one column, and the
+  subtree, cross-joined onto the report like exact unique.  AQE picks
+  the join strategy (map-side probe when the dim is small; keyed
+  shuffle when it isn't), the probe reads one column, and the
   subtree overlaps the wide aggregate inside the one job.
 * ``quarantine(df)`` evaluates only the ROW-LEVEL checks (not_null /
   in_range / in_set / matches) as a map-only projection: returns
@@ -57,7 +57,6 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .relational import maybe_broadcast
 
 REPORT_COLUMNS = ["check", "column", "passed", "observed", "n_bad"]
 
@@ -240,7 +239,7 @@ class ExpectationSuite:
                         .dropDuplicates()
                         .withColumn(f"_hit{i}", F.lit(1)))
                 sub = (base.select(base[c.column].alias(f"_v{i}"))
-                       .join(maybe_broadcast(keys),
+                       .join(keys,
                              F.col(f"_v{i}") == F.col(f"_fk{i}"), "left")
                        .agg(F.expr(f"sum(CAST((_v{i} IS NOT NULL AND "
                                    f"_hit{i} IS NULL) AS BIGINT)) AS _m{i}")))

@@ -29,12 +29,6 @@ from .queries import _r6, _t
 from .sources import left_enrich, split_mod
 
 
-# Size-gated broadcast hint + Catalyst size statistic: canonical home
-# is relational.py; re-exported here for the query shapes below.
-from .relational import (DIM_BROADCAST_MAX_BYTES, maybe_broadcast,  # noqa: F401,E402
-                         maybe_shuffle_hash, stats_bytes as _stats_bytes)
-
-
 def _events(spark, sf_dir):
     """Load the events table with its TIMESTAMP(NANOS) column normalized
     to a microsecond TIMESTAMP — the same truncation DuckDB applies when
@@ -2458,22 +2452,15 @@ GROUP BY l_returnflag, l_linestatus
 def q_top_revenue_orders(spark, sf_dir):
     """TPC-H Q3 shape: dim-filter semi-join → fact join → group → top-k.
 
-    The customer filter is broadcast (semi-join prunes orders before the
-    fact join); top-k is TakeOrderedAndProject — per-partition heaps,
-    no global sort."""
+    The customer filter semi-joins orders before the fact join; both
+    joins take no hint, so AQE picks each strategy from the runtime
+    sizes.  Top-k is TakeOrderedAndProject — per-partition heaps, no
+    global sort."""
     cu = (_t(spark, sf_dir, "customer")
           .filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey"))
     od = _t(spark, sf_dir, "orders")
     li = _t(spark, sf_dir, "lineitem")
-    # The customer filter dim is size-gate broadcast (true small dim);
-    # the orders-derived semi-join result is left to AQE — measured
-    # A/B at sf1 (scale_tail_analysis round): forcing the fact-derived
-    # dim broadcast costs more than AQE's runtime-size plan once the
-    # materialized dim reaches ~10^6 rows, and the sf0.1 benefit of
-    # the hint is a fixed ~0.2s.  AQE still broadcasts it at small
-    # scale from actual runtime sizes; at 100x it never OOMs.
-    od_b = (od.join(maybe_broadcast(cu), od.o_custkey == cu.c_custkey,
-                    "left_semi")
+    od_b = (od.join(cu, od.o_custkey == cu.c_custkey, "left_semi")
             .select("o_orderkey", "o_orderdate"))
     # Rank on the exact decimal sum and cast only the surviving 10 rows
     # to double: the cast is monotone, so desc order and ties are the
@@ -2500,7 +2487,7 @@ LIMIT 10
 
 
 def q_revenue_by_nation(spark, sf_dir):
-    """TPC-H Q5 shape: snowflake join (two broadcast dims) → rollup.
+    """TPC-H Q5 shape: snowflake join (two dims) → rollup.
 
     Shuffle-minimal shape (r9, A/B-measured at sf1 — 2.0s → 0.99s):
 
@@ -2508,34 +2495,28 @@ def q_revenue_by_nation(spark, sf_dir):
       are distributive, so lineitem is pre-aggregated to one
       exact-decimal partial per l_orderkey (~4:1; map-side combine is
       near-free because lineitem files are clustered by orderkey)
-      before the shuffle join — at any scale the join moves ~|orders|
+      before the join — at any scale the join moves ~|orders|
       partial rows instead of |lineitem| raw rows.
-    * The join is a size-gated SHUFFLE-HASH join (build = the
-      pre-aggregate, bounded by the orders scan statistic): both sides
-      are ~|orders| rows, so sort-merge's two 1.5M-row sorts are pure
-      overhead next to a per-partition hash map.  Past the gate
-      (100 TB) the hint disappears and the plan degrades to SMJ.
+    * No join takes a hint: AQE picks each strategy from the runtime
+      sizes of the materialized sides.
     * The 25-row nation name rides AFTER the aggregate: the shuffle
       and group keys are the INT c_nationkey, not the name string —
-      narrower exchanges, and the n_name broadcast join touches 25
-      rows instead of |orders|."""
+      narrower exchanges, and the n_name join touches 25 rows
+      instead of |orders|."""
     na = _t(spark, sf_dir, "nation")
     cu = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    od_scan = _t(spark, sf_dir, "orders")
-    od = od_scan.select("o_orderkey", "o_custkey")
+    od = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = _t(spark, sf_dir, "lineitem")
     li_pre = (li.groupBy("l_orderkey")
               .agg(F.sum(_rev()).alias("_r"),
                    F.count(F.lit(1)).alias("_n")))
-    dim = (od.join(maybe_broadcast(cu), od.o_custkey == cu.c_custkey)
+    dim = (od.join(cu, od.o_custkey == cu.c_custkey)
            .select("o_orderkey", "c_nationkey"))
     return (
-        maybe_shuffle_hash(li_pre, bound_df=od_scan)
-        .join(dim, li_pre.l_orderkey == dim.o_orderkey)
+        li_pre.join(dim, li_pre.l_orderkey == dim.o_orderkey)
         .groupBy("c_nationkey")
         .agg(F.sum("_r").alias("_r"), F.sum("_n").alias("_n"))
-        .join(maybe_broadcast(na),
-              F.col("c_nationkey") == na.n_nationkey)
+        .join(na, F.col("c_nationkey") == na.n_nationkey)
         .select("n_name", F.col("_r").cast("double").alias("revenue"),
                 F.col("_n").alias("n_items"))
     )
@@ -2882,8 +2863,8 @@ def q_filter_blocklist(spark, sf_dir):
     event from error-heavy users (>= 14 error events — a criterion that
     splits the user population at every sf, so both kept and dropped
     sides are non-empty), then aggregate.  left_anti == NOT EXISTS
-    (NULL-safe, unlike NOT IN); the blocklist side is
-    size-gate-broadcast."""
+    (NULL-safe, unlike NOT IN); AQE picks the join strategy for the
+    blocklist side."""
     from .relational import filter_blocklist
     ev = _events(spark, sf_dir)
     blocked = (ev.filter(F.col("event_type") == "error")
@@ -3909,13 +3890,14 @@ def q_events_value_zscore(spark, sf_dir):
     with population std per event_type.  Plan note: a WINDOW over
     event_type would funnel the whole table through 5 partitions (one
     per group — the classic low-cardinality window skew); the
-    scale-correct shape is a 5-row grouped aggregate broadcast-joined
-    back — fact side stays map-only."""
+    scale-correct shape is a 5-row grouped aggregate joined back,
+    which AQE broadcasts from its runtime size — fact side stays
+    map-only."""
     ev = _events(spark, sf_dir)
     stats = (ev.groupBy("event_type")
              .agg(F.avg("value").alias("__mu"),
                   F.stddev_pop("value").alias("__sd")))
-    joined = ev.join(maybe_broadcast(stats, bound_df=ev), "event_type")
+    joined = ev.join(stats, "event_type")
     return (joined.select(
         "event_id",
         F.round((F.col("value") - F.col("__mu")) / F.col("__sd"), 6)

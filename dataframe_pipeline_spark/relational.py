@@ -10,16 +10,14 @@ shuffle-hash/sort-merge plan degrades:
   cost of replicating the (medium-sized, non-broadcastable) dim side
   ``n_salts``×.
 * :func:`filter_blocklist` — anti-join against a (usually small)
-  blocked-key set, broadcast when Catalyst statistics prove it small.
+  blocked-key set.
 * :func:`topk_per_group` — bounded per-group selection with a
   deterministic total order.
 * :func:`range_join` — keyless point-in-interval join via the binning
   trick (equi-join on bucket id, never BroadcastNestedLoopJoin).
 
-The size-gated broadcast hint (:func:`maybe_broadcast`) lives here as
-the canonical implementation; query shapes and operators import it
-rather than hard-coding ``F.broadcast`` (an unconditional hint on a
-fact-derived frame is the classic 100 TB executor OOM).
+Plain equi-joins take no hint: AQE picks broadcast, shuffle-hash or
+sort-merge from the runtime size of each materialized side.
 """
 
 from __future__ import annotations
@@ -27,72 +25,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-#: Size gate for explicit dim-broadcast hints — the query-shape analog
-#: of the fitted-lookup rule (``base.FittedTable.join_view``: a table
-#: held on the driver is hinted, a checkpointed one is not).  A dim
-#: under this bound is safely an executor-memory broadcast; above it
-#: the hint is withheld and AQE picks the strategy from the true
-#: runtime size (it will still broadcast when the materialized dim
-#: turns out small).  256 MB of *source-scan parquet* over-bounds the
-#: narrow pre-joined dim by the column-pruning factor, so the gate errs
-#: conservative in the OOM-safe direction.
-DIM_BROADCAST_MAX_BYTES = 256 << 20
-
 
 def stats_bytes(df: DataFrame) -> int:
     """Catalyst's size estimate for a frame (file-size-based for scans).
     Pure planning metadata — launches no job, reads no data."""
     return int(str(
         df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
-
-
-def maybe_broadcast(df: DataFrame, bound_df: DataFrame | None = None,
-                    max_bytes: int | None = None) -> DataFrame:
-    """Size-gated broadcast hint: hint only when Catalyst statistics
-    bound ``bound_df`` (default: ``df`` itself) under ``max_bytes``;
-    otherwise return the frame unhinted and let AQE choose.
-
-    Pass ``bound_df`` when ``df`` is a join whose estimated size
-    Catalyst over-states (join estimates multiply child sizes) but
-    whose true cardinality is bounded by one input — FK-join dims:
-    orders ⋈ customer ⋈ nation has at most one row per orders row, so
-    the accurate orders *scan* statistic is the sound bound.  A fact
-    table at 100× data blows past the gate and the hint disappears —
-    an unconditional ``F.broadcast`` there is the 100 TB executor OOM.
-    """
-    limit = DIM_BROADCAST_MAX_BYTES if max_bytes is None else max_bytes
-    src = df if bound_df is None else bound_df
-    return F.broadcast(df) if stats_bytes(src) <= limit else df
-
-
-#: Size gate for shuffle-hash join hints: the hinted BUILD side must be
-#: bounded under this many bytes of source-scan statistics.  The build
-#: hash map is per-shuffle-partition (bytes / shuffle.partitions), so
-#: 2 GB over 32 local partitions is ~64 MB per task — and on a real
-#: cluster with O(1000) shuffle partitions, proportionally smaller.
-#: Past the gate the hint is withheld: sort-merge join is the unbounded
-#: -input-safe strategy, and AQE keeps the right to broadcast.
-SHJ_BUILD_MAX_BYTES = 2 << 30
-
-
-def maybe_shuffle_hash(df: DataFrame, bound_df: DataFrame | None = None,
-                       max_bytes: int | None = None) -> DataFrame:
-    """Size-gated ``shuffle_hash`` join hint — the mid-size sibling of
-    :func:`maybe_broadcast`.  For a join where one side is too big to
-    broadcast (driver build + executor replication cost) but small
-    enough that per-partition hash maps beat sort-merge's two sorts,
-    hint ``SHUFFLE_HASH`` on that side; otherwise return it unhinted
-    (AQE then picks broadcast or SMJ from runtime sizes).
-
-    Like ``maybe_broadcast``, pass ``bound_df`` when the frame is a
-    derived plan whose Catalyst size estimate over-states (pre-
-    aggregates, FK-join dims): e.g. a lineitem-per-orderkey
-    pre-aggregate has at most one row per orders row, so the orders
-    SCAN statistic is the sound bound.  A fact side at 100× data blows
-    past the gate and the plan degrades gracefully to sort-merge."""
-    limit = SHJ_BUILD_MAX_BYTES if max_bytes is None else max_bytes
-    src = df if bound_df is None else bound_df
-    return df.hint("shuffle_hash") if stats_bytes(src) <= limit else df
 
 
 def salted_join(fact: DataFrame, dim: DataFrame, on: str | list[str],
@@ -103,7 +41,7 @@ def salted_join(fact: DataFrame, dim: DataFrame, on: str | list[str],
 
     The target shape: ``fact`` has a heavy-tailed key distribution (a
     few keys own a large fraction of the rows) and ``dim`` is too big
-    for the broadcast gate, so the default plan shuffles both sides on
+    to broadcast, so the default plan shuffles both sides on
     the key and the hot keys serialize on single reducers.  Salting
     joins on ``(key, __salt)`` instead:
 
@@ -363,15 +301,13 @@ def filter_blocklist(df: DataFrame, blocked: DataFrame, col: str,
     ``left_anti`` semantics (= SQL ``NOT EXISTS``): rows with NULL keys
     are KEPT (a NULL never equals a blocked value) and NULLs in the
     blocklist never match — unlike ``NOT IN``, which nulls out the
-    whole predicate.  The blocklist side takes the size-gated broadcast
-    hint: blocklists are usually small (broadcast anti-join = map-only,
-    zero shuffle of the corpus), but a blocklist that outgrows the gate
-    falls back to a keyed shuffle instead of an executor OOM.
+    whole predicate.  The blocklist side takes no hint: AQE broadcasts
+    a small blocklist (map-only anti-join, zero shuffle of the corpus)
+    and shuffles on the key once it outgrows its broadcast threshold.
     """
     bcol = blocked_col or col
     b = blocked.select(F.col(bcol).alias("__blocked_key")).distinct()
-    return df.join(maybe_broadcast(b),
-                   df[col] == F.col("__blocked_key"), "left_anti")
+    return df.join(b, df[col] == F.col("__blocked_key"), "left_anti")
 
 
 def topk_per_group(df: DataFrame, group_cols: str | list[str],

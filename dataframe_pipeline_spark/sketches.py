@@ -68,8 +68,6 @@ class CountMinSketch:
         set's (row, col) cells against the sketch and takes the
         per-key min — a broadcast join of two tiny frames, the source
         data is never touched."""
-        from .relational import maybe_broadcast
-
         spark = sketch.sparkSession
         vals = ", ".join(
             "(" + ("'" + str(p).replace("'", "''") + "'"
@@ -81,7 +79,7 @@ class CountMinSketch:
             for i in range(self.depth))
         pc = probe_df.select(
             "key", F.explode(F.expr(f"array({cells})")).alias("__s"))
-        return (pc.join(maybe_broadcast(sketch),
+        return (pc.join(sketch,
                         (F.col("__s.r") == F.col("__row"))
                         & (F.col("__s.c") == F.col("__col")),
                         "left")

@@ -53,13 +53,14 @@ def write_csv(df: DataFrame, path: str, mode: str = "overwrite",
     df.write.option("header", str(header).lower()).mode(mode).csv(path)
 
 
-def left_enrich(fact: DataFrame, dim: DataFrame, on: str | list[str],
-                broadcast_dim: bool = True) -> DataFrame:
+def left_enrich(fact: DataFrame, dim: DataFrame,
+                on: str | list[str]) -> DataFrame:
     """The reference's data-prep left join (FraudDetection1.py:94):
-    fact LEFT JOIN dim.  Small dims are broadcast so the join is
-    shuffle-free on the fact side."""
-    d = F.broadcast(dim) if broadcast_dim else dim
-    return fact.join(d, on=on, how="left")
+    fact LEFT JOIN dim, with the dim broadcast so the fact side is
+    shuffle-free.  The hint is unconditional because the reference's
+    dim is a small lookup, and Catalyst has no size for an in-memory
+    dim before execution, so unhinted it would plan a sort-merge join."""
+    return fact.join(F.broadcast(dim), on=on, how="left")
 
 
 def split_mod(df: DataFrame, key: str, modulus: int = 4,

@@ -552,8 +552,8 @@ class NgramScorer:
         avg over interior bigrams of ln((c(w1,w2)+k) / (c(w1)+k*V))
 
     via slice-zip bigram expansion joined against the fitted count
-    tables (size-gated broadcast; a vocabulary past the gate degrades
-    to a token-keyed shuffle join, never a driver collect), then one
+    tables (AQE broadcasts a small vocabulary and shuffles a large one
+    on the token key, never a driver collect), then one
     re-aggregation keyed by the document id.  No Python anywhere.
 
     Cross-engine determinism: probabilities are exact-integer-count
@@ -604,7 +604,6 @@ class NgramScorer:
               col: str = "text", out: str = "avg_logprob") -> DataFrame:
         assert self.uni_ is not None, "call fit first"
         from .dedup import spread
-        from .relational import maybe_broadcast
 
         df = spread(df)          # bigram expansion is map-stage CPU
         t = self._tokens(F.col(col))
@@ -615,9 +614,8 @@ class NgramScorer:
                       F.col("p.w2").alias("w2")))
         uni = self.uni_.withColumnRenamed("w", "__u_w")
         bi = self.bi_
-        joined = (ex.join(maybe_broadcast(uni),
-                          ex.w1 == F.col("__u_w"), "left")
-                  .join(maybe_broadcast(bi),
+        joined = (ex.join(uni, ex.w1 == F.col("__u_w"), "left")
+                  .join(bi,
                         (ex.w1 == bi.w1) & (ex.w2 == bi.w2), "left"))
         k, v = self.k, self.vocab_size_
         p = ((F.coalesce(F.col("cb"), F.lit(0)) + F.lit(k))
@@ -672,7 +670,6 @@ class BM25Retriever:
         """(id, score) for every document matching >= 1 term, score
         rounded to 6 dp (deterministic across engines)."""
         from .dedup import spread
-        from .relational import maybe_broadcast
 
         df = spread(df)          # per-term tf filters are map-stage CPU
         dl = F.size(F.split(F.col(self.text_col), " ")).cast("double")
@@ -687,7 +684,7 @@ class BM25Retriever:
             F.avg("__dl").alias("__avgdl"),
             *[F.sum((F.col(f"__tf{i}") > 0).cast("double"))
               .alias(f"__df{i}") for i in range(len(self.terms))])
-        j = with_tf.crossJoin(maybe_broadcast(stats))
+        j = with_tf.crossJoin(stats)
         k1, b = self.k1, self.b
         parts = []
         for i in range(len(self.terms)):

@@ -23,10 +23,15 @@ Scale notes (the 100 TB plan, not the sf0.01 one):
   double once at the end (revenue is ``ext_queries._rev``, the twin of
   the oracle's ``_REV``) — reduction order can never flip a hash, and
   each query has one plan whatever its input's statistics.
-* True dims (nation/region/supplier/part subsets, per-part or per-order
-  aggregates bounded by a dim) get the size-gated ``maybe_broadcast``
-  hint; anything fact-derived is left to AQE, per the sf1 A/B in
-  SCALE.md.
+* Joins take no strategy hint: AQE picks broadcast, shuffle-hash or
+  sort-merge from the runtime size of each materialized side, so a dim
+  that grows past its broadcast threshold falls back to a keyed
+  shuffle instead of an executor OOM.  The hints left are
+  unconditional ``F.broadcast`` of 1-row aggregates (a crossJoin stays
+  a broadcast nested loop, never a Cartesian product) and of a few
+  filtered nation/region/supplier dims, plus Q4's size-gated orders
+  broadcast, which picks between two plan shapes rather than two join
+  strategies.
 * No correlated per-row subqueries survive into the plan: Q17's inner
   average and Q15/Q22's scalars become one tiny aggregate joined back;
   Q21's double EXISTS becomes two hash aggregates on the same key.
@@ -45,8 +50,13 @@ from pyspark.sql import functions as F
 
 from .ext_queries import _REV, _dec, _rev
 from .queries import _t
-from .relational import (DIM_BROADCAST_MAX_BYTES, maybe_broadcast,
-                         maybe_shuffle_hash, stats_bytes)
+from .relational import stats_bytes
+
+#: Q4 broadcasts its quarter-pruned orders side into an INNER join only
+#: while Catalyst's scan-size estimate of it stays under this bound.
+#: 256 MB of source-scan parquet over-bounds the three projected
+#: columns, so the gate errs in the OOM-safe direction.
+DIM_BROADCAST_MAX_BYTES = 256 << 20
 
 
 def _dbl(c):
@@ -64,7 +74,7 @@ def q_tpch_q4_priority(spark, sf_dir):
     Spark can only broadcast the BUILD side of a semi join — lineitem,
     the unbounded fact — so the natural LEFT SEMI always shuffles every
     (l_orderkey, l_shipdate) row.  When the quarter-pruned orders side
-    passes the size gate (r12), it broadcasts into an INNER join
+    passes ``DIM_BROADCAST_MAX_BYTES``, it broadcasts into an INNER join
     instead (map-side, no fact shuffle) and a (o_orderkey) hash
     aggregate collapses the late lineitems back to one row per order —
     partial aggregation bounds each task's exchange output by the
@@ -155,23 +165,23 @@ def q_tpch_q7_volume(spark, sf_dir):
     The fact-derived orders×customer dim is left to AQE (SCALE.md A/B)."""
     na = _t(spark, sf_dir, "nation").filter(F.col("n_name").isin(_Q7_N1, _Q7_N2))
     su = (_t(spark, sf_dir, "supplier")
-          .join(maybe_broadcast(na.select("n_nationkey",
-                                          F.col("n_name").alias("supp_nation"))),
+          .join(na.select("n_nationkey",
+                          F.col("n_name").alias("supp_nation")),
                 F.col("s_nationkey") == F.col("n_nationkey"))
           .select("s_suppkey", "supp_nation"))
     cu = (_t(spark, sf_dir, "customer")
-          .join(maybe_broadcast(na.select(F.col("n_nationkey").alias("nk2"),
-                                          F.col("n_name").alias("cust_nation"))),
+          .join(na.select(F.col("n_nationkey").alias("nk2"),
+                          F.col("n_name").alias("cust_nation")),
                 F.col("c_nationkey") == F.col("nk2"))
           .select("c_custkey", "cust_nation"))
     od = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    dim = (od.join(maybe_broadcast(cu), od.o_custkey == cu.c_custkey)
+    dim = (od.join(cu, od.o_custkey == cu.c_custkey)
            .select("o_orderkey", "cust_nation"))
     li = (_t(spark, sf_dir, "lineitem")
           .filter((F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
                   & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))))
     return (
-        li.join(maybe_broadcast(su), li.l_suppkey == su.s_suppkey)
+        li.join(su, li.l_suppkey == su.s_suppkey)
         .join(dim, li.l_orderkey == dim.o_orderkey)
         .filter(((F.col("supp_nation") == _Q7_N1) & (F.col("cust_nation") == _Q7_N2))
                 | ((F.col("supp_nation") == _Q7_N2) & (F.col("cust_nation") == _Q7_N1)))
@@ -219,29 +229,28 @@ def q_tpch_q8_share(spark, sf_dir):
     once per output row."""
     re_ = _t(spark, sf_dir, "region").filter(F.col("r_name") == _Q8_REGION)
     na = _t(spark, sf_dir, "nation")
-    na_r = (na.join(maybe_broadcast(re_), na.n_regionkey == re_.r_regionkey)
+    na_r = (na.join(re_, na.n_regionkey == re_.r_regionkey)
             .select(F.col("n_nationkey").alias("rnk")))
     cu = (_t(spark, sf_dir, "customer")
-          .join(maybe_broadcast(na_r), F.col("c_nationkey") == F.col("rnk"),
-                "left_semi")
+          .join(na_r, F.col("c_nationkey") == F.col("rnk"), "left_semi")
           .select("c_custkey"))
     od = (_t(spark, sf_dir, "orders")
           .filter((F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
                   & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"))))
-    dim = (od.join(maybe_broadcast(cu), od.o_custkey == cu.c_custkey, "left_semi")
+    dim = (od.join(cu, od.o_custkey == cu.c_custkey, "left_semi")
            .select("o_orderkey", "o_orderdate"))
     pt = (_t(spark, sf_dir, "part").filter(F.col("p_type") == _Q8_TYPE)
           .select("p_partkey"))
     su = (_t(spark, sf_dir, "supplier")
-          .join(maybe_broadcast(na.select("n_nationkey",
-                                          F.col("n_name").alias("supp_nation"))),
+          .join(na.select("n_nationkey",
+                          F.col("n_name").alias("supp_nation")),
                 F.col("s_nationkey") == F.col("n_nationkey"))
           .select("s_suppkey", "supp_nation"))
     li = _t(spark, sf_dir, "lineitem")
     vol = _rev()
     return (
-        li.join(maybe_broadcast(pt), li.l_partkey == pt.p_partkey, "left_semi")
-        .join(maybe_broadcast(su), li.l_suppkey == su.s_suppkey)
+        li.join(pt, li.l_partkey == pt.p_partkey, "left_semi")
+        .join(su, li.l_suppkey == su.s_suppkey)
         .join(dim, li.l_orderkey == dim.o_orderkey)
         .groupBy(F.year("o_orderdate").alias("o_year"))
         .agg(
@@ -291,19 +300,15 @@ def q_tpch_q9_profit(spark, sf_dir):
     Revenue and cost are separate exact decimal sums, differenced in
     double at the end — associative, partial-aggregatable, hash-stable.
 
-    Join shape (r9, A/B-measured at sf1 — 2.1s → 0.8s): the only
-    shuffle join is filtered-fact ⋈ orders, run as a size-gated
-    SHUFFLE-HASH join with ORDERS as the build side (bounded by its
-    scan statistic; past the gate the hint disappears → SMJ).  Two
-    measured rejections drove this: (a) AQE's own choice here is a
-    ~1.5M-row broadcast of orders, whose driver build costs more than
-    the whole SHJ; (b) a pre-aggregate of the fact by
-    (l_orderkey, n_name) before the join — the VERDICT r8 suggestion —
-    does NOT pay for this query: lineitems of one order almost always
-    have distinct supplier nations (~4 items, 25 nations), so the
-    pre-agg shrinks nothing and its 700k-key hash costs ~0.3s.  The
+    Join shape: the only join that can shuffle is filtered-fact ⋈
+    orders, and it takes no hint — AQE picks the strategy from the
+    runtime sizes (a broadcast of orders at small scale).  A
+    pre-aggregate of the fact by (l_orderkey, n_name) before the join
+    was measured and rejected (r9, sf1): lineitems of one order almost
+    always have distinct supplier nations (~4 items, 25 nations), so
+    the pre-agg shrinks nothing and its 700k-key hash costs ~0.3s.  The
     name-pattern filter already drops ~87% of the fact before the
-    shuffle, and the (nation, year) aggregate partial-sums in the join
+    join, and the (nation, year) aggregate partial-sums in the join
     stage, so the post-join exchange is ~175 rows."""
     li = _t(spark, sf_dir, "lineitem")
     supp_cost = (F.col("p_retailprice").cast("decimal(12,2)")
@@ -314,20 +319,18 @@ def q_tpch_q9_profit(spark, sf_dir):
           .select("p_partkey", supp_cost))
     na = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     su = (_t(spark, sf_dir, "supplier")
-          .join(maybe_broadcast(na), F.col("s_nationkey") == F.col("n_nationkey"))
+          .join(na, F.col("s_nationkey") == F.col("n_nationkey"))
           .select("s_suppkey", "n_name"))
-    od_scan = _t(spark, sf_dir, "orders")
-    od = od_scan.select("o_orderkey",
-                        F.year("o_orderdate").alias("o_year"))
+    od = _t(spark, sf_dir, "orders").select(
+        "o_orderkey", F.year("o_orderdate").alias("o_year"))
     fact = (
-        li.join(maybe_broadcast(pt), li.l_partkey == pt.p_partkey)
-        .join(maybe_broadcast(su), li.l_suppkey == su.s_suppkey)
+        li.join(pt, li.l_partkey == pt.p_partkey)
+        .join(su, li.l_suppkey == su.s_suppkey)
         .select("l_orderkey", "n_name",
                 _rev().alias("_rv"), cost.alias("_cv"))
     )
     agg = (
-        fact.join(maybe_shuffle_hash(od, bound_df=od_scan),
-                  fact.l_orderkey == od.o_orderkey)
+        fact.join(od, fact.l_orderkey == od.o_orderkey)
         .groupBy(F.col("n_name").alias("nation"), "o_year")
         .agg(F.sum("_rv").alias("_r"), F.sum("_cv").alias("_c"))
     )
@@ -380,8 +383,8 @@ def q_tpch_q10_returns(spark, sf_dir):
     # 20 rows.
     return (
         rev_per_cust
-        .join(maybe_broadcast(cu), rev_per_cust.o_custkey == cu.c_custkey)
-        .join(maybe_broadcast(na), cu.c_nationkey == na.n_nationkey)
+        .join(cu, rev_per_cust.o_custkey == cu.c_custkey)
+        .join(na, cu.c_nationkey == na.n_nationkey)
         .orderBy(F.desc("_r"), F.asc("c_custkey"))
         .limit(20)
         .select("c_custkey", "c_name", _dbl("_r").alias("revenue"),
@@ -421,16 +424,15 @@ def q_tpch_q13_custdist(spark, sf_dir):
     exactly coalesce(pre-agg count, 0): o_orderkey is never NULL in
     orders, so both count surviving join rows and both give the zero
     bucket to customers that matched nothing.  The pre-aggregate is
-    bounded by |customer| (FK), so it takes the size-gated broadcast
-    and the customer side never shuffles; past the gate AQE falls back
-    to a sort-merge of two already-aggregate-narrow sides."""
+    bounded by |customer| (FK); the join takes no hint, so AQE
+    broadcasts it while it is small and otherwise sort-merges two
+    already-aggregate-narrow sides."""
     cu = _t(spark, sf_dir, "customer").select("c_custkey")
     od = (_t(spark, sf_dir, "orders")
           .filter(F.col("o_orderpriority") != "5-LOW")
           .select("o_custkey"))
     per_key = od.groupBy("o_custkey").agg(F.count(F.lit(1)).alias("_n"))
-    per_cust = (cu.join(maybe_broadcast(per_key, bound_df=cu),
-                        cu.c_custkey == per_key.o_custkey, "left")
+    per_cust = (cu.join(per_key, cu.c_custkey == per_key.o_custkey, "left")
                 .select(F.coalesce(F.col("_n"), F.lit(0).cast("long"))
                         .alias("c_count")))
     return (per_cust.groupBy("c_count")
@@ -463,7 +465,7 @@ def q_tpch_q14_promo(spark, sf_dir):
           .filter((F.col("l_shipdate") >= F.lit("1996-03-01").cast("timestamp"))
                   & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))))
     return (
-        li.join(maybe_broadcast(pt), li.l_partkey == pt.p_partkey)
+        li.join(pt, li.l_partkey == pt.p_partkey)
         .agg(F.sum(F.when(F.col("p_type") == "PROMO", vol)
                    .otherwise(F.lit(0).cast("decimal(18,2)"))).alias("_num"),
              F.sum(vol).alias("_den"))
@@ -503,7 +505,7 @@ def q_tpch_q15_top_supplier(spark, sf_dir):
     # float fuzz can't drop a row; only the surviving tie rows are cast
     return (
         per_supp.join(F.broadcast(mx), per_supp._total == mx._mx)
-        .join(maybe_broadcast(su), F.col("l_suppkey") == su.s_suppkey)
+        .join(su, F.col("l_suppkey") == su.s_suppkey)
         .select("s_suppkey", "s_name",
                 _dbl("_total").alias("total_revenue"))
     )
@@ -543,8 +545,7 @@ def q_tpch_q17_small_qty(spark, sf_dir):
     single scan with ONE exchange that carries only the ~1/25
     brand-filtered rows.  Parallelism is safe — l_partkey is a
     high-cardinality key with bounded lines-per-part, so the window
-    partitioning spreads — and no aggregate ever needs the broadcast
-    gate.  sf1 interleaved A/B: 0.76 → 0.62 s min-of-6, result
+    partitioning spreads — and no aggregate is ever joined back.  sf1 interleaved A/B: 0.76 → 0.62 s min-of-6, result
     bit-identical (quantities are integral doubles, so sum/count is
     exact on both engines, and the final revenue sum is exact decimal —
     order-independent)."""
@@ -552,8 +553,7 @@ def q_tpch_q17_small_qty(spark, sf_dir):
           .select("p_partkey"))
     li = (_t(spark, sf_dir, "lineitem")
           .select("l_partkey", "l_quantity", "l_extendedprice")
-          .join(maybe_broadcast(pt), F.col("l_partkey") == pt.p_partkey,
-                "left_semi"))
+          .join(pt, F.col("l_partkey") == pt.p_partkey, "left_semi"))
     w = Window.partitionBy("l_partkey")
     avg = F.sum("l_quantity").over(w) / F.count("l_quantity").over(w)
     out = (li.withColumn("_avg", avg)
@@ -589,27 +589,18 @@ def q_tpch_q18_large_orders(spark, sf_dir):
     filter collapses the fact to a small key set, and the orders/
     customer joins happen on that survivor set only.
 
-    The orders join takes a size-gated SHUFFLE-HASH hint on the
-    pre-aggregate side (r13, guide §3.1): AQE sees the pre-HAVING
-    exchange bytes (every orderkey partial), not the post-filter
-    survivor count, so it kept a sort-merge join that sorted BOTH the
-    full orders exchange and the aggregate — two sorts for nothing.
-    The build side is bounded by the orders scan statistic (one row
-    per orderkey), so past the 2 GB gate at 100 TB the hint disappears
-    and the plan degrades to SMJ.  sf1 interleaved A/B min-of-6:
-    1.49 → 1.14 s."""
+    Both joins take no hint: AQE picks each strategy from the runtime
+    sizes, and broadcasts the survivor side at small scale."""
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
-    od_scan = _t(spark, sf_dir, "orders")
     big = (li.groupBy("l_orderkey")
            .agg(F.sum("l_quantity").alias("sum_qty"))
            .filter(F.col("sum_qty") > _Q18_QTY))
-    od = od_scan.select(
+    od = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderdate", "o_totalprice")
     cu = _t(spark, sf_dir, "customer").select("c_custkey", "c_name")
     return (
-        maybe_shuffle_hash(big, bound_df=od_scan)
-        .join(od, big.l_orderkey == od.o_orderkey)
-        .join(maybe_broadcast(cu), od.o_custkey == cu.c_custkey)
+        big.join(od, big.l_orderkey == od.o_orderkey)
+        .join(cu, od.o_custkey == cu.c_custkey)
         .select("c_name", "c_custkey", "o_orderkey", "o_orderdate",
                 "o_totalprice", "sum_qty")
         .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
@@ -650,7 +641,7 @@ def q_tpch_q19_disjunct(spark, sf_dir):
     pt = (_t(spark, sf_dir, "part")
           .filter(cond_part).select("p_partkey", "p_brand", "p_size"))
     li = _t(spark, sf_dir, "lineitem")
-    joined = li.join(maybe_broadcast(pt), li.l_partkey == pt.p_partkey)
+    joined = li.join(pt, li.l_partkey == pt.p_partkey)
     cond = (
         ((F.col("p_brand") == "Brand#1") & F.col("p_size").between(1, 15)
          & F.col("l_quantity").between(1, 11))
@@ -692,8 +683,8 @@ def q_tpch_q21_waiting(spark, sf_dir):
     duplication.
 
     Shuffle-minimal shape (r11, A/B-measured at sf1 — 1.78s → 1.37s):
-    after the size-gated broadcast join against the filtered orders,
-    the fact is repartitioned ONCE on l_orderkey; hashpartitioning
+    after the join against the filtered orders, the fact is
+    repartitioned ONCE on l_orderkey; hashpartitioning
     (l_orderkey) satisfies the clustered distribution of BOTH the
     (l_orderkey, l_suppkey) pair aggregate and the per-order aggregate,
     so both run exchange-free on top of that single fact exchange.
@@ -705,20 +696,17 @@ def q_tpch_q21_waiting(spark, sf_dir):
     The n_late==1 filter pins the unique late supplier, so
     max(late_supp) recovers it without carrying suppliers through the
     order-grain aggregate."""
-    od_scan = _t(spark, sf_dir, "orders")
-    od = (od_scan
+    od = (_t(spark, sf_dir, "orders")
           .filter(F.col("o_orderstatus") == "F")
           .select("o_orderkey", "o_orderdate"))
     li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_shipdate")
-    # Size-gated broadcast of the filtered orders side (bounded by the
-    # orders SCAN statistic): under the gate the lineitem side reaches
-    # the repartition without any join shuffle.  Past the gate (100 TB)
-    # the hint disappears and AQE picks the join strategy — its shuffle
-    # on l_orderkey then co-locates the aggregates the same way.
+    # No join hint: while AQE broadcasts the filtered orders side, the
+    # lineitem side reaches the repartition without any join shuffle;
+    # once it shuffles on l_orderkey instead, that exchange co-locates
+    # the aggregates the same way.
     flagged = (
-        li.join(maybe_broadcast(od, bound_df=od_scan),
-                li.l_orderkey == od.o_orderkey)
+        li.join(od, li.l_orderkey == od.o_orderkey)
         .select("l_orderkey", "l_suppkey",
                 (F.col("l_shipdate")
                  > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS"))
@@ -744,7 +732,7 @@ def q_tpch_q21_waiting(spark, sf_dir):
     return (
         waiting.groupBy("late_supp")
         .agg(F.sum("late_rows_sum").alias("numwait"))
-        .join(maybe_broadcast(su), F.col("late_supp") == su.s_suppkey)
+        .join(su, F.col("late_supp") == su.s_suppkey)
         .select("s_name", "numwait")
         .orderBy(F.desc("numwait"), F.asc("s_name"))
         .limit(20)
@@ -836,10 +824,10 @@ def q_tpch_q2_mincost(spark, sf_dir):
     The correlated min subquery becomes ONE grouped aggregate over the
     part/region-pruned fact joined back on exact equality — unit price
     is a single IEEE divide and MIN is reduction-order-free, so the
-    min-cost row matches the oracle bit-for-bit.  The part and
-    supplier-in-region dims take the size-gated broadcast; the fact is
-    left-semi-pruned by both before the per-pair aggregate, so the
-    shuffle carries only surviving (part, supplier) pairs."""
+    min-cost row matches the oracle bit-for-bit.  The fact is
+    left-semi-pruned by the part and supplier-in-region dims before the
+    per-pair aggregate, so the shuffle carries only surviving
+    (part, supplier) pairs."""
     pt = (_t(spark, sf_dir, "part")
           .filter((F.col("p_type") == _Q2_TYPE) & (F.col("p_size") == _Q2_SIZE))
           .select("p_partkey"))
@@ -847,16 +835,15 @@ def q_tpch_q2_mincost(spark, sf_dir):
     re_ = (_t(spark, sf_dir, "region")
            .filter(F.col("r_name") == _Q2_REGION).select("r_regionkey"))
     su = (_t(spark, sf_dir, "supplier")
-          .join(maybe_broadcast(na), F.col("s_nationkey") == na.n_nationkey)
+          .join(na, F.col("s_nationkey") == na.n_nationkey)
           .join(F.broadcast(re_), na.n_regionkey == re_.r_regionkey)
           .select("s_suppkey", "s_name", "s_acctbal", "n_name"))
     li = (_t(spark, sf_dir, "lineitem")
           .select("l_partkey", "l_suppkey",
                   (F.col("l_extendedprice") / F.col("l_quantity"))
                   .alias("_unit"))
-          .join(maybe_broadcast(pt), F.col("l_partkey") == pt.p_partkey,
-                "left_semi")
-          .join(maybe_broadcast(su.select("s_suppkey")),
+          .join(pt, F.col("l_partkey") == pt.p_partkey, "left_semi")
+          .join(su.select("s_suppkey"),
                 F.col("l_suppkey") == F.col("s_suppkey"), "left_semi"))
     cost = (li.groupBy("l_partkey", "l_suppkey")
             .agg(F.min("_unit").alias("supply_cost")))
@@ -864,10 +851,9 @@ def q_tpch_q2_mincost(spark, sf_dir):
             .agg(F.min("supply_cost").alias("_best"))
             .withColumnRenamed("l_partkey", "_pk"))
     return (
-        cost.join(maybe_broadcast(best, bound_df=pt),
-                  (F.col("l_partkey") == F.col("_pk"))
+        cost.join(best, (F.col("l_partkey") == F.col("_pk"))
                   & (F.col("supply_cost") == F.col("_best")))
-        .join(maybe_broadcast(su), F.col("l_suppkey") == su.s_suppkey)
+        .join(su, F.col("l_suppkey") == su.s_suppkey)
         .select("s_acctbal", "s_name", "n_name",
                 F.col("l_partkey").alias("p_partkey"),
                 F.round("supply_cost", 6).alias("supply_cost"))
@@ -929,8 +915,7 @@ def q_tpch_q11_value(spark, sf_dir):
           .select("s_suppkey"))
     li = (_t(spark, sf_dir, "lineitem")
           .select("l_partkey", "l_suppkey", "l_extendedprice", "l_discount")
-          .join(maybe_broadcast(su), F.col("l_suppkey") == su.s_suppkey,
-                "left_semi"))
+          .join(su, F.col("l_suppkey") == su.s_suppkey, "left_semi"))
     per_part = (li.groupBy("l_partkey")
                 .agg(F.sum(_rev()).alias("_val"))
                 .localCheckpoint(eager=True))
@@ -988,23 +973,17 @@ def q_tpch_q12_priority_class(spark, sf_dir):
     conditional counts — the CASE pair collapses into a single
     map-side-combined shuffle.
 
-    The fact-fact join takes a size-gated SHUFFLE-HASH hint on the
-    two-column orders projection (r13, guide §3.1): neither side fits
-    a broadcast, and sort-merge paid two ~1M-row sorts that a
-    per-partition hash build replaces.  Build bounded by the orders
-    scan statistic; past the 2 GB gate the hint disappears (SMJ).
-    sf1 interleaved A/B min-of-6: wall flat (0.74 → 0.72 s); the win is
-    structural — join-side Sort nodes 2 → 0 (no sort spill at scale)."""
+    The fact-fact join takes no hint: AQE picks the strategy from the
+    runtime sizes and broadcasts the two-column orders projection while
+    it is small."""
     li = (_t(spark, sf_dir, "lineitem")
           .filter((F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
                   & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp")))
           .select("l_orderkey", "l_linestatus"))
-    od_scan = _t(spark, sf_dir, "orders")
-    od = od_scan.select("o_orderkey", "o_orderpriority")
+    od = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
     hi = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
     return (
-        li.join(maybe_shuffle_hash(od, bound_df=od_scan),
-                li.l_orderkey == od.o_orderkey)
+        li.join(od, li.l_orderkey == od.o_orderkey)
         .groupBy("l_linestatus")
         .agg(F.sum(hi.cast("long")).alias("high_line_count"),
              F.sum((~hi).cast("long")).alias("low_line_count"))
@@ -1064,7 +1043,7 @@ def q_tpch_q16_variety(spark, sf_dir):
           .join(F.broadcast(bad), F.col("l_suppkey") == bad.s_suppkey,
                 "left_anti"))
     return (
-        li.join(maybe_broadcast(pt), F.col("l_partkey") == pt.p_partkey)
+        li.join(pt, F.col("l_partkey") == pt.p_partkey)
         .groupBy("p_brand", "p_type", "p_size")
         .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
         .orderBy(F.desc("supplier_cnt"), F.asc("p_brand"),
@@ -1109,8 +1088,7 @@ def q_tpch_q20_excess(spark, sf_dir):
           .select("p_partkey"))
     li = (_t(spark, sf_dir, "lineitem")
           .select("l_partkey", "l_suppkey", "l_quantity", "l_shipdate")
-          .join(maybe_broadcast(pt), F.col("l_partkey") == pt.p_partkey,
-                "left_semi"))
+          .join(pt, F.col("l_partkey") == pt.p_partkey, "left_semi"))
     in_97 = ((F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
              & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp")))
     excess = (li.groupBy("l_suppkey")
@@ -1120,18 +1098,15 @@ def q_tpch_q20_excess(spark, sf_dir):
               .filter(F.col("qty_97") > F.lit(_Q20_SHARE) * F.col("qty_all"))
               .select("l_suppkey"))
     su = _t(spark, sf_dir, "supplier")
-    # The qualifying-keys semi join runs as an INNER join with the
-    # supplier dim size-gate broadcast (r13, guide §3.1): ``excess`` is
+    # The qualifying-keys semi join runs as an INNER join: ``excess`` is
     # key-unique (groupBy output), so inner ≡ semi row-for-row — but
-    # inner lets the PLANNER build on the scan-statistic side.  The
-    # semi shape sort-merge-joined both sides (supplier exchanged +
-    # sorted against the aggregate).  Past the gate the unhinted inner
-    # join degrades to the same shuffle the semi paid.  sf1 interleaved
-    # A/B min-of-6: wall flat (0.63 → 0.66 s, within noise); the win is
-    # structural — the supplier exchange and both join-side sorts are
-    # gone (plan: SMJ LeftSemi + 2 Sort + 1 Exchange → BHJ).
+    # inner lets the planner build on the supplier side, which a semi
+    # join cannot (its build side is always ``excess``).  The semi
+    # shape sort-merge-joined both sides (supplier exchanged + sorted
+    # against the aggregate); the inner join broadcasts supplier while
+    # it is small (plan: SMJ LeftSemi + 2 Sort + 1 Exchange → BHJ).
     return (
-        excess.join(maybe_broadcast(su), su.s_suppkey == excess.l_suppkey)
+        excess.join(su, su.s_suppkey == excess.l_suppkey)
         .select("s_suppkey", "s_name")
         .orderBy("s_suppkey")
     )

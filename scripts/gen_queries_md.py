@@ -54,7 +54,7 @@ FALLBACK_NOTES = {
     "join_left_enrich": "left join of two frames "
                         "(FraudDetection1.py:94 analog)",
     "label_encode": "ComplementLabelEncoder: lexicographic codes, "
-                    "extra_category_ for unseen, size-gated broadcast",
+                    "extra_category_ for unseen, literal-map lookup",
     "map_default": "MapTransformer exact-match mapping with default",
     "map_regex": "MapTransformer regex-match mapping, NaN keys",
     "minority": "MinorityTransformer: rare categories collapsed at "

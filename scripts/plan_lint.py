@@ -64,8 +64,9 @@ BNLJ_WHITELIST = {
                      "avg(acctbal))) (tpch.py:708)",
     "tpch_q11_value": "Q11 scalar subquery: crossJoin(broadcast(1-row "
                       "sum over the checkpointed grouped frame))",
-    "text_bm25_topk": "crossJoin(maybe_broadcast(1-row corpus-stats "
-                      "aggregate: N, avgdl, per-term df)) (text.py BM25)",
+    "text_bm25_topk": "crossJoin(1-row corpus-stats aggregate: N, "
+                      "avgdl, per-term df), broadcast by the planner "
+                      "(text.py BM25)",
     "sim_ann_ivf_append": "crossJoin(broadcast(1-row query vector)) onto "
                           "the pruned probe scan (same shape as "
                           "sim_ann_ivf_persisted)",

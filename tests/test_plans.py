@@ -120,23 +120,12 @@ def test_topk_uses_heap_not_global_sort(spark, qs):
     assert "LeftSemi" in p                    # orders pruned by semi join
 
 
-def test_tpch_dim_broadcast_is_size_gated(spark, no_auto_broadcast,
-                                          monkeypatch):
-    """TPC-H shape broadcast policy: TRUE small dims (customer,
-    nation) carry the size-gated hint; the fact-derived pre-joined dim
-    carries NO explicit hint — AQE plans it from runtime sizes
-    (A/B-measured at sf1: forcing it was 1.8x slower; at 100x it would
-    be an OOM).  With planner auto-broadcast off, the surviving
-    BroadcastHashJoins are exactly the gated small-dim hints; zeroing
-    the gate removes every hint from both shapes."""
+def test_tpch_dims_carry_no_broadcast_hint(spark, no_auto_broadcast):
+    """TPC-H shapes leave the join strategy to AQE: with planner
+    auto-broadcast off, no BroadcastHashJoin survives in either shape,
+    so none of their joins carries an explicit hint."""
     import dataframe_pipeline_spark.ext_queries as xq
 
-    # under the gate: small-dim hints survive even with auto-broadcast off
-    assert "BroadcastHashJoin" in _plan(xq.q_revenue_by_nation(spark, SF))
-    assert "BroadcastHashJoin" in _plan(xq.q_top_revenue_orders(spark, SF))
-    # above the gate: every explicit hint disappears from both shapes
-    import dataframe_pipeline_spark.relational as rel
-    monkeypatch.setattr(rel, "DIM_BROADCAST_MAX_BYTES", 0)
     assert "BroadcastHashJoin" not in _plan(xq.q_revenue_by_nation(spark, SF))
     assert "BroadcastHashJoin" not in _plan(
         xq.q_top_revenue_orders(spark, SF))
@@ -325,9 +314,9 @@ def test_revenue_by_nation_preagg_below_join(spark, qs):
     p = _plan(qs["revenue_by_nation"](spark, SF))
     pre = p.index("HashAggregate(keys=[l_orderkey")
     # the fact join appears above (= earlier in the tree print than)
-    # the per-orderkey pre-aggregate
-    join_at = min(i for i in (p.find("ShuffledHashJoin"),
-                              p.find("SortMergeJoin")) if i >= 0)
+    # the per-orderkey pre-aggregate, whichever strategy AQE picks:
+    # Broadcast-, ShuffledHash- or SortMerge-Join on l_orderkey
+    join_at = p.index("Join [l_orderkey")
     assert join_at < pre
     assert "hashpartitioning(c_nationkey" in p
 
@@ -346,14 +335,15 @@ def test_revenue_rollup_single_expand_on_preagg(spark, qs):
     assert p.index("Expand") < finest < p.index("FileScan")
 
 
-def test_q9_shuffle_hash_under_gate(spark, qs):
-    """Q9's only shuffle join is the size-gated SHUFFLE-HASH against
-    orders (r9, A/B-measured); under the gate the hint must
-    materialize as a ShuffledHashJoin, with the dims broadcast
-    (VERDICT r9 #3)."""
-    p = _plan(qs["tpch_q9_profit"](spark, SF))
-    assert "ShuffledHashJoin" in p
-    assert p.count("BroadcastHashJoin") >= 2   # part, supplier⋈nation
+def test_q9_q12_q18_take_planner_broadcast(spark, qs):
+    """Each query's lineitem ⋈ orders join carries no strategy hint, so
+    at this scale the planner broadcasts; a hint forcing a
+    ShuffledHashJoin there displaced that broadcast."""
+    for name in ("tpch_q9_profit", "tpch_q12_priority_class",
+                 "tpch_q18_large_orders"):
+        p = _plan(qs[name](spark, SF))
+        assert "BroadcastHashJoin" in p, name
+        assert "ShuffledHashJoin" not in p, name
 
 
 def test_funnel_single_shuffle(spark, qs):

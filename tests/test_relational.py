@@ -266,10 +266,11 @@ def test_filter_blocklist_semantics(spark):
 
 
 def test_filter_blocklist_broadcasts_small_list(spark):
-    """Parquet-backed blocklist (real Catalyst size statistics) under
-    the gate → broadcast anti-join, zero shuffle of the corpus side.
-    In-memory frames without stats fail CLOSED (no hint — see
-    test_filter_blocklist_semantics, which plans a shuffle join)."""
+    """Parquet-backed blocklist (real Catalyst size statistics) small
+    enough for the planner to broadcast → broadcast anti-join, zero
+    shuffle of the corpus side, with no hint from filter_blocklist.
+    In-memory frames without stats plan a shuffle join (see
+    test_filter_blocklist_semantics)."""
     ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
     blocked = spark.read.parquet(
         "/root/testdata/sf0.001/customer.parquet").select("c_custkey")
@@ -601,28 +602,3 @@ def test_incremental_rollup_matches_full_recompute(spark):
     got2 = {r.g: (r.x_total, r.n_rows)
             for r in roll.read(state2).collect()}
     assert got2 == {g: (t, n) for g, (t, n, _) in got.items()}
-
-
-def test_maybe_shuffle_hash_gate(spark):
-    """The size-gated SHUFFLE_HASH hint (r9): under the gate the plan
-    gets a ShuffledHashJoin; past it the hint is withheld and the
-    strategy is whatever the planner picks for an unhinted join."""
-    from dataframe_pipeline_spark.relational import maybe_shuffle_hash
-
-    left = spark.range(0, 10000).withColumnRenamed("id", "k")
-    right = spark.range(0, 10000).withColumnRenamed("id", "k")
-    hinted = maybe_shuffle_hash(left).join(right, "k")
-    # Pre-execution the AQE root hides the join node, so check the
-    # hint in the analyzed logical plan (ADVICE r9: the old
-    # "SHJ or AdaptiveSparkPlan" disjunct was vacuously true under
-    # AQE); the post-count ShuffledHashJoin assert below is the
-    # physical-strategy check.
-    assert "SHUFFLE_HASH" in hinted._jdf.queryExecution() \
-        .analyzed().toString().upper()
-    hinted.count()
-    plan = hinted._jdf.queryExecution().executedPlan().toString()
-    assert "ShuffledHashJoin" in plan
-    # past the gate: no hint survives — the join must NOT be forced SHJ
-    gated = maybe_shuffle_hash(left, max_bytes=1).join(right, "k")
-    assert "SHUFFLE_HASH" not in gated._jdf.queryExecution() \
-        .logical().toString().upper()
