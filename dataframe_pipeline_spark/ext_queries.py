@@ -26,7 +26,7 @@ from . import similarity as sim
 from . import streaming as st
 from . import text as tx
 from .queries import _r6, _t
-from .sources import left_enrich, split_mod
+from .sources import split_mod
 
 
 def _events(spark, sf_dir):
@@ -2668,7 +2668,9 @@ def q_join_left_enrich(spark, sf_dir):
     od = _t(spark, sf_dir, "orders")
     cu = _t(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_nationkey")
-    out = left_enrich(od, cu, on=[od.o_custkey == cu.c_custkey])
+    # not sources.left_enrich: its unconditional broadcast is for small
+    # in-memory dims, and customer grows with the data; AQE picks the join
+    out = od.join(cu, on=[od.o_custkey == cu.c_custkey], how="left")
     return out.select("o_orderkey", "o_totalprice", "c_mktsegment", "c_nationkey")
 
 

@@ -51,8 +51,9 @@ FALLBACK_NOTES = {
     "imputer_const": "Imputer constant fill",
     "imputer_mean": "Imputer mean fill from transform-time stats",
     "imputer_median": "Imputer exact interpolated median fill",
-    "join_left_enrich": "left join of two frames "
-                        "(FraudDetection1.py:94 analog)",
+    "join_left_enrich": "orders left join customer "
+                        "(FraudDetection1.py:94 analog); AQE picks the "
+                        "join strategy",
     "label_encode": "ComplementLabelEncoder: lexicographic codes, "
                     "extra_category_ for unseen, literal-map lookup",
     "map_default": "MapTransformer exact-match mapping with default",

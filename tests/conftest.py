@@ -11,11 +11,15 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 @pytest.fixture(scope="session")
 def spark():
+    """One session for the run.  Its JVM is stopped and waited for at the
+    end, so a JVM that records the class-data-sharing archive writes it
+    before pytest exits rather than as an orphan."""
     from dataframe_pipeline_spark.session import get_spark
+    from perfbench.probes import stop_spark
 
     s = get_spark("dfp-tests", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "4")))
     yield s
-    s.stop()
+    stop_spark(s)
 
 
 @pytest.fixture()

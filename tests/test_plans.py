@@ -121,14 +121,16 @@ def test_topk_uses_heap_not_global_sort(spark, qs):
 
 
 def test_tpch_dims_carry_no_broadcast_hint(spark, no_auto_broadcast):
-    """TPC-H shapes leave the join strategy to AQE: with planner
-    auto-broadcast off, no BroadcastHashJoin survives in either shape,
+    """TPC-H shapes, and the orders-to-customer left join whose dim grows
+    with the data, leave the join strategy to AQE: with planner
+    auto-broadcast off, no BroadcastHashJoin survives in any of them,
     so none of their joins carries an explicit hint."""
     import dataframe_pipeline_spark.ext_queries as xq
 
     assert "BroadcastHashJoin" not in _plan(xq.q_revenue_by_nation(spark, SF))
     assert "BroadcastHashJoin" not in _plan(
         xq.q_top_revenue_orders(spark, SF))
+    assert "BroadcastHashJoin" not in _plan(xq.q_join_left_enrich(spark, SF))
 
 
 def test_cheap_row_count_is_jobless_on_scans(spark):
