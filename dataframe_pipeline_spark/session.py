@@ -34,6 +34,8 @@ unwritable cache or a JVM already running starts without an archive.
 
 from __future__ import annotations
 
+import contextlib
+import fcntl
 import hashlib
 import json
 import os
@@ -115,9 +117,21 @@ def archive_key(java: str, jars_dir: str, conf_dir: str, heap: str) -> str:
     return h.hexdigest()[:20]
 
 
-def _running(pid: int) -> bool:
-    """True while ``pid`` runs and is not this process (whose own claim
-    can only be left from a launch that failed)."""
+def _start_time(pid: int) -> str | None:
+    """When ``pid`` started, in clock ticks after boot (``/proc``), so
+    that a pid the kernel reused is not taken for the process that wrote
+    a claim; None where it cannot be read."""
+    try:
+        with open(f"/proc/{pid}/stat") as fh:
+            return fh.read().rsplit(")", 1)[1].split()[19]
+    except (OSError, IndexError):
+        return None
+
+
+def _running(pid: int, start: str | None) -> bool:
+    """True while the process that started at ``start`` as ``pid`` runs
+    and is not this process (whose own claim can only be left from a
+    launch that failed)."""
     if pid == os.getpid():
         return False
     try:
@@ -125,8 +139,21 @@ def _running(pid: int) -> bool:
     except ProcessLookupError:
         return False
     except PermissionError:
-        return True
-    return True
+        pass
+    return start is None or _start_time(pid) in (None, start)
+
+
+@contextlib.contextmanager
+def _locked(cache: str):
+    """Hold the cache's lock: every session reads and writes the cache
+    under it, so none sees another's files half-way."""
+    with open(os.path.join(cache, "lock"), "a") as fh:
+        fcntl.flock(fh, fcntl.LOCK_EX)
+        yield
+
+
+def _claim(pid: int, **fields) -> dict:
+    return {"pid": pid, "start": _start_time(pid), **fields}
 
 
 def _remove(*paths: str) -> None:
@@ -190,7 +217,8 @@ class _ClassDataSharing:
             if os.listdir(os.path.join(cache, "conf")):
                 return None
             cds = cls(java, os.path.join(spark_home, "jars"), heap, cache)
-            return cds if cds._choose() else None
+            with _locked(cache):
+                return cds if cds._choose() else None
         except OSError:
             return None
 
@@ -231,9 +259,9 @@ class _ClassDataSharing:
         """Clear other keys' files, promote a finished recording that
         passes ``_valid``, and pick this session's flags.  False: start
         without an archive, because another session is recording one."""
-        names = sorted(set(os.listdir(self.dir)) - {"conf"})
-        for name in names:
-            if not name.startswith(self.key + "."):
+        names = sorted(set(os.listdir(self.dir)) - {"conf", "lock"})
+        for name in names:   # writes are locked, so a .part is a dead writer's
+            if not name.startswith(self.key + ".") or name.endswith(".part"):
                 _remove(os.path.join(self.dir, name))
         final_ok = self._final_ok()
         if not final_ok:
@@ -244,7 +272,8 @@ class _ClassDataSharing:
                 continue
             tmp = os.path.join(self.dir, name[:-len(".json")])
             meta = _read_json(tmp + ".json") or {}
-            if isinstance(meta.get("pid"), int) and _running(meta["pid"]):
+            if (isinstance(meta.get("pid"), int)
+                    and _running(meta["pid"], meta.get("start"))):
                 recording = True
                 continue
             if not final_ok and os.path.exists(tmp) and self._valid(tmp, meta):
@@ -265,7 +294,7 @@ class _ClassDataSharing:
             return False
         else:
             self.record = os.path.join(self.dir, f"{prefix}{os.getpid()}")
-            _write_json(self.record + ".json", {"pid": os.getpid()})
+            _write_json(self.record + ".json", _claim(os.getpid()))
             self.java_options = f'"-XX:ArchiveClassesAtExit={self.record}"'
         # the JVM logs each class a dump skips (~600 lines) to stdout
         self.java_options += " -Xlog:cds*=off"
@@ -277,11 +306,12 @@ class _ClassDataSharing:
         if self.record is None:
             return
         jvm = spark._jvm
+        claim = _claim(int(jvm.java.lang.ProcessHandle.current().pid()),
+                       class_path=jvm.System.getProperty("java.class.path"),
+                       java_home=jvm.System.getProperty("java.home"))
         try:
-            _write_json(self.record + ".json", {
-                "pid": int(jvm.java.lang.ProcessHandle.current().pid()),
-                "class_path": jvm.System.getProperty("java.class.path"),
-                "java_home": jvm.System.getProperty("java.home")})
+            with _locked(self.dir):
+                _write_json(self.record + ".json", claim)
         except OSError:
             pass
 

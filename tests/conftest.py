@@ -1,6 +1,7 @@
 import itertools
 import math
 import os
+import shutil
 import sys
 
 import pandas as pd
@@ -10,16 +11,28 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 @pytest.fixture(scope="session")
-def spark():
-    """One session for the run.  Its JVM is stopped and waited for at the
-    end, so a JVM that records the class-data-sharing archive writes it
-    before pytest exits rather than as an orphan."""
+def spark(tmp_path_factory):
+    """One session for the run.  It keeps its class-data-sharing archive
+    in a cache of its own, so the suite neither maps nor leaves an archive
+    in the user's cache.  Its JVM is stopped and waited for at the end,
+    so it writes the archive before that cache is deleted rather than as
+    an orphan."""
     from dataframe_pipeline_spark.session import get_spark
     from perfbench.probes import stop_spark
 
-    s = get_spark("dfp-tests", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "4")))
+    cache = tmp_path_factory.mktemp("cache")
+    old = os.environ.get("XDG_CACHE_HOME")
+    os.environ["XDG_CACHE_HOME"] = str(cache)
+    try:
+        s = get_spark("dfp-tests", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "4")))
+    finally:
+        if old is None:
+            del os.environ["XDG_CACHE_HOME"]
+        else:
+            os.environ["XDG_CACHE_HOME"] = old
     yield s
     stop_spark(s)
+    shutil.rmtree(cache, ignore_errors=True)
 
 
 @pytest.fixture()

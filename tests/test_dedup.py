@@ -79,12 +79,10 @@ def test_quantized_cosine_pairs(spark):
     assert bucketed <= set(exact)
 
 
-def test_hash_expr_matches_python():
+def test_hash_expr_matches_python(spark):
     # the Spark h32 must equal the python twin used to build oracle SQL
     import hashlib
     expected = int(hashlib.md5(b"hello").hexdigest()[:8], 16)
-    from dataframe_pipeline_spark.session import get_spark
-    spark = get_spark()
     got = spark.range(1).select(
         F.expr(dd.h32_expr("'hello'")).alias("h")).first().h
     assert got == expected

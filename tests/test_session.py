@@ -2,11 +2,13 @@
 keyed on, when a session goes without one, and that no session maps an
 archive that a throwaway JVM has not first mapped in its place."""
 
+import fcntl
 import json
 import os
 import shutil
 import subprocess
 import sys
+import threading
 
 import pytest
 from pyspark import SparkContext
@@ -61,9 +63,10 @@ def test_key_tracks_what_the_jvm_checks(tmp_path):
     assert key() != sized
 
 
-def test_no_archive_where_it_could_not_be_kept(tmp_path, monkeypatch):
-    """A JVM that is not about to start, a conf dir Spark reads, a conf dir
-    set by the caller or a cache that cannot be written: no archive."""
+@pytest.fixture()
+def spark_home(tmp_path, monkeypatch):
+    """A Spark home whose conf dir holds only a template, and an empty
+    cache; no JVM runs."""
     home = tmp_path / "spark"
     (home / "conf").mkdir(parents=True)
     (home / "jars").mkdir()
@@ -72,6 +75,14 @@ def test_no_archive_where_it_could_not_be_kept(tmp_path, monkeypatch):
     monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "cache"))
     for v in ("SPARK_CONF_DIR",) + session._CLASSPATH_ENV:
         monkeypatch.delenv(v, raising=False)
+    monkeypatch.setattr(SparkContext, "_gateway", None)
+    return home
+
+
+def test_no_archive_where_it_could_not_be_kept(spark_home, tmp_path, monkeypatch):
+    """A JVM that is not about to start, a conf dir Spark reads, a conf dir
+    set by the caller or a cache that cannot be written: no archive."""
+    home = spark_home
     monkeypatch.setattr(SparkContext, "_gateway", object())
     assert session._ClassDataSharing.plan("8g") is None   # a JVM runs
     monkeypatch.setattr(SparkContext, "_gateway", None)
@@ -88,6 +99,39 @@ def test_no_archive_where_it_could_not_be_kept(tmp_path, monkeypatch):
     (tmp_path / "file").write_text("")
     monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "file"))
     assert session._ClassDataSharing.plan("8g") is None
+
+
+def test_claims_are_read_under_a_lock(spark_home):
+    """A live recording makes a session go without an archive, but not a
+    claim whose pid now belongs to another process or a file a dead
+    writer left half-way; and no session reads the cache while another
+    holds its lock."""
+    plan = session._ClassDataSharing.plan
+    cds = plan("8g")
+    claim = cds.record + ".json"
+    live = session._claim(os.getppid())
+    assert live["start"] is not None
+    with open(claim, "w") as fh:
+        json.dump(live, fh)
+    assert plan("8g") is None   # another session records
+    with open(claim, "w") as fh:
+        json.dump(dict(live, start="0"), fh)   # its pid was reused
+    with open(cds.final_meta + ".part", "w") as fh:
+        fh.write("{")
+    again = plan("8g")
+    assert again is not None and again.record == cds.record
+    assert json.load(open(claim))["pid"] == os.getpid()
+    assert not os.path.exists(cds.final_meta + ".part")
+
+    got = []
+    with open(os.path.join(cds.dir, "lock"), "a") as fh:
+        fcntl.flock(fh, fcntl.LOCK_EX)
+        t = threading.Thread(target=lambda: got.append(plan("8g")))
+        t.start()
+        t.join(0.5)
+        assert t.is_alive() and not got
+    t.join(30)
+    assert got and got[0] is not None
 
 
 def _run_session(env, cwd):
@@ -153,3 +197,4 @@ def test_bad_recordings_are_discarded_and_rebuilt(tmp_path, monkeypatch):
     assert cds is not None
     assert f'"-XX:SharedArchiveFile={cds.final}"' in cds.java_options
     assert _recordings(cds_dir) == [] and os.path.exists(cds.final)
+    shutil.rmtree(cache)   # 140 MB
